@@ -2,14 +2,13 @@ package graft.functions
 
 import java.io.ByteArrayOutputStream
 
-import scala.jdk.CollectionConverters._
-
-import graft.model.{Event, EventSchema}
+import graft.model.EventSchema
 import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.{DecoderFactory, EncoderFactory}
+import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.avro.io.EncoderFactory
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.GraftColumnBridge.{exprOf, ofExpr}
+import org.apache.spark.sql.functions.{struct, udf}
 
 /**
  * Single-record Avro binary codec for the event envelope — the wire format
@@ -23,14 +22,20 @@ import org.apache.spark.sql.functions.udf
  * `to_avro(data, jsonFormatSchema)` / `from_avro(data, jsonFormatSchema)`
  * — under the SAME reference wire schema — the day the environment grows
  * the module jar. The Spark distribution here ships the Avro library but
- * not the connector expressions (verified each round against
- * /opt/spark/jars), so today the probe falls back to a codec implemented
- * directly on `org.apache.avro` generic records, exposed as UDFs. The
- * fallback is performance-equivalent to the connector for this shape:
- * the connector's AvroDataToCatalyst/CatalystDataToAvro are
- * CodegenFallback expressions, so neither participates in whole-stage
- * codegen; per-thread encoder/decoder reuse keeps the per-row cost to
- * the raw Avro encode. Values are path-independent: Avro binary encoding
+ * not the connector expressions, so today the probe falls back to this
+ * object's own codec.
+ *
+ * Decode without the connector is FIELD-WISE: [[fromAvro]] is a `struct`
+ * of five [[AvroField]] expressions, one per envelope field, each reading
+ * its field straight from the binary datum in generated code. Catalyst
+ * simplifies `e.id` on that struct to the id reader alone, so a filter
+ * pushed below the decode (`Ingest.validate` on id, name and
+ * clientTimestamp) reads only the fields it tests, rows it rejects never
+ * build their props map, and the surviving rows decode each field once
+ * in the projection. A single record-level decode cannot be pruned that
+ * way: Catalyst inlines it once per predicate that touches the record.
+ * Encode is a UDF over `org.apache.avro` generic records with a
+ * per-thread writer. Values are path-independent: Avro binary encoding
  * of the same (schema, values) differs at most in map-entry ORDER, which
  * neither decode nor the length-based T3 size gate observes.
  */
@@ -85,11 +90,9 @@ object AvroCodec {
   @transient private lazy val schema: Schema =
     new Schema.Parser().parse(EventSchema.avroJson)
 
-  // One codec kit per executor thread: Avro encoders are stateful.
-  private val kit = new ThreadLocal[(GenericDatumWriter[GenericRecord], GenericDatumReader[GenericRecord])] {
-    override def initialValue() =
-      (new GenericDatumWriter[GenericRecord](schema),
-        new GenericDatumReader[GenericRecord](schema))
+  // One writer per executor thread: Avro datum writers are stateful.
+  private val writer = new ThreadLocal[GenericDatumWriter[GenericRecord]] {
+    override def initialValue() = new GenericDatumWriter[GenericRecord](schema)
   }
 
   private[functions] def encode(id: String, name: String, props: Map[String, String],
@@ -104,32 +107,25 @@ object AvroCodec {
     rec.put("clientTimestamp", clientTs)
     val out = new ByteArrayOutputStream(64)
     val enc = EncoderFactory.get().directBinaryEncoder(out, null)
-    kit.get()._1.write(rec, enc)
+    writer.get().write(rec, enc)
     enc.flush()
     out.toByteArray
-  }
-
-  private[functions] def decode(bytes: Array[Byte]): Event = {
-    val dec = DecoderFactory.get().binaryDecoder(bytes, null)
-    val rec = kit.get()._2.read(null, dec)
-    Event(
-      id = rec.get("id").toString,
-      name = rec.get("name").toString,
-      props = rec.get("props").asInstanceOf[java.util.Map[AnyRef, AnyRef]]
-        .asScala.map { case (k, v) => k.toString -> v.toString }.toMap,
-      serverTimestamp = rec.get("serverTimestamp").asInstanceOf[Long],
-      clientTimestamp = rec.get("clientTimestamp").asInstanceOf[Long])
   }
 
   private val encodeUdf =
     udf((id: String, name: String, props: Map[String, String], sts: Long, cts: Long) =>
       encode(id, name, props, sts, cts))
 
-  private val decodeUdf = udf((bytes: Array[Byte]) => decode(bytes))
+  /** The five [[AvroField]] readers of `value` as the envelope struct. */
+  private def fieldWise(value: Column): Column = {
+    val v = exprOf(value)
+    struct(EventSchema.stored.fields.indices.map(i =>
+      ofExpr(AvroField(v, i)).as(EventSchema.stored(i).name)): _*)
+  }
 
   /** Serialize envelope columns to a single-record Avro datum (T5) —
     * native `to_avro` under the wire schema when the connector is
-    * present, the UDF codec otherwise. */
+    * present, the encode UDF otherwise. */
   def toAvro(id: Column, name: Column, props: Column,
       serverTs: Column, clientTs: Column): Column = native match {
     case Some(n) =>
@@ -142,8 +138,9 @@ object AvroCodec {
   }
 
   /** Decode an Avro datum back to an envelope struct (T6) — native
-    * `from_avro` when the connector is present, the UDF codec otherwise
-    * (both emit the same field names/types, from the same schema). */
+    * `from_avro` when the connector is present, the field-wise
+    * [[AvroField]] readers otherwise (both emit the same field names, from
+    * the same schema). A null datum decodes to a struct of nulls. */
   def fromAvro(value: Column): Column =
-    native.fold(decodeUdf(value))(_.fromAvro(value))
+    native.fold(fieldWise(value))(_.fromAvro(value))
 }

@@ -718,6 +718,7 @@ case class ShingleHashList(child: Expression, n: Int,
   * see [[LlmExprs.winnowEnc]]. */
 case class WinnowEncExpr(child: Expression, w: Int,
     packMod: Long = LlmExprs.P) extends UnaryExpression {
+  require(w >= 1, s"winnow window must be >= 1, got $w")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(input: Any): Any =
     LlmExprs.winnowEnc(input.asInstanceOf[ArrayData], w, packMod)
@@ -733,6 +734,7 @@ case class WinnowEncExpr(child: Expression, w: Int,
   * [[LlmExprs.winnowValues]]. */
 case class WinnowValuesExpr(child: Expression, w: Int)
     extends UnaryExpression {
+  require(w >= 1, s"winnow window must be >= 1, got $w")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(input: Any): Any =
     LlmExprs.winnowValues(input.asInstanceOf[ArrayData], w)

@@ -237,7 +237,11 @@ object DeconIndex {
     * replayed MemoryStream). Output: the corpus row + (n_shared, kept).
     * The static side re-reads per micro-batch (a few-MB parquet + one
     * 1-row aggregate) — cache the session's static frame if the trigger
-    * rate ever makes that visible. */
+    * rate ever makes that visible. Snapshot consistency: each Spark
+    * action on the returned frame re-reads the print set, so two actions
+    * that straddle an index swap or compaction can probe different
+    * versions. A batch caller running several actions on one result
+    * should use [[winnowProber]], which freezes one version. */
   def probeWinnowStream(corpus: DataFrame, dir: String,
       minShared: Long = 2L): DataFrame =
     // LAZY static side (round-21, from the round-20 advice): the

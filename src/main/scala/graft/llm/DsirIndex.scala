@@ -134,7 +134,12 @@ object DsirIndex {
     * Row-identical to [[score]] on the same corpus (spec-pinned).
     * Output: the corpus row + (n_feats, lr_bits, lr_scaled). Re-reads
     * the static side per call — a long-lived stream should load once
-    * via [[scorer]]. */
+    * via [[scorer]]. Snapshot consistency: the model is read lazily, so
+    * each Spark action on the returned frame re-reads it, and two
+    * actions that straddle an index swap or compaction can score
+    * against different model versions. A batch caller running several
+    * actions on one result should use [[scorer]], which freezes one
+    * version. */
   def scoreStream(spark: SparkSession, dir: String,
       docs: DataFrame): DataFrame =
     // LAZY static side (round-21, from the round-20 advice): the

@@ -23,6 +23,8 @@ class CodegenSpec extends SparkSpec {
   private lazy val docs = Tables.documents(s2, sfDir)
   private lazy val embs = Tables.embeddings(s2, sfDir)
 
+  // Each projection is collected: under count() column pruning drops the
+  // projected expressions, and nothing would be generated at all.
   test("all native expressions compile under CODEGEN_ONLY (no fallback)") {
     assert(docs.select(
       polyHash(col("text")).as("ph"),
@@ -49,11 +51,19 @@ class CodegenSpec extends SparkSpec {
       graft.llm.UnigramLm.tokens(col("text"),
         new graft.functions.UnigramCodec(Array("a", "b", "ab"),
           Array(1L, 1L, 1L), 6, 3, 5L)).as("ugt"))
-      .count() > 0)
+      .collect().nonEmpty)
+    // every AvroField reader (string, map, long) over an encoded envelope
+    val avro = graft.functions.AvroCodec.toAvro(col("doc_id").cast("string"),
+      coalesce(col("source"), lit("")), map(lit("k"), coalesce(col("text"), lit(""))),
+      col("doc_id").cast("long"), col("doc_id").cast("long"))
+    assert(docs.select((0 until 5).map(i =>
+      org.apache.spark.sql.GraftColumnBridge.ofExpr(graft.functions.AvroField(
+        org.apache.spark.sql.GraftColumnBridge.exprOf(avro), i)).as(s"avro$i")): _*)
+      .collect().nonEmpty)
     assert(embs.select(
       dotProduct(col("embedding"), col("embedding")).as("dot"),
       hyperplaneBucketAt(col("embedding"), 64, 6, 12).as("hb"))
-      .count() > 0)
+      .collect().nonEmpty)
   }
 
   test("VecDotExpr codegen covers double and mixed element types") {
@@ -62,7 +72,7 @@ class CodegenSpec extends SparkSpec {
     assert(d.select(
       dotProduct(col("demb"), col("demb")).as("dd"),
       dotProduct(col("embedding"), col("demb")).as("fd"))
-      .count() > 0)
+      .collect().nonEmpty)
   }
 
   test("PrefixRank runs end-to-end under CODEGEN_ONLY (rank path stays in Tungsten)") {

@@ -60,6 +60,15 @@ class WinnowExprSpec extends SparkSpec {
     }
   }
 
+  test("winnow expressions reject a window below 1 at plan-build time") {
+    for (w <- Seq(0, -3)) {
+      intercept[IllegalArgumentException](
+        graft.functions.WinnowEncExpr(exprOf(col("hs")), w, TextFunctions.P))
+      intercept[IllegalArgumentException](
+        graft.functions.WinnowValuesExpr(exprOf(col("hs")), w))
+    }
+  }
+
   test("winnow expressions ≡ HOF over the fixture corpus") {
     val P = TextFunctions.P
     for ((n, w) <- Seq((3, 4), (2, 1), (5, 8))) {
