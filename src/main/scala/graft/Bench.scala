@@ -62,6 +62,8 @@ import org.apache.spark.sql.SparkSession
   * Every run also writes a timestamped copy to bench_runs/ so a driver
   * re-run overwriting bench_out.json cannot clobber committed evidence. */
 object Bench {
+  private val CodegenCacheEntries = 2000L
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -69,6 +71,10 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      // Static conf, read once per JVM: a curation flagship's chain
+      // generates ~200 distinct classes, so Spark's default 100-entry
+      // codegen cache recompiles most of them on every timed run.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -79,35 +85,10 @@ object Bench {
       case c => c.toString
     }
 
-    // SHARED-SCAN TIER (round 20, BENCH-ONLY, measured and REJECTED as
-    // the default): caching the five base tables once per sweep was the
-    // r19 verdict's floor hypothesis (~0.35 s × 239 of scan/setup). The
-    // measured full-sweep A/B (SCALE.md "Bench sweep floor") showed the
-    // floor is NOT scan cost — the 104 sub-0.3 s queries were unchanged
-    // (17.6 → 17.9 s) — while the cached InMemoryRelation's LARGER
-    // in-memory size statistics flipped broadcast joins to sort-merge
-    // across the dedup-stack tail (q146 2.7×, q179 2.1×, q98 2.0×),
-    // inflating the sweep total 244 → 296 s. The tier therefore stays
-    // OPT-IN (SPARK_GRAFT_CACHE=1) for experiments; the default sweep
-    // reads cold parquet, same as Verify and the spec suites.
-    val cachedBaseIds: Set[Int] =
-      if (!sys.env.contains("SPARK_GRAFT_CACHE")) Set.empty
-      else {
-        Seq(
-          graft.model.Tables.documents(spark, sfDir),
-          graft.model.Tables.embeddings(spark, sfDir),
-          graft.model.Tables.lineitem(spark, sfDir),
-          graft.model.Tables.orders(spark, sfDir),
-          graft.model.Tables.events(spark, sfDir)
-        ).foreach { df => df.persist(); df.count() }
-        spark.sparkContext.getPersistentRDDs.keySet.toSet
-      }
-    // Drop everything a query left persisted (localCheckpoint debris)
-    // EXCEPT the shared base-table tier.
+    // Drop everything a query left persisted (localCheckpoint debris).
     def clearScratch(): Unit =
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!cachedBaseIds(id)) rdd.unpersist(blocking = true)
-      }
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
 
     // Iteration aid: SPARK_GRAFT_ONLY=q104,q105 times just those queries
     // (prefix match on the qNN label). Unset = the full registry sweep.

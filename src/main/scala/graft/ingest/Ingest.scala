@@ -59,16 +59,21 @@ object Ingest {
   /**
    * Enrichment: project the stored envelope and stamp `serverTimestamp`
    * with the server-side epoch-millis now (`server/sender/kafka.go:102-109`).
+   * The `topic` routing column rides along so the enriched frame feeds
+   * [[withKafkaTopic]] / `Kafka.toKafkaFrame`; the Avro datum
+   * ([[avroBytes]]) reads only the envelope fields.
    */
   def enrich(df: DataFrame): DataFrame =
-    df.select(col("id"), col("name"), col("props"), col("clientTimestamp"))
-      .withColumn("serverTimestamp", unix_millis(current_timestamp()))
+    envelope(df).withColumn("serverTimestamp", unix_millis(current_timestamp()))
 
   /** Deterministic enrich variant for tests/oracles: serverTimestamp is a
     * supplied constant instead of now(). */
   def enrichAt(df: DataFrame, serverTimestampMs: Long): DataFrame =
-    df.select(col("id"), col("name"), col("props"), col("clientTimestamp"))
-      .withColumn("serverTimestamp", lit(serverTimestampMs))
+    envelope(df).withColumn("serverTimestamp", lit(serverTimestampMs))
+
+  private def envelope(df: DataFrame): DataFrame =
+    df.select(col("id"), col("name"), col("topic"), col("props"),
+      col("clientTimestamp"))
 
   // ------------------------------------------------------------ T5 / T6
   /** T5 — serialize one event to a single-record Avro binary datum

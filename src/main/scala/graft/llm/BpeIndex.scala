@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -49,19 +49,9 @@ object BpeIndex {
     * params to the exact merge rows it was written with. Hand-rolled
     * FNV-1a (not JVM hashCode) so the stamp is stable across JVM/Scala
     * versions — it lives in a persisted artifact. */
-  def signature(ms: Seq[Bpe.Merge]): Long = {
-    var h = 0xcbf29ce484222325L
-    def mix(s: String): Unit = {
-      var i = 0
-      while (i < s.length) { h ^= s.charAt(i); h *= 0x100000001b3L; i += 1 }
-      h ^= 0x1e; h *= 0x100000001b3L // field separator
-    }
-    ms.foreach { m =>
-      mix(m.rank.toString); mix(m.lhs); mix(m.rhs); mix(m.merged)
-      mix(m.cnt.toString)
-    }
-    h
-  }
+  def signature(ms: Seq[Bpe.Merge]): Long =
+    IndexLifecycle.fnv1a(ms.flatMap(m =>
+      Seq(m.rank.toString, m.lhs, m.rhs, m.merged, m.cnt.toString)))
 
   /** Learn `k` merges from `docs` (over `pretok`'s surface) and persist
     * them under `dir`. The pre-tokenization mode is part of the stored
@@ -71,32 +61,21 @@ object BpeIndex {
     * the INDEX (the [[DsirIndex]] stored-tokenizer invariant). */
   def build(docs: DataFrame, dir: String, k: Int,
       pretok: Bpe.PreTok = Bpe.PreTok.Whitespace): Unit =
-    WriterLease.withLease(docs.sparkSession, dir, "bpe build") {
-    writeTables(docs, dir, k, pretok, suffix = "")
-    // version stamps + manifest LAST ([[SwapManifest]], [[IvfIndex]]
-    // parity): the load paths refuse a table set whose stamps disagree,
-    // so a build that died between the two table writes — or a torn
-    // rebuild swap — fails loudly even when k/sep/sig happen to agree
-    val spark = docs.sparkSession
-    val fs = SwapManifest.fsOf(spark, dir)
-    val v = SwapManifest.newVersion()
-    SwapManifest.stampTables(fs, dir, tableNames, v)
-    SwapManifest.writeManifest(fs, dir, tableNames.map(_ -> v).toMap)
-    }
+    lifecycle.build(docs.sparkSession, dir)(writeTables(docs, k, pretok))
 
-  private val tableNames = Seq("merges", "params")
+  private val lifecycle =
+    new IndexLifecycle("BPE index", Seq("merges", "params"))
 
-  /** Learn and write merges + params under `dir`, table names suffixed
-    * (""= live build, [[StagedSwap]]'s "__graft_tmp" = rebuild staging). */
-  private def writeTables(docs: DataFrame, dir: String, k: Int,
-      pretok: Bpe.PreTok, suffix: String): Unit = {
+  /** Learn and write merges + params through `out` (the live tables on a
+    * build, the staging copies on a [[rebuild]]). */
+  private def writeTables(docs: DataFrame, k: Int, pretok: Bpe.PreTok)(
+      out: IndexLifecycle.Out): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
     val ms = Bpe.learnMerges(
       docs.withColumn("text", pretok.prep(col("text"))), k)
-    spark.createDataFrame(ms)
-      .select(col("rank"), col("lhs"), col("rhs"), col("merged"), col("cnt"))
-      .write.mode("overwrite").parquet(s"$dir/merges$suffix")
+    out.parquet("merges", spark.createDataFrame(ms)
+      .select(col("rank"), col("lhs"), col("rhs"), col("merged"), col("cnt")))
     // params record the ACTUAL learned count (learnMerges stops early on
     // a fully-fused corpus) plus the merge-list content signature, so the
     // load-side torn-index check compares against what this build really
@@ -104,10 +83,9 @@ object BpeIndex {
     // (tokens per word, permille, integer floor) is the [[driftCheck]]
     // reference point: serving fertility is only interpretable relative
     // to what the vocabulary achieved on the corpus it was LEARNED on.
-    Seq((ms.size, Bpe.Sep, signature(ms), pretok.name,
+    out.parquet("params", Seq((ms.size, Bpe.Sep, signature(ms), pretok.name,
       fertilityPermille(docs, ms, pretok)))
-      .toDF("k", "sep", "sig", "pretok", "fert_permille")
-      .write.mode("overwrite").parquet(s"$dir/params$suffix")
+      .toDF("k", "sep", "sig", "pretok", "fert_permille"))
   }
 
   /** Corpus fertility under `ms`: tokens per word in integer permille
@@ -142,12 +120,7 @@ object BpeIndex {
     val spark = docs.sparkSession
     import spark.implicits._
     val (ms, pt) = loadWithPreTok(spark, dir)
-    val params = spark.read.parquet(s"$dir/params").head()
-    require(params.schema.fieldNames.contains("fert_permille"),
-      s"BPE index at '$dir' predates the stored-fertility layout — " +
-        "rebuild it (drift is only interpretable against the training " +
-        "fertility, and this artifact does not record it)")
-    val fertTrain = params.getAs[Long]("fert_permille")
+    val fertTrain = trainFertility(lifecycle.params(spark, dir), dir)
     val fertNow = fertilityPermille(docs, ms, pt)
     Seq((ms.size, fertTrain, fertNow, fertNow - fertTrain))
       .toDF("k", "fert_train_permille", "fert_now_permille",
@@ -193,14 +166,8 @@ object BpeIndex {
   def driftReportFrom(spark: SparkSession, dir: String,
       perDoc: DataFrame): DataFrame = {
     import spark.implicits._
-    requireIndex(spark, dir)
-    SwapManifest.verify(spark, dir, "BPE index")
-    val params = spark.read.parquet(s"$dir/params").head()
-    require(params.schema.fieldNames.contains("fert_permille"),
-      s"BPE index at '$dir' predates the stored-fertility layout — " +
-        "rebuild it (drift is only interpretable against the training " +
-        "fertility, and this artifact does not record it)")
-    val fertTrain = params.getAs[Long]("fert_permille")
+    val params = lifecycle.open(spark, dir)
+    val fertTrain = trainFertility(params, dir)
     val agg = perDoc.agg(
       coalesce(sum(col("n_toks")), lit(0L)),
       coalesce(sum(col("n_words")), lit(0L))).head()
@@ -208,6 +175,15 @@ object BpeIndex {
     Seq((params.getAs[Int]("k"), fertTrain, fertNow, fertNow - fertTrain))
       .toDF("k", "fert_train_permille", "fert_now_permille",
         "drift_permille")
+  }
+
+  /** The training-corpus fertility stamped in `params` at [[build]]. */
+  private def trainFertility(params: Row, dir: String): Long = {
+    require(params.schema.fieldNames.contains("fert_permille"),
+      s"BPE index at '$dir' predates the stored-fertility layout — " +
+        "rebuild it (drift is only interpretable against the training " +
+        "fertility, and this artifact does not record it)")
+    params.getAs[Long]("fert_permille")
   }
 
   /**
@@ -221,37 +197,15 @@ object BpeIndex {
    * and a phase-1 failure rolls back onto the previous version. The old
    * copies are deleted only after both tables are live. */
   def rebuild(docs: DataFrame, dir: String, k: Int,
-      pretok: Bpe.PreTok = Bpe.PreTok.Whitespace): Unit =
-    WriterLease.withLease(docs.sparkSession, dir, "bpe rebuild") {
-    import org.apache.hadoop.fs.Path
-    val spark = docs.sparkSession
-    requireIndex(spark, dir) // rebuild replaces an index; build creates one
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tables = tableNames
-    StagedSwap.precleanTmp(fs, dir, tables)
-    var staged = false
-    try {
-      writeTables(docs, dir, k, pretok, suffix = "__graft_tmp")
-      // stamp the staged copies with the NEW version BEFORE the swap and
-      // rewrite the manifest LAST, after every rename ([[IvfIndex
-      // .rebuild]]'s protocol): a crash anywhere between leaves stamps
-      // that disagree with the old manifest, which the load paths refuse
-      val v = SwapManifest.newVersion()
-      SwapManifest.stampTables(fs, dir, tables, v, suffix = "__graft_tmp")
-      staged = true
-      StagedSwap.swapAll(fs, dir, tables)
-      SwapManifest.writeManifest(fs, dir, tables.map(_ -> v).toMap)
-    } finally {
-      if (!staged) StagedSwap.cleanupTmp(fs, dir, tables)
-    }
-    }
+      pretok: Bpe.PreTok = Bpe.PreTok.Whitespace): Unit = {
+    lifecycle.params(docs.sparkSession, dir) // rebuild replaces; build creates
+    lifecycle.rebuild(docs.sparkSession, dir)(writeTables(docs, k, pretok))
+  }
 
   /** The stored vocabulary table (rank, lhs, rhs, merged, cnt) — the
     * registry-facing roundtrip read; errors if the index is absent. */
   def loadVocab(spark: SparkSession, dir: String): DataFrame = {
-    requireIndex(spark, dir)
-    SwapManifest.verify(spark, dir, "BPE index")
+    lifecycle.open(spark, dir)
     spark.read.parquet(s"$dir/merges")
   }
 
@@ -276,20 +230,15 @@ object BpeIndex {
     * text MUST prep it with the returned mode ([[build]]'s invariant). */
   def loadWithPreTok(spark: SparkSession,
       dir: String): (Seq[Bpe.Merge], Bpe.PreTok) = {
-    val (k, sep, sig, pretokName) = requireIndex(spark, dir)
+    val (k, sep, sig, pretokName) = storedParams(spark, dir)
     // stamp agreement BEFORE the content checks: the manifest names the
     // torn-SWAP case outright (and catches tears the k/sep/sig content
     // signature can't see, e.g. a manifest-era table replaced wholesale)
-    SwapManifest.verify(spark, dir, "BPE index")
+    lifecycle.verify(spark, dir)
     require(sep == Bpe.Sep,
       s"BPE index at '$dir' was built with separator '$sep' but this " +
         s"build uses '${Bpe.Sep}' — encoding would silently diverge")
-    val ms = spark.read.parquet(s"$dir/merges")
-      .orderBy("rank").collect()
-      .map(r => Bpe.Merge(r.getAs[Int]("rank"), r.getAs[String]("lhs"),
-        r.getAs[String]("rhs"), r.getAs[String]("merged"),
-        r.getAs[Long]("cnt")))
-      .toSeq
+    val ms = storedMerges(spark, dir)
     require(ms.size == k,
       s"BPE index at '$dir' is torn: params say k=$k but ${ms.size} " +
         "merges are stored — rebuild")
@@ -323,13 +272,8 @@ object BpeIndex {
    * Throws only on an absent index (params missing), like every loader. */
   def healthCheck(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (k, sep, sig, pretokName) = requireIndex(spark, dir)
-    val ms = spark.read.parquet(s"$dir/merges")
-      .orderBy("rank").collect()
-      .map(r => Bpe.Merge(r.getAs[Int]("rank"), r.getAs[String]("lhs"),
-        r.getAs[String]("rhs"), r.getAs[String]("merged"),
-        r.getAs[Long]("cnt")))
-      .toSeq
+    val (k, sep, sig, pretokName) = storedParams(spark, dir)
+    val ms = storedMerges(spark, dir)
     val sepOk = sep == Bpe.Sep
     val kOk = ms.size == k
     val sigOk = signature(ms) == sig
@@ -337,8 +281,7 @@ object BpeIndex {
     val pretokOk =
       try { Bpe.PreTok.parse(pretokName); true }
       catch { case _: IllegalArgumentException => false }
-    val (hasManifest, stale) =
-      SwapManifest.staleTables(SwapManifest.fsOf(spark, dir), dir)
+    val (hasManifest, stale) = lifecycle.staleTables(spark, dir)
     Seq((k, ms.size.toLong, sepOk, kOk, sigOk, ranksOk, pretokOk,
       hasManifest, stale.mkString(","),
       sepOk && kOk && sigOk && ranksOk && pretokOk &&
@@ -347,16 +290,17 @@ object BpeIndex {
         "pretok_ok", "has_manifest", "stale_tables", "healthy")
   }
 
-  private def requireIndex(spark: SparkSession,
-      dir: String): (Int, String, Long, String) =
-    try {
-      val row = spark.read.parquet(s"$dir/params").head()
-      (row.getAs[Int]("k"), row.getAs[String]("sep"), row.getAs[Long]("sig"),
-        row.getAs[String]("pretok"))
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"load: no BPE index at '$dir' — the params table is missing; " +
-            "run build() first", e)
-    }
+  private def storedParams(spark: SparkSession,
+      dir: String): (Int, String, Long, String) = {
+    val row = lifecycle.params(spark, dir)
+    (row.getAs[Int]("k"), row.getAs[String]("sep"), row.getAs[Long]("sig"),
+      row.getAs[String]("pretok"))
+  }
+
+  private def storedMerges(spark: SparkSession, dir: String): Seq[Bpe.Merge] =
+    spark.read.parquet(s"$dir/merges").orderBy("rank").collect()
+      .map(r => Bpe.Merge(r.getAs[Int]("rank"), r.getAs[String]("lhs"),
+        r.getAs[String]("rhs"), r.getAs[String]("merged"),
+        r.getAs[Long]("cnt")))
+      .toSeq
 }

@@ -31,18 +31,8 @@ object ClassifierIndex {
 
   /** FNV-1a over the ordered model cells — stable across JVMs (pure
     * Long arithmetic over decimal string renderings). */
-  def signature(cells: Seq[Long]): Long = {
-    var h = 0xcbf29ce484222325L
-    cells.foreach { v =>
-      v.toString.foreach { c =>
-        h ^= c.toLong
-        h *= 0x100000001b3L
-      }
-      h ^= '|'.toLong
-      h *= 0x100000001b3L
-    }
-    h
-  }
+  def signature(cells: Seq[Long]): Long =
+    IndexLifecycle.fnv1a(cells.map(_.toString), '|')
 
   private def cellsOf(r: Row): Seq[Long] =
     modelCols.map(c => r.getAs[Long](c))
@@ -50,78 +40,51 @@ object ClassifierIndex {
   /** Train the centroid model on `docs` under the quality teacher at
     * `thresholdPermille` (q37's blend ≥ threshold) and persist it. */
   def build(docs: DataFrame, dir: String,
-      thresholdPermille: Long = 500L): Unit =
-    WriterLease.withLease(docs.sparkSession, dir, "classifier build") {
+      thresholdPermille: Long = 500L): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val feats = Classifier.withFeatures(docs).withColumn("label",
-      Classifier.qualityTeacher(thresholdPermille.toDouble / 1000.0)
-        .cast("int"))
-    val model = Classifier.centroidsOf(feats).localCheckpoint(true)
-    model.write.mode("overwrite").parquet(s"$dir/model")
-    val sig = signature(cellsOf(model.head()))
-    Seq((thresholdPermille, sig)).toDF("threshold_permille", "sig")
-      .write.mode("overwrite").parquet(s"$dir/params")
-    // version stamps + manifest LAST (the SwapManifest protocol shared
-    // with Ivf/Bpe/Unigram/Dsir): a build that died between the two
-    // table writes fails loudly at first read
-    val fs = SwapManifest.fsOf(spark, dir)
-    val v = SwapManifest.newVersion()
-    SwapManifest.stampTables(fs, dir, tableNames, v)
-    SwapManifest.writeManifest(fs, dir, tableNames.map(_ -> v).toMap)
+    lifecycle.build(spark, dir) { out =>
+      val feats = Classifier.withFeatures(docs).withColumn("label",
+        Classifier.qualityTeacher(thresholdPermille.toDouble / 1000.0)
+          .cast("int"))
+      val model = Classifier.centroidsOf(feats).localCheckpoint(true)
+      out.parquet("model", model)
+      out.parquet("params", Seq((thresholdPermille, signature(cellsOf(
+        model.head())))).toDF("threshold_permille", "sig"))
     }
+  }
 
-  private val tableNames = Seq("model", "params")
+  private val lifecycle = new IndexLifecycle("classifier index",
+    Seq("model", "params"))
+
+  /** The stored 1-row model, required to match the params signature. */
+  private def checkedModel(spark: SparkSession, dir: String,
+      params: Row): Array[Row] = {
+    val rows = spark.read.parquet(s"$dir/model").collect()
+    require(rows.length == 1,
+      s"classifier index at '$dir' is torn: ${rows.length} model rows")
+    require(signature(cellsOf(rows.head)) == params.getAs[Long]("sig"),
+      s"classifier index at '$dir' failed its content signature — " +
+        "torn write or interleaved rebuild; rebuild the index")
+    rows
+  }
 
   /** Adopt a PRE-MANIFEST classifier index (stamp + manifest, no
     * rebuild) — [[DedupIndex.adoptManifest]]'s contract. This lifecycle
     * has a FULL content check that needs no manifest (the 1-row model
     * vs the params signature), so adoption here verifies consistency
     * outright before blessing the table set. */
-  def adoptManifest(spark: SparkSession, dir: String): Unit = {
-    val params =
-      try spark.read.parquet(s"$dir/params").head()
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalStateException(
-            s"adopt: no classifier index at '$dir' — params missing; " +
-              "nothing to adopt", e)
-      }
-    val rows = spark.read.parquet(s"$dir/model").collect()
-    require(rows.length == 1,
-      s"adopt: classifier index at '$dir' is torn (${rows.length} model " +
-        "rows) — rebuild instead of adopting")
-    require(signature(cellsOf(rows.head)) == params.getAs[Long]("sig"),
-      s"adopt: classifier index at '$dir' failed its content signature " +
-        "— torn write or interleaved rebuild; rebuild instead of adopting")
-    SwapManifest.adopt(spark, dir, tableNames, "classifier index")
-  }
+  def adoptManifest(spark: SparkSession, dir: String): Unit =
+    lifecycle.adopt(spark, dir)(checkedModel(spark, dir, _))
 
   private def loadValidated(spark: SparkSession, dir: String): DataFrame = {
-    val params =
-      try spark.read.parquet(s"$dir/params").head()
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalStateException(
-            s"score: no classifier index at '$dir' — params missing; " +
-              "run build() first", e)
-      }
-    SwapManifest.verify(spark, dir, "classifier index")
-    val model = spark.read.parquet(s"$dir/model")
-    val rows = model.collect()
-    require(rows.length == 1,
-      s"classifier index at '$dir' is torn: ${rows.length} model rows")
-    val sig = signature(cellsOf(rows.head))
-    require(sig == params.getAs[Long]("sig"),
-      s"classifier index at '$dir' failed its content signature — " +
-        "torn write or interleaved rebuild; rebuild the index")
-    // Rebuild the frame from the already-validated collected row: the
-    // lazily-read `model` would re-read the parquet at execution time,
-    // so an interleaved rebuild between validation and execution could
+    val rows = checkedModel(spark, dir, lifecycle.open(spark, dir))
+    // Rebuild the frame from the already-validated collected row: a
+    // lazily-read model would re-read the parquet at execution time, so
+    // an interleaved rebuild between validation and execution could
     // score under an UNVALIDATED model. The scored model must be
     // byte-identical to the one whose signature passed.
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), model.schema)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), rows.head.schema)
   }
 
   /** Classify a batch under the STORED model — (doc_id, pred), identical
@@ -167,13 +130,7 @@ object ClassifierIndex {
     * .healthCheck]]'s contract: REPORTS where loaders throw). */
   def healthCheck(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val params =
-      try spark.read.parquet(s"$dir/params").head()
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalStateException(
-            s"healthCheck: no classifier index at '$dir'", e)
-      }
+    val params = lifecycle.params(spark, dir)
     val rows =
       try spark.read.parquet(s"$dir/model").collect()
       catch {
@@ -187,8 +144,7 @@ object ClassifierIndex {
     val (cPos, cNeg) =
       if (oneRow) (rows.head.getAs[Long]("c_pos"), rows.head.getAs[Long]("c_neg"))
       else (-1L, -1L)
-    val (hasManifest, stale) =
-      SwapManifest.staleTables(SwapManifest.fsOf(spark, dir), dir)
+    val (hasManifest, stale) = lifecycle.staleTables(spark, dir)
     Seq((params.getAs[Long]("threshold_permille"), rows.length.toLong,
       oneRow, sigOk, cPos, cNeg, hasManifest, stale.mkString(","),
       oneRow && sigOk && cPos >= 0L && cNeg >= 0L &&

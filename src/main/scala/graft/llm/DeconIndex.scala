@@ -58,52 +58,38 @@ object DeconIndex {
 
   def build(benchmark: DataFrame, dir: String, n: Int = 5, wn: Int = 3,
       ww: Int = 4,
-      wtok: DedupOps.Tokenizer = DedupOps.Tokenizer.Ascii): Unit =
-    WriterLease.withLease(benchmark.sparkSession, dir, "decon build") {
+      wtok: DedupOps.Tokenizer = DedupOps.Tokenizer.Ascii): Unit = {
     val spark = benchmark.sparkSession
     import spark.implicits._
-    benchFps(benchmark).write.mode("overwrite").parquet(s"$dir/fingerprints")
-    benchGrams(benchmark, n).write.mode("overwrite").parquet(s"$dir/grams")
-    benchPrints(benchmark, wn, ww, wtok).write.mode("overwrite")
-      .parquet(s"$dir/prints")
-    Seq((n, wn, ww, wtok.name)).toDF("n", "wn", "ww", "wtok")
-      .write.mode("overwrite").parquet(s"$dir/params")
-    // version stamps + manifest LAST (the SwapManifest protocol): a
-    // build that died between the four table overwrites fails loudly at
-    // first probe. [[append]] writes mode("append") — stamps survive,
-    // and a torn APPEND stays governed by the conservative write-order
-    // contract, not the manifest (appends never change versions).
-    val fs = SwapManifest.fsOf(spark, dir)
-    val v = SwapManifest.newVersion()
-    SwapManifest.stampTables(fs, dir, tableNames, v)
-    SwapManifest.writeManifest(fs, dir, tableNames.map(_ -> v).toMap)
+    // [[append]] writes mode("append") — stamps survive, and a torn
+    // APPEND stays governed by the conservative write-order contract,
+    // not the manifest (appends never change versions).
+    lifecycle.build(spark, dir) { out =>
+      out.parquet("fingerprints", benchFps(benchmark))
+      out.parquet("grams", benchGrams(benchmark, n))
+      out.parquet("prints", benchPrints(benchmark, wn, ww, wtok))
+      out.parquet("params", Seq((n, wn, ww, wtok.name))
+        .toDF("n", "wn", "ww", "wtok"))
     }
+  }
 
-  private val tableNames = Seq("fingerprints", "grams", "prints", "params")
+  private val lifecycle = new IndexLifecycle("decon index",
+    Seq("fingerprints", "grams", "prints", "params"))
 
   /** Adopt a PRE-MANIFEST decon index (stamp + manifest, no rebuild) —
     * [[DedupIndex.adoptManifest]]'s contract for the decontamination
     * lifecycle. Pre-checks the stored gram width; refuses via
     * [[SwapManifest.adopt]] if a manifest already exists or any of the
     * four tables is missing. */
-  def adoptManifest(spark: SparkSession, dir: String): Unit = {
-    require(gramN(spark, dir) > 0,
-      s"adopt: decon index at '$dir' stores a non-positive gram width — " +
-        "rebuild instead of adopting")
-    SwapManifest.adopt(spark, dir, tableNames, "decon index")
-  }
-
-  private def paramsRow(spark: SparkSession, dir: String) =
-    try spark.read.parquet(s"$dir/params").head()
-    catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"probe: no decon index at '$dir' — the params table is missing; " +
-            "run build() first", e)
+  def adoptManifest(spark: SparkSession, dir: String): Unit =
+    lifecycle.adopt(spark, dir) { row =>
+      require(row.getInt(0) > 0,
+        s"adopt: decon index at '$dir' stores a non-positive gram width — " +
+          "rebuild instead of adopting")
     }
 
   private def gramN(spark: SparkSession, dir: String): Int =
-    paramsRow(spark, dir).getInt(0)
+    lifecycle.params(spark, dir).getInt(0)
 
   /** Stored winnow geometry: (wn, ww, tokenizer). Unknown tokenizer
     * names fail loudly — a probe under the wrong surface is silent
@@ -111,7 +97,7 @@ object DeconIndex {
     * prevent. */
   private def winnowParams(spark: SparkSession,
       dir: String): (Int, Int, DedupOps.Tokenizer) = {
-    val r = paramsRow(spark, dir)
+    val r = lifecycle.params(spark, dir)
     require(r.schema.fieldNames.contains("wtok"),
       s"decon index at '$dir' predates the winnow layout (params has no " +
         "winnow geometry) — rebuild() the index before using the winnow " +
@@ -143,7 +129,7 @@ object DeconIndex {
   def append(benchmark: DataFrame, dir: String): Unit =
     WriterLease.withLease(benchmark.sparkSession, dir, "decon append") {
     val spark = benchmark.sparkSession
-    SwapManifest.verify(spark, dir, "decon index")
+    lifecycle.verify(spark, dir)
     val n = gramN(spark, dir)
     // validate the winnow layout BEFORE the first write — a pre-winnow
     // index must fail here with the rebuild message, not after the
@@ -170,7 +156,7 @@ object DeconIndex {
     * to [[TextAnalysis.decontaminated]] over the indexed benchmark (null
     * text never matches: its fingerprint is null, the anti-join keeps it). */
   def probe(corpus: DataFrame, dir: String): DataFrame = {
-    SwapManifest.verify(corpus.sparkSession, dir, "decon index")
+    lifecycle.verify(corpus.sparkSession, dir)
     val fps = corpus.sparkSession.read.parquet(s"$dir/fingerprints")
     corpus.join(fps, normFp(col("text")) === col("fp"), "left_anti")
   }
@@ -180,7 +166,7 @@ object DeconIndex {
     * `n` comes from the stored params. */
   def overlap(corpus: DataFrame, dir: String): DataFrame = {
     val spark = corpus.sparkSession
-    SwapManifest.verify(spark, dir, "decon index")
+    lifecycle.verify(spark, dir)
     val n = gramN(spark, dir)
     val bench = spark.read.parquet(s"$dir/grams").withColumn("hit", lit(1L))
     corpus.select(col("doc_id"),
@@ -215,7 +201,7 @@ object DeconIndex {
   def probeWinnow(corpus: DataFrame, dir: String,
       minShared: Long = 2L): DataFrame = {
     val spark = corpus.sparkSession
-    SwapManifest.verify(spark, dir, "decon index")
+    lifecycle.verify(spark, dir)
     val (wn, ww, wtok) = winnowParams(spark, dir)
     DedupOps.winnowProbe(corpus, spark.read.parquet(s"$dir/prints"),
       wn, ww, minShared, wtok)
@@ -265,7 +251,7 @@ object DeconIndex {
 
   private def proberImpl(spark: SparkSession, dir: String,
       minShared: Long, materialize: Boolean): DataFrame => DataFrame = {
-    SwapManifest.verify(spark, dir, "decon index")
+    lifecycle.verify(spark, dir)
     val (wn, ww, wtok) = winnowParams(spark, dir)
     val folded = spark.read.parquet(s"$dir/prints")
       .agg(collect_set(col("fp")).as("bench_fps"))
@@ -290,17 +276,8 @@ object DeconIndex {
    * unchanged. Scheduled-job maintenance, never the append path.
    */
   def compact(spark: SparkSession, dir: String, targetFiles: Int = 1): Unit =
-    WriterLease.withLease(spark, dir, "decon compact") {
-    val fs = SwapManifest.fsOf(spark, dir)
-    val man = SwapManifest.readManifest(fs, dir).getOrElse(Map.empty[String, String])
-    tableNames.foreach { t =>
-      graft.pipeline.Maintenance.compactDir(spark, s"$dir/$t", targetFiles)
-      // the compaction swap rewrites the table dir, dropping its stamp —
-      // re-stamp from the manifest (content and therefore VERSION are
-      // unchanged; only the file layout is). IvfIndex.compact's rule.
-      man.get(t).foreach(v => SwapManifest.stampTables(fs, dir, Seq(t), v))
-    }
-    }
+    lifecycle.compact(spark, dir)(
+      graft.pipeline.Maintenance.compactDir(spark, _, targetFiles))
 
   /**
    * Operational health report — [[DedupIndex.healthCheck]]'s parity for
@@ -324,7 +301,7 @@ object DeconIndex {
    * an unbuilt index is a config error, not a health state. */
   def healthCheck(spark: SparkSession, dir: String): DataFrame = {
     val n = gramN(spark, dir)
-    val nFiles = Seq("fingerprints", "grams", "prints", "params").map(t =>
+    val nFiles = lifecycle.tables.map(t =>
       graft.pipeline.Maintenance.dataFiles(spark, s"$dir/$t").size).sum
     val fps = spark.read.parquet(s"$dir/fingerprints")
       .agg(count(lit(1)).as("n_fingerprints"),
@@ -335,8 +312,7 @@ object DeconIndex {
     val ps = spark.read.parquet(s"$dir/prints")
       .agg(count(lit(1)).as("n_prints"),
         count_distinct(col("fp")).as("print_distinct"))
-    val (hasManifest, stale) =
-      SwapManifest.staleTables(SwapManifest.fsOf(spark, dir), dir)
+    val (hasManifest, stale) = lifecycle.staleTables(spark, dir)
     fps.crossJoin(gs).crossJoin(ps).select(
       lit(n).as("n"),
       col("n_fingerprints"),

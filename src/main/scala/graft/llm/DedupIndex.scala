@@ -40,33 +40,27 @@ import org.apache.spark.sql.functions._
  */
 object DedupIndex {
 
-  /** Build the index from an already-curated corpus (the output of
-    * [[DedupOps.exactThenNearDedup]] or prior appends). */
   /** `src` tag of rows written at build time (appends use their own
     * non-negative batch id; see [[ingestBatch]]'s replay contract). */
   val BuildSrc = -1L
 
+  /** Build the index from an already-curated corpus (the output of
+    * [[DedupOps.exactThenNearDedup]] or prior appends). */
   def build(corpus: DataFrame, dir: String, n: Int = 3, perms: Int = 32,
-      bands: Int = 8, rowsPerBand: Int = 4): Unit =
-    WriterLease.withLease(corpus.sparkSession, dir, "dedup build") {
+      bands: Int = 8, rowsPerBand: Int = 4): Unit = {
     require(bands * rowsPerBand == perms, "bands*rowsPerBand must equal perms")
     val spark = corpus.sparkSession
     import spark.implicits._
-    writeTables(corpus, dir, n, perms, bands, rowsPerBand, overwrite = true,
-      src = BuildSrc)
-    Seq((n, perms, bands, rowsPerBand))
-      .toDF("n", "perms", "bands", "rows_per_band")
-      .write.mode("overwrite").parquet(s"$dir/params")
-    // version stamps + manifest LAST (the SwapManifest protocol): a
-    // build that died between the six table writes fails loudly at first
-    // probe. Appends/commits write mode("append") — stamps survive, and
-    // a torn APPEND stays governed by the conservative write-order
-    // contract above, not the manifest.
-    val fs = SwapManifest.fsOf(spark, dir)
-    val v = SwapManifest.newVersion()
-    SwapManifest.stampTables(fs, dir, tables :+ "params", v)
-    SwapManifest.writeManifest(fs, dir, (tables :+ "params").map(_ -> v).toMap)
+    // Appends/commits write mode("append") — stamps survive, and a torn
+    // APPEND stays governed by the conservative write-order contract
+    // below, not the manifest.
+    lifecycle.build(spark, dir) { out =>
+      writeTables(corpus, n, perms, bands, rowsPerBand, src = BuildSrc)(
+        out.parquet)
+      out.parquet("params", Seq((n, perms, bands, rowsPerBand))
+        .toDF("n", "perms", "bands", "rows_per_band"))
     }
+  }
 
   /**
    * The five derived tables of one doc frame. One shared tokenize+hash
@@ -88,39 +82,28 @@ object DedupIndex {
    * would make the retry drop the entire batch as exact dups of
    * itself — rows gone without ever being landed anywhere.
    */
-  private def writeTables(docs: DataFrame, dir: String, n: Int, perms: Int,
-      bands: Int, rowsPerBand: Int, overwrite: Boolean, src: Long): Unit = {
-    val mode = if (overwrite) "overwrite" else "append"
+  private def writeTables(docs: DataFrame, n: Int, perms: Int, bands: Int,
+      rowsPerBand: Int, src: Long)(write: (String, DataFrame) => Unit): Unit = {
     val tagged = (df: DataFrame) => df.withColumn("src", lit(src))
     val prepped = DedupOps.withShingleHashes(
       docs.select(col("doc_id"), col("text")), n)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      tagged(DedupOps.bandedKeys(prepped, n, perms, bands, rowsPerBand))
-        .write.mode(mode).parquet(s"$dir/bands")
-      tagged(DedupOps.shingleIndex(prepped, n))
-        .write.mode(mode).parquet(s"$dir/shingles")
-      tagged(DedupOps.setSizes(prepped, n))
-        .write.mode(mode).parquet(s"$dir/sizes")
-      tagged(DedupOps.dualFingerprints(prepped))
-        .write.mode(mode).parquet(s"$dir/fingerprints")
-      tagged(prepped.select("doc_id")).write.mode(mode).parquet(s"$dir/ids")
+      write("bands", tagged(DedupOps.bandedKeys(prepped, n, perms, bands,
+        rowsPerBand)))
+      write("shingles", tagged(DedupOps.shingleIndex(prepped, n)))
+      write("sizes", tagged(DedupOps.setSizes(prepped, n)))
+      write("fingerprints", tagged(DedupOps.dualFingerprints(prepped)))
+      write("ids", tagged(prepped.select("doc_id")))
     } finally prepped.unpersist(false)
   }
 
+  /** Stored geometry (n, perms, bands, rowsPerBand). Stamp agreement is
+    * checked BEFORE the probe reads any table: a torn multi-table BUILD
+    * (not append — appends never change versions) fails loudly here
+    * instead of answering from a mixed artifact. */
   private def params(spark: SparkSession, dir: String): (Int, Int, Int, Int) = {
-    val row =
-      try spark.read.parquet(s"$dir/params").head()
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalStateException(
-            s"probe: no dedup index at '$dir' — the params table is " +
-              "missing; run build() first", e)
-      }
-    // stamp agreement BEFORE the probe reads any table: a torn multi-
-    // table BUILD (not append — appends never change versions) fails
-    // loudly here instead of answering from a mixed artifact
-    SwapManifest.verify(spark, dir, "dedup index")
+    val row = lifecycle.open(spark, dir)
     (row.getInt(0), row.getInt(1), row.getInt(2), row.getInt(3))
   }
 
@@ -188,13 +171,15 @@ object DedupIndex {
     val fresh = kept.join(spark.read.parquet(s"$dir/ids"),
       Seq("doc_id"), "left_anti").localCheckpoint(true)
     if (!fresh.isEmpty)
-      writeTables(fresh, dir, n, perms, bands, rowsPerBand,
-        overwrite = false, src = src)
+      writeTables(fresh, n, perms, bands, rowsPerBand, src)((t, df) =>
+        df.write.mode("append").parquet(s"$dir/$t"))
     }
 
   /** The five index tables, in [[writeTables]]'s crash-contract order. */
   private val tables =
     Seq("bands", "shingles", "sizes", "fingerprints", "ids")
+
+  private val lifecycle = new IndexLifecycle("dedup index", tables :+ "params")
 
   /**
    * Adopt a PRE-MANIFEST dedup index: stamp all six tables and write the
@@ -207,23 +192,15 @@ object DedupIndex {
    * [[healthCheck]] and review its content columns first on any
    * artifact you don't trust.
    */
-  def adoptManifest(spark: SparkSession, dir: String): Unit = {
-    val row =
-      try spark.read.parquet(s"$dir/params").head()
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalStateException(
-            s"adopt: no dedup index at '$dir' — the params table is " +
-              "missing; nothing to adopt", e)
-      }
-    // Named access (not positional): a params schema reorder must fail
-    // loudly here, not validate the wrong columns and adopt a torn index.
-    require(row.getAs[Int]("bands") * row.getAs[Int]("rows_per_band") ==
-        row.getAs[Int]("perms"),
-      s"adopt: dedup index at '$dir' has inconsistent params " +
-        "(bands*rows_per_band != perms) — rebuild instead of adopting")
-    SwapManifest.adopt(spark, dir, tables :+ "params", "dedup index")
-  }
+  def adoptManifest(spark: SparkSession, dir: String): Unit =
+    lifecycle.adopt(spark, dir) { row =>
+      // Named access (not positional): a params schema reorder must fail
+      // loudly here, not validate the wrong columns and adopt a torn index.
+      require(row.getAs[Int]("bands") * row.getAs[Int]("rows_per_band") ==
+          row.getAs[Int]("perms"),
+        s"adopt: dedup index at '$dir' has inconsistent params " +
+          "(bands*rows_per_band != perms) — rebuild instead of adopting")
+    }
 
   /**
    * Small-file compaction: every append lands one file set per table,
@@ -237,17 +214,8 @@ object DedupIndex {
    * path.
    */
   def compact(spark: SparkSession, dir: String, targetFiles: Int = 1): Unit =
-    WriterLease.withLease(spark, dir, "dedup compact") {
-    val fs = SwapManifest.fsOf(spark, dir)
-    val man = SwapManifest.readManifest(fs, dir).getOrElse(Map.empty[String, String])
-    tables.foreach { t =>
-      graft.pipeline.Maintenance.compactDir(spark, s"$dir/$t", targetFiles)
-      // the compaction swap rewrites the table dir, dropping its stamp —
-      // re-stamp from the manifest (IvfIndex.compact's rule: content and
-      // therefore VERSION are unchanged, only the file layout is)
-      man.get(t).foreach(v => SwapManifest.stampTables(fs, dir, Seq(t), v))
-    }
-    }
+    lifecycle.compact(spark, dir, tables)(
+      graft.pipeline.Maintenance.compactDir(spark, _, targetFiles))
 
   /**
    * Index health — the dedup analog of [[IvfIndex.rebalanceCheck]]: one
@@ -265,8 +233,7 @@ object DedupIndex {
    * the same alerting-rule reason as rebalanceCheck.
    */
   def healthCheck(spark: SparkSession, dir: String): DataFrame = {
-    val (hasManifest, stale) =
-      SwapManifest.staleTables(SwapManifest.fsOf(spark, dir), dir)
+    val (hasManifest, stale) = lifecycle.staleTables(spark, dir)
     val nDocs = spark.read.parquet(s"$dir/ids").count()
     val nFiles = tables.map(t =>
       graft.pipeline.Maintenance.dataFiles(spark, s"$dir/$t").size).sum

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -38,16 +38,10 @@ object DsirIndex {
   /** Content signature over both count tables in bin order — hand-rolled
     * FNV-1a (stable across JVMs; it lives in a persisted artifact). */
   def signature(ct: Seq[(Long, Long)], cr: Seq[(Long, Long)]): Long = {
-    var h = 0xcbf29ce484222325L
-    def mix(s: String): Unit = {
-      var i = 0
-      while (i < s.length) { h ^= s.charAt(i); h *= 0x100000001b3L; i += 1 }
-      h ^= 0x1e; h *= 0x100000001b3L // field separator
-    }
-    ct.foreach { case (b, c) => mix(b.toString); mix(c.toString) }
-    mix("|") // table separator: ([],[x]) must not collide with ([x],[])
-    cr.foreach { case (b, c) => mix(b.toString); mix(c.toString) }
-    h
+    def cells(t: Seq[(Long, Long)]) =
+      t.flatMap { case (b, c) => Seq(b.toString, c.toString) }
+    // table separator: ([],[x]) must not collide with ([x],[])
+    IndexLifecycle.fnv1a(cells(ct) ++ Seq("|") ++ cells(cr))
   }
 
   private def countRows(df: DataFrame, cName: String): Seq[(Long, Long)] =
@@ -63,49 +57,37 @@ object DsirIndex {
     * histograms is silent mis-weighting, never a caller choice. */
   def build(pool: DataFrame, target: DataFrame, dir: String,
       buckets: Int = 1024,
-      tok: DedupOps.Tokenizer = DedupOps.Tokenizer.Ascii): Unit =
-    WriterLease.withLease(pool.sparkSession, dir, "dsir build") {
+      tok: DedupOps.Tokenizer = DedupOps.Tokenizer.Ascii): Unit = {
     val spark = pool.sparkSession
     import spark.implicits._
-    val ct = Retrieval.dsirBinCounts(target, buckets, "c_t", tok)
-    val cr = Retrieval.dsirBinCounts(pool, buckets, "c_r", tok)
-    ct.write.mode("overwrite").parquet(s"$dir/target_counts")
-    cr.write.mode("overwrite").parquet(s"$dir/raw_counts")
-    val ctRows = countRows(spark.read.parquet(s"$dir/target_counts"), "c_t")
-    val crRows = countRows(spark.read.parquet(s"$dir/raw_counts"), "c_r")
-    Seq((buckets, ctRows.size.toLong, crRows.size.toLong,
-      signature(ctRows, crRows), tok.name))
-      .toDF("buckets", "n_target_bins", "n_raw_bins", "sig", "dtok")
-      .write.mode("overwrite").parquet(s"$dir/params")
-    // version stamps + manifest LAST ([[SwapManifest]], the IvfIndex/
-    // BpeIndex/UnigramIndex protocol): a build that died between the
-    // three table writes fails loudly at first read even when the
-    // per-table shapes happen to agree
-    val fs = SwapManifest.fsOf(spark, dir)
-    val v = SwapManifest.newVersion()
-    SwapManifest.stampTables(fs, dir, tableNames, v)
-    SwapManifest.writeManifest(fs, dir, tableNames.map(_ -> v).toMap)
+    lifecycle.build(spark, dir) { out =>
+      out.parquet("target_counts",
+        Retrieval.dsirBinCounts(target, buckets, "c_t", tok))
+      out.parquet("raw_counts",
+        Retrieval.dsirBinCounts(pool, buckets, "c_r", tok))
+      val (ctRows, crRows) = storedCounts(spark, dir)
+      out.parquet("params", Seq((buckets, ctRows.size.toLong,
+        crRows.size.toLong, signature(ctRows, crRows), tok.name))
+        .toDF("buckets", "n_target_bins", "n_raw_bins", "sig", "dtok"))
     }
+  }
 
-  private val tableNames = Seq("target_counts", "raw_counts", "params")
+  private val lifecycle = new IndexLifecycle("DSIR index",
+    Seq("target_counts", "raw_counts", "params"))
+
+  private def storedCounts(spark: SparkSession,
+      dir: String): (Seq[(Long, Long)], Seq[(Long, Long)]) =
+    (countRows(spark.read.parquet(s"$dir/target_counts"), "c_t"),
+      countRows(spark.read.parquet(s"$dir/raw_counts"), "c_r"))
 
   /** Adopt a PRE-MANIFEST DSIR index (stamp + manifest, no rebuild) —
     * [[DedupIndex.adoptManifest]]'s contract. Runs [[requireValid]]'s
     * CONTENT checks (bin counts + content signature vs params) without
     * the manifest gate, then blesses the table set. */
-  def adoptManifest(spark: SparkSession, dir: String): Unit = {
-    val (_, nT, nR, sig) = readParams(spark, dir)
-    val ctRows = countRows(spark.read.parquet(s"$dir/target_counts"), "c_t")
-    val crRows = countRows(spark.read.parquet(s"$dir/raw_counts"), "c_r")
-    require(ctRows.size.toLong == nT && crRows.size.toLong == nR,
-      s"adopt: DSIR index at '$dir' is torn: params say ($nT, $nR) bins " +
-        s"but (${ctRows.size}, ${crRows.size}) are stored — rebuild " +
-        "instead of adopting")
-    require(signature(ctRows, crRows) == sig,
-      s"adopt: DSIR index at '$dir' failed its content signature — " +
-        "rebuild instead of adopting")
-    SwapManifest.adopt(spark, dir, tableNames, "DSIR index")
-  }
+  def adoptManifest(spark: SparkSession, dir: String): Unit =
+    lifecycle.adopt(spark, dir) { row =>
+      checkContent(spark, dir, parse(row))
+    }
 
   /** Score a batch under the STORED model — identical arithmetic to
     * [[Retrieval.dsirScores]], with the count tables read from the
@@ -197,7 +179,7 @@ object DsirIndex {
     * Ascii would mis-weight a Unicode-trained model's every score. */
   private def storedTok(spark: SparkSession,
       dir: String): DedupOps.Tokenizer = {
-    val row = spark.read.parquet(s"$dir/params").head()
+    val row = lifecycle.params(spark, dir)
     require(row.schema.fieldNames.contains("dtok"),
       s"DSIR index at '$dir' predates the stored-tokenizer layout — " +
         "rebuild it (scoring must use the surface the model was " +
@@ -224,22 +206,20 @@ object DsirIndex {
    */
   def healthCheck(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (buckets, nT, nR, sig) = readParams(spark, dir)
-    val ctRows = countRows(spark.read.parquet(s"$dir/target_counts"), "c_t")
-    val crRows = countRows(spark.read.parquet(s"$dir/raw_counts"), "c_r")
+    val pRow = lifecycle.params(spark, dir)
+    val (buckets, nT, nR, sig) = parse(pRow)
+    val (ctRows, crRows) = storedCounts(spark, dir)
     val binsOk = ctRows.size.toLong == nT && crRows.size.toLong == nR
     val all = ctRows ++ crRows
     val rangeOk = all.forall { case (b, c) => b >= 0 && b < buckets && c > 0 }
     val sigOk = signature(ctRows, crRows) == sig
     // tok_ok REPORTS what storedTok/score would throw on: a
     // pre-tokenizer-layout params row or an unknown stored name.
-    val pRow = spark.read.parquet(s"$dir/params").head()
     val tokName =
       if (pRow.schema.fieldNames.contains("dtok")) pRow.getAs[String]("dtok")
       else "(pre-tokenizer layout)"
     val tokOk = tokName == "ascii" || tokName == "unicode"
-    val (hasManifest, stale) =
-      SwapManifest.staleTables(SwapManifest.fsOf(spark, dir), dir)
+    val (hasManifest, stale) = lifecycle.staleTables(spark, dir)
     Seq((buckets, ctRows.size.toLong, crRows.size.toLong, tokName, binsOk,
       rangeOk, sigOk, tokOk, hasManifest, stale.mkString(","),
       binsOk && rangeOk && sigOk && tokOk && hasManifest && stale.isEmpty))
@@ -250,31 +230,27 @@ object DsirIndex {
 
   private def requireValid(spark: SparkSession,
       dir: String): (Int, Long, Long, Long) = {
-    val p @ (_, nT, nR, sig) = readParams(spark, dir)
     // stamp agreement BEFORE the content checks (the BpeIndex ordering):
     // the manifest names a torn multi-table write outright
-    SwapManifest.verify(spark, dir, "DSIR index")
-    val ctRows = countRows(spark.read.parquet(s"$dir/target_counts"), "c_t")
-    val crRows = countRows(spark.read.parquet(s"$dir/raw_counts"), "c_r")
+    val p = parse(lifecycle.open(spark, dir))
+    checkContent(spark, dir, p)
+    p
+  }
+
+  /** Stored bin counts and content signature agree with `params`. */
+  private def checkContent(spark: SparkSession, dir: String,
+      params: (Int, Long, Long, Long)): Unit = {
+    val (_, nT, nR, sig) = params
+    val (ctRows, crRows) = storedCounts(spark, dir)
     require(ctRows.size.toLong == nT && crRows.size.toLong == nR,
       s"DSIR index at '$dir' is torn: params say ($nT, $nR) bins but " +
         s"(${ctRows.size}, ${crRows.size}) are stored — rebuild")
     require(signature(ctRows, crRows) == sig,
       s"DSIR index at '$dir' is torn: stored counts do not match the " +
         "params content signature (interleaved or partial build) — rebuild")
-    p
   }
 
-  private def readParams(spark: SparkSession,
-      dir: String): (Int, Long, Long, Long) =
-    try {
-      val row = spark.read.parquet(s"$dir/params").head()
-      (row.getAs[Int]("buckets"), row.getAs[Long]("n_target_bins"),
-        row.getAs[Long]("n_raw_bins"), row.getAs[Long]("sig"))
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"load: no DSIR index at '$dir' — the params table is missing; " +
-            "run build() first", e)
-    }
+  private def parse(row: Row): (Int, Long, Long, Long) =
+    (row.getAs[Int]("buckets"), row.getAs[Long]("n_target_bins"),
+      row.getAs[Long]("n_raw_bins"), row.getAs[Long]("sig"))
 }

@@ -29,103 +29,89 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
  */
 object IndexHealth {
 
-  /** The index kinds the dashboard can fold; maps 1:1 onto the seven
-    * persisted lifecycles. */
-  sealed trait Kind
-  case object Unigram extends Kind
-  case object BpeK extends Kind
-  case object Ivf extends Kind
-  case object Dedup extends Kind
-  case object Decon extends Kind
-  case object Dsir extends Kind
-  case object Classifier extends Kind
-
-  private final case class Check(chk: String, ok: Boolean,
+  private[llm] final case class Check(chk: String, ok: Boolean,
       detail: Option[Long])
 
-  private def nStale(r: Row): Long = {
-    val s = r.getAs[String]("stale_tables")
-    if (s.isEmpty) 0L else s.split(",").length.toLong
-  }
-  private def staleCheck(r: Row): Check =
-    Check("stale", r.getAs[String]("stale_tables").isEmpty, Some(nStale(r)))
-  private def manifestCheck(r: Row): Check =
-    Check("manifest", r.getAs[Boolean]("has_manifest"), None)
-  /** Writer-lease row (round 20): ok = no LIVE lease (quiescent index or
-    * a stale/crashed holder — either way a new maintenance job could
-    * acquire); detail = holder age in seconds when a lease file exists.
-    * A false here means a writer is active RIGHT NOW — schedule-collision
-    * visibility the after-the-fact stale/sig checks cannot give. */
-  private def leaseCheck(spark: SparkSession, dir: String): Check = {
-    val st = WriterLease.status(spark, dir)
-    Check("lease", !st.live, st.ageMs.map(_ / 1000))
+  private def flag(r: Row, chk: String, col: String): Check =
+    Check(chk, r.getAs[Boolean](col), None)
+
+  /** The index kinds the dashboard can fold; maps 1:1 onto the seven
+    * persisted lifecycles. Each kind names its index's `healthCheck` and
+    * melts that index's own checks (its "healthy" row included) from the
+    * report rows; the manifest, stale and lease rows are shared. */
+  sealed abstract class Kind private[llm] (
+      private[llm] val report: (SparkSession, String) => DataFrame,
+      private[llm] val own: Array[Row] => Seq[Check])
+
+  case object Unigram extends Kind(UnigramIndex.healthCheck, rs => {
+    val r = rs.head
+    Seq(Check("n_stored", r.getAs[Boolean]("n_ok"),
+        Some(r.getAs[Long]("n_stored"))),
+      flag(r, "sig", "sig_ok"), flag(r, "unique", "unique_ok"),
+      flag(r, "cost", "cost_ok"),
+      Check("healthy", r.getAs[Boolean]("healthy"),
+        Some(r.getAs[Long]("n_pieces"))))
+  })
+  case object BpeK extends Kind(BpeIndex.healthCheck, rs => {
+    val r = rs.head
+    Seq(Check("k", r.getAs[Boolean]("k_ok"), Some(r.getAs[Int]("k").toLong)),
+      flag(r, "sep", "sep_ok"), flag(r, "sig", "sig_ok"),
+      flag(r, "ranks", "ranks_ok"), flag(r, "pretok", "pretok_ok"),
+      Check("healthy", r.getAs[Boolean]("healthy"),
+        Some(r.getAs[Long]("n_merges"))))
+  })
+  case object Ivf extends Kind(IvfIndex.healthCheck, rs => Seq(
+    Check("healthy", rs.head.getAs[Boolean]("healthy"),
+      Some(rs.head.getAs[Long]("n_tables")))))
+  /** One report row per LSH band; the index-wide columns repeat. */
+  case object Dedup extends Kind(DedupIndex.healthCheck, rs => {
+    val docs = rs.head.getAs[Long]("docs_indexed")
+    Seq(Check("docs_indexed", docs > 0, Some(docs)),
+      Check("bands", rs.length > 0, Some(rs.length.toLong)),
+      Check("healthy", manifestOk(rs.head) && docs > 0, Some(docs)))
+  })
+  case object Decon extends Kind(DeconIndex.healthCheck, rs => Seq(
+    Check("healthy", manifestOk(rs.head), None)))
+  case object Dsir extends Kind(DsirIndex.healthCheck, rs => {
+    val r = rs.head
+    Seq(flag(r, "bins", "bins_ok"), flag(r, "range", "range_ok"),
+      flag(r, "sig", "sig_ok"), flag(r, "tok", "tok_ok"),
+      Check("healthy", r.getAs[Boolean]("healthy"),
+        Some(r.getAs[Int]("buckets").toLong)))
+  })
+  case object Classifier extends Kind(ClassifierIndex.healthCheck, rs => {
+    val r = rs.head
+    Seq(Check("one_row", r.getAs[Boolean]("one_row"),
+        Some(r.getAs[Long]("model_rows"))),
+      flag(r, "sig", "sig_ok"),
+      Check("healthy", r.getAs[Boolean]("healthy"),
+        Some(r.getAs[Long]("threshold_permille"))))
+  })
+
+  private def manifestOk(r: Row): Boolean =
+    r.getAs[Boolean]("has_manifest") && r.getAs[String]("stale_tables").isEmpty
+
+  /** The rows every lifecycle shares: manifest presence, stale tables
+    * (detail = how many), and the writer lease — ok = no LIVE lease
+    * (quiescent index or a stale/crashed holder — either way a new
+    * maintenance job could acquire); detail = holder age in seconds when
+    * a lease file exists. A false lease row means a writer is active
+    * RIGHT NOW — schedule-collision visibility the after-the-fact
+    * stale/sig checks cannot give. */
+  private def shared(spark: SparkSession, dir: String, r: Row): Seq[Check] = {
+    val stale = r.getAs[String]("stale_tables")
+    val lease = WriterLease.status(spark, dir)
+    Seq(Check("manifest", r.getAs[Boolean]("has_manifest"), None),
+      Check("stale", stale.isEmpty,
+        Some(if (stale.isEmpty) 0L else stale.split(",").length.toLong)),
+      Check("lease", !lease.live, lease.ageMs.map(_ / 1000)))
   }
 
   private def melt(spark: SparkSession, kind: Kind,
-      dir: String): Seq[Check] = kind match {
-    case Unigram =>
-      val r = UnigramIndex.healthCheck(spark, dir).head()
-      Seq(
-        Check("n_stored", r.getAs[Boolean]("n_ok"),
-          Some(r.getAs[Long]("n_stored"))),
-        Check("sig", r.getAs[Boolean]("sig_ok"), None),
-        Check("unique", r.getAs[Boolean]("unique_ok"), None),
-        Check("cost", r.getAs[Boolean]("cost_ok"), None),
-        manifestCheck(r), staleCheck(r), leaseCheck(spark, dir),
-        Check("healthy", r.getAs[Boolean]("healthy"),
-          Some(r.getAs[Long]("n_pieces"))))
-    case BpeK =>
-      val r = BpeIndex.healthCheck(spark, dir).head()
-      Seq(
-        Check("k", r.getAs[Boolean]("k_ok"), Some(r.getAs[Int]("k").toLong)),
-        Check("sep", r.getAs[Boolean]("sep_ok"), None),
-        Check("sig", r.getAs[Boolean]("sig_ok"), None),
-        Check("ranks", r.getAs[Boolean]("ranks_ok"), None),
-        Check("pretok", r.getAs[Boolean]("pretok_ok"), None),
-        manifestCheck(r), staleCheck(r), leaseCheck(spark, dir),
-        Check("healthy", r.getAs[Boolean]("healthy"),
-          Some(r.getAs[Long]("n_merges"))))
-    case Ivf =>
-      val r = IvfIndex.healthCheck(spark, dir).head()
-      Seq(manifestCheck(r), staleCheck(r), leaseCheck(spark, dir),
-        Check("healthy", r.getAs[Boolean]("healthy"),
-          Some(r.getAs[Long]("n_tables"))))
-    case Dedup =>
-      val rows = DedupIndex.healthCheck(spark, dir).collect()
-      require(rows.nonEmpty, s"dedup index at '$dir' reported no bands")
-      val r = rows.head
-      val docs = r.getAs[Long]("docs_indexed")
-      val manifest = r.getAs[Boolean]("has_manifest")
-      val staleOk = r.getAs[String]("stale_tables").isEmpty
-      Seq(manifestCheck(r), staleCheck(r), leaseCheck(spark, dir),
-        Check("docs_indexed", docs > 0, Some(docs)),
-        Check("bands", rows.length > 0, Some(rows.length.toLong)),
-        Check("healthy", manifest && staleOk && docs > 0, Some(docs)))
-    case Decon =>
-      val r = DeconIndex.healthCheck(spark, dir).head()
-      val manifest = r.getAs[Boolean]("has_manifest")
-      val staleOk = r.getAs[String]("stale_tables").isEmpty
-      Seq(manifestCheck(r), staleCheck(r), leaseCheck(spark, dir),
-        Check("healthy", manifest && staleOk, None))
-    case Dsir =>
-      val r = DsirIndex.healthCheck(spark, dir).head()
-      Seq(
-        Check("bins", r.getAs[Boolean]("bins_ok"), None),
-        Check("range", r.getAs[Boolean]("range_ok"), None),
-        Check("sig", r.getAs[Boolean]("sig_ok"), None),
-        Check("tok", r.getAs[Boolean]("tok_ok"), None),
-        manifestCheck(r), staleCheck(r), leaseCheck(spark, dir),
-        Check("healthy", r.getAs[Boolean]("healthy"),
-          Some(r.getAs[Int]("buckets").toLong)))
-    case Classifier =>
-      val r = ClassifierIndex.healthCheck(spark, dir).head()
-      Seq(
-        Check("one_row", r.getAs[Boolean]("one_row"),
-          Some(r.getAs[Long]("model_rows"))),
-        Check("sig", r.getAs[Boolean]("sig_ok"), None),
-        manifestCheck(r), staleCheck(r), leaseCheck(spark, dir),
-        Check("healthy", r.getAs[Boolean]("healthy"),
-          Some(r.getAs[Long]("threshold_permille"))))
+      dir: String): Seq[Check] = {
+    val rows = kind.report(spark, dir).collect()
+    require(rows.nonEmpty, s"index at '$dir' reported no health rows")
+    shared(spark, dir, rows.head) ++ kind.own(rows)
   }
 
   /** Fold the given `(lifecycle, kind, dir)` triples into the dashboard

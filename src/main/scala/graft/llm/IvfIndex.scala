@@ -30,18 +30,17 @@ import org.apache.spark.sql.functions._
  * so search-after-build equals the inline operator row-for-row.
  */
 object IvfIndex {
-  import org.apache.hadoop.fs.{FileSystem, Path}
+  import org.apache.hadoop.fs.Path
 
   // Torn-swap detection: per-table version stamps + last-written
-  // manifest, shared with [[BpeIndex]] — see [[SwapManifest]]. A torn
-  // IVF set (centroids from one rebuild, assignments from another)
-  // would silently route partial-probe searches wrong; the serving
-  // paths refuse it loudly instead.
-  import SwapManifest.{fsOf, newVersion, stampTables, readManifest,
-    writeManifest}
+  // manifest ([[IndexLifecycle]]). A torn IVF set (centroids from one
+  // rebuild, assignments from another) would silently route
+  // partial-probe searches wrong; the serving paths refuse it loudly.
+  private val lifecycle = new IndexLifecycle("IVF index",
+    Seq("centroids", "assignments", "pq_codebooks", "pq_codes"))
 
-  private def verifyVersions(spark: SparkSession, dir: String): Unit =
-    SwapManifest.verify(spark, dir, "IVF index")
+  private def present(spark: SparkSession, dir: String, t: String): Boolean =
+    SwapManifest.fsOf(spark, dir).exists(new Path(s"$dir/$t"))
 
   /** Operational report for the manifest layout ([[graft.llm.DedupIndex
     * .healthCheck]]'s contract: REPORTS where the serving paths throw):
@@ -49,9 +48,9 @@ object IvfIndex {
     * monitoring rule alerts on. */
   def healthCheck(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val fs = fsOf(spark, dir)
-    val (hasManifest, stale) = SwapManifest.staleTables(fs, dir)
-    val nTables = readManifest(fs, dir).map(_.size.toLong).getOrElse(0L)
+    val (hasManifest, stale) = lifecycle.staleTables(spark, dir)
+    val nTables = SwapManifest.readManifest(SwapManifest.fsOf(spark, dir), dir)
+      .map(_.size.toLong).getOrElse(0L)
     Seq((hasManifest, nTables, stale.mkString(","),
       hasManifest && stale.isEmpty))
       .toDF("has_manifest", "n_tables", "stale_tables", "healthy")
@@ -69,7 +68,7 @@ object IvfIndex {
     * so serving them against the new centroids would be exactly the
     * mixed-version answer the manifest exists to prevent — and the
     * manifest alone can't catch it, because build()'s manifest lists
-    * only its own two tables, so [[verifyVersions]] would pass. With
+    * only its own two tables, so the version check would pass. With
     * the delete, [[searchPq]] fails loudly ("no PQ index … run
     * buildPq()") until buildPq reruns. Crash windows stay detectable:
     * a crash before the delete leaves the overwritten centroids/
@@ -77,30 +76,24 @@ object IvfIndex {
     * every serving path refuses. */
   def build(corpus: DataFrame, dir: String, nCells: Int = 16,
       iters: Int = 2): Unit =
-    WriterLease.withLease(corpus.sparkSession, dir, "ivf build") {
-      buildImpl(corpus, dir, nCells, iters)
+    lifecycle.build(corpus.sparkSession, dir) { out =>
+      writeCoarse(corpus, out, nCells, iters)
+      Seq("pq_codebooks", "pq_codes").foreach(t =>
+        SwapManifest.fsOf(corpus.sparkSession, dir)
+          .delete(new Path(s"$dir/$t"), true))
     }
 
-  /** [[build]] without the writer lease — [[buildPq]] holds one lease
-    * across its build + PQ phases (a lease is not reentrant). */
-  private def buildImpl(corpus: DataFrame, dir: String, nCells: Int,
-      iters: Int): Unit = {
-    val spark = corpus.sparkSession
-    SimilaritySearch.kmeansCentroids(corpus, nCells, iters)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
+  /** Centroids + the cell-partitioned assignments, shared by [[build]]
+    * and [[buildPq]]. */
+  private def writeCoarse(corpus: DataFrame, out: IndexLifecycle.Out,
+      nCells: Int, iters: Int): Unit = {
+    out.parquet("centroids",
+      SimilaritySearch.kmeansCentroids(corpus, nCells, iters))
     // assign against the WRITTEN centroids (not the in-flight plan) so
     // append() and search() see the identical values byte-for-byte
-    SimilaritySearch.assignCells(corpus, centroids(spark, dir))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/assignments")
-    val fs = fsOf(spark, dir)
-    Seq("pq_codebooks", "pq_codes").foreach { t =>
-      val p = new Path(s"$dir/$t")
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val v = newVersion()
-    stampTables(fs, dir, Seq("centroids", "assignments"), v)
-    writeManifest(fs, dir,
-      Map("centroids" -> v, "assignments" -> v))
+    out.write("assignments")(SimilaritySearch.assignCells(corpus,
+        corpus.sparkSession.read.parquet(out.path("centroids")))
+      .write.mode("overwrite").partitionBy("cell").parquet(_))
   }
 
   /** Assign new vectors against the frozen centroids and append —
@@ -159,20 +152,9 @@ object IvfIndex {
     * `centroids`/`pq_codebooks` are single-write tables and never need
     * it. Run on a schedule, not in the append path. */
   def compact(spark: SparkSession, dir: String): Unit =
-    WriterLease.withLease(spark, dir, "ivf compact") {
-    val fs = fsOf(spark, dir)
-    val man = readManifest(fs, dir).getOrElse(Map.empty)
-    Seq("assignments", "pq_codes").foreach { t =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$t")
-      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) {
-        graft.pipeline.Maintenance.compactHivePartitioned(spark, s"$dir/$t", "cell")
-        // the compaction swap rewrites the table directory, dropping its
-        // version stamp — re-stamp from the manifest (row content and
-        // therefore the VERSION are unchanged; only the file layout is)
-        man.get(t).foreach(v => stampTables(fs, dir, Seq(t), v))
-      }
-    }
-    }
+    lifecycle.compact(spark, dir,
+        Seq("assignments", "pq_codes").filter(present(spark, dir, _)))(
+      graft.pipeline.Maintenance.compactHivePartitioned(spark, _, "cell"))
 
   /**
    * Rebuild-from-drift: re-learn centroids from the STORED vectors and
@@ -186,9 +168,10 @@ object IvfIndex {
    * untouched, they encode the vector, not its routing.
    *
    * Atomicity: every new table is fully WRITTEN to a staging directory
-   * first, then each table swaps via the [[graft.pipeline.Maintenance]]
-   * rename pair (live → old, staged → live, delete old) — a racing
-   * reader sees old-or-new files, never a mix of a table. The stored
+   * first, then the tables swap via [[IndexLifecycle.rebuild]] (stamped
+   * staging, [[StagedSwap]] with phase-1 rollback, manifest last) — a
+   * racing reader sees old-or-new files, never a mix of a table, and a
+   * torn set fails the version check. The stored
    * vectors are checkpointed BEFORE any rename so no lazy scan can list
    * a directory mid-swap ([[append]]'s lineage-cut reasoning). The
    * tables swap sequentially — SINGLE WRITER per index, and searches
@@ -202,58 +185,20 @@ object IvfIndex {
    */
   def rebuild(spark: SparkSession, dir: String, nCells: Int = 16,
       iters: Int = 2): Unit =
-    WriterLease.withLease(spark, dir, "ivf rebuild") {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(dir).getFileSystem(conf)
-    val stored = spark.read.parquet(s"$dir/assignments")
-      .select(col("vec_id"), col("embedding")).localCheckpoint(true)
-    require(!stored.isEmpty, s"rebuild: no vectors indexed at '$dir'")
-    val allTables = Seq("centroids", "assignments", "pq_codes")
-    StagedSwap.precleanTmp(fs, dir, allTables)
-    var staged = false
-    try {
-      SimilaritySearch.kmeansCentroids(stored, nCells, iters)
-        .write.mode("overwrite").parquet(s"$dir/centroids__graft_tmp")
-      // assign against the WRITTEN staged centroids ([[build]]'s
-      // byte-identity reasoning)
-      SimilaritySearch.assignCells(stored,
-        spark.read.parquet(s"$dir/centroids__graft_tmp"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$dir/assignments__graft_tmp")
-      val hasPq = fs.exists(new Path(s"$dir/pq_codes"))
-      if (hasPq)
-        spark.read.parquet(s"$dir/pq_codes").drop("cell")
-          .join(spark.read.parquet(s"$dir/assignments__graft_tmp")
+    lifecycle.rebuild(spark, dir) { out =>
+      val stored = spark.read.parquet(s"$dir/assignments")
+        .select(col("vec_id"), col("embedding")).localCheckpoint(true)
+      require(!stored.isEmpty, s"rebuild: no vectors indexed at '$dir'")
+      writeCoarse(stored, out, nCells, iters)
+      // pq_codebooks is not restaged (codes encode the vector, not its
+      // routing) and keeps its manifest entry; pq_codes re-partitions
+      // under the new cells.
+      if (present(spark, dir, "pq_codes"))
+        out.write("pq_codes")(spark.read.parquet(s"$dir/pq_codes").drop("cell")
+          .join(spark.read.parquet(out.path("assignments"))
             .select(col("vec_id"), col("cell")), "vec_id")
           .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$dir/pq_codes__graft_tmp")
-      staged = true
-      // Two-phase swap with phase-1 rollback (shared [[StagedSwap]]): a
-      // torn index (new centroids + old assignments would silently route
-      // partial-probe searches wrong) is never left mixed — a mid-swap
-      // failure rolls back onto the previous version, and old copies are
-      // deleted only after ALL tables are live on the new layout. The
-      // staged dirs are stamped with the NEW version BEFORE the swap and
-      // the manifest is rewritten LAST, after every rename: a crash
-      // anywhere in between leaves stamps that disagree with the old
-      // manifest, which the serving paths refuse loudly
-      // ([[verifyVersions]]) instead of serving mixed. pq_codebooks is
-      // not swapped (codes encode the vector, not its routing) and keeps
-      // its manifest entry.
-      val tables = Seq("centroids", "assignments") ++
-        (if (hasPq) Seq("pq_codes") else Nil)
-      val v = newVersion()
-      stampTables(fs, dir, tables, v, suffix = "__graft_tmp")
-      StagedSwap.swapAll(fs, dir, tables)
-      writeManifest(fs, dir, readManifest(fs, dir).getOrElse(Map.empty) ++
-        tables.map(_ -> v).toMap)
-    } finally {
-      // a failure before the swaps leaves only staging dirs — remove
-      // them so distinct failures don't accumulate *__graft_tmp debris
-      if (!staged) StagedSwap.cleanupTmp(fs, dir, allTables)
-    }
+          .write.mode("overwrite").partitionBy("cell").parquet(_))
     }
 
   /**
@@ -305,7 +250,7 @@ object IvfIndex {
   def search(queries: DataFrame, dir: String, k: Int,
       nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    verifyVersions(spark, dir)
+    lifecycle.verify(spark, dir)
     val probes = SimilaritySearch.probeCells(queries, centroids(spark, dir), nprobe)
     val assigned = prunedRead(spark, s"$dir/assignments", probes)
       .select(col("vec_id"), col("embedding"), col("cell"))
@@ -324,20 +269,15 @@ object IvfIndex {
   def buildPq(corpus: DataFrame, dir: String, nCells: Int = 16,
       iters: Int = 2, dim: Int = 64, subspaces: Int = 8,
       nCodes: Int = 16): Unit =
-    WriterLease.withLease(corpus.sparkSession, dir, "ivf buildPq") {
-    val spark = corpus.sparkSession
-    buildImpl(corpus, dir, nCells, iters)
-    SimilaritySearch.pqCodebooks(corpus, dim, subspaces, nCodes)
-      .write.mode("overwrite").parquet(s"$dir/pq_codebooks")
-    SimilaritySearch.pqPacked(corpus, dim, subspaces, nCodes)
-      .join(spark.read.parquet(s"$dir/assignments").select("vec_id", "cell"),
-        "vec_id")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/pq_codes")
-    val fs = fsOf(spark, dir)
-    val v = newVersion()
-    stampTables(fs, dir, Seq("pq_codebooks", "pq_codes"), v)
-    writeManifest(fs, dir, readManifest(fs, dir).getOrElse(Map.empty) ++
-      Map("pq_codebooks" -> v, "pq_codes" -> v))
+    lifecycle.build(corpus.sparkSession, dir, "buildPq") { out =>
+      writeCoarse(corpus, out, nCells, iters)
+      out.parquet("pq_codebooks",
+        SimilaritySearch.pqCodebooks(corpus, dim, subspaces, nCodes))
+      out.write("pq_codes")(SimilaritySearch.pqPacked(corpus, dim, subspaces,
+          nCodes)
+        .join(corpus.sparkSession.read.parquet(out.path("assignments"))
+          .select("vec_id", "cell"), "vec_id")
+        .write.mode("overwrite").partitionBy("cell").parquet(_))
     }
 
   /** Top-`k` by asymmetric distance over the persisted PQ codes of the
@@ -348,7 +288,7 @@ object IvfIndex {
   def searchPq(queries: DataFrame, dir: String, k: Int,
       nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    verifyVersions(spark, dir)
+    lifecycle.verify(spark, dir)
     searchPqWithProbes(queries, dir, k,
       SimilaritySearch.probeCells(queries, centroids(spark, dir), nprobe))
   }
@@ -397,7 +337,7 @@ object IvfIndex {
       nprobe: Int = 4, refine: Int = 64): DataFrame = {
     require(refine >= k, s"refine ($refine) must be >= k ($k)")
     val spark = queries.sparkSession
-    verifyVersions(spark, dir)
+    lifecycle.verify(spark, dir)
     val probes = SimilaritySearch.probeCells(queries,
       centroids(spark, dir), nprobe)
     val cand = searchPqWithProbes(queries, dir, refine, probes)

@@ -3,9 +3,9 @@ package graft.llm
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /**
- * Torn-safe multi-table swap shared by the index rebuild lifecycles
- * ([[IvfIndex.rebuild]], [[BpeIndex.rebuild]]). A rebuild stages every
- * table under `<dir>/<table>__graft_tmp`, then calls [[swapAll]]:
+ * Torn-safe multi-table swap behind [[IndexLifecycle.rebuild]]. A
+ * rebuild stages every table under `<dir>/<table>__graft_tmp`, then
+ * calls [[swapAll]]:
  *
  *  - PHASE 1 renames per table (live → `__graft_old`, staged → live)
  *    WITHOUT deleting anything: a crash between two renames leaves each
@@ -23,22 +23,18 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  */
 object StagedSwap {
 
+  val TmpSuffix = "__graft_tmp"
+
   def livePath(dir: String, table: String): Path = new Path(s"$dir/$table")
   def tmpPath(dir: String, table: String): Path =
-    new Path(s"$dir/${table}__graft_tmp")
+    new Path(s"$dir/$table$TmpSuffix")
   def oldPath(dir: String, table: String): Path =
     new Path(s"$dir/${table}__graft_old")
 
-  /** Delete staging dirs left by a PREVIOUS failed rebuild, so a stale
-    * `__graft_tmp` can never be mistaken for this run's staged state. */
-  def precleanTmp(fs: FileSystem, dir: String, tables: Seq[String]): Unit =
-    tables.foreach { t =>
-      val stale = tmpPath(dir, t)
-      if (fs.exists(stale)) fs.delete(stale, true)
-    }
-
-  /** Remove this run's staging dirs after a failure BEFORE the swap —
-    * distinct failed rebuilds must not accumulate `__graft_tmp` debris. */
+  /** Delete the staging dirs of `tables`: before a rebuild, so a stale
+    * `__graft_tmp` left by a PREVIOUS failed run can never be mistaken
+    * for this run's staged state, and after a failure BEFORE the swap,
+    * so distinct failed rebuilds do not accumulate debris. */
   def cleanupTmp(fs: FileSystem, dir: String, tables: Seq[String]): Unit =
     tables.foreach { t =>
       val tmp = tmpPath(dir, t)
@@ -58,6 +54,7 @@ object StagedSwap {
         attempted += t
         require(fs.rename(live, old), s"swap: rename $live -> $old failed")
         require(fs.rename(tmp, live), s"swap: rename $tmp -> $live failed")
+        IndexLifecycle.step(s"swap $t")
       }
     } catch {
       case e: Throwable =>
@@ -88,6 +85,7 @@ object StagedSwap {
         }
         throw e
     }
+    IndexLifecycle.step("swapped")
     tables.foreach(t => fs.delete(oldPath(dir, t), true))
   }
 }

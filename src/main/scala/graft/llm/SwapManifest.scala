@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 
 /**
  * Per-table version stamps + a last-written manifest — the torn-swap
- * DETECTION layer shared by the multi-table index lifecycles
- * ([[IvfIndex]], [[BpeIndex]]). [[StagedSwap]] makes a mid-flight crash
+ * DETECTION layer of the persisted index lifecycles, written by
+ * [[IndexLifecycle]]. [[StagedSwap]] makes a mid-flight crash
  * RECOVERABLE (every table stays on some complete version); this makes
  * it DETECTABLE: each build/rebuild stamps every table directory with a
  * version file (underscore-prefixed — Spark's file index ignores it)

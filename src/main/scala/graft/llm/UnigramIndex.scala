@@ -40,30 +40,19 @@ object UnigramIndex {
     * field in order ([[BpeIndex.signature]]'s role: ties params to the
     * exact piece rows they were written with, so interleaved or partial
     * table overwrites are detectable even when shapes agree). */
-  def signature(ps: Seq[Piece]): Long = {
-    var h = 0xcbf29ce484222325L
-    def mix(s: String): Unit = {
-      var i = 0
-      while (i < s.length) { h ^= s.charAt(i); h *= 0x100000001b3L; i += 1 }
-      h ^= 0x1e; h *= 0x100000001b3L // field separator
-    }
-    ps.foreach { p => mix(p.piece); mix(p.freq.toString); mix(p.cost.toString) }
-    h
-  }
+  def signature(ps: Seq[Piece]): Long =
+    IndexLifecycle.fnv1a(ps.flatMap(p =>
+      Seq(p.piece, p.freq.toString, p.cost.toString)))
 
-  private val tableNames = Seq("pieces", "params")
+  private val lifecycle = new IndexLifecycle("unigram index",
+    Seq("pieces", "params"))
 
   /** Learn the vocabulary from `docs` and persist it under `dir`
     * (version-stamped, manifest LAST — the [[BpeIndex.build]] protocol). */
   def build(docs: DataFrame, dir: String, chunkLen: Int = 6,
       maxPieceLen: Int = 3, minCount: Long = 3L, vocabSize: Int = 40): Unit =
-    WriterLease.withLease(docs.sparkSession, dir, "unigram build") {
-      val ps = UnigramLm.learnVocab(docs, chunkLen, maxPieceLen, minCount,
-        vocabSize)
-      writeTables(docs, dir, ps, ps.map(_.freq).sum, chunkLen, maxPieceLen,
-        suffix = "")
-      stampAll(docs.sparkSession, dir)
-    }
+    lifecycle.build(docs.sparkSession, dir)(
+      writeLearned(docs, chunkLen, maxPieceLen, minCount, vocabSize))
 
   /**
    * Persist an EM-PRUNED vocabulary ([[UnigramLm.learnEm]] — the real
@@ -79,35 +68,37 @@ object UnigramIndex {
   def buildEm(docs: DataFrame, dir: String, chunkLen: Int = 6,
       maxPieceLen: Int = 3, minCount: Long = 3L, seedSize: Int = 40,
       targetSize: Int = 10, keepPermille: Int = 625): Unit =
-    WriterLease.withLease(docs.sparkSession, dir, "unigram buildEm") {
-      val em = UnigramLm.learnEm(docs, chunkLen, maxPieceLen, minCount,
-        seedSize, targetSize, keepPermille).last
-      writeTables(docs, dir, em.vocab, em.usageTotal, chunkLen, maxPieceLen,
-        suffix = "")
-      stampAll(docs.sparkSession, dir)
-    }
+    lifecycle.build(docs.sparkSession, dir, "buildEm")(writeEm(docs,
+      chunkLen, maxPieceLen, minCount, seedSize, targetSize, keepPermille))
 
-  private def stampAll(spark: SparkSession, dir: String): Unit = {
-    val fs = SwapManifest.fsOf(spark, dir)
-    val v = SwapManifest.newVersion()
-    SwapManifest.stampTables(fs, dir, tableNames, v)
-    SwapManifest.writeManifest(fs, dir, tableNames.map(_ -> v).toMap)
+  private def writeLearned(docs: DataFrame, chunkLen: Int, maxPieceLen: Int,
+      minCount: Long, vocabSize: Int)(out: IndexLifecycle.Out): Unit = {
+    val ps = UnigramLm.learnVocab(docs, chunkLen, maxPieceLen, minCount,
+      vocabSize)
+    writeTables(docs, out, ps, ps.map(_.freq).sum, chunkLen, maxPieceLen)
   }
 
-  private def writeTables(docs: DataFrame, dir: String, ps: Seq[Piece],
-      pricedTot: Long, chunkLen: Int, maxPieceLen: Int,
-      suffix: String): Unit = {
+  private def writeEm(docs: DataFrame, chunkLen: Int, maxPieceLen: Int,
+      minCount: Long, seedSize: Int, targetSize: Int, keepPermille: Int)(
+      out: IndexLifecycle.Out): Unit = {
+    val em = UnigramLm.learnEm(docs, chunkLen, maxPieceLen, minCount,
+      seedSize, targetSize, keepPermille).last
+    writeTables(docs, out, em.vocab, em.usageTotal, chunkLen, maxPieceLen)
+  }
+
+  private def writeTables(docs: DataFrame, out: IndexLifecycle.Out,
+      ps: Seq[Piece], pricedTot: Long, chunkLen: Int,
+      maxPieceLen: Int): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    ps.toDF("piece", "freq", "cost")
-      .write.mode("overwrite").parquet(s"$dir/pieces$suffix")
+    out.parquet("pieces", ps.toDF("piece", "freq", "cost"))
     val codec = UnigramLm.codecPriced(ps, chunkLen, maxPieceLen, pricedTot)
-    Seq((ps.size, chunkLen, maxPieceLen, codec.unkCost, signature(ps),
+    out.parquet("params", Seq((ps.size, chunkLen, maxPieceLen, codec.unkCost,
+      signature(ps),
       fertilityPermille(docs, ps, chunkLen, maxPieceLen, pricedTot),
       pricedTot))
       .toDF("n_pieces", "chunk_len", "max_piece_len", "unk_cost", "sig",
-        "fert_permille", "priced_tot")
-      .write.mode("overwrite").parquet(s"$dir/params$suffix")
+        "fert_permille", "priced_tot"))
   }
 
   /** Corpus fertility under `ps`: Viterbi tokens per CHUNK in integer
@@ -131,8 +122,7 @@ object UnigramIndex {
     val spark = docs.sparkSession
     import spark.implicits._
     val (ps, chunkLen, maxPieceLen, tot) = loadModel(spark, dir)
-    val fertTrain = spark.read.parquet(s"$dir/params").head()
-      .getAs[Long]("fert_permille")
+    val fertTrain = lifecycle.params(spark, dir).getAs[Long]("fert_permille")
     val fertNow = fertilityPermille(docs, ps, chunkLen, maxPieceLen, tot)
     Seq((ps.size, fertTrain, fertNow, fertNow - fertTrain))
       .toDF("n_pieces", "fert_train_permille", "fert_now_permille",
@@ -203,15 +193,14 @@ object UnigramIndex {
   def driftReportFrom(spark: SparkSession, dir: String,
       perDoc: DataFrame): DataFrame = {
     import spark.implicits._
-    val p = requireIndex(spark, dir)
-    SwapManifest.verify(spark, dir, "unigram index")
-    val fertTrain = spark.read.parquet(s"$dir/params").head()
-      .getAs[Long]("fert_permille")
+    val params = lifecycle.open(spark, dir)
+    val fertTrain = params.getAs[Long]("fert_permille")
     val agg = perDoc.agg(
       coalesce(sum(col("n_toks")), lit(0L)),
       coalesce(sum(col("n_chunks")), lit(0L))).head()
     val fertNow = agg.getLong(0) * 1000L / math.max(agg.getLong(1), 1L)
-    Seq((p.nPieces, fertTrain, fertNow, fertNow - fertTrain))
+    Seq((params.getAs[Int]("n_pieces"), fertTrain, fertNow,
+        fertNow - fertTrain))
       .toDF("n_pieces", "fert_train_permille", "fert_now_permille",
         "drift_permille")
   }
@@ -221,57 +210,27 @@ object UnigramIndex {
     * version, swap both tables, manifest LAST; phase-1 failure rolls
     * back, and any tear is refused by the load paths). */
   def rebuild(docs: DataFrame, dir: String, chunkLen: Int = 6,
-      maxPieceLen: Int = 3, minCount: Long = 3L, vocabSize: Int = 40): Unit =
-    rebuildWith(docs, dir) { suffix =>
-      val ps = UnigramLm.learnVocab(docs, chunkLen, maxPieceLen, minCount,
-        vocabSize)
-      writeTables(docs, dir, ps, ps.map(_.freq).sum, chunkLen, maxPieceLen,
-        suffix)
-    }
+      maxPieceLen: Int = 3, minCount: Long = 3L, vocabSize: Int = 40): Unit = {
+    lifecycle.params(docs.sparkSession, dir) // rebuild replaces; build creates
+    lifecycle.rebuild(docs.sparkSession, dir)(
+      writeLearned(docs, chunkLen, maxPieceLen, minCount, vocabSize))
+  }
 
   /** [[rebuild]] for the EM-pruned model ([[buildEm]]'s staged parity):
     * re-run the full EM learn on a new corpus snapshot and swap live —
     * same StagedSwap + manifest-LAST protocol, pricing total re-stored. */
   def rebuildEm(docs: DataFrame, dir: String, chunkLen: Int = 6,
       maxPieceLen: Int = 3, minCount: Long = 3L, seedSize: Int = 40,
-      targetSize: Int = 10, keepPermille: Int = 625): Unit =
-    rebuildWith(docs, dir) { suffix =>
-      val em = UnigramLm.learnEm(docs, chunkLen, maxPieceLen, minCount,
-        seedSize, targetSize, keepPermille).last
-      writeTables(docs, dir, em.vocab, em.usageTotal, chunkLen, maxPieceLen,
-        suffix)
-    }
-
-  /** The shared staged-swap shell: stage under __graft_tmp via
-    * `writeStaged`, stamp the NEW version, swap both tables, manifest
-    * LAST; phase-1 failure rolls back, any tear refuses at load. */
-  private def rebuildWith(docs: DataFrame, dir: String)(
-      writeStaged: String => Unit): Unit =
-    WriterLease.withLease(docs.sparkSession, dir, "unigram rebuild") {
-    import org.apache.hadoop.fs.Path
-    val spark = docs.sparkSession
-    requireIndex(spark, dir)
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    StagedSwap.precleanTmp(fs, dir, tableNames)
-    var staged = false
-    try {
-      writeStaged("__graft_tmp")
-      val v = SwapManifest.newVersion()
-      SwapManifest.stampTables(fs, dir, tableNames, v, suffix = "__graft_tmp")
-      staged = true
-      StagedSwap.swapAll(fs, dir, tableNames)
-      SwapManifest.writeManifest(fs, dir, tableNames.map(_ -> v).toMap)
-    } finally {
-      if (!staged) StagedSwap.cleanupTmp(fs, dir, tableNames)
-    }
-    }
+      targetSize: Int = 10, keepPermille: Int = 625): Unit = {
+    lifecycle.params(docs.sparkSession, dir)
+    lifecycle.rebuild(docs.sparkSession, dir)(writeEm(docs, chunkLen,
+      maxPieceLen, minCount, seedSize, targetSize, keepPermille))
+  }
 
   /** The stored vocabulary table (piece, freq, cost), piece-ordered —
     * the registry-facing roundtrip read. */
   def loadVocab(spark: SparkSession, dir: String): DataFrame = {
-    requireIndex(spark, dir)
-    SwapManifest.verify(spark, dir, "unigram index")
+    lifecycle.open(spark, dir)
     spark.read.parquet(s"$dir/pieces")
   }
 
@@ -304,12 +263,8 @@ object UnigramIndex {
   def loadModel(spark: SparkSession,
       dir: String): (Seq[Piece], Int, Int, Long) = {
     val p = requireIndex(spark, dir)
-    SwapManifest.verify(spark, dir, "unigram index")
-    val ps = spark.read.parquet(s"$dir/pieces")
-      .orderBy("piece").collect()
-      .map(r => Piece(r.getAs[String]("piece"), r.getAs[Long]("freq"),
-        r.getAs[Long]("cost")))
-      .toSeq
+    lifecycle.verify(spark, dir)
+    val ps = storedPieces(spark, dir)
     require(ps.size == p.nPieces,
       s"unigram index at '$dir' is torn: params say n_pieces=${p.nPieces} " +
         s"but ${ps.size} pieces are stored — rebuild")
@@ -334,11 +289,7 @@ object UnigramIndex {
   def healthCheck(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val p = requireIndex(spark, dir)
-    val ps = spark.read.parquet(s"$dir/pieces")
-      .orderBy("piece").collect()
-      .map(r => Piece(r.getAs[String]("piece"), r.getAs[Long]("freq"),
-        r.getAs[Long]("cost")))
-      .toSeq
+    val ps = storedPieces(spark, dir)
     val nOk = ps.size == p.nPieces
     val sigOk = signature(ps) == p.sig
     val uniqueOk = ps.map(_.piece).distinct.size == ps.size
@@ -346,8 +297,7 @@ object UnigramIndex {
     val costOk = ps.forall(x =>
       x.cost == UnigramLm.bitlen(tot) - UnigramLm.bitlen(x.freq)) &&
       p.unkCost == UnigramLm.bitlen(tot) - 1L
-    val (hasManifest, stale) =
-      SwapManifest.staleTables(SwapManifest.fsOf(spark, dir), dir)
+    val (hasManifest, stale) = lifecycle.staleTables(spark, dir)
     Seq((p.nPieces.toLong, ps.size.toLong, nOk, sigOk, uniqueOk, costOk,
       hasManifest, stale.mkString(","),
       nOk && sigOk && uniqueOk && costOk && hasManifest && stale.isEmpty))
@@ -358,22 +308,22 @@ object UnigramIndex {
   private final case class Params(nPieces: Int, chunkLen: Int,
       maxPieceLen: Int, unkCost: Long, sig: Long, pricedTot: Option[Long])
 
-  private def requireIndex(spark: SparkSession, dir: String): Params =
-    try {
-      val r = spark.read.parquet(s"$dir/params").head()
-      // priced_tot: absent on pre-EM-layout artifacts, which are
-      // plain-learn by construction (their total IS sum(freq))
-      val tot =
-        if (r.schema.fieldNames.contains("priced_tot"))
-          Some(r.getAs[Long]("priced_tot"))
-        else None
-      Params(r.getAs[Int]("n_pieces"), r.getAs[Int]("chunk_len"),
-        r.getAs[Int]("max_piece_len"), r.getAs[Long]("unk_cost"),
-        r.getAs[Long]("sig"), tot)
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"load: no unigram index at '$dir' — the params table is " +
-            "missing; run build() first", e)
-    }
+  private def requireIndex(spark: SparkSession, dir: String): Params = {
+    val r = lifecycle.params(spark, dir)
+    // priced_tot: absent on pre-EM-layout artifacts, which are
+    // plain-learn by construction (their total IS sum(freq))
+    val tot =
+      if (r.schema.fieldNames.contains("priced_tot"))
+        Some(r.getAs[Long]("priced_tot"))
+      else None
+    Params(r.getAs[Int]("n_pieces"), r.getAs[Int]("chunk_len"),
+      r.getAs[Int]("max_piece_len"), r.getAs[Long]("unk_cost"),
+      r.getAs[Long]("sig"), tot)
+  }
+
+  private def storedPieces(spark: SparkSession, dir: String): Seq[Piece] =
+    spark.read.parquet(s"$dir/pieces").orderBy("piece").collect()
+      .map(r => Piece(r.getAs[String]("piece"), r.getAs[Long]("freq"),
+        r.getAs[Long]("cost")))
+      .toSeq
 }

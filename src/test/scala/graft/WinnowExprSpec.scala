@@ -86,6 +86,47 @@ class WinnowExprSpec extends SparkSpec {
     }
   }
 
+  test("winnow at n≈10⁶ tokens: one row, memory linear in n, ≡ brute force") {
+    import graft.functions.{LlmExprs, WinnowEncExpr, WinnowValuesExpr}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val (n, w) = (1000000, 4)
+    val P = TextFunctions.P
+    val rnd = new scala.util.Random(7)
+    val text = Iterator.fill(n)(s"w${rnd.nextInt(5000)}").mkString(" ")
+    // the real path: a 10⁶-token document through the codegen'd encoders
+    val r = Seq(text).toDF("text")
+      .select(TextFunctions.shingleHashList(col("text"), 1).as("hs"))
+      .select(col("hs"),
+        ofExpr(WinnowEncExpr(exprOf(col("hs")), w, P)),
+        ofExpr(WinnowValuesExpr(exprOf(col("hs")), w))).head()
+    val hs = r.getSeq[Long](0).toArray
+    assert(hs.length == n)
+    // brute force: each window's rightmost minimum
+    val picks = (0 to n - w).map(i => (i until i + w).minBy(j => (hs(j), -j)))
+    val enc = picks.map(p => p * P + hs(p))
+    assert(r.getSeq[Long](1) == enc.indices.collect {
+      case i if i == 0 || enc(i) != enc(i - 1) => enc(i) })
+    assert(r.getSeq[Long](2) == picks.map(hs).distinct)
+    // Memory per row: the hash copy (8n), the index deque (4n), the output
+    // (8n) and its trimmed copy — linear in n, never n·w. The value form
+    // also boxes every window's selected value for its hash-set check
+    // (16 B per window) and keeps one set entry per distinct value.
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    def allocated(f: => Any): Long = {
+      val t = Thread.currentThread().getId
+      val b0 = mx.getThreadAllocatedBytes(t)
+      f
+      mx.getThreadAllocatedBytes(t) - b0
+    }
+    val in = new GenericArrayData(hs)
+    val encBytes = allocated(LlmExprs.winnowEnc(in, w, P))
+    val valBytes = allocated(LlmExprs.winnowValues(in, w))
+    assert(encBytes < 36L * n, s"winnowEnc allocated $encBytes B for n=$n")
+    assert(valBytes < 48L * n + 64L * 5000,
+      s"winnowValues allocated $valBytes B for n=$n")
+  }
+
   test("span window hashes: native shingle form ≡ per-window polyHash HOF") {
     for (width <- Seq(1, 2, 5); mod <- Seq(TextFunctions.P,
         graft.functions.LlmExprs.P48)) {
