@@ -1,7 +1,8 @@
 package graft
 
-/** Pure contention-detection logic for [[Bench]] — no Spark, fully
-  * unit-testable on synthetic timing series (BenchSentinelSpec).
+/** Pure logic for [[Bench]] — contention detection, the stdout line and
+  * the per-run layer split — no Spark, fully unit-testable on synthetic
+  * timing series (BenchSentinelSpec).
   *
   * Three independent detectors, each closing a hole a past round walked
   * through:
@@ -109,6 +110,15 @@ object BenchSentinel {
   def cs(v: Double): String =
     if (v < 0) "-1" else math.round(v * 100).toString
 
+  /** JSON string body: quotes and backslashes escaped, control
+    * characters blanked. */
+  def esc(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => " "
+    case c => c.toString
+  }
+
   /** The complete stdout summary line, pure so BenchSentinelSpec can pin
     * its length budget on a synthetic ≥300-query registry. Per-query and
     * probe values are integer centiseconds (keys suffixed _cs, plus
@@ -137,12 +147,6 @@ object BenchSentinel {
                  isContended: Boolean,
                  sf: String,
                  retimed: Seq[(String, Double)] = Nil): String = {
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    }
     def obj(kvs: Seq[(String, String)]): String =
       kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val qs = queries.sortBy(_._1).map { case (_, v) => cs(v) }
@@ -155,6 +159,49 @@ object BenchSentinel {
     val regressedJson = regressed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val retimedJson = obj(retimed.map { case (k, v) => k -> cs(v) })
     s"""{"metric":"total","value":$total,"unit":"sec","q_unit":"cs","q_order":"name","n_q":${queries.size},"queries_cs":$qs,"queries_min_cs":$qsMin,"errors":$errs,"flagged":$flaggedJson,"probe_cs":$probesJson,"probe_spiked":$spikedJson,"regressed":$regressedJson,"retimed_cs":$retimedJson,"contended":$isContended,"sf":"$sf"}"""
+  }
+
+  /** What [[Bench]]'s job listener saw of one timed run: each job's
+    * (start, end) in epoch ms by job id — end is `Long.MaxValue` until
+    * the job's end event arrives — and its tasks' executor run time,
+    * shuffle read/write bytes and spill (memory + disk) bytes. */
+  final case class RunTrace(jobs: Map[Int, (Long, Long)] = Map.empty,
+      taskMs: Long = 0L, shuffleRead: Long = 0L, shuffleWrite: Long = 0L,
+      spill: Long = 0L)
+
+  /** One run's wall time split into driver and job layers: the time
+    * before the first job, the union of job intervals, the gaps between
+    * them and the time after the last job sum to the wall time; task
+    * time and bytes are executor-side totals. */
+  final case class Layers(jobs: Int, firstGapS: Double, jobS: Double,
+      gapS: Double, tailS: Double, taskS: Double, shuffleRead: Long,
+      shuffleWrite: Long, spill: Long) {
+    def json: String = {
+      def s(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+      s"""{"jobs":$jobs,"first_gap_s":${s(firstGapS)},"job_s":${s(jobS)},"gap_s":${s(gapS)},"tail_s":${s(tailS)},"task_s":${s(taskS)},"shuffle_read_bytes":$shuffleRead,"shuffle_write_bytes":$shuffleWrite,"spill_bytes":$spill}"""
+    }
+  }
+
+  /** Layer split of a run that started at `t0` (epoch ms) and took
+    * `wallS` seconds. Job intervals are clipped to the run window and
+    * merged, so overlapping jobs (AQE stages, broadcasts) count once; a
+    * run without jobs is all `first_gap_s`. */
+  def layers(t0: Long, wallS: Double, run: RunTrace): Layers = {
+    val t1 = t0 + wallS * 1000
+    val clipped = run.jobs.values.toSeq
+      .map { case (s, e) => (math.max(s.toDouble, t0.toDouble), math.min(e.toDouble, t1)) }
+      .filter { case (s, e) => e > s }.sortBy(_._1)
+    val merged = clipped.foldLeft(List.empty[(Double, Double)]) {
+      case ((s0, e0) :: done, (s, e)) if s <= e0 => (s0, math.max(e0, e)) :: done
+      case (done, iv) => iv :: done
+    }.reverse
+    val jobMs = merged.map { case (s, e) => e - s }.sum
+    val firstGapMs = merged.headOption.fold(t1 - t0)(_._1 - t0)
+    val tailMs = merged.lastOption.fold(0.0)(t1 - _._2)
+    val gapMs = merged.zip(merged.drop(1)).map { case ((_, e), (s, _)) => s - e }.sum
+    Layers(run.jobs.size, firstGapMs / 1e3, jobMs / 1e3, gapMs / 1e3,
+      tailMs / 1e3, run.taskMs / 1e3, run.shuffleRead, run.shuffleWrite,
+      run.spill)
   }
 
   /** One end-of-sweep re-timing of a suspect query: median and min of

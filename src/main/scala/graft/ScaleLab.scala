@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
  * word-count range, language weights, 20 sources, the same ~1/625
  * planted exact-dup rate; embeddings as 10 labeled clusters in the same
  * value range), everything a pure function of the row id via
- * splitmix64, so re-generation is deterministic. [[ScaleProbe]] times a
- * query list at any sf dir with the bench's per-query protocol (one
- * untimed warm-up, then timed reps) without touching the bench
- * artifacts. SCALE.md records the fitted exponents.
+ * splitmix64, so re-generation is deterministic. A scoped [[Bench]] run
+ * (`SPARK_GRAFT_ONLY`, `SPARK_GRAFT_SF_DIR`) times queries at a generated
+ * dir without touching the bench artifacts. SCALE.md records the fitted
+ * exponents.
  */
 object ScaleLab {
 
@@ -30,17 +30,6 @@ object ScaleLab {
   /** Uniform in [0, n) from (seed, salt). */
   def rnd(seed: Long, salt: Long, n: Int): Int =
     (Math.floorMod(mix(seed * 0x100000001b3L + salt), n.toLong)).toInt
-
-  def session(cpus: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
 
   def genDocuments(spark: SparkSession, vocab: Array[String], nDocs: Long,
       seed: Long): DataFrame = {
@@ -84,7 +73,7 @@ object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(outDir, multS) = args
     val mult = multS.toDouble
-    val spark = ScaleLab.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
+    val spark = Bench.session()
     val src = "/root/testdata/sf0.1"
     val vocab = graft.model.Tables.documents(spark, src)
       .select(explode(split(col("text"), " ")).as("w"))
@@ -102,37 +91,6 @@ object ScaleGen {
         .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
     }
     println(s"""{"gen":"$outDir","mult":$mult}""")
-    spark.stop()
-  }
-}
-
-/** `runMain graft.ScaleProbe <sfDir> <q1,q2,...> <reps>` — time each
-  * named registry query at `sfDir`: one untimed warm-up, `reps` timed
-  * runs, one JSON line `{"sf":...,"times":{"q":[...]}}`. Bench
-  * artifacts are never read or written (this harness exists for the
-  * growth-law curves, not the ratchet). */
-object ScaleProbe {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, qCsv, repsS) = args
-    val reps = repsS.toInt
-    val spark = ScaleLab.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    def ms(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val out = qCsv.split(",").map(_.trim).filter(_.nonEmpty).map { q =>
-      val fn = SparkEntry.queries.getOrElse(q,
-        sys.error(s"unknown query: $q"))
-      def once(): Double = {
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      once() // warm-up (codegen, footer reads, scratch staging)
-      val ts = (1 to reps).map(_ => once())
-      s""""$q":[${ts.map(ms).mkString(",")}]"""
-    }
-    println(s"""{"sf":"$sfDir","times":{${out.mkString(",")}}}""")
     spark.stop()
   }
 }

@@ -367,7 +367,9 @@ object LlmExprs {
     * [[graft.llm.DedupOps.winnowPrintValues]]. Values CAN repeat
     * non-adjacently (a value re-selected at a later position after an
     * intervening smaller value expired), so dedup needs real set
-    * membership, not the last-emitted check. */
+    * membership, not the last-emitted check. A window that keeps the
+    * previous window's selection skips the set: that value is already
+    * in it, and skipping spares the boxing of most windows. */
   def winnowValues(input: ArrayData, w: Int): ArrayData = {
     val hs = input.toLongArray()
     val n = hs.length
@@ -382,6 +384,7 @@ object LlmExprs {
     var m = 0
     var j = 0
     var i = 0
+    var last = 0L
     while (i < nw) {
       val end = i + wl - 1
       while (j <= end) {
@@ -392,7 +395,8 @@ object LlmExprs {
       }
       while (dq(head) < i) head += 1
       val v = hs(dq(head))
-      if (seen.add(java.lang.Long.valueOf(v))) { out(m) = v; m += 1 }
+      if ((i == 0 || v != last) && seen.add(java.lang.Long.valueOf(v))) { out(m) = v; m += 1 }
+      last = v
       i += 1
     }
     new GenericArrayData(java.util.Arrays.copyOf(out, m))

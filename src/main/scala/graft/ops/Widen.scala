@@ -53,19 +53,18 @@ object Widen {
   /** Default on-disk bytes of input per widened partition. */
   val DefaultChunkBytes: Long = 64L * 1024
 
-  /** Bytes per widened partition from the conf value, else the env value.
-    * A malformed, zero or negative setting falls back to
+  /** Bytes per widened partition from the `spark.graft.widen.chunkBytes`
+    * value. A malformed, zero or negative setting falls back to
     * [[DefaultChunkBytes]] instead of failing the query or dividing by
     * zero. */
-  private[graft] def chunkBytes(conf: Option[String], env: Option[String]): Long =
-    conf.orElse(env).flatMap(v => Try(v.trim.toLong).toOption).filter(_ > 0)
+  private[graft] def chunkBytes(conf: Option[String]): Long =
+    conf.flatMap(v => Try(v.trim.toLong).toOption).filter(_ > 0)
       .getOrElse(DefaultChunkBytes)
 
   def scan(df: DataFrame): DataFrame = {
     val sess = df.sparkSession
     val maxTarget = sess.sparkContext.defaultParallelism
-    val chunk = chunkBytes(sess.conf.getOption("spark.graft.widen.chunkBytes"),
-      sys.env.get("SPARK_GRAFT_WIDEN_CHUNK"))
+    val chunk = chunkBytes(sess.conf.getOption("spark.graft.widen.chunkBytes"))
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val want = (bytes + chunk - 1) / chunk // BigInt: no overflow at any size
     val target =

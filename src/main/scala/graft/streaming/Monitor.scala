@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryIdleEvent, QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
@@ -11,7 +13,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryIdleEvent, Qu
  * §2.4, applied to the pipeline itself): a `StreamingQueryListener`
  * accumulating per-query counters — batches seen, rows ingested, rows
  * of state, last processing rate — the numbers the reference exports as
- * `events_ingested` / `events_failed` style gauges.
+ * `events_ingested` / `events_failed` style gauges, plus the trigger
+ * phases (`queryPlanning`, `addBatch`, `walCommit`, `triggerExecution`,
+ * …) summed over the batches that reported progress (idle triggers
+ * report none), so a slow stream shows where its time went.
  *
  * Listener callbacks run on the driver's listener bus (no executor
  * cost); counters are lock-free atomics in a concurrent map, readable
@@ -19,10 +24,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryIdleEvent, Qu
  */
 object Monitor {
 
-  /** Running totals for one streaming query (by query name or id). */
+  /** Running totals for one streaming query (by query name or id);
+    * `phaseMs` sums each `StreamingQueryProgress.durationMs` phase. */
   final case class QueryStats(
       batches: Long, inputRows: Long, stateRows: Long,
-      lastRowsPerSec: Double, terminated: Boolean)
+      lastRowsPerSec: Double, terminated: Boolean,
+      phaseMs: Map[String, Long] = Map.empty)
 
   final class Listener extends StreamingQueryListener {
     private val stats = new ConcurrentHashMap[String, QueryStats]()
@@ -45,10 +52,13 @@ object Monitor {
       stats.merge(k,
         QueryStats(1L, p.numInputRows,
           p.stateOperators.map(_.numRowsTotal).sum,
-          p.processedRowsPerSecond, terminated = false),
+          p.processedRowsPerSecond, terminated = false,
+          p.durationMs.asScala.map { case (ph, ms) => ph -> ms.longValue }.toMap),
         (a, b) => QueryStats(
           a.batches + 1, a.inputRows + b.inputRows,
-          b.stateRows, b.lastRowsPerSec, a.terminated))
+          b.stateRows, b.lastRowsPerSec, a.terminated,
+          b.phaseMs.foldLeft(a.phaseMs) { case (acc, (ph, ms)) =>
+            acc.updated(ph, acc.getOrElse(ph, 0L) + ms) }))
     }
 
     override def onQueryIdle(event: QueryIdleEvent): Unit = ()

@@ -1,5 +1,6 @@
 package graft
 
+import org.scalactic.Tolerance._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pure unit tests for the bench contention sentinel — synthetic timing
@@ -253,6 +254,49 @@ class BenchSentinelSpec extends AnyFunSuite {
       errors = Nil, flagged = Nil, probes = Seq(0.5), spiked = Set.empty,
       regressed = Nil, isContended = false, sf = "sf")
     assert(empty.contains(""""retimed_cs":{}"""))
+  }
+
+  // ---- per-run layer split -----------------------------------------------
+
+  private def sumOf(l: BenchSentinel.Layers) = l.firstGapS + l.jobS + l.gapS + l.tailS
+
+  test("layers: overlapping jobs count once; gaps, first gap and tail split the rest") {
+    // run 1000..3000 ms; jobs 1100-1500 and 1300-1700 overlap (union
+    // 1100-1700), then a 300 ms gap before 2000-2400
+    val run = BenchSentinel.RunTrace(
+      jobs = Map(1 -> (1100L, 1500L), 2 -> (1300L, 1700L), 3 -> (2000L, 2400L)),
+      taskMs = 5200, shuffleRead = 10, shuffleWrite = 20, spill = 30)
+    val l = BenchSentinel.layers(1000L, 2.0, run)
+    assert(l.jobs === 3)
+    assert(l.firstGapS === 0.1 +- 1e-9)
+    assert(l.jobS === 1.0 +- 1e-9)
+    assert(l.gapS === 0.3 +- 1e-9)
+    assert(l.tailS === 0.6 +- 1e-9)
+    assert(sumOf(l) === 2.0 +- 1e-9)
+    assert(l.json ===
+      """{"jobs":3,"first_gap_s":0.100,"job_s":1.000,"gap_s":0.300,"tail_s":0.600,"task_s":5.200,"shuffle_read_bytes":10,"shuffle_write_bytes":20,"spill_bytes":30}""")
+  }
+
+  test("layers: a job straddling the run window is clipped to it") {
+    // run 1000..2000 ms; one job starts before the run, one outlives it,
+    // one never reported its end
+    val l = BenchSentinel.layers(1000L, 1.0, BenchSentinel.RunTrace(
+      jobs = Map(1 -> (900L, 1200L), 2 -> (1800L, 2300L))))
+    assert(l.firstGapS === 0.0 +- 1e-9)
+    assert(l.jobS === 0.4 +- 1e-9)
+    assert(l.gapS === 0.6 +- 1e-9)
+    assert(l.tailS === 0.0 +- 1e-9)
+    val open = BenchSentinel.layers(1000L, 1.0, BenchSentinel.RunTrace(
+      jobs = Map(1 -> (1500L, Long.MaxValue))))
+    assert(open.jobS === 0.5 +- 1e-9)
+    assert(sumOf(open) === 1.0 +- 1e-9)
+  }
+
+  test("layers: a zero-job run is all first gap") {
+    val l = BenchSentinel.layers(1000L, 0.25, BenchSentinel.RunTrace())
+    assert(l.jobs === 0)
+    assert(l.firstGapS === 0.25 +- 1e-9)
+    assert(l.jobS === 0.0 && l.gapS === 0.0 && l.tailS === 0.0)
   }
 
   // ---- previous-artifact parsing ----------------------------------------

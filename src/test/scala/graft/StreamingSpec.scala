@@ -599,6 +599,38 @@ class StreamingSpec extends SparkSpec {
     } finally spark.streams.removeListener(mon)
   }
 
+  test("A5' monitor sums each trigger phase over the query's triggers") {
+    implicit val sqlCtx = spark.sqlContext
+    val mon = graft.streaming.Monitor.attach(spark)
+    try {
+      val source = MemoryStream[Ev]
+      val q = source.toDF().writeStream.format("memory")
+        .queryName("phased_out").outputMode("append").start()
+      try {
+        for (id <- Seq("1", "2", "3")) {
+          source.addData(ev(id))
+          q.processAllAvailable()
+        }
+        // listener bus is async: poll until the listener has seen every
+        // batch the query ran (idle triggers post QueryIdleEvent, not
+        // progress), then its totals must be those batches' sums
+        def ran = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+        def caughtUp = mon.snapshot("phased_out").exists(s =>
+          s.batches == ran.length && s.phaseMs.get("triggerExecution").contains(
+            ran.map(_.durationMs.get("triggerExecution").longValue).sum))
+        val deadline = System.currentTimeMillis() + 10000
+        while (!caughtUp && System.currentTimeMillis() < deadline) Thread.sleep(50)
+        assert(caughtUp, s"${mon.snapshot("phased_out")} vs ${ran.map(_.durationMs).mkString("; ")}")
+        val ph = mon.snapshot("phased_out").get.phaseMs
+        val trigger = ph("triggerExecution")
+        for (phase <- Seq("addBatch", "queryPlanning", "walCommit")) {
+          assert(ph.contains(phase), s"$phase missing from ${ph.keySet}")
+          assert(ph(phase) <= trigger, s"$phase ${ph(phase)} ms > trigger $trigger ms")
+        }
+      } finally q.stop()
+    } finally spark.streams.removeListener(mon)
+  }
+
   test("B4/B5 retrying sink: subset retry on failure indexes, then success") {
     val metrics = RetryingSink.newMetrics(spark)
     // Scripted producer (mocks/sender.go shape): attempt 0 fails the

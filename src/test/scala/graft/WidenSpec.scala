@@ -8,15 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 class WidenSpec extends AnyFunSuite {
 
   test("chunk size: malformed, zero and negative settings fall back to the default") {
-    for (bad <- Seq("abc", "0", "-5")) {
-      assert(Widen.chunkBytes(Some(bad), None) === Widen.DefaultChunkBytes, bad)
-      assert(Widen.chunkBytes(None, Some(bad)) === Widen.DefaultChunkBytes, bad)
-    }
-    assert(Widen.chunkBytes(None, None) === Widen.DefaultChunkBytes)
+    for (bad <- Seq("abc", "0", "-5"))
+      assert(Widen.chunkBytes(Some(bad)) === Widen.DefaultChunkBytes, bad)
+    assert(Widen.chunkBytes(None) === Widen.DefaultChunkBytes)
   }
 
-  test("chunk size: a positive conf value wins over the env value") {
-    assert(Widen.chunkBytes(Some("4096"), Some("8192")) === 4096L)
-    assert(Widen.chunkBytes(None, Some(" 8192 ")) === 8192L)
+  test("chunk size: a positive conf value is used") {
+    assert(Widen.chunkBytes(Some("4096")) === 4096L)
+    assert(Widen.chunkBytes(Some(" 8192 ")) === 8192L)
   }
 }
