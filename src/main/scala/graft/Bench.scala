@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
@@ -105,6 +107,23 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark
+  }
+
+  /** WARN logging for the correctness runs (Verify and the shared test
+    * session), with Spark's `WindowExec` raised to ERROR. That logger
+    * warns "No Partition Defined for Window operation" each time a
+    * global window runs, and the library's nine global `Window.orderBy`
+    * sites all rank bounded inputs, so the warning is noise:
+    *  - `TextAnalysis.rankAuc` — one row per distinct score;
+    *  - `Retrieval.heavyHitterTerms`, `heavyHitterTermsSketch`,
+    *    `collocationsTopK`, `bm25TopK`, `vocabDrift` — the top-k rows;
+    *  - `Retrieval.vocabCoverage` — the count-of-counts table;
+    *  - `Retrieval.rrfFuse` — two top-k lists;
+    *  - `DedupOps.sourceOverlap` — one row per source. */
+  def warnLogs(spark: SparkSession): Unit = {
+    spark.sparkContext.setLogLevel("WARN")
+    Configurator.setLevel("org.apache.spark.sql.execution.window.WindowExec",
+      Level.ERROR)
   }
 
   /** Sums the jobs and task counters of every tagged run. Callbacks run

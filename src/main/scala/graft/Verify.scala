@@ -6,7 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val spark = Bench.session()
-    spark.sparkContext.setLogLevel("WARN")
+    Bench.warnLogs(spark)
     new java.io.File(outDir).mkdirs()
     // Iteration aid (mirrors Bench): SPARK_GRAFT_ONLY=q112 dumps just the
     // matching queries; the driver never sets it, so its runs stay full.

@@ -116,6 +116,6 @@ object Ingest {
       case Some(ts) => enrichAt(validate(df), ts)
       case None     => enrich(validate(df))
     }
-    enriched.filter(octet_length(avroBytes) < lit(maxBytes))
+    sizeLimit(enriched, maxBytes)
   }
 }

@@ -129,26 +129,21 @@ object BpeIndex {
 
   /**
    * Streaming form of [[driftCheck]]'s measurement — per-document token
-   * and word counts under the FROZEN stored vocabulary, the
-   * scoreStream contract ([[ClassifierIndex.scoreStream]]): a pure
-   * per-row function of the document text, so the landed rows are
-   * batch-split invariant BY CONSTRUCTION and an at-least-once feed's
-   * replays are literal duplicate rows an idempotent landing collapses.
+   * and word counts under the FROZEN stored vocabulary, the stream
+   * scorer contract ([[ClassifierIndex.scorer]]): a pure per-row
+   * function of the document text, so the landed rows are batch-split
+   * invariant BY CONSTRUCTION and an at-least-once feed's replays are
+   * literal duplicate rows an idempotent landing collapses.
    * [[driftReportFrom]] then folds the unique per-doc rows into the
    * exact one-row report batch [[driftCheck]] computes — the
-   * scheduled-rebuild trigger run as a stream instead of a scan. The
-   * k-row merge list bakes into scan-stage expression literals per
-   * micro-batch (a few-KB parquet read per trigger, no join). */
-  def driftScoreStream(spark: SparkSession, dir: String,
-      batch: DataFrame): DataFrame = driftScorer(spark, dir)(batch)
-
-  /** LOAD-ONCE form of [[driftScoreStream]] (round-20 optimization,
-    * guide §4.5): the stored merge list loads (parquet read + driver
-    * collect) and the scoring expressions build EXACTLY once; every
-    * micro-batch then applies the frozen scan-stage projection. The
-    * vocabulary is frozen for the stream's lifetime (writer lease +
-    * single-writer foreachBatch). Per-batch output is row-identical to
-    * [[driftScoreStream]] (spec-pinned). */
+   * scheduled-rebuild trigger run as a stream instead of a scan.
+   * LOAD-ONCE: the stored merge list loads (parquet read + driver
+   * collect) and the scoring expressions build EXACTLY once; every
+   * micro-batch then applies the frozen scan-stage projection (the
+   * k-row merge list baked into expression literals, no join). The
+   * vocabulary is frozen for the returned function's lifetime (writer
+   * lease + single-writer foreachBatch).
+   */
   def driftScorer(spark: SparkSession,
       dir: String): DataFrame => DataFrame = {
     val (ms, pt) = loadWithPreTok(spark, dir)
@@ -159,7 +154,7 @@ object BpeIndex {
         .cast("long"), lit(0L)).as("n_words"))
   }
 
-  /** Fold [[driftScoreStream]]'s accumulated per-document rows (one row
+  /** Fold [[driftScorer]]'s accumulated per-document rows (one row
     * per unique doc — the caller dedupes replays) into [[driftCheck]]'s
     * one-row report: same integer-permille fertility, same drift gate,
     * so a monitoring rule can consume either interchangeably. */

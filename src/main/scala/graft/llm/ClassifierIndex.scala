@@ -92,38 +92,28 @@ object ClassifierIndex {
     * been trained on the indexed snapshot. Pure read; the model row
     * broadcasts onto the batch scan. */
   def score(spark: SparkSession, dir: String, docs: DataFrame): DataFrame =
-    Classifier.withFeatures(docs)
-      .crossJoin(broadcast(loadValidated(spark, dir)))
-      .withColumn("pred", Classifier.predExpr)
-      .select(col("doc_id"), col("pred"))
+    classify(loadValidated(spark, dir))(docs)
 
-  /** Classify one STREAMING micro-batch under the stored model — the
-    * quality gate at ingest ([[DsirIndex.scoreStream]]'s contract).
+  /** Classify STREAMING micro-batches under the stored model — the
+    * quality gate at ingest ([[DsirIndex.scorer]]'s contract).
     * Classification is a pure per-row decision against a frozen 1-row
     * model (no aggregate, no join-back across rows), so the landed
     * stream is batch-split invariant by construction and a batch oracle
-    * pins the streaming execution. The signature re-validates on every
-    * batch: a rebuild racing the stream loads loudly, never silently. */
-  def scoreStream(spark: SparkSession, dir: String,
-      docs: DataFrame): DataFrame =
-    score(spark, dir, docs)
-
-  /** LOAD-ONCE form of [[scoreStream]] (round-20 optimization, guide
-    * §4.5): the stored 1-row model validates (params read + manifest
-    * verify + signature check) EXACTLY once; every micro-batch then
-    * pays one tiny re-broadcast of the frozen, already-validated row.
-    * Use when the index is frozen for the stream's lifetime (the writer
-    * lease makes a racing rebuild refuse; [[scoreStream]] keeps the
-    * per-batch revalidation contract for callers that want it).
-    * Per-batch output is row-identical to [[scoreStream]]. */
+    * pins the streaming execution. LOAD-ONCE: the stored 1-row model
+    * validates (params read + manifest verify + signature check)
+    * EXACTLY once; every micro-batch then pays one tiny re-broadcast of
+    * the frozen, already-validated row. The model is frozen for the
+    * returned function's lifetime (the writer lease makes a racing
+    * rebuild refuse). Per-batch output is row-identical to [[score]]. */
   def scorer(spark: SparkSession,
-      dir: String): DataFrame => DataFrame = {
-    val model = loadValidated(spark, dir).localCheckpoint(true)
-    docs => Classifier.withFeatures(docs)
+      dir: String): DataFrame => DataFrame =
+    classify(loadValidated(spark, dir).localCheckpoint(true))
+
+  private def classify(model: DataFrame)(docs: DataFrame): DataFrame =
+    Classifier.withFeatures(docs)
       .crossJoin(broadcast(model))
       .withColumn("pred", Classifier.predExpr)
       .select(col("doc_id"), col("pred"))
-  }
 
   /** Operational report: params present, model-row count, signature
     * validity, class counts — the scheduled-job check ([[DedupIndex

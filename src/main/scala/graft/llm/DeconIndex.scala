@@ -221,41 +221,21 @@ object DeconIndex {
     * EMBEDDED benchmark passage sailed through to the corpus. Verdict ≡
     * the batch gate row-for-row on the same corpus (spec-pinned batch ≡
     * replayed MemoryStream). Output: the corpus row + (n_shared, kept).
-    * The static side re-reads per micro-batch (a few-MB parquet + one
-    * 1-row aggregate) — cache the session's static frame if the trigger
-    * rate ever makes that visible. Snapshot consistency: each Spark
-    * action on the returned frame re-reads the print set, so two actions
-    * that straddle an index swap or compaction can probe different
-    * versions. A batch caller running several actions on one result
-    * should use [[winnowProber]], which freezes one version. */
-  def probeWinnowStream(corpus: DataFrame, dir: String,
-      minShared: Long = 2L): DataFrame =
-    // LAZY static side (round-21, from the round-20 advice): the
-    // per-call form must not localCheckpoint — a per-micro-batch caller
-    // would leak one persisted RDD per batch. Only [[winnowProber]]
-    // (hoisted once per stream) freezes the print set.
-    proberImpl(corpus.sparkSession, dir, minShared,
-      materialize = false)(corpus)
-
-  /** LOAD-ONCE form of [[probeWinnowStream]] (round-20 optimization,
-    * guide §4.5): verify the manifest, read the params and fold the
+    *
+    * LOAD-ONCE: verify the manifest, read the params and fold the
     * stored print set into its 1-row broadcast frame EXACTLY once,
     * materialized via localCheckpoint — every micro-batch then pays one
     * tiny re-broadcast instead of a manifest verify + params read + a
-    * prints scan-and-aggregate. The index is frozen for the stream's
-    * lifetime (writer lease + single-writer foreachBatch). Per-batch
-    * output is row-identical to [[probeWinnowStream]] (spec-pinned). */
+    * prints scan-and-aggregate. The index is frozen for the returned
+    * function's lifetime (writer lease + single-writer foreachBatch), so
+    * several actions on one result all probe one version. */
   def winnowProber(spark: SparkSession, dir: String,
-      minShared: Long = 2L): DataFrame => DataFrame =
-    proberImpl(spark, dir, minShared, materialize = true)
-
-  private def proberImpl(spark: SparkSession, dir: String,
-      minShared: Long, materialize: Boolean): DataFrame => DataFrame = {
+      minShared: Long = 2L): DataFrame => DataFrame = {
     lifecycle.verify(spark, dir)
     val (wn, ww, wtok) = winnowParams(spark, dir)
-    val folded = spark.read.parquet(s"$dir/prints")
+    val bset = spark.read.parquet(s"$dir/prints")
       .agg(collect_set(col("fp")).as("bench_fps"))
-    val bset = if (materialize) folded.localCheckpoint(true) else folded
+      .localCheckpoint(true)
     corpus => corpus.crossJoin(broadcast(bset))
       .withColumn("n_shared",
         size(array_intersect(

@@ -302,7 +302,7 @@ object DedupOps {
     * the un-exploded value-set form of [[winnowFingerprints]] (positions
     * dropped: a GATE counts shared values, it does not rewrite). Pure
     * scan-stage array expression, which is what makes the streaming
-    * winnow gate ([[DeconIndex.probeWinnowStream]]) stream-static legal:
+    * winnow gate ([[DeconIndex.winnowProber]]) stream-static legal:
     * no explode, no aggregate, no join-back. Empty array for docs with
     * no shingles (short/null text) — the batch probe's n_shared = 0
     * convention. */

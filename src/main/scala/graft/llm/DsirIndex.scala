@@ -104,59 +104,38 @@ object DsirIndex {
 
   /** STREAM-SAFE scoring under the stored model — [[score]]'s verdict
     * re-expressed so an ingest stream can run it ([[DeconIndex
-    * .probeWinnowStream]]'s reasoning): the batch path's explode →
-    * broadcast join → per-doc aggregate → join-back is a stream-stream
-    * join in Structured Streaming's eyes, so here the two ≤ `buckets`-
-    * row count tables ride ONE static broadcast row as maps and the
-    * score is a pure per-row array fold over the doc's own bigram bins
+    * .winnowProber]]'s reasoning): the batch path's explode → broadcast
+    * join → per-doc aggregate → join-back is a stream-stream join in
+    * Structured Streaming's eyes, so here the two ≤ `buckets`-row count
+    * tables ride ONE static broadcast row as maps and the score is a
+    * pure per-row array fold over the doc's own bigram bins
     * (multiplicity preserved — each occurrence is one feature, exactly
     * as the exploded path counts it). No aggregate, no join-back —
     * append-mode legal in front of any landing sink, so selection-by-
     * target-likeness can run AT INGEST, not only as a batch pass.
     * Row-identical to [[score]] on the same corpus (spec-pinned).
-    * Output: the corpus row + (n_feats, lr_bits, lr_scaled). Re-reads
-    * the static side per call — a long-lived stream should load once
-    * via [[scorer]]. Snapshot consistency: the model is read lazily, so
-    * each Spark action on the returned frame re-reads it, and two
-    * actions that straddle an index swap or compaction can score
-    * against different model versions. A batch caller running several
-    * actions on one result should use [[scorer]], which freezes one
-    * version. */
-  def scoreStream(spark: SparkSession, dir: String,
-      docs: DataFrame): DataFrame =
-    // LAZY static side (round-21, from the round-20 advice): the
-    // per-call form must not localCheckpoint — a long-lived stream
-    // calling it per micro-batch (the documented usage) would leak one
-    // persisted RDD per batch and pay an eager materialization job at
-    // plan-build time. Only [[scorer]] (hoisted once per stream)
-    // freezes the model.
-    scorerImpl(spark, dir, materialize = false)(docs)
-
-  /** LOAD-ONCE form of [[scoreStream]] (round-20 optimization, guide
-    * §4.5 "initialise heavyweight state once per task, not per batch"):
-    * validates the artifact, reads the two count tables and folds them
-    * into the 1-row map model EXACTLY once, materialized via
-    * localCheckpoint — every micro-batch then pays one tiny re-broadcast
-    * of the frozen row instead of two parquet scans + aggregates + a
-    * manifest verify. The model is frozen for the stream's lifetime
-    * (the writer lease makes a racing rebuild refuse, and foreachBatch
-    * is single-writer). Per-batch output is row-identical to
-    * [[scoreStream]] (spec-pinned). */
+    * Output: the corpus row + (n_feats, lr_bits, lr_scaled).
+    *
+    * LOAD-ONCE (heavyweight state initialises once per stream, not per
+    * batch): validates the artifact, reads the two count
+    * tables and folds them into the 1-row map model EXACTLY once,
+    * materialized via localCheckpoint — every micro-batch then pays one
+    * tiny re-broadcast of the frozen row instead of two parquet scans +
+    * aggregates + a manifest verify. The model is frozen for the
+    * returned function's lifetime (the writer lease makes a racing
+    * rebuild refuse, and foreachBatch is single-writer), so several
+    * actions on one result all score against one version. */
   def scorer(spark: SparkSession,
-      dir: String): DataFrame => DataFrame =
-    scorerImpl(spark, dir, materialize = true)
-
-  private def scorerImpl(spark: SparkSession, dir: String,
-      materialize: Boolean): DataFrame => DataFrame = {
+      dir: String): DataFrame => DataFrame = {
     val (buckets, _, _, _) = requireValid(spark, dir)
     val tok = storedTok(spark, dir)
-    val folded = spark.read.parquet(s"$dir/target_counts")
+    val model = spark.read.parquet(s"$dir/target_counts")
       .agg(map_from_entries(collect_list(struct(col("b"), col("c_t"))))
         .as("ct_map"))
       .crossJoin(spark.read.parquet(s"$dir/raw_counts")
         .agg(map_from_entries(collect_list(struct(col("b"), col("c_r"))))
           .as("cr_map")))
-    val model = if (materialize) folded.localCheckpoint(true) else folded
+      .localCheckpoint(true)
     docs => docs.crossJoin(broadcast(model))
       .withColumn("graft_bs",
         Retrieval.bigramBinValues(col("text"), buckets, tok))

@@ -354,7 +354,7 @@ object Retrieval {
     * occurrence is one feature, exactly as the exploded path counts it;
     * [[DedupOps.winnowPrintValues]]' reasoning applied to DSIR). Pure
     * scan-stage array expression, which is what makes the streaming
-    * score gate ([[DsirIndex.scoreStream]]) stream-static legal. Empty
+    * score gate ([[DsirIndex.scorer]]) stream-static legal. Empty
     * array for docs with < 2 words — the batch path's n_feats = 0
     * convention. */
   private[llm] def bigramBinValues(text: Column, buckets: Int,

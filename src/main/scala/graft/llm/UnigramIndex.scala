@@ -131,20 +131,14 @@ object UnigramIndex {
 
   /**
    * Streaming form of [[driftCheck]]'s measurement ([[BpeIndex
-   * .driftScoreStream]]'s parity): per-document Viterbi token and chunk
+   * .driftScorer]]'s parity): per-document Viterbi token and chunk
    * counts under the FROZEN stored vocabulary — a pure per-row function
    * of the text, so the landed rows are batch-split invariant BY
    * CONSTRUCTION and an at-least-once feed's replays are literal
-   * duplicate rows an idempotent landing collapses. The model-sized
-   * vocabulary bakes into the scan-stage codec per micro-batch (a
-   * few-KB parquet read per trigger, no join). */
-  def driftScoreStream(spark: SparkSession, dir: String,
-      batch: DataFrame): DataFrame = driftScorer(spark, dir)(batch)
-
-  /** LOAD-ONCE form of [[driftScoreStream]] (round-20 optimization,
-    * guide §4.5): the stored vocabulary loads and the priced codec
-    * builds EXACTLY once; every micro-batch then applies the frozen
-    * scan-stage projection. Row-identical per batch (spec-pinned). */
+   * duplicate rows an idempotent landing collapses. LOAD-ONCE: the
+   * stored vocabulary loads and the priced codec builds EXACTLY once;
+   * every micro-batch then applies the frozen scan-stage projection.
+   */
   def driftScorer(spark: SparkSession,
       dir: String): DataFrame => DataFrame = {
     val (ps, chunkLen, maxPieceLen, tot) = loadModel(spark, dir)
@@ -169,16 +163,10 @@ object UnigramIndex {
    * posexplode — no aggregate, no join), so landed rows are batch-split
    * invariant and an at-least-once feed's replays are literal duplicate
    * rows an idempotent landing + distinct collapses ((doc_id, pos) keys
-   * every token). The model-sized vocabulary bakes into the scan-stage
-   * codec per call — a few-KB parquet read, no shuffle.
+   * every token). LOAD-ONCE: the stored vocabulary loads and the
+   * priced codec builds EXACTLY once; every micro-batch then applies
+   * the frozen scan-stage posexplode projection — no shuffle.
    */
-  def tokenStream(spark: SparkSession, dir: String,
-      batch: DataFrame): DataFrame = tokenStreamer(spark, dir)(batch)
-
-  /** LOAD-ONCE form of [[tokenStream]] (round-20 optimization, guide
-    * §4.5): the stored vocabulary loads and the priced codec builds
-    * EXACTLY once; every micro-batch then applies the frozen scan-stage
-    * posexplode projection. Row-identical per batch (spec-pinned). */
   def tokenStreamer(spark: SparkSession,
       dir: String): DataFrame => DataFrame = {
     val (ps, chunkLen, maxPieceLen, tot) = loadModel(spark, dir)
@@ -187,7 +175,7 @@ object UnigramIndex {
       posexplode(UnigramLm.tokens(col("text"), codec)).as(Seq("pos", "token")))
   }
 
-  /** Fold [[driftScoreStream]]'s accumulated per-document rows (one row
+  /** Fold [[driftScorer]]'s accumulated per-document rows (one row
     * per unique doc — the caller dedupes replays) into [[driftCheck]]'s
     * one-row report: same integer-permille fertility, same drift gate. */
   def driftReportFrom(spark: SparkSession, dir: String,

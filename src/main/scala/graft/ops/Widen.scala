@@ -1,7 +1,5 @@
 package graft.ops
 
-import scala.util.Try
-
 import org.apache.spark.sql.DataFrame
 
 /**
@@ -20,21 +18,19 @@ import org.apache.spark.sql.DataFrame
  * `defaultParallelism` regardless of input size — a 65 KB frame became a
  * shuffle plus 32 tasks of ~150 rows, taxing every cheap query +0.1–0.3 s
  * (q36 0.08→0.20 s, 138/239 queries >10% slower). The target is now
- * SIZE-AWARE: `clamp(ceil(inputBytes / chunkBytes), 1, defaultParallelism)`
+ * SIZE-AWARE: `clamp(ceil(inputBytes / ChunkBytes), 1, defaultParallelism)`
  * with `inputBytes` read from the optimized logical plan's statistics
- * (file-size based on scan lineage — no action, no job). `chunkBytes`
- * defaults to 64 KB of on-disk zstd parquet per partition — these
- * pipelines run ~1 ms/doc of per-row compute over ~120 B/doc compressed,
- * so 64 KB ≈ 500 docs ≈ 0.5 s of work per task, comfortably above the
- * per-task scheduling floor (~2–5 ms) — and is tunable via
- * `spark.graft.widen.chunkBytes` for corpora with a different
- * bytes-to-CPU ratio (production guidance in OPTIMIZATION_r21.md).
+ * (file-size based on scan lineage — no action, no job). `ChunkBytes`
+ * is 64 KB of on-disk zstd parquet per partition — these pipelines run
+ * ~1 ms/doc of per-row compute over ~120 B/doc compressed, so 64 KB ≈
+ * 500 docs ≈ 0.5 s of work per task, comfortably above the per-task
+ * scheduling floor (~2–5 ms).
  *
  * At real scale the clamp saturates: a 100 TB table estimates far above
- * `defaultParallelism × chunkBytes`, so the target is exactly the r20
+ * `defaultParallelism × ChunkBytes`, so the target is exactly the r20
  * `defaultParallelism` — and the partition-count guard below then makes
  * the whole call a provable no-op (a 100 TB scan is tens of thousands of
- * splits already). A `target <= 1` result (frames under ~2 chunks)
+ * splits already). A `target <= 1` result (frames of at most one chunk)
  * skips the shuffle outright — the round-21 fix for the widen tax on
  * tiny frames and on the sf0.001/sf0.01 correctness corpora.
  *
@@ -50,23 +46,13 @@ import org.apache.spark.sql.DataFrame
  * folds are intra-row. The oracle gate re-verifies every touched query.
  */
 object Widen {
-  /** Default on-disk bytes of input per widened partition. */
-  val DefaultChunkBytes: Long = 64L * 1024
-
-  /** Bytes per widened partition from the `spark.graft.widen.chunkBytes`
-    * value. A malformed, zero or negative setting falls back to
-    * [[DefaultChunkBytes]] instead of failing the query or dividing by
-    * zero. */
-  private[graft] def chunkBytes(conf: Option[String]): Long =
-    conf.flatMap(v => Try(v.trim.toLong).toOption).filter(_ > 0)
-      .getOrElse(DefaultChunkBytes)
+  /** On-disk bytes of input per widened partition. */
+  val ChunkBytes: Long = 64L * 1024
 
   def scan(df: DataFrame): DataFrame = {
-    val sess = df.sparkSession
-    val maxTarget = sess.sparkContext.defaultParallelism
-    val chunk = chunkBytes(sess.conf.getOption("spark.graft.widen.chunkBytes"))
+    val maxTarget = df.sparkSession.sparkContext.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val want = (bytes + chunk - 1) / chunk // BigInt: no overflow at any size
+    val want = (bytes + ChunkBytes - 1) / ChunkBytes // BigInt: no overflow at any size
     val target =
       if (want >= maxTarget) maxTarget
       else math.max(1, want.toInt)

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.llm.{Bpe, DedupOps, Multimodal, Retrieval, SimilaritySearch, TextAnalysis, TextFunctions}
 import graft.model.Tables
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -1393,6 +1393,35 @@ object LlmQueries {
       docs.repartition(4).write.mode("append").parquet(dir)
       docs.repartition(4).write.mode("append").parquet(dir)
     }
+
+  /** The streaming commit path the at-least-once feed queries share
+    * (q197, q203, q208, q215, q218, q226, q228, q236): the corpus
+    * replays from [[streamFeedDir]] through a checkpointed file stream,
+    * three files per trigger; each micro-batch goes through `perBatch`
+    * (a per-row scorer or a within-batch dedup — the landed set must be
+    * batch-split invariant for a batch oracle to pin it) and lands via
+    * IdempotentSink's batch=<id> overwrite directories. `finish` gets
+    * the landed set with replays repaired by distinct; its result is
+    * pinned and the per-invocation land/ckpt dirs (`graft_<tag>_land`,
+    * `graft_<tag>_ckpt`) are reaped. The scorer a query passes in is
+    * built once by the caller, before the stream starts, so model
+    * state loads once per stream, not once per micro-batch. */
+  private def streamLanded(s: SparkSession, d: String, tag: String)(
+      perBatch: DataFrame => DataFrame)(finish: DataFrame => DataFrame)
+      : DataFrame = {
+    val stage = streamFeedDir(s, d)
+    val land = trackedTempDir(s"graft_${tag}_land")
+    val ckpt = trackedTempDir(s"graft_${tag}_ckpt")
+    val landOne: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
+      (b, id) => graft.streaming.IdempotentSink.landBatch(perBatch(b.toDF()), land, id)
+    val q = s.readStream.schema(docsOf(s, d).schema)
+      .option("maxFilesPerTrigger", "3").parquet(stage)
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch(landOne)
+      .start()
+    q.processAllAvailable(); q.stop()
+    reapAfter(finish(s.read.parquet(land).drop("batch").distinct()), land, ckpt)
+  }
 
   /**
    * The DISORDERED event-time feed q242 replays — the late-data contract
@@ -6946,24 +6975,9 @@ object LlmQueries {
   val q197 = Q(
     "q197_stream_ingest_dedup",
     (s, d) => {
-      val docs = docsOf(s, d)
-      val outCols = docs.columns.map(col).toSeq
-      val stage = streamFeedDir(s, d)
-      val land = trackedTempDir("graft_q197_land")
-      val ckpt = trackedTempDir("graft_q197_ckpt")
-      val landOne: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        (b, id) => graft.streaming.IdempotentSink.landBatch(
-          DedupOps.exactDedup(b.toDF()), land, id)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "3").parquet(stage)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch(landOne)
-        .start()
-      q.processAllAvailable(); q.stop()
-      reapAfter(
-        DedupOps.exactDedup(s.read.parquet(land).drop("batch").distinct())
-          .select(outCols: _*).orderBy("doc_id"),
-        land, ckpt)
+      val outCols = docsOf(s, d).columns.map(col).toSeq
+      streamLanded(s, d, "q197")(b => DedupOps.exactDedup(b))(landed =>
+        DedupOps.exactDedup(landed).select(outCols: _*).orderBy("doc_id"))
     },
     Some {
       val p48 = graft.functions.LlmExprs.P48.toString
@@ -7259,7 +7273,7 @@ object LlmQueries {
 
   // q203 — the streaming WINNOW-DECON commit path, oracle-checked: the
   // corpus replays as q197's at-least-once file feed, every micro-batch
-  // runs DeconIndex.probeWinnowStream's per-row gate against the STORED
+  // runs DeconIndex.winnowProber's per-row gate against the STORED
   // print set (q122's scratch index — built %82=3 + appended %82=44
   // ≡ benchmark %41=3), kept rows land via IdempotentSink, and the
   // final read repairs replays with distinct. The gate is a pure
@@ -7271,30 +7285,12 @@ object LlmQueries {
   val q203 = Q(
     "q203_stream_winnow_land",
     (s, d) => {
-      val docs = docsOf(s, d)
-      val outCols = docs.columns.map(col).toSeq
-      val idxDir = deconIndexDir(s, d)
-      val stage = streamFeedDir(s, d)
-      val land = trackedTempDir("graft_q203_land")
-      val ckpt = trackedTempDir("graft_q203_ckpt")
-      // load-once prober (round-20): manifest verify + params + the
-      // stored print set materialize ONCE, not per micro-batch
-      val probeB = graft.llm.DeconIndex.winnowProber(s, idxDir,
+      val outCols = docsOf(s, d).columns.map(col).toSeq
+      val probeB = graft.llm.DeconIndex.winnowProber(s, deconIndexDir(s, d),
         minShared = 2L)
-      val landOne: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        (b, id) => graft.streaming.IdempotentSink.landBatch(
-          probeB(graft.ops.Widen.scan(b.toDF()))
-            .filter(col("kept")).drop("n_shared", "kept"), land, id)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "3").parquet(stage)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch(landOne)
-        .start()
-      q.processAllAvailable(); q.stop()
-      reapAfter(
-        s.read.parquet(land).drop("batch").distinct()
-          .select(outCols: _*).orderBy("doc_id"),
-        land, ckpt)
+      streamLanded(s, d, "q203")(b => probeB(graft.ops.Widen.scan(b))
+        .filter(col("kept")).drop("n_shared", "kept"))(
+        _.select(outCols: _*).orderBy("doc_id"))
     },
     Some(
       s"""WITH cd AS (SELECT doc_id, text FROM documents),
@@ -7487,7 +7483,7 @@ object LlmQueries {
          |ORDER BY doc_id""".stripMargin))
 
   // q208 — the streaming SELECTION commit path: q197/q203's
-  // at-least-once file feed scored AT INGEST by DsirIndex.scoreStream
+  // at-least-once file feed scored AT INGEST by DsirIndex.scorer
   // (the stored model rides one broadcast row as maps; the score is a
   // pure per-row array fold — no aggregate, no join-back), landed
   // idempotently, replays repaired by distinct. Scoring is per-row, so
@@ -7498,28 +7494,10 @@ object LlmQueries {
   val q208 = Q(
     "q208_stream_dsir_score",
     (s, d) => {
-      val docs = docsOf(s, d)
-      val idxDir = dsirIndexDir(s, d)
-      val stage = streamFeedDir(s, d)
-      val land = trackedTempDir("graft_q208_land")
-      val ckpt = trackedTempDir("graft_q208_ckpt")
-      // load-once scorer (round-20): the two count tables fold into
-      // the 1-row map model ONCE, not per micro-batch
-      val scoreB = graft.llm.DsirIndex.scorer(s, idxDir)
-      val landOne: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        (b, id) => graft.streaming.IdempotentSink.landBatch(
-          scoreB(graft.ops.Widen.scan(b.toDF()))
-            .select(col("doc_id"), col("n_feats"), col("lr_bits"),
-              col("lr_scaled")), land, id)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "3").parquet(stage)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch(landOne)
-        .start()
-      q.processAllAvailable(); q.stop()
-      reapAfter(
-        s.read.parquet(land).drop("batch").distinct().orderBy("doc_id"),
-        land, ckpt)
+      val scoreB = graft.llm.DsirIndex.scorer(s, dsirIndexDir(s, d))
+      streamLanded(s, d, "q208")(b => scoreB(graft.ops.Widen.scan(b))
+        .select(col("doc_id"), col("n_feats"), col("lr_bits"),
+          col("lr_scaled")))(_.orderBy("doc_id"))
     },
     Some(
       s"""WITH $dsirCtes
@@ -7915,7 +7893,7 @@ object LlmQueries {
   // ingest (q210) all have stream paths; this closes the last curation
   // stage that couldn't run on a stream — the frozen classifier gate.
   // The q197-shaped at-least-once file feed is classified AT INGEST by
-  // ClassifierIndex.scoreStream (the stored 1-row centroid model rides
+  // ClassifierIndex.scorer (the stored 1-row centroid model rides
   // one broadcast row; keep/drop is a pure per-row decision, so the
   // landed table is batch-split invariant by construction), landed
   // idempotently, replays repaired by distinct. Oracle = q191's stored-
@@ -7924,27 +7902,9 @@ object LlmQueries {
   val q215 = Q(
     "q215_stream_quality_gate",
     (s, d) => {
-      val docs = docsOf(s, d)
-      val idxDir = classifierIndexDir(s, d)
-      val stage = streamFeedDir(s, d)
-      val land = trackedTempDir("graft_q215_land")
-      val ckpt = trackedTempDir("graft_q215_ckpt")
-      // load-once scorer (round-20): the 1-row model validates ONCE,
-      // not per micro-batch (the writer lease guards a racing rebuild)
-      val scoreB = graft.llm.ClassifierIndex.scorer(s, idxDir)
-      val landOne: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        (b, id) => graft.streaming.IdempotentSink.landBatch(
-          scoreB(graft.ops.Widen.scan(b.toDF()))
-            .select(col("doc_id"), col("pred")), land, id)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "3").parquet(stage)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch(landOne)
-        .start()
-      q.processAllAvailable(); q.stop()
-      reapAfter(
-        s.read.parquet(land).drop("batch").distinct().orderBy("doc_id"),
-        land, ckpt)
+      val scoreB = graft.llm.ClassifierIndex.scorer(s, classifierIndexDir(s, d))
+      streamLanded(s, d, "q215")(b => scoreB(graft.ops.Widen.scan(b))
+        .select(col("doc_id"), col("pred")))(_.orderBy("doc_id"))
     },
     Some(classifierGateOracleSql))
 
@@ -8072,7 +8032,7 @@ object LlmQueries {
   // scan; this runs the measurement that TRIGGERS it per micro-batch
   // over the at-least-once feed. The per-doc token/word counts under
   // the FROZEN slice-learned vocabulary are a pure per-row function
-  // (BpeIndex.driftScoreStream — q215's batch-split-invariance
+  // (BpeIndex.driftScorer — q215's batch-split-invariance
   // argument), landed idempotently; the final fold
   // (BpeIndex.driftReportFrom) reproduces driftCheck's one-row report
   // exactly: same integer-permille fertility, same drift gate. The
@@ -8088,27 +8048,10 @@ object LlmQueries {
   val q218 = Q(
     "q218_stream_drift_monitor",
     (s, d) => {
-      val docs = docsOf(s, d)
       val idxDir = bpeDriftMonDir(s, d)
-      val stage = streamFeedDir(s, d)
-      val land = trackedTempDir("graft_q218_land")
-      val ckpt = trackedTempDir("graft_q218_ckpt")
-      // load-once scorer (round-20): merge list + expressions build
-      // ONCE, not per micro-batch
       val scoreB = graft.llm.BpeIndex.driftScorer(s, idxDir)
-      val landOne: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        (b, id) => graft.streaming.IdempotentSink.landBatch(
-          scoreB(graft.ops.Widen.scan(b.toDF())), land, id)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "3").parquet(stage)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch(landOne)
-        .start()
-      q.processAllAvailable(); q.stop()
-      reapAfter(
-        graft.llm.BpeIndex.driftReportFrom(s, idxDir,
-          s.read.parquet(land).drop("batch").distinct()),
-        land, ckpt)
+      streamLanded(s, d, "q218")(b => scoreB(graft.ops.Widen.scan(b)))(
+        graft.llm.BpeIndex.driftReportFrom(s, idxDir, _))
     },
     Some {
       val learnedK = (1 to bpeK)
@@ -8449,26 +8392,11 @@ object LlmQueries {
   // batch-split sensitivity changes the manifest's ord spans.
   val q226 = Q(
     "q226_stream_shard_land",
-    (s, d) => {
-      val docs = docsOf(s, d)
-      val stage = streamFeedDir(s, d)
-      val land = trackedTempDir("graft_q226_land")
-      val ckpt = trackedTempDir("graft_q226_ckpt")
-      val landOne: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        (b, id) => graft.streaming.IdempotentSink.landBatch(b.toDF(), land, id)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "3").parquet(stage)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch(landOne)
-        .start()
-      q.processAllAvailable(); q.stop()
-      reapAfter(
-        TextAnalysis.shardManifest(
-          s.read.parquet(land).drop("batch").distinct(), "source",
+    (s, d) =>
+      streamLanded(s, d, "q226")(identity)(landed =>
+        TextAnalysis.shardManifest(landed, "source",
           tokenBudget = 70000L, maxEpochs = 3, shardSize = 100L)
-          .orderBy("shard"),
-        land, ckpt)
-    },
+          .orderBy("shard")),
     Some(shardManifestOracle))
 
   // q227 — sequence packing budgeted by UNIGRAM tokens: q109's operator
@@ -8538,7 +8466,7 @@ object LlmQueries {
   // second tokenizer family, closing the lifecycle symmetry): the index
   // is built on the even-doc slice, the full corpus replays as the
   // at-least-once feed, each micro-batch scored per-row under the
-  // FROZEN stored vocabulary (UnigramIndex.driftScoreStream — pure
+  // FROZEN stored vocabulary (UnigramIndex.driftScorer — pure
   // per-row, batch-split invariant by construction), landed
   // idempotently, replays repaired by distinct, and folded into
   // driftCheck's exact one-row report. Oracle: learn on the slice's
@@ -8553,28 +8481,10 @@ object LlmQueries {
   val q228 = Q(
     "q228_stream_unigram_drift",
     (s, d) => {
-      val docs = docsOf(s, d)
       val idxDir = unigramDriftIndexDir(s, d)
-      val stage = streamFeedDir(s, d)
-      val land = trackedTempDir("graft_q228_land")
-      val ckpt = trackedTempDir("graft_q228_ckpt")
-      // load-once scorer (round-20): vocabulary + priced codec build
-      // ONCE, not per micro-batch
       val scoreB = graft.llm.UnigramIndex.driftScorer(s, idxDir)
-      val landOne: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        (b, id) => graft.streaming.IdempotentSink.landBatch(
-          scoreB(graft.ops.Widen.scan(b.toDF())),
-          land, id)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "3").parquet(stage)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch(landOne)
-        .start()
-      q.processAllAvailable(); q.stop()
-      reapAfter(
-        graft.llm.UnigramIndex.driftReportFrom(s, idxDir,
-          s.read.parquet(land).drop("batch").distinct()),
-        land, ckpt)
+      streamLanded(s, d, "q228")(b => scoreB(graft.ops.Widen.scan(b)))(
+        graft.llm.UnigramIndex.driftReportFrom(s, idxDir, _))
     },
     Some(
       s"""WITH ${ugChunkCtes("u", "WHERE doc_id % 2 = 0")},
@@ -9071,7 +8981,7 @@ object LlmQueries {
   // q236 — the streaming TOKENIZED-SHARD EXPORT (eighth streaming qNN,
   // closing q226's manifest with the artifact itself): the q197-shaped
   // at-least-once feed streams through the FROZEN UnigramIndex encode
-  // (UnigramIndex.tokenStream — pure per-row, so landed rows are
+  // (UnigramIndex.tokenStreamer — pure per-row, so landed rows are
   // batch-split invariant by construction), lands idempotently, and the
   // replay-repaired (doc_id, pos, token) stream is what a trainer
   // reads. Oracle: the unigram analog of q136's long format — each
@@ -9083,27 +8993,9 @@ object LlmQueries {
   val q236 = Q(
     "q236_stream_token_export",
     (s, d) => {
-      val docs = docsOf(s, d)
-      val idxDir = unigramIndexDir(s, d)
-      val stage = streamFeedDir(s, d)
-      val land = trackedTempDir("graft_q236_land")
-      val ckpt = trackedTempDir("graft_q236_ckpt")
-      // load-once encoder (round-20): vocabulary + priced codec build
-      // ONCE, not per micro-batch
-      val tokB = graft.llm.UnigramIndex.tokenStreamer(s, idxDir)
-      val landOne: (org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], Long) => Unit =
-        (b, id) => graft.streaming.IdempotentSink.landBatch(
-          tokB(graft.ops.Widen.scan(b.toDF())), land, id)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "3").parquet(stage)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch(landOne)
-        .start()
-      q.processAllAvailable(); q.stop()
-      reapAfter(
-        s.read.parquet(land).drop("batch").distinct()
-          .orderBy("doc_id", "pos"),
-        land, ckpt)
+      val tokB = graft.llm.UnigramIndex.tokenStreamer(s, unigramIndexDir(s, d))
+      streamLanded(s, d, "q236")(b => tokB(graft.ops.Widen.scan(b)))(
+        _.orderBy("doc_id", "pos"))
     },
     Some(
       s"""WITH $ugLearnCtes,

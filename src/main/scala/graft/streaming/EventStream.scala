@@ -39,10 +39,7 @@ object EventStream {
    */
   def ingestPipeline(stream: DataFrame, serverTimestampMs: Long): DataFrame =
     DatePartition.withDateParts(
-      Ingest.validate(stream)
-        .select(col("id"), col("name"), col("topic"), col("props"),
-          col("clientTimestamp"))
-        .withColumn("serverTimestamp", lit(serverTimestampMs)),
+      Ingest.enrichAt(Ingest.validate(stream), serverTimestampMs),
       "clientTimestamp")
 
   /**

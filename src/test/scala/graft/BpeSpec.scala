@@ -414,9 +414,10 @@ class BpeSpec extends SparkSpec {
     // report: the per-doc rows are a pure function of the document
     val half1 = serve.filter(col("doc_id") <= 2L)
     val half2 = serve.filter(col("doc_id") > 2L)
-    val perDoc = BpeIndex.driftScoreStream(spark, dir, half1)
-      .union(BpeIndex.driftScoreStream(spark, dir, half2))
-      .union(BpeIndex.driftScoreStream(spark, dir, half1)) // replay
+    val scorer = BpeIndex.driftScorer(spark, dir)
+    val perDoc = scorer(half1)
+      .union(scorer(half2))
+      .union(scorer(half1)) // replay
       .distinct()
     val streamed = BpeIndex.driftReportFrom(spark, dir, perDoc).head()
     for (c <- Seq("k", "fert_train_permille", "fert_now_permille",

@@ -924,7 +924,7 @@ class CorpusOpsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("DeconIndex.probeWinnowStream: streaming verdict == batch winnow gate, embedded passage caught") {
+  test("DeconIndex.winnowProber: streaming verdict == batch winnow gate, embedded passage caught") {
     // The winnow probe wired stream-static: the exact gate above misses
     // an EMBEDDED benchmark passage (whole-doc fingerprint differs);
     // the winnow gate catches it, and its per-row-expression form runs
@@ -948,15 +948,14 @@ class CorpusOpsSpec extends SparkSpec {
     assert(!batch(0)._3, "embedded passage must be flagged")
     assert(batch(1)._3 && !batch(2)._3 && batch(3)._3)
     // the per-row reformulation agrees in batch...
-    val rowForm = graft.llm.DeconIndex.probeWinnowStream(
-        corpus.toDF("doc_id", "text"), dir, minShared = 2L)
+    val prober = graft.llm.DeconIndex.winnowProber(spark, dir, minShared = 2L)
+    val rowForm = prober(corpus.toDF("doc_id", "text"))
       .select("doc_id", "n_shared", "kept")
       .as[(Long, Long, Boolean)].collect().sortBy(_._1)
     assert(rowForm === batch)
     // ...and verbatim on a replayed MemoryStream
     val source = MemoryStream[(Long, String)]
-    val q = graft.llm.DeconIndex.probeWinnowStream(
-        source.toDF().toDF("doc_id", "text"), dir, minShared = 2L)
+    val q = prober(source.toDF().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("decon_winnow_out")
       .outputMode("append").start()
     try {
@@ -1412,7 +1411,7 @@ class CorpusOpsSpec extends SparkSpec {
 
   // ------------------------------------------------ q208 stream DSIR score
 
-  test("DsirIndex.scoreStream: per-row gate equals batch score row-for-row") {
+  test("DsirIndex.scorer: per-row gate equals batch score row-for-row") {
     import graft.llm.DsirIndex
     val corpus = Seq(
       (1L, Option("the quick brown fox jumps over the lazy dog")),
@@ -1426,7 +1425,7 @@ class CorpusOpsSpec extends SparkSpec {
     val batch = DsirIndex.score(spark, dir, corpus)
       .select("doc_id", "n_feats", "lr_bits", "lr_scaled")
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
-    val perRow = DsirIndex.scoreStream(spark, dir, corpus)
+    val perRow = DsirIndex.scorer(spark, dir)(corpus)
       .select("doc_id", "n_feats", "lr_bits", "lr_scaled")
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
     assert(perRow.toSeq === batch.toSeq)

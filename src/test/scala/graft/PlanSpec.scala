@@ -522,7 +522,7 @@ class PlanSpec extends SparkSpec {
     val docs = graft.model.Tables.documents(spark, sfDir)
     val dir = java.nio.file.Files.createTempDirectory("plan_ug_idx").toString
     graft.llm.UnigramIndex.build(docs, dir)
-    val stream = graft.llm.UnigramIndex.tokenStream(spark, dir, docs)
+    val stream = graft.llm.UnigramIndex.tokenStreamer(spark, dir)(docs)
     stream.count()
     val p = stream.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"), s"token export shuffles: $p")

@@ -16,7 +16,7 @@ trait SparkSpec extends AnyFunSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    Bench.warnLogs(s)
     s
   }
 
