@@ -507,8 +507,9 @@ object Bpe {
    * corpus stream — each distinct word encodes once and contributes its
    * corpus count to every token it splits into (the [[tokenCount]]
    * pattern), so the one corpus-sized aggregate is the histogram build;
-   * the vocabulary side is `merges.size` rows broadcast onto the tiny
-   * token-count table.
+   * the token-count table (one row per distinct token) is broadcast
+   * into the `merges.size`-row vocabulary, which stays the preserved
+   * side of the left join.
    */
   def mergeUtilization(docs: DataFrame, merges: Seq[Merge]): DataFrame = {
     val spark = docs.sparkSession
@@ -520,7 +521,7 @@ object Bpe {
         explode(split(encodeWord(col("word"), merges), Sep)).as("tok"))
       .groupBy("tok").agg(sum(col("cnt")).as("n_uses"))
     val tot = counts.agg(coalesce(sum(col("n_uses")), lit(0L)).as("t"))
-    broadcast(vocab).join(counts, Seq("tok"), "left")
+    vocab.join(broadcast(counts), Seq("tok"), "left")
       .crossJoin(broadcast(tot))
       .select(col("rank"), col("tok"),
         coalesce(col("n_uses"), lit(0L)).as("n_uses"),

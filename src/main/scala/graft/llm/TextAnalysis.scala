@@ -532,32 +532,24 @@ object TextAnalysis {
     n > 0 && lit(5L) * nAlpha >= lit(4L) * n,
     nReq >= minRequiredHits.toLong)
 
+  /** The audit-column name of each [[gopherBooleans]] rule, in order. */
+  private[graft] val gopherRuleNames = Seq("ok_word_count", "ok_mean_word_len",
+    "ok_symbol_ratio", "ok_alpha_words", "ok_required_words")
+
   def gopherRules(docs: DataFrame, minWords: Long = 50L,
       maxWords: Long = 100000L,
       requiredWords: Seq[String] = Seq("the", "a", "and", "of", "to"),
       minRequiredHits: Int = 2,
       tok: DedupOps.Tokenizer = DedupOps.Tokenizer.Ascii): DataFrame = {
     val (n, sumLen, nSym, nAlpha, nReq) = gopherMeasures(requiredWords, tok)
+    val rules = gopherBooleans(minWords, maxWords, minRequiredHits,
+      col("n_words"), col("sum_word_len"), col("n_symbols"), col("n_alpha"),
+      col("n_required"))
     docs.select(col("doc_id"), n.as("n_words"), sumLen.as("sum_word_len"),
         nSym.as("n_symbols"), nAlpha.as("n_alpha"), nReq.as("n_required"))
-      .withColumn("ok_word_count",
-        col("n_words") >= minWords && col("n_words") <= maxWords)
-      .withColumn("ok_mean_word_len",
-        col("n_words") > 0 &&
-          col("sum_word_len") >= lit(3L) * col("n_words") &&
-          col("sum_word_len") <= lit(10L) * col("n_words"))
-      .withColumn("ok_symbol_ratio",
-        col("n_words") > 0 &&
-          lit(10L) * col("n_symbols") <= col("n_words"))
-      .withColumn("ok_alpha_words",
-        col("n_words") > 0 &&
-          lit(5L) * col("n_alpha") >= lit(4L) * col("n_words"))
-      .withColumn("ok_required_words",
-        col("n_required") >= minRequiredHits.toLong)
-      .withColumn("keep",
-        col("ok_word_count") && col("ok_mean_word_len") &&
-          col("ok_symbol_ratio") && col("ok_alpha_words") &&
-          col("ok_required_words"))
+      .select(col("*") +: gopherRuleNames.zip(rules).map { case (name, r) =>
+        r.as(name) }: _*)
+      .withColumn("keep", gopherRuleNames.map(col).reduce(_ && _))
   }
 
   /** [[gopherRules]]'s keep conjunction as a pure FILTER on the input —
@@ -593,22 +585,20 @@ object TextAnalysis {
       requiredWords: Seq[String] = Seq("the", "a", "and", "of", "to"),
       minRequiredHits: Int = 2,
       tok: DedupOps.Tokenizer = DedupOps.Tokenizer.Ascii): DataFrame = {
-    val rules = Seq("ok_word_count", "ok_mean_word_len", "ok_symbol_ratio",
-      "ok_alpha_words", "ok_required_words")
     val flags = gopherRules(docs, minWords, maxWords, requiredWords,
       minRequiredHits, tok)
     // cum_k = 1 iff rules 1..k all pass — computed as columns, so the
     // whole funnel is one aggregate row
-    val cums = rules.scanLeft(lit(true)) { (acc, r) => acc && col(r) }.tail
+    val cums = gopherRuleNames.scanLeft(lit(true))((acc, r) => acc && col(r)).tail
     val aggCols = cums.zipWithIndex.map { case (c, i) =>
       sum(when(c, 1L).otherwise(0L)).as(s"surv_$i")
     } :+ count(lit(1)).as("n_docs")
     val row = flags.agg(aggCols.head, aggCols.tail: _*)
     val spark = docs.sparkSession
     import spark.implicits._
-    val order = rules.zipWithIndex.toDF("rule", "rule_no")
+    val order = gopherRuleNames.zipWithIndex.toDF("rule", "rule_no")
     def pick(f: Int => Column): Column =
-      rules.indices.foldLeft(lit(null).cast("long")) { (acc, i) =>
+      gopherRuleNames.indices.foldLeft(lit(null).cast("long")) { (acc, i) =>
         when(col("rule_no") === i, f(i)).otherwise(acc)
       }
     order.crossJoin(broadcast(row))

@@ -633,11 +633,21 @@ class BpeSpec extends SparkSpec {
     // round 1 fuses (a,b) [weighted cnt 4], round 2 fuses (ab,c) [4] —
     // every 'ab' is absorbed into 'abc', so rank 1 is a dead slot here;
     // final stream = abc x4 + x + y = 6 tokens
-    val out = graft.llm.Bpe.mergeUtilization(docs, merges)
-      .select("rank", "tok", "n_uses", "stream_permille")
-      .as[(Long, String, Long, Long)].collect().sortBy(_._1)
-    assert(out.length === 2)
-    assert(out(0) === ((1L, "ab", 0L, 0L)))
-    assert(out(1) === ((2L, "abc", 4L, 666L)))
+    // size-based broadcasting off, so only the operator's own hint can
+    // broadcast: the token counts must be the build side of the
+    // vocabulary's left join (a hint on the preserved side is dropped)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val util = graft.llm.Bpe.mergeUtilization(docs, merges)
+        .select("rank", "tok", "n_uses", "stream_permille")
+      val out = util.as[(Long, String, Long, Long)].collect().sortBy(_._1)
+      assert(out.length === 2)
+      assert(out(0) === ((1L, "ab", 0L, 0L)))
+      assert(out(1) === ((2L, "abc", 4L, 666L)))
+      assert(util.queryExecution.executedPlan.toString
+        .contains("BroadcastHashJoin"))
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

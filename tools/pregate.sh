@@ -16,8 +16,14 @@ cd "$(dirname "$0")/.."
 SF="${1:-sf0.01}"
 OUT="/tmp/pregate_${SF}"
 
+# The ROADMAP tier-1 command's settings: offline dependency resolution
+# (a caller's own COURSIER_MODE / SBT_OPTS win) and one Spark core per CPU.
+export COURSIER_MODE="${COURSIER_MODE:-offline}"
+export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
+
 sbt -batch Test/compile test
 rm -rf "$OUT"
-SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify /root/testdata/$SF $OUT"
+sbt -batch "runMain graft.Verify /root/testdata/$SF $OUT"
 python3 tools/verify_local.py "/root/testdata/$SF" "$OUT"
 echo "PREGATE OK ($SF)"
