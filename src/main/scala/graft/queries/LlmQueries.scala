@@ -467,6 +467,209 @@ object LlmQueries {
        |ORDER BY rp.$grp""".stripMargin
   }
 
+  /** TextAnalysis.exactDedup over the gated `gdocs`: dual-fingerprint
+    * groups keep their min id (`kept`); null-text rows pass through. */
+  private lazy val gatedExactDedupCtes: String = {
+    val p48 = graft.functions.LlmExprs.P48.toString
+    s"""fp0 AS (
+       |  SELECT doc_id,
+       |    CASE WHEN length(text) = 0 THEN 0
+       |         ELSE ${polyHashSql("text")} END AS f1,
+       |    CASE WHEN length(text) = 0 THEN 0
+       |         ELSE ${polyHashSqlMod("text", p48)} END AS f2
+       |  FROM gdocs),
+       |keepid AS (SELECT MIN(doc_id) AS doc_id FROM fp0
+       |           WHERE f1 IS NOT NULL GROUP BY f1, f2),
+       |kept AS (SELECT g.* FROM gdocs g JOIN keepid USING (doc_id)
+       |         UNION ALL
+       |         SELECT g.* FROM gdocs g WHERE g.text IS NULL)""".stripMargin
+  }
+
+  /** Unicode word surface with every word kept in place (the
+    * Tokenizer.UnicodeAligned split the span-rewrite scrub reads). */
+  private val alignedWordsSql = "list_transform(string_split(text, ' '), " +
+    "w -> regexp_replace(lower(w), '[^\\p{L}\\p{N}]', '', 'g'))"
+
+  /** The multilingual rewrite-first front (q211/q231): Unicode Gopher
+    * gate (gd) → span-extent rewrite (rew) → three winnow-scrub rounds
+    * of the off-benchmark rows against the benchmark prints (scr). */
+  private lazy val rewriteScrubCtes: String =
+    s"""${gopherGateCtes(DedupOps.Tokenizer.Unicode)},
+       |gd AS MATERIALIZED (SELECT d.doc_id, d.text FROM documents d JOIN gk USING (doc_id)),
+       |${extentFlagCtesFrom("gd")},
+       |st0 AS (SELECT doc_id, list(idx) AS starts FROM fl GROUP BY doc_id),
+       |rew AS MATERIALIZED (
+       |  SELECT b.doc_id,
+       |    CASE WHEN st0.starts IS NULL THEN array_to_string(ws, ' ')
+       |         ELSE coalesce(array_to_string(list_transform(
+       |           list_filter(range(len(ws)), i ->
+       |             len(list_filter(st0.starts, x -> x <= i AND i <= x + 7)) = 0),
+       |           i -> ws[i + 1]), ' '), '') END AS text
+       |  FROM base b LEFT JOIN st0 USING (doc_id)),
+       |bdocs AS (SELECT doc_id, text FROM documents WHERE $inBenchSql),
+       |${winnowCtesFrom("bdocs", "b", alignedWordsSql)},
+       |bp AS MATERIALIZED (SELECT DISTINCT h AS fp FROM bu),
+       |corp AS MATERIALIZED (SELECT doc_id, text FROM rew WHERE $offBenchSql),
+       |${scrubRoundCtes("r1", "corp", alignedWordsSql)},
+       |${scrubRoundCtes("r2", "r1out", alignedWordsSql)},
+       |${scrubRoundCtes("r3", "r2out", alignedWordsSql)},
+       |scr AS MATERIALIZED (SELECT doc_id, text FROM r3out)""".stripMargin
+
+  /** TextAnalysis.mixtureSampleTokens(src, "source", budget)'s fill:
+    * per-source token mass (wts), √-mass weights (w, tot), token quotas,
+    * and `ranked` = each source's salted-hash order with running token
+    * counts. `pfx` prefixes the names where two mixtures share a WITH. */
+  private def tokenMixtureCtes(src: String, budget: Long,
+      pfx: String = ""): String =
+    s"""${pfx}wts AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS tok_grp
+       |        FROM $src GROUP BY 1),
+       |${pfx}w AS (SELECT source,
+       |        CAST(floor(sqrt(CAST(tok_grp AS DOUBLE)) * 10000 + 0.5) AS BIGINT) AS w
+       |      FROM ${pfx}wts),
+       |${pfx}tot AS (SELECT CAST(sum(w) AS BIGINT) AS w_total FROM ${pfx}w),
+       |${pfx}quotas AS (SELECT source,
+       |             CAST((CAST($budget AS HUGEINT) * w) // w_total AS BIGINT) AS quota
+       |           FROM ${pfx}w CROSS JOIN ${pfx}tot),
+       |${pfx}ranked AS (
+       |  SELECT doc_id, source, n_tokens,
+       |    CAST(row_number() OVER (
+       |      PARTITION BY source
+       |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id) AS BIGINT) AS rnk,
+       |    CAST(sum(n_tokens) OVER (
+       |      PARTITION BY source
+       |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id
+       |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
+       |  FROM $src)""".stripMargin
+
+  /** [[tokenMixtureCtes]] over `toks (doc_id, source, text, n_tokens)`
+    * plus the selected rows: each doc whose fill starts under quota. */
+  private def tokenMixtureSql(budget: Long): String =
+    s"""${tokenMixtureCtes("toks", budget)}
+       |SELECT r.doc_id, r.source, r.n_tokens, r.rnk, r.cum_tokens
+       |FROM ranked r JOIN quotas q USING (source)
+       |WHERE r.cum_tokens - r.n_tokens < q.quota
+       |ORDER BY source, rnk""".stripMargin
+
+  /** The q114 epoch plan over `toks` (per-doc whitespace tokens): the
+    * √-mass token quotas at a 70 000-token budget, full epochs per source
+    * capped at 3 (`ep.epochs`) and the fractional top-up mass (`ep.rem`)
+    * — mirrors TextAnalysis.epochMixtureTokens' planning stage. */
+  private lazy val epochPlanCtes: String =
+    s"""toks AS (
+       |  SELECT doc_id, source, text,
+       |    CAST(len(list_filter(string_split(coalesce(text, ''), ' '),
+       |      w -> w <> '')) AS BIGINT) AS n_tokens
+       |  FROM documents),
+       |wts AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS tok_grp
+       |        FROM toks GROUP BY 1),
+       |w AS (SELECT source, tok_grp,
+       |        CAST(floor(sqrt(CAST(tok_grp AS DOUBLE)) * 10000 + 0.5) AS BIGINT) AS w
+       |      FROM wts),
+       |tot AS (SELECT CAST(sum(w) AS BIGINT) AS w_total FROM w),
+       |plan AS (SELECT source, tok_grp,
+       |           CAST((CAST(70000 AS HUGEINT) * w) // w_total AS BIGINT) AS quota
+       |         FROM w CROSS JOIN tot),
+       |ep0 AS (SELECT source, tok_grp, quota,
+       |          CASE WHEN tok_grp > 0
+       |               THEN least(quota // tok_grp, CAST(3 AS BIGINT))
+       |               ELSE CAST(0 AS BIGINT) END AS epochs
+       |        FROM plan),
+       |ep AS (SELECT source, epochs,
+       |         CASE WHEN epochs < 3 THEN quota - epochs * tok_grp
+       |              ELSE CAST(0 AS BIGINT) END AS rem
+       |       FROM ep0)""".stripMargin
+
+  /** The q37 quality blend over the classifier's raw counts — the
+    * teacher score Classifier.qualityTeacherGate distils. */
+  private val clfTeacherSql: String = Det.frSql(
+    """least(CAST(n_raw AS DOUBLE) / 100.0, 1.0) * 0.4
+      |      + CAST(n_distinct AS DOUBLE) / n_raw * 0.3
+      |      + (1.0 - CAST(n_stop AS DOUBLE) / n_raw) * 0.3""".stripMargin, 4)
+
+  /** Classifier.qualityTeacherGate's training: per-doc raw counts (w,
+    * s), the five integer features plus `labelCols` (feat), and the
+    * per-class counts and feature sums that define the two centroids
+    * (c). */
+  private def clfTrainCtes(labelCols: String): String = {
+    val allStops = TextAnalysis.stopwords.flatMap(_._2).distinct
+    s"""w AS (
+       |  SELECT doc_id, coalesce(text, '') AS t,
+       |         string_split(coalesce(text, ''), ' ') AS ws
+       |  FROM documents),
+       |s AS (
+       |  SELECT doc_id,
+       |    CAST(len(ws) AS BIGINT) AS n_raw,
+       |    CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct,
+       |    CAST(len(list_filter(ws, x -> list_contains(${stopListSql(allStops)}, x))) AS BIGINT) AS n_stop,
+       |    CAST(len(list_filter(ws, x -> x <> '')) AS BIGINT) AS f1,
+       |    CAST(length(t) AS BIGINT) AS f2,
+       |    CAST(length(replace(t, ' ', '')) AS BIGINT) AS f5n
+       |  FROM w),
+       |feat AS (
+       |  SELECT doc_id, f1, f2,
+       |    n_distinct * 10000 // n_raw AS f3,
+       |    n_stop * 10000 // n_raw AS f4,
+       |    f5n * 10000 // greatest(f1, 1) AS f5,
+       |    $labelCols
+       |  FROM s),
+       |c AS (
+       |  SELECT
+       |    CAST(sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_pos,
+       |    CAST(sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_neg,
+       |    ${(1 to 5).map(i =>
+      s"CAST(sum(CASE WHEN label = 1 THEN f$i ELSE 0 END) AS HUGEINT) AS sp$i, " +
+        s"CAST(sum(CASE WHEN label = 0 THEN f$i ELSE 0 END) AS HUGEINT) AS sn$i")
+      .mkString(",\n    ")}
+       |  FROM feat)""".stripMargin
+  }
+
+  /** The teacher label as a `feat` column, wrapped as q112 writes it. */
+  private val clfLabelSql =
+    s"CASE WHEN $clfTeacherSql >= 0.5\n         THEN 1 ELSE 0 END AS label"
+
+  /** The nearest-centroid prediction over feat × c: cross-multiplied L1
+    * distances in exact integer arithmetic; `pad` indents its WHEN
+    * lines. */
+  private def clfPredSql(pad: Int): String = {
+    val absDist = (pfx: String, cnt: String) => (1 to 5).map(i =>
+      s"abs(CAST(f$i AS HUGEINT) * $cnt - $pfx$i)").mkString(" + ")
+    val p = " " * pad
+    s"""CASE WHEN c_pos = 0 THEN 0
+       |${p}WHEN c_neg = 0 THEN 1
+       |${p}WHEN CAST(c_neg AS HUGEINT) * (${absDist("sp", "c_pos")})
+       |${p}  <= CAST(c_pos AS HUGEINT) * (${absDist("sn", "c_neg")})
+       |${p}THEN 1 ELSE 0 END""".stripMargin
+  }
+
+  /** TextAnalysis.doremiSelect's quotas: per-domain mean surprisal over
+    * `dom (domain, n_bigrams, bits)` (davg), the multiplicative-weights
+    * update against the easiest domain (mn, wt, tw), `budget` bigram
+    * mass split by weight (quotas), and each row of `src`'s bigram mass
+    * (mass). */
+  private def doremiQuotaCtes(src: String, budget: Long): String =
+    s"""davg AS (
+       |  SELECT *, CAST(CAST(bits AS HUGEINT) * 10000
+       |    // greatest(n_bigrams, 1) AS BIGINT) AS avg_scaled
+       |  FROM dom),
+       |mn AS (SELECT CAST(min(avg_scaled) AS BIGINT) AS min_scaled FROM davg),
+       |wt AS (
+       |  SELECT d.domain AS source,
+       |    CAST(d.n_bigrams AS HUGEINT) *
+       |      (10000 + d.avg_scaled - m.min_scaled) AS weight
+       |  FROM davg d CROSS JOIN mn m),
+       |tw AS (SELECT CAST(sum(weight) AS HUGEINT) AS w_total FROM wt),
+       |quotas AS (
+       |  SELECT source,
+       |    CAST(CASE WHEN w_total > 0
+       |      THEN (CAST($budget AS HUGEINT) * weight) // w_total
+       |      ELSE 0 END AS BIGINT) AS quota
+       |  FROM wt CROSS JOIN tw),
+       |mass AS (
+       |  SELECT doc_id, source, text,
+       |    CAST(greatest(coalesce(len(list_filter(string_split(text, ' '),
+       |      x -> x <> '')), 0) - 1, 0) AS BIGINT) AS n_bigrams
+       |  FROM $src)""".stripMargin
+
   val q37 = Q(
     "q37_quality_score",
     (s, d) => TextAnalysis.qualityScore(docsOf(s, d)).orderBy("doc_id"),
@@ -2210,29 +2413,7 @@ object LlmQueries {
          |  SELECT doc_id, source, text,
          |    CAST(coalesce(len(list_filter(string_split(text, ' '), w -> w <> '')), 0) AS BIGINT) AS n_tokens
          |  FROM documents),
-         |wts AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS tok_grp
-         |        FROM toks GROUP BY 1),
-         |w AS (SELECT source,
-         |        CAST(floor(sqrt(CAST(tok_grp AS DOUBLE)) * 10000 + 0.5) AS BIGINT) AS w
-         |      FROM wts),
-         |tot AS (SELECT CAST(sum(w) AS BIGINT) AS w_total FROM w),
-         |quotas AS (SELECT source,
-         |             CAST((CAST(5000 AS HUGEINT) * w) // w_total AS BIGINT) AS quota
-         |           FROM w CROSS JOIN tot),
-         |ranked AS (
-         |  SELECT doc_id, source, n_tokens,
-         |    CAST(row_number() OVER (
-         |      PARTITION BY source
-         |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id) AS BIGINT) AS rnk,
-         |    CAST(sum(n_tokens) OVER (
-         |      PARTITION BY source
-         |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-         |  FROM toks)
-         |SELECT r.doc_id, r.source, r.n_tokens, r.rnk, r.cum_tokens
-         |FROM ranked r JOIN quotas q USING (source)
-         |WHERE r.cum_tokens - r.n_tokens < q.quota
-         |ORDER BY source, rnk""".stripMargin))
+         |${tokenMixtureSql(5000L)}""".stripMargin))
 
   // q105 — collocation mining: top adjacent word pairs by PMI-style lift
   // (c_xy·N)/(c_x·c_y) — BPE merge candidates / phrase mining. Rational
@@ -2594,29 +2775,7 @@ object LlmQueries {
          |toks AS (
          |  SELECT d.doc_id, d.source, d.text, COALESCE(dt.n_tokens, 0) AS n_tokens
          |  FROM documents d LEFT JOIN dt USING (doc_id)),
-         |wts AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS tok_grp
-         |        FROM toks GROUP BY 1),
-         |w AS (SELECT source,
-         |        CAST(floor(sqrt(CAST(tok_grp AS DOUBLE)) * 10000 + 0.5) AS BIGINT) AS w
-         |      FROM wts),
-         |tot AS (SELECT CAST(sum(w) AS BIGINT) AS w_total FROM w),
-         |quotas AS (SELECT source,
-         |             CAST((CAST(5000 AS HUGEINT) * w) // w_total AS BIGINT) AS quota
-         |           FROM w CROSS JOIN tot),
-         |ranked AS (
-         |  SELECT doc_id, source, n_tokens,
-         |    CAST(row_number() OVER (
-         |      PARTITION BY source
-         |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id) AS BIGINT) AS rnk,
-         |    CAST(sum(n_tokens) OVER (
-         |      PARTITION BY source
-         |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-         |  FROM toks)
-         |SELECT r.doc_id, r.source, r.n_tokens, r.rnk, r.cum_tokens
-         |FROM ranked r JOIN quotas q USING (source)
-         |WHERE r.cum_tokens - r.n_tokens < q.quota
-         |ORDER BY source, rnk""".stripMargin))
+         |${tokenMixtureSql(5000L)}""".stripMargin))
 
   // q112 — learned quality-classifier gate (the fasttext-gate shape):
   // nearest-centroid student distilled from the q37 heuristic teacher.
@@ -2629,58 +2788,13 @@ object LlmQueries {
     "q112_classifier_gate",
     (s, d) => graft.llm.Classifier.qualityTeacherGate(
       docsOf(s, d)).orderBy("doc_id"),
-    Some {
-      val allStops = TextAnalysis.stopwords.flatMap(_._2).distinct
-      val absDist = (pfx: String, cnt: String) => (1 to 5).map(i =>
-        s"abs(CAST(f$i AS HUGEINT) * $cnt - $pfx$i)").mkString(" + ")
-      s"""WITH w AS (
-         |  SELECT doc_id, coalesce(text, '') AS t,
-         |         string_split(coalesce(text, ''), ' ') AS ws
-         |  FROM documents),
-         |s AS (
-         |  SELECT doc_id,
-         |    CAST(len(ws) AS BIGINT) AS n_raw,
-         |    CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct,
-         |    CAST(len(list_filter(ws, x -> list_contains(${stopListSql(allStops)}, x))) AS BIGINT) AS n_stop,
-         |    CAST(len(list_filter(ws, x -> x <> '')) AS BIGINT) AS f1,
-         |    CAST(length(t) AS BIGINT) AS f2,
-         |    CAST(length(replace(t, ' ', '')) AS BIGINT) AS f5n
-         |  FROM w),
-         |feat AS (
-         |  SELECT doc_id, f1, f2,
-         |    n_distinct * 10000 // n_raw AS f3,
-         |    n_stop * 10000 // n_raw AS f4,
-         |    f5n * 10000 // greatest(f1, 1) AS f5,
-         |    CASE WHEN ${Det.frSql(
-        """least(CAST(n_raw AS DOUBLE) / 100.0, 1.0) * 0.4
-          |      + CAST(n_distinct AS DOUBLE) / n_raw * 0.3
-          |      + (1.0 - CAST(n_stop AS DOUBLE) / n_raw) * 0.3""".stripMargin,
-        4)} >= 0.5
-         |         THEN 1 ELSE 0 END AS label
-         |  FROM s),
-         |c AS (
-         |  SELECT
-         |    CAST(sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_pos,
-         |    CAST(sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_neg,
-         |    ${(1 to 5).map(i =>
-        s"CAST(sum(CASE WHEN label = 1 THEN f$i ELSE 0 END) AS HUGEINT) AS sp$i, " +
-          s"CAST(sum(CASE WHEN label = 0 THEN f$i ELSE 0 END) AS HUGEINT) AS sn$i")
-        .mkString(",\n    ")}
-         |  FROM feat)
+    Some(
+      s"""WITH ${clfTrainCtes(clfLabelSql)}
          |SELECT doc_id, label,
-         |  CASE WHEN c_pos = 0 THEN 0
-         |       WHEN c_neg = 0 THEN 1
-         |       WHEN CAST(c_neg AS HUGEINT) * (${absDist("sp", "c_pos")})
-         |         <= CAST(c_pos AS HUGEINT) * (${absDist("sn", "c_neg")})
-         |       THEN 1 ELSE 0 END AS pred,
-         |  CAST(label = (CASE WHEN c_pos = 0 THEN 0
-         |       WHEN c_neg = 0 THEN 1
-         |       WHEN CAST(c_neg AS HUGEINT) * (${absDist("sp", "c_pos")})
-         |         <= CAST(c_pos AS HUGEINT) * (${absDist("sn", "c_neg")})
-         |       THEN 1 ELSE 0 END) AS INT) AS agree
+         |  ${clfPredSql(7)} AS pred,
+         |  CAST(label = (${clfPredSql(7)}) AS INT) AS agree
          |FROM feat CROSS JOIN c
-         |ORDER BY doc_id""".stripMargin
-    })
+         |ORDER BY doc_id""".stripMargin))
 
   // q113 — bigram-LM surprisal scoring (the CCNet/KenLM quality-filter
   // shape): add-one-smoothed bigram model trained on the doc_id % 4 = 0
@@ -2721,29 +2835,7 @@ object LlmQueries {
     (s, d) => TextAnalysis.epochMixtureTokens(docsOf(s, d), "source",
       tokenBudget = 70000L, maxEpochs = 3).orderBy("source", "rnk", "epoch"),
     Some(
-      s"""WITH toks AS (
-         |  SELECT doc_id, source, text,
-         |    CAST(len(list_filter(string_split(coalesce(text, ''), ' '),
-         |      w -> w <> '')) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |wts AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS tok_grp
-         |        FROM toks GROUP BY 1),
-         |w AS (SELECT source, tok_grp,
-         |        CAST(floor(sqrt(CAST(tok_grp AS DOUBLE)) * 10000 + 0.5) AS BIGINT) AS w
-         |      FROM wts),
-         |tot AS (SELECT CAST(sum(w) AS BIGINT) AS w_total FROM w),
-         |plan AS (SELECT source, tok_grp,
-         |           CAST((CAST(70000 AS HUGEINT) * w) // w_total AS BIGINT) AS quota
-         |         FROM w CROSS JOIN tot),
-         |ep0 AS (SELECT source, tok_grp, quota,
-         |          CASE WHEN tok_grp > 0
-         |               THEN least(quota // tok_grp, CAST(3 AS BIGINT))
-         |               ELSE CAST(0 AS BIGINT) END AS epochs
-         |        FROM plan),
-         |ep AS (SELECT source, epochs,
-         |         CASE WHEN epochs < 3 THEN quota - epochs * tok_grp
-         |              ELSE CAST(0 AS BIGINT) END AS rem
-         |       FROM ep0),
+      s"""WITH $epochPlanCtes,
          |ranked AS (
          |  SELECT doc_id, source, n_tokens,
          |    CAST(row_number() OVER (
@@ -2888,29 +2980,7 @@ object LlmQueries {
     "'graft@e' || CAST(epoch AS VARCHAR) || '#' || coalesce(text, '')")
   private val epochOrderCtes: String = {
       val okey = epochOrderKeySql
-      s"""toks AS (
-         |  SELECT doc_id, source, text,
-         |    CAST(len(list_filter(string_split(coalesce(text, ''), ' '),
-         |      w -> w <> '')) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |wts AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS tok_grp
-         |        FROM toks GROUP BY 1),
-         |w AS (SELECT source, tok_grp,
-         |        CAST(floor(sqrt(CAST(tok_grp AS DOUBLE)) * 10000 + 0.5) AS BIGINT) AS w
-         |      FROM wts),
-         |tot AS (SELECT CAST(sum(w) AS BIGINT) AS w_total FROM w),
-         |plan AS (SELECT source, tok_grp,
-         |           CAST((CAST(70000 AS HUGEINT) * w) // w_total AS BIGINT) AS quota
-         |         FROM w CROSS JOIN tot),
-         |ep0 AS (SELECT source, tok_grp, quota,
-         |          CASE WHEN tok_grp > 0
-         |               THEN least(quota // tok_grp, CAST(3 AS BIGINT))
-         |               ELSE CAST(0 AS BIGINT) END AS epochs
-         |        FROM plan),
-         |ep AS (SELECT source, epochs,
-         |         CASE WHEN epochs < 3 THEN quota - epochs * tok_grp
-         |              ELSE CAST(0 AS BIGINT) END AS rem
-         |       FROM ep0),
+      s"""$epochPlanCtes,
          |ranked AS (
          |  SELECT doc_id, source, text, n_tokens,
          |    CAST(sum(n_tokens) OVER (
@@ -3021,6 +3091,33 @@ object LlmQueries {
          |  w AS width, h AS height
          |FROM px ORDER BY doc_id""".stripMargin))
 
+  /** aHash of the formula-built pixel plane with hamming 0: what any
+    * two encodings of the same image must decode to (q241, q244). */
+  private lazy val formulaAhashOracle: String =
+    s"""WITH dims AS (
+       |  SELECT doc_id,
+       |    CAST((4 + doc_id % 5) * (3 + doc_id % 4) * 3 AS BIGINT) AS n
+       |  FROM documents),
+       |rb AS (
+       |  SELECT doc_id, b,
+       |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(
+       |      range((b * n) // 32, ((b + 1) * n) // 32),
+       |      j -> CAST((doc_id * 31 + j * 7) % 251 AS BIGINT))),
+       |      (a, x) -> a + x) AS sum_bytes,
+       |    CAST(((b + 1) * n) // 32 - (b * n) // 32 AS BIGINT) AS n_in
+       |  FROM dims, (SELECT unnest(range(32)) AS b) bs),
+       |tot AS (
+       |  SELECT doc_id, CAST(sum(sum_bytes) AS BIGINT) AS total,
+       |         CAST(sum(n_in) AS BIGINT) AS n_total
+       |  FROM rb GROUP BY 1)
+       |SELECT rb.doc_id,
+       |  CAST(sum(CASE WHEN rb.sum_bytes * t.n_total > t.total * rb.n_in
+       |           THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END)
+       |    AS BIGINT) AS ahash,
+       |  CAST(0 AS BIGINT) AS hamming
+       |FROM rb JOIN tot t USING (doc_id)
+       |GROUP BY rb.doc_id ORDER BY rb.doc_id""".stripMargin
+
   // q241 — decode INVARIANCE, the property that separates a real decoder
   // from any byte-statistics stub: the same image is encoded twice
   // (canonical header vs comment-laden re-encode — byte-distinct
@@ -3043,30 +3140,7 @@ object LlmQueries {
           expr("CAST(bit_count(ahash ^ ahash_b) AS BIGINT)").as("hamming"))
         .orderBy("doc_id")
     },
-    Some(
-      s"""WITH dims AS (
-         |  SELECT doc_id,
-         |    CAST((4 + doc_id % 5) * (3 + doc_id % 4) * 3 AS BIGINT) AS n
-         |  FROM documents),
-         |rb AS (
-         |  SELECT doc_id, b,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(
-         |      range((b * n) // 32, ((b + 1) * n) // 32),
-         |      j -> CAST((doc_id * 31 + j * 7) % 251 AS BIGINT))),
-         |      (a, x) -> a + x) AS sum_bytes,
-         |    CAST(((b + 1) * n) // 32 - (b * n) // 32 AS BIGINT) AS n_in
-         |  FROM dims, (SELECT unnest(range(32)) AS b) bs),
-         |tot AS (
-         |  SELECT doc_id, CAST(sum(sum_bytes) AS BIGINT) AS total,
-         |         CAST(sum(n_in) AS BIGINT) AS n_total
-         |  FROM rb GROUP BY 1)
-         |SELECT rb.doc_id,
-         |  CAST(sum(CASE WHEN rb.sum_bytes * t.n_total > t.total * rb.n_in
-         |           THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END)
-         |    AS BIGINT) AS ahash,
-         |  CAST(0 AS BIGINT) AS hamming
-         |FROM rb JOIN tot t USING (doc_id)
-         |GROUP BY rb.doc_id ORDER BY rb.doc_id""".stripMargin))
+    Some(formulaAhashOracle))
 
   // q244 — CROSS-FORMAT perceptual identity (the second real decoder):
   // the same image encoded as binary-Netpbm P6 AND as uncompressed
@@ -3090,30 +3164,7 @@ object LlmQueries {
           expr("CAST(bit_count(ahash ^ ahash_bmp) AS BIGINT)").as("hamming"))
         .orderBy("doc_id")
     },
-    Some(
-      s"""WITH dims AS (
-         |  SELECT doc_id,
-         |    CAST((4 + doc_id % 5) * (3 + doc_id % 4) * 3 AS BIGINT) AS n
-         |  FROM documents),
-         |rb AS (
-         |  SELECT doc_id, b,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(
-         |      range((b * n) // 32, ((b + 1) * n) // 32),
-         |      j -> CAST((doc_id * 31 + j * 7) % 251 AS BIGINT))),
-         |      (a, x) -> a + x) AS sum_bytes,
-         |    CAST(((b + 1) * n) // 32 - (b * n) // 32 AS BIGINT) AS n_in
-         |  FROM dims, (SELECT unnest(range(32)) AS b) bs),
-         |tot AS (
-         |  SELECT doc_id, CAST(sum(sum_bytes) AS BIGINT) AS total,
-         |         CAST(sum(n_in) AS BIGINT) AS n_total
-         |  FROM rb GROUP BY 1)
-         |SELECT rb.doc_id,
-         |  CAST(sum(CASE WHEN rb.sum_bytes * t.n_total > t.total * rb.n_in
-         |           THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END)
-         |    AS BIGINT) AS ahash,
-         |  CAST(0 AS BIGINT) AS hamming
-         |FROM rb JOIN tot t USING (doc_id)
-         |GROUP BY rb.doc_id ORDER BY rb.doc_id""".stripMargin))
+    Some(formulaAhashOracle))
 
   // q245 — the AUDIO modality decoded for real (RIFF/WAVE PCM) and the
   // TRI-FORMAT identity: the same deterministic sample stream encoded
@@ -4488,28 +4539,7 @@ object LlmQueries {
          |    CAST(sum(coalesce(sc.bits, 0)) AS BIGINT) AS bits
          |  FROM documents d LEFT JOIN sc USING (doc_id)
          |  GROUP BY 1),
-         |davg AS (
-         |  SELECT *, CAST(CAST(bits AS HUGEINT) * 10000
-         |    // greatest(n_bigrams, 1) AS BIGINT) AS avg_scaled
-         |  FROM dom),
-         |mn AS (SELECT CAST(min(avg_scaled) AS BIGINT) AS min_scaled FROM davg),
-         |wt AS (
-         |  SELECT d.domain AS source,
-         |    CAST(d.n_bigrams AS HUGEINT) *
-         |      (10000 + d.avg_scaled - m.min_scaled) AS weight
-         |  FROM davg d CROSS JOIN mn m),
-         |tw AS (SELECT CAST(sum(weight) AS HUGEINT) AS w_total FROM wt),
-         |quotas AS (
-         |  SELECT source,
-         |    CAST(CASE WHEN w_total > 0
-         |      THEN (CAST(5000 AS HUGEINT) * weight) // w_total
-         |      ELSE 0 END AS BIGINT) AS quota
-         |  FROM wt CROSS JOIN tw),
-         |mass AS (
-         |  SELECT doc_id, source, text,
-         |    CAST(greatest(coalesce(len(list_filter(string_split(text, ' '),
-         |      x -> x <> '')), 0) - 1, 0) AS BIGINT) AS n_bigrams
-         |  FROM documents),
+         |${doremiQuotaCtes("documents", 5000L)},
          |ranked AS (
          |  SELECT doc_id, source, n_bigrams,
          |    CAST(row_number() OVER (
@@ -4708,21 +4738,9 @@ object LlmQueries {
       TextAnalysis.corpusReport(clean, "source").orderBy("source")
     },
     Some {
-      val p48 = graft.functions.LlmExprs.P48.toString
       s"""WITH ${gopherGateCtes(DedupOps.Tokenizer.Ascii)},
          |gdocs AS (SELECT d.* FROM documents d JOIN gk USING (doc_id)),
-         |fp0 AS (
-         |  SELECT doc_id,
-         |    CASE WHEN length(text) = 0 THEN 0
-         |         ELSE ${polyHashSql("text")} END AS f1,
-         |    CASE WHEN length(text) = 0 THEN 0
-         |         ELSE ${polyHashSqlMod("text", p48)} END AS f2
-         |  FROM gdocs),
-         |keepid AS (SELECT MIN(doc_id) AS doc_id FROM fp0
-         |           WHERE f1 IS NOT NULL GROUP BY f1, f2),
-         |kept AS (SELECT g.* FROM gdocs g JOIN keepid USING (doc_id)
-         |         UNION ALL
-         |         SELECT g.* FROM gdocs g WHERE g.text IS NULL),
+         |$gatedExactDedupCtes,
          |kdw AS (SELECT doc_id, list_filter(string_split(coalesce(text, ''), ' '),
          |          w -> w <> '') AS ws
          |        FROM kept),
@@ -4736,28 +4754,7 @@ object LlmQueries {
          |    CAST(sum(coalesce(sc.bits, 0)) AS BIGINT) AS bits
          |  FROM kept k LEFT JOIN sc ON k.doc_id = sc.doc_id
          |  GROUP BY 1),
-         |davg AS (
-         |  SELECT *, CAST(CAST(bits AS HUGEINT) * 10000
-         |    // greatest(n_bigrams, 1) AS BIGINT) AS avg_scaled
-         |  FROM dom),
-         |mn AS (SELECT CAST(min(avg_scaled) AS BIGINT) AS min_scaled FROM davg),
-         |wt AS (
-         |  SELECT d.domain AS source,
-         |    CAST(d.n_bigrams AS HUGEINT) *
-         |      (10000 + d.avg_scaled - m.min_scaled) AS weight
-         |  FROM davg d CROSS JOIN mn m),
-         |tw AS (SELECT CAST(sum(weight) AS HUGEINT) AS w_total FROM wt),
-         |quotas AS (
-         |  SELECT source,
-         |    CAST(CASE WHEN w_total > 0
-         |      THEN (CAST(20000 AS HUGEINT) * weight) // w_total
-         |      ELSE 0 END AS BIGINT) AS quota
-         |  FROM wt CROSS JOIN tw),
-         |mass AS (
-         |  SELECT doc_id, source, text,
-         |    CAST(greatest(coalesce(len(list_filter(string_split(text, ' '),
-         |      x -> x <> '')), 0) - 1, 0) AS BIGINT) AS n_bigrams
-         |  FROM kept),
+         |${doremiQuotaCtes("kept", 20000L)},
          |rsel AS (
          |  SELECT doc_id, source, n_bigrams,
          |    CAST(sum(n_bigrams) OVER (
@@ -5242,21 +5239,9 @@ object LlmQueries {
     * drift. RECURSIVE (the CC closure) — callers open with
     * `WITH RECURSIVE $curationV8StageCtes`. */
   private lazy val curationV8StageCtes: String = {
-    val p48 = graft.functions.LlmExprs.P48.toString
     s"""${gopherGateCtes(DedupOps.Tokenizer.Ascii)},
          |gdocs AS (SELECT d.* FROM documents d JOIN gk USING (doc_id)),
-         |fp0 AS (
-         |  SELECT doc_id,
-         |    CASE WHEN length(text) = 0 THEN 0
-         |         ELSE ${polyHashSql("text")} END AS f1,
-         |    CASE WHEN length(text) = 0 THEN 0
-         |         ELSE ${polyHashSqlMod("text", p48)} END AS f2
-         |  FROM gdocs),
-         |keepid AS (SELECT MIN(doc_id) AS doc_id FROM fp0
-         |           WHERE f1 IS NOT NULL GROUP BY f1, f2),
-         |kept AS (SELECT g.* FROM gdocs g JOIN keepid USING (doc_id)
-         |         UNION ALL
-         |         SELECT g.* FROM gdocs g WHERE g.text IS NULL),
+         |$gatedExactDedupCtes,
          |${shingleCtesWithCap(None, "kept")},
          |$minhashCandCtes,
          |pfx AS (SELECT doc_id, substr(coalesce(text, ''), 1, 256) AS pfx
@@ -6164,53 +6149,12 @@ object LlmQueries {
   // resulting centroids — i.e. exactly what the STORED model must
   // reproduce, so a torn/stale index or a batch-split-variant streaming
   // execution changes the hash.
-  private lazy val classifierGateOracleSql: String = {
-      val allStops = TextAnalysis.stopwords.flatMap(_._2).distinct
-      val absDist = (pfx: String, cnt: String) => (1 to 5).map(i =>
-        s"abs(CAST(f$i AS HUGEINT) * $cnt - $pfx$i)").mkString(" + ")
-      s"""WITH w AS (
-         |  SELECT doc_id, coalesce(text, '') AS t,
-         |         string_split(coalesce(text, ''), ' ') AS ws
-         |  FROM documents),
-         |s AS (
-         |  SELECT doc_id,
-         |    CAST(len(ws) AS BIGINT) AS n_raw,
-         |    CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct,
-         |    CAST(len(list_filter(ws, x -> list_contains(${stopListSql(allStops)}, x))) AS BIGINT) AS n_stop,
-         |    CAST(len(list_filter(ws, x -> x <> '')) AS BIGINT) AS f1,
-         |    CAST(length(t) AS BIGINT) AS f2,
-         |    CAST(length(replace(t, ' ', '')) AS BIGINT) AS f5n
-         |  FROM w),
-         |feat AS (
-         |  SELECT doc_id, f1, f2,
-         |    n_distinct * 10000 // n_raw AS f3,
-         |    n_stop * 10000 // n_raw AS f4,
-         |    f5n * 10000 // greatest(f1, 1) AS f5,
-         |    CASE WHEN ${Det.frSql(
-        """least(CAST(n_raw AS DOUBLE) / 100.0, 1.0) * 0.4
-          |      + CAST(n_distinct AS DOUBLE) / n_raw * 0.3
-          |      + (1.0 - CAST(n_stop AS DOUBLE) / n_raw) * 0.3""".stripMargin,
-        4)} >= 0.5
-         |         THEN 1 ELSE 0 END AS label
-         |  FROM s),
-         |c AS (
-         |  SELECT
-         |    CAST(sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_pos,
-         |    CAST(sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_neg,
-         |    ${(1 to 5).map(i =>
-        s"CAST(sum(CASE WHEN label = 1 THEN f$i ELSE 0 END) AS HUGEINT) AS sp$i, " +
-          s"CAST(sum(CASE WHEN label = 0 THEN f$i ELSE 0 END) AS HUGEINT) AS sn$i")
-        .mkString(",\n    ")}
-         |  FROM feat)
-         |SELECT doc_id,
-         |  CASE WHEN c_pos = 0 THEN 0
-         |       WHEN c_neg = 0 THEN 1
-         |       WHEN CAST(c_neg AS HUGEINT) * (${absDist("sp", "c_pos")})
-         |         <= CAST(c_pos AS HUGEINT) * (${absDist("sn", "c_neg")})
-         |       THEN 1 ELSE 0 END AS pred
-         |FROM feat CROSS JOIN c
-         |ORDER BY doc_id""".stripMargin
-  }
+  private lazy val classifierGateOracleSql: String =
+    s"""WITH ${clfTrainCtes(clfLabelSql)}
+       |SELECT doc_id,
+       |  ${clfPredSql(7)} AS pred
+       |FROM feat CROSS JOIN c
+       |ORDER BY doc_id""".stripMargin
 
   val q191 = Q(
     "q191_classifier_index",
@@ -6579,60 +6523,20 @@ object LlmQueries {
     "q200_classifier_calibration",
     (s, d) => graft.llm.Classifier.calibrationReport(
       docsOf(s, d)).orderBy("bucket"),
-    Some {
-      val allStops = TextAnalysis.stopwords.flatMap(_._2).distinct
-      val absDist = (pfx: String, cnt: String) => (1 to 5).map(i =>
-        s"abs(CAST(f$i AS HUGEINT) * $cnt - $pfx$i)").mkString(" + ")
-      val qExpr = Det.frSql(
-        """least(CAST(n_raw AS DOUBLE) / 100.0, 1.0) * 0.4
-          |      + CAST(n_distinct AS DOUBLE) / n_raw * 0.3
-          |      + (1.0 - CAST(n_stop AS DOUBLE) / n_raw) * 0.3""".stripMargin,
-        4)
-      s"""WITH w AS (
-         |  SELECT doc_id, coalesce(text, '') AS t,
-         |         string_split(coalesce(text, ''), ' ') AS ws
-         |  FROM documents),
-         |s AS (
-         |  SELECT doc_id,
-         |    CAST(len(ws) AS BIGINT) AS n_raw,
-         |    CAST(len(list_distinct(ws)) AS BIGINT) AS n_distinct,
-         |    CAST(len(list_filter(ws, x -> list_contains(${stopListSql(allStops)}, x))) AS BIGINT) AS n_stop,
-         |    CAST(len(list_filter(ws, x -> x <> '')) AS BIGINT) AS f1,
-         |    CAST(length(t) AS BIGINT) AS f2,
-         |    CAST(length(replace(t, ' ', '')) AS BIGINT) AS f5n
-         |  FROM w),
-         |feat AS (
-         |  SELECT doc_id, f1, f2,
-         |    n_distinct * 10000 // n_raw AS f3,
-         |    n_stop * 10000 // n_raw AS f4,
-         |    f5n * 10000 // greatest(f1, 1) AS f5,
-         |    CASE WHEN $qExpr >= 0.5 THEN 1 ELSE 0 END AS label,
-         |    coalesce(CAST(floor(($qExpr) * 10000 + 0.5) AS BIGINT), 0) AS qs
-         |  FROM s),
-         |c AS (
-         |  SELECT
-         |    CAST(sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_pos,
-         |    CAST(sum(CASE WHEN label = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_neg,
-         |    ${(1 to 5).map(i =>
-        s"CAST(sum(CASE WHEN label = 1 THEN f$i ELSE 0 END) AS HUGEINT) AS sp$i, " +
-          s"CAST(sum(CASE WHEN label = 0 THEN f$i ELSE 0 END) AS HUGEINT) AS sn$i")
-        .mkString(",\n    ")}
-         |  FROM feat),
+    Some(
+      s"""WITH ${clfTrainCtes(
+           s"CASE WHEN $clfTeacherSql >= 0.5 THEN 1 ELSE 0 END AS label,\n    " +
+           s"coalesce(CAST(floor(($clfTeacherSql) * 10000 + 0.5) AS BIGINT), 0) AS qs")},
          |p AS (
          |  SELECT least(qs * 10 // 10000, 9) AS bucket, label,
-         |    CASE WHEN c_pos = 0 THEN 0
-         |         WHEN c_neg = 0 THEN 1
-         |         WHEN CAST(c_neg AS HUGEINT) * (${absDist("sp", "c_pos")})
-         |           <= CAST(c_pos AS HUGEINT) * (${absDist("sn", "c_neg")})
-         |         THEN 1 ELSE 0 END AS pred
+         |    ${clfPredSql(9)} AS pred
          |  FROM feat CROSS JOIN c)
          |SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(sum(label) AS BIGINT) AS n_label_pos,
          |  CAST(sum(pred) AS BIGINT) AS n_pred_pos,
          |  CAST(sum(CASE WHEN label = pred THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
          |  ${Det.frSql("CAST(sum(pred) AS DOUBLE) / count(*)", 4)} AS pred_pos_frac
-         |FROM p GROUP BY 1 ORDER BY 1""".stripMargin
-    })
+         |FROM p GROUP BY 1 ORDER BY 1""".stripMargin))
 
   // q201 — language-label agreement matrix (label QA): labeled lang ×
   // stopword-voted prediction, exact counts. Off-diagonal mass =
@@ -7013,31 +6917,10 @@ object LlmQueries {
       TextAnalysis.corpusReport(fin, "lang").orderBy("lang")
     },
     Some {
-      val alignedWords = "list_transform(string_split(text, ' '), " +
-        "w -> regexp_replace(lower(w), '[^\\p{L}\\p{N}]', '', 'g'))"
       val uniNorm = "trim(regexp_replace(regexp_replace(lower(" +
         "coalesce(text, '')), '[^\\p{L}\\p{N}\\s]', '', 'g'), " +
         "'\\s+', ' ', 'g'))"
-      s"""WITH ${gopherGateCtes(DedupOps.Tokenizer.Unicode)},
-         |gd AS MATERIALIZED (SELECT d.doc_id, d.text FROM documents d JOIN gk USING (doc_id)),
-         |${extentFlagCtesFrom("gd")},
-         |st0 AS (SELECT doc_id, list(idx) AS starts FROM fl GROUP BY doc_id),
-         |rew AS MATERIALIZED (
-         |  SELECT b.doc_id,
-         |    CASE WHEN st0.starts IS NULL THEN array_to_string(ws, ' ')
-         |         ELSE coalesce(array_to_string(list_transform(
-         |           list_filter(range(len(ws)), i ->
-         |             len(list_filter(st0.starts, x -> x <= i AND i <= x + 7)) = 0),
-         |           i -> ws[i + 1]), ' '), '') END AS text
-         |  FROM base b LEFT JOIN st0 USING (doc_id)),
-         |bdocs AS (SELECT doc_id, text FROM documents WHERE $inBenchSql),
-         |${winnowCtesFrom("bdocs", "b", alignedWords)},
-         |bp AS MATERIALIZED (SELECT DISTINCT h AS fp FROM bu),
-         |corp AS MATERIALIZED (SELECT doc_id, text FROM rew WHERE $offBenchSql),
-         |${scrubRoundCtes("r1", "corp", alignedWords)},
-         |${scrubRoundCtes("r2", "r1out", alignedWords)},
-         |${scrubRoundCtes("r3", "r2out", alignedWords)},
-         |scr AS MATERIALIZED (SELECT doc_id, text FROM r3out),
+      s"""WITH $rewriteScrubCtes,
          |${dsirCtesOver(uniNorm, "scr")},
          |seld AS (SELECT doc_id FROM sr WHERE rnk * 1000 <= n_total * 500),
          |fd AS (SELECT r.doc_id, dd.lang, r.text
@@ -7102,25 +6985,7 @@ object LlmQueries {
     },
     Some {
       def mixCtes(pfx: String, src: String, budget: Long): String =
-        s"""${pfx}wts AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS tok_grp
-           |        FROM $src GROUP BY 1),
-           |${pfx}w AS (SELECT source,
-           |        CAST(floor(sqrt(CAST(tok_grp AS DOUBLE)) * 10000 + 0.5) AS BIGINT) AS w
-           |      FROM ${pfx}wts),
-           |${pfx}tot AS (SELECT CAST(sum(w) AS BIGINT) AS w_total FROM ${pfx}w),
-           |${pfx}quotas AS (SELECT source,
-           |             CAST((CAST($budget AS HUGEINT) * w) // w_total AS BIGINT) AS quota
-           |           FROM ${pfx}w CROSS JOIN ${pfx}tot),
-           |${pfx}ranked AS (
-           |  SELECT doc_id, source, n_tokens,
-           |    CAST(row_number() OVER (
-           |      PARTITION BY source
-           |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id) AS BIGINT) AS rnk,
-           |    CAST(sum(n_tokens) OVER (
-           |      PARTITION BY source
-           |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id
-           |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-           |  FROM $src),
+        s"""${tokenMixtureCtes(src, budget, pfx)},
            |${pfx}picks AS (
            |  SELECT r.doc_id, r.source, r.n_tokens, r.rnk, r.cum_tokens
            |  FROM ${pfx}ranked r JOIN ${pfx}quotas q USING (source)
@@ -7463,9 +7328,16 @@ object LlmQueries {
   /** The unrolled Viterbi DP: `p`0..`p`$ugChunkLen position CTEs (state =
     * min packed key per chunk type) + `p`e, the per-chunk winning key.
     * Chain length is STRUCTURAL (the chunked pre-tokenization bounds
-    * every pre-token at $ugChunkLen code points), independent of corpus. */
+    * every pre-token at $ugChunkLen code points), independent of corpus.
+    *
+    * `nBest` > 1 is the N-BEST DP: a per-position TOP-`nBest` state list
+    * (row_number over the packed key) instead of min(). The same
+    * lossless-pruning argument as UnigramLm.nbestChunk: completions add
+    * identically to every same-position state, so top-n per position
+    * suffices for the final top-n. `p`e then carries ALL surviving final
+    * states per chunk type. */
   private def ugDpCtes(p: String, vc: String, unkCte: String,
-      src: String): String = {
+      src: String, nBest: Int = 1): String = {
     // every position CTE is MATERIALIZED: DuckDB 1.0 inlines plain CTEs
     // at every reference, and p_j is referenced by up to ugPieceLen later
     // steps — un-materialized, the chain re-expands ~3^6-fold and the
@@ -7487,8 +7359,16 @@ object LlmQueries {
              |JOIN $vc v ON v.plen = $l AND v.piece = substring(b.word, ${j - l + 1}, $l)
              |WHERE length(b.word) >= $j""".stripMargin
       }
-      s"""$p$j AS MATERIALIZED (SELECT word, cnt, min(k) AS key FROM (
-         |${branches.mkString("\nUNION ALL\n")}) GROUP BY 1, 2)""".stripMargin
+      val union = branches.mkString("\nUNION ALL\n")
+      if (nBest == 1)
+        s"""$p$j AS MATERIALIZED (SELECT word, cnt, min(k) AS key FROM (
+           |$union) GROUP BY 1, 2)""".stripMargin
+      else
+        s"""$p$j AS MATERIALIZED (SELECT word, cnt, key FROM (
+           |  SELECT word, cnt, k AS key,
+           |    row_number() OVER (PARTITION BY word ORDER BY k) AS r
+           |  FROM (
+           |$union)) WHERE r <= $nBest)""".stripMargin
     }
     val enc = s"${p}e AS MATERIALIZED (" + (1 to ugChunkLen)
       .map(j => s"SELECT word, cnt, key FROM $p$j WHERE length(word) = $j")
@@ -7892,29 +7772,7 @@ object LlmQueries {
          |toks AS (
          |  SELECT d.doc_id, d.source, d.text, COALESCE(udt.n_tokens, 0) AS n_tokens
          |  FROM documents d LEFT JOIN udt USING (doc_id)),
-         |wts AS (SELECT source, CAST(sum(n_tokens) AS BIGINT) AS tok_grp
-         |        FROM toks GROUP BY 1),
-         |w AS (SELECT source,
-         |        CAST(floor(sqrt(CAST(tok_grp AS DOUBLE)) * 10000 + 0.5) AS BIGINT) AS w
-         |      FROM wts),
-         |tot AS (SELECT CAST(sum(w) AS BIGINT) AS w_total FROM w),
-         |quotas AS (SELECT source,
-         |             CAST((CAST(5000 AS HUGEINT) * w) // w_total AS BIGINT) AS quota
-         |           FROM w CROSS JOIN tot),
-         |ranked AS (
-         |  SELECT doc_id, source, n_tokens,
-         |    CAST(row_number() OVER (
-         |      PARTITION BY source
-         |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id) AS BIGINT) AS rnk,
-         |    CAST(sum(n_tokens) OVER (
-         |      PARTITION BY source
-         |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-         |  FROM toks)
-         |SELECT r.doc_id, r.source, r.n_tokens, r.rnk, r.cum_tokens
-         |FROM ranked r JOIN quotas q USING (source)
-         |WHERE r.cum_tokens - r.n_tokens < q.quota
-         |ORDER BY source, rnk""".stripMargin))
+         |${tokenMixtureSql(5000L)}""".stripMargin))
 
   // q231 — curation v14, the EXPORT-READY capstone under the second
   // tokenizer family: v13's multilingual rewrite-first front (Unicode
@@ -7958,28 +7816,7 @@ object LlmQueries {
         .orderBy("shard", "bin")
     },
     Some {
-      val alignedWords = "list_transform(string_split(text, ' '), " +
-        "w -> regexp_replace(lower(w), '[^\\p{L}\\p{N}]', '', 'g'))"
-      s"""WITH ${gopherGateCtes(DedupOps.Tokenizer.Unicode)},
-         |gd AS MATERIALIZED (SELECT d.doc_id, d.text FROM documents d JOIN gk USING (doc_id)),
-         |${extentFlagCtesFrom("gd")},
-         |st0 AS (SELECT doc_id, list(idx) AS starts FROM fl GROUP BY doc_id),
-         |rew AS MATERIALIZED (
-         |  SELECT b.doc_id,
-         |    CASE WHEN st0.starts IS NULL THEN array_to_string(ws, ' ')
-         |         ELSE coalesce(array_to_string(list_transform(
-         |           list_filter(range(len(ws)), i ->
-         |             len(list_filter(st0.starts, x -> x <= i AND i <= x + 7)) = 0),
-         |           i -> ws[i + 1]), ' '), '') END AS text
-         |  FROM base b LEFT JOIN st0 USING (doc_id)),
-         |bdocs AS (SELECT doc_id, text FROM documents WHERE $inBenchSql),
-         |${winnowCtesFrom("bdocs", "b", alignedWords)},
-         |bp AS MATERIALIZED (SELECT DISTINCT h AS fp FROM bu),
-         |corp AS MATERIALIZED (SELECT doc_id, text FROM rew WHERE $offBenchSql),
-         |${scrubRoundCtes("r1", "corp", alignedWords)},
-         |${scrubRoundCtes("r2", "r1out", alignedWords)},
-         |${scrubRoundCtes("r3", "r2out", alignedWords)},
-         |scr AS MATERIALIZED (SELECT doc_id, text FROM r3out),
+      s"""WITH $rewriteScrubCtes,
          |$ugLearnCtes,
          |${ugDpCtes("u", "uvc", "uunk", "uch")},
          |${ugDocTokCtes("scr")},
@@ -8427,43 +8264,6 @@ object LlmQueries {
          |    - tok_plain * 1000 // greatest(n_chunks, 1) AS delta_permille
          |FROM rp ORDER BY source""".stripMargin))
 
-  /** The N-BEST unrolled DP — [[ugDpCtes]] with a per-position TOP-`n`
-    * state list (row_number over the packed key) instead of min(). The
-    * same lossless-pruning argument as UnigramLm.nbestChunk: completions
-    * add identically to every same-position state, so top-n per position
-    * suffices for the final top-n. `p`e carries ALL surviving final
-    * states per chunk type. */
-  private def ugNbestDpCtes(p: String, vc: String, unkCte: String,
-      src: String, n: Int): String = {
-    val init = s"${p}0 AS MATERIALIZED (SELECT word, cnt, '000000' AS key FROM $src)"
-    val steps = (1 to ugChunkLen).map { j =>
-      val branches = (1 to math.min(j, ugPieceLen)).map { l =>
-        val prev = s"$p${j - l}"
-        if (l == 1)
-          s"""SELECT b.word, b.cnt, ${ugStep(s"substring(b.word, $j, 1)",
-               "coalesce(v.cost, u.c)")} AS k
-             |FROM $prev b
-             |LEFT JOIN $vc v ON v.plen = 1 AND v.piece = substring(b.word, $j, 1)
-             |CROSS JOIN $unkCte u
-             |WHERE length(b.word) >= $j""".stripMargin
-        else
-          s"""SELECT b.word, b.cnt, ${ugStep("v.piece", "v.cost")} AS k
-             |FROM $prev b
-             |JOIN $vc v ON v.plen = $l AND v.piece = substring(b.word, ${j - l + 1}, $l)
-             |WHERE length(b.word) >= $j""".stripMargin
-      }
-      s"""$p$j AS MATERIALIZED (SELECT word, cnt, key FROM (
-         |  SELECT word, cnt, k AS key,
-         |    row_number() OVER (PARTITION BY word ORDER BY k) AS r
-         |  FROM (
-         |${branches.mkString("\nUNION ALL\n")})) WHERE r <= $n)""".stripMargin
-    }
-    val enc = s"${p}e AS MATERIALIZED (" + (1 to ugChunkLen)
-      .map(j => s"SELECT word, cnt, key FROM $p$j WHERE length(word) = $j")
-      .mkString(" UNION ALL ") + ")"
-    (init +: steps :+ enc).mkString(",\n")
-  }
-
   // q243 — n-best SUBWORD REGULARIZATION (Kudo 2018 §4, the half of the
   // SentencePiece learn q232 still lacked): per chunk type the top-4
   // segmentations from the n-best DP, a deterministic salted-hash pick
@@ -8482,7 +8282,7 @@ object LlmQueries {
     Some {
       val P = graft.functions.LlmExprs.P
       s"""WITH $ugLearnCtes,
-         |${ugNbestDpCtes("nb", "uvc", "uunk", "uch", ugNbestNs.max)},
+         |${ugDpCtes("nb", "uvc", "uunk", "uch", ugNbestNs.max)},
          |nbc AS MATERIALIZED (
          |  SELECT word, key,
          |    row_number() OVER (PARTITION BY word ORDER BY key) AS r,
