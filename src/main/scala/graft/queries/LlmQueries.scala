@@ -4737,7 +4737,7 @@ object LlmQueries {
       val clean = TextAnalysis.decontaminated(selected, bench)
       TextAnalysis.corpusReport(clean, "source").orderBy("source")
     },
-    Some {
+    Some(
       s"""WITH ${gopherGateCtes(DedupOps.Tokenizer.Ascii)},
          |gdocs AS (SELECT d.* FROM documents d JOIN gk USING (doc_id)),
          |$gatedExactDedupCtes,
@@ -4769,8 +4769,7 @@ object LlmQueries {
          |  JOIN quotas q ON q.source = r.source
          |  WHERE r.cum_mass - r.n_bigrams < q.quota),
          |${exactDeconCtes("selected")},
-         |${corpusReportSql("clean")}""".stripMargin
-    })
+         |${corpusReportSql("clean")}""".stripMargin))
 
   // q158 — packing-efficiency report over q109's BPE-budget whole-doc
   // packing: per shard (n_bins, doc/token mass, min/max bin fill, mean
@@ -7815,7 +7814,7 @@ object LlmQueries {
         .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
         .orderBy("shard", "bin")
     },
-    Some {
+    Some(
       s"""WITH $rewriteScrubCtes,
          |$ugLearnCtes,
          |${ugDpCtes("u", "uvc", "uunk", "uch")},
@@ -7853,8 +7852,7 @@ object LlmQueries {
          |  FROM pt)
          |SELECT shard, CAST(FLOOR(CAST(cum_before AS DOUBLE) / $packBudget) AS BIGINT) AS bin,
          |       COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-         |FROM pc GROUP BY 1, 2 ORDER BY shard, bin""".stripMargin
-    })
+         |FROM pc GROUP BY 1, 2 ORDER BY shard, bin""".stripMargin))
 
   // ------------------------------------------ unigram EM learn w/ prune
 
