@@ -24,6 +24,6 @@ export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
 
 sbt -batch Test/compile test
 rm -rf "$OUT"
-sbt -batch "runMain graft.Verify /root/testdata/$SF $OUT"
-python3 tools/verify_local.py "/root/testdata/$SF" "$OUT"
+sbt -batch "runMain graft.Verify $HOME/testdata/$SF $OUT"
+python3 tools/verify_local.py "$HOME/testdata/$SF" "$OUT"
 echo "PREGATE OK ($SF)"
