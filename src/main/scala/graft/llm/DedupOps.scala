@@ -1087,29 +1087,21 @@ object DedupOps {
    * it with labels moving raises (or warns, per `failOnNonConvergence`)
    * instead of silently returning wrong representatives.
    *
-   * Checkpointing: by default `localCheckpoint` cuts the growing lineage
-   * each round (executor-memory-held — fine for label-table state, the
-   * working set is one row per involved doc). For 1e9-node graphs on a
-   * real cluster pass `checkpointDir` to use reliable HDFS/S3
-   * `checkpoint` instead: iteration state survives executor loss, at the
-   * cost of a write per round.
+   * Checkpointing: `localCheckpoint` cuts the growing lineage each round
+   * (executor-memory-held — fine for label-table state, the working set
+   * is one row per involved doc). The operator never sets a checkpoint
+   * directory on the caller's shared SparkContext.
    */
   def duplicateClusters(pairs: DataFrame, maxIter: Int = 20,
-      checkpointDir: Option[String] = None,
       failOnNonConvergence: Boolean = false): DataFrame = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    def cut(df: DataFrame, eager: Boolean): DataFrame =
-      if (checkpointDir.isDefined) df.checkpoint(eager)
-      else df.localCheckpoint(eager)
     // materialize the edge list ONCE: `pairs` is usually an expensive
     // dedup computation (shingling + banding + verification) and appears
     // in every iteration's join — without this it would re-run per round
-    val edges = cut(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))),
-      eager = true)
+    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+      .localCheckpoint(eager = true)
     val nodes = edges.select(col("src").as("id")).distinct()
-    var labels = cut(nodes.withColumn("label", col("id")), eager = true)
+    var labels = nodes.withColumn("label", col("id")).localCheckpoint(eager = true)
     // cast BEFORE the sum: sum over LongType accumulates in a long buffer
     // (overflow at 1e9 nodes × large ids — ANSI throws, non-ANSI wraps and
     // could fake convergence); DECIMAL(38,0) input makes the whole
@@ -1128,13 +1120,12 @@ object DedupOps {
       // pointer jump through the PREVIOUS round's labels (checkpointed →
       // lineage-distinct, so no self-join ambiguity): label values are
       // node ids and `labels` covers every node, so the join is total.
-      val next = cut(
-        nbrMin
-          .join(labels.select(col("id").as("jid"), col("label").as("jlabel")),
-            nbrMin("label") === col("jid"))
-          .select(nbrMin("id").as("id"),
-            least(col("label"), col("jlabel")).as("label")),
-        eager = false)
+      val next = nbrMin
+        .join(labels.select(col("id").as("jid"), col("label").as("jlabel")),
+          nbrMin("label") === col("jid"))
+        .select(nbrMin("id").as("id"),
+          least(col("label"), col("jlabel")).as("label"))
+        .localCheckpoint(eager = false)
       // lazy checkpoint + monotone convergence: the Σlabel aggregate both
       // materializes the round's checkpoint and detects the fixpoint
       // (labels only ever decrease, so equal sums ⇔ nothing moved) — ONE

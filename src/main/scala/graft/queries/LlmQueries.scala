@@ -21,11 +21,15 @@ import org.apache.spark.sql.functions._
  * Each operator stage's DuckDB mirror comes from one private builder:
  * the Gopher gate, near-dup edges and keep-list, quality prune, exact
  * and fuzzy decontamination, the CCNet surprisal model and the corpus
- * report (the "curation stage vocabulary" block), the per-query top-k
- * ranking, and the extent / winnow / scrub / DSIR builders beside their
- * first queries. A new flagship composes its oracle from these builders
- * instead of pasting CTEs; OracleSqlPinSpec pins every generated string
- * byte for byte.
+ * report, the dual-fingerprint exact dedup, the MinHash edges, the
+ * packing, fill-order, IVF and LSH fronts (the "curation stage
+ * vocabulary" block), the per-query top-k ranking, and the extent /
+ * winnow / scrub / DSIR builders beside their first queries. A new
+ * flagship composes its oracle from these builders instead of pasting
+ * CTEs; OracleSqlPinSpec pins every generated string byte for byte. The
+ * same block holds the Spark-side stage fronts the flagships share
+ * (cluster keep, half prune, decon report, the v8 and rewrite-scrub
+ * fronts), each keeping its stages' checkpoints.
  */
 object LlmQueries {
 
@@ -238,6 +242,158 @@ object LlmQueries {
     TextAnalysis.gopherFilter(docs, minWords = gopherMinWords,
       maxWords = gopherMaxWords, requiredWords = gopherRequired,
       minRequiredHits = gopherMinHits, tok = tok)
+
+  /** DedupOps.ngramJaccardPairs at the composed pipelines' setting:
+    * 3-shingles, Jaccard ≥ 0.5, df-capped at DedupDfCap. */
+  private def cappedJaccardPairs(docs: DataFrame): DataFrame =
+    DedupOps.ngramJaccardPairs(docs, n = 3, threshold = 0.5,
+      maxDf = Some(DedupDfCap))
+
+  /** DedupOps.dupEdges at the flagships' setting: Jaccard ≥ 0.5 ∪
+    * containment ≥ 0.8 off one df-capped index. */
+  private def sharedDupEdges(docs: DataFrame): DataFrame =
+    DedupOps.dupEdges(docs, n = 3, jaccThreshold = 0.5,
+      contThreshold = 0.8, maxDf = Some(DedupDfCap))
+
+  /** The rows of `src` that survive clustering `edges` (unclustered or
+    * their cluster's min id), checkpointed: every later stage rescans
+    * them (the v7 lesson, SCALE.md). */
+  private def clusterKept(src: DataFrame, edges: DataFrame): DataFrame =
+    DedupOps.dedupedCorpus(src, DedupOps.duplicateClusters(edges))
+      .localCheckpoint(true)
+
+  /** TextAnalysis.qualityPrune(kept, "source", 500‰) applied as a
+    * semi-join, checkpointed for the decon and report scans. */
+  private def prunedHalf(kept: DataFrame): DataFrame = {
+    val prunedIds = TextAnalysis.qualityPrune(kept, "source",
+      keepPermille = 500L).select(col("doc_id"))
+    kept.join(prunedIds, Seq("doc_id"), "left_semi").localCheckpoint(true)
+  }
+
+  /** The v2–v7 tail: exact decontamination of `src` against the
+    * benchmark slice of `docs` (then fuzzy decon when `fuzzy`) and the
+    * per-source report. */
+  private def deconReport(src: DataFrame, docs: DataFrame,
+      fuzzy: Boolean): DataFrame = {
+    val bench = docs.filter(inBench)
+    val clean = TextAnalysis.decontaminated(src, bench)
+    val out =
+      if (fuzzy) TextAnalysis.fuzzyDecontaminated(clean, bench,
+        n = contamN, maxOverlap = 0.5)
+      else clean
+    TextAnalysis.corpusReport(out, "source").orderBy("source")
+  }
+
+  /** The curation-v8 dedup front (q170/q174/q183/q190): Gopher gate →
+    * exact dedup → edit-verified near-dup keep-list. Returns the gated,
+    * exact-kept and near-kept relations. The two kept relations are
+    * checkpointed: the pair front scans `kept` three times (bands, both
+    * prefix joins) and the keep join once more, and the near-kept rows
+    * feed the winnow probe, the decon semi-join and the report's scans. */
+  private def v8Front(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val gated = gopherGate(docs)
+    val kept = DedupOps.exactDedup(gated).localCheckpoint(true)
+    val pairs = DedupOps.editVerifiedPairs(kept, n = 3, perms = 32,
+      bands = 8, rowsPerBand = 4, prefixLen = 256,
+      maxDistPermille = 200L).select(col("id_a"), col("id_b"))
+    val nearKept = DedupOps.dedupedCorpus(kept,
+      DedupOps.duplicateClusters(pairs)).localCheckpoint(true)
+    (gated, kept, nearKept)
+  }
+
+  /** The rows of `src` sharing fewer than two winnow prints with the
+    * benchmark slice of `docs` (DedupOps.winnowDecontaminate's keep). */
+  private def winnowDeconKept(src: DataFrame, docs: DataFrame,
+      tok: DedupOps.Tokenizer = DedupOps.Tokenizer.Ascii): DataFrame = {
+    val flags = DedupOps.winnowDecontaminate(src, docs.filter(inBench),
+      n = 3, w = 4, minShared = 2L, tok = tok)
+    src.join(flags.filter(col("kept")).select(col("doc_id")),
+      Seq("doc_id"), "left_semi")
+  }
+
+  /** DedupOps.exactThenNearDedup under Tokenizer.Unicode (the v9/v11
+    * dedup stack), checkpointed. */
+  private def unicodeExactNear(docs: DataFrame): DataFrame =
+    DedupOps.exactThenNearDedup(docs, n = 3, perms = 32,
+      bands = 8, rowsPerBand = 4, threshold = 0.5,
+      tok = DedupOps.Tokenizer.Unicode).localCheckpoint(true)
+
+  /** The Unicode Gopher gate, checkpointed: every consumer would
+    * otherwise re-evaluate its normalization regex chain over the full
+    * corpus (the v7 lesson, SCALE.md). */
+  private def unicodeGated(docs: DataFrame): DataFrame =
+    gopherGate(docs, DedupOps.Tokenizer.Unicode).localCheckpoint(true)
+
+  /** The multilingual rewrite-first front (q211/q231): Unicode Gopher
+    * gate → extent-rewrite dedup → verified aligned winnow scrub of the
+    * off-benchmark rows against the benchmark slice of `docs`. Each stage
+    * boundary is checkpointed so its expression chain (regex gate, window
+    * hashes, scrub folds) is not re-planned into the next stage's
+    * self-joins. Returns the scrubbed (doc_id, text). */
+  private def rewriteScrubFront(docs: DataFrame): DataFrame = {
+    val rew = DedupOps.spanExtentDedupApply(unicodeGated(docs), width = 8)
+      .select(col("doc_id"), col("text_clean").as("text"))
+      .localCheckpoint(true)
+    val bench = docs.filter(inBench)
+      .select(col("doc_id"), col("text"))
+    DedupOps.winnowScrubVerified(
+      rew.filter(!inBench), bench, n = 3, w = 4,
+      minShared = 2L, tok = DedupOps.Tokenizer.UnicodeAligned)
+      .select(col("doc_id"), col("text")).localCheckpoint(true)
+  }
+
+  /** q153/q166's scored label pair: each document's surprisal bits per
+    * bigram ·10⁴ (`s`, against the %4 reference model) joined to its
+    * Gopher keep label. */
+  private def surprisalVsGopher(docs: DataFrame): DataFrame = {
+    val sc = graft.llm.Retrieval.bigramSurprisal(docs,
+      docs.filter(col("doc_id") % 4 === 0))
+      .select(col("doc_id"),
+        expr("surprisal_bits * 10000 div greatest(n_bigrams, 1)").as("s"))
+    val lab = TextAnalysis.gopherRules(docs, minWords = 30L)
+      .select(col("doc_id"), col("keep"))
+    sc.join(lab, "doc_id")
+  }
+
+  /** The BPE vocabulary-size ladder (q214/q217): corpus word mass and
+    * the token mass under each `rungs` prefix of `merges` (a k-merge
+    * prefix IS the k-size vocabulary) — one scan with a codegen'd
+    * counter per rung, a 1-row aggregate, then stack() over it. */
+  private def bpeLadder(docs: DataFrame, merges: Seq[Bpe.Merge],
+      rungs: Seq[Int]): DataFrame = {
+    val nw = size(filter(TextFunctions.words(coalesce(col("text"), lit(""))),
+      w => w =!= "")).cast("long")
+    val cols = nw.as("nw") +:
+      rungs.map(k => Bpe.tokenCount(col("text"), merges.take(k)).as(s"nt_$k"))
+    val aggs = sum(col("nw")).as("n_words") +:
+      rungs.map(k => sum(col(s"nt_$k")).as(s"t_$k"))
+    docs.select(cols: _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .selectExpr("n_words",
+        "stack(" + rungs.size + ", " +
+          rungs.map(k => s"CAST($k AS BIGINT), t_$k").mkString(", ") +
+          ") AS (k, n_tokens)")
+      .select(col("k"), col("n_words"), col("n_tokens"),
+        expr("n_tokens * 1000 div greatest(n_words, 1)")
+          .as("fertility_permille"))
+      .orderBy("k")
+  }
+
+  /** Per-source unigram chunk and token mass of `docs` under `codec`
+    * (chunks of `chunkLen` code points), with fertility in permille. */
+  private def ugFertilityBySource(docs: DataFrame,
+      codec: graft.functions.UnigramCodec,
+      chunkLen: Int = ugChunkLen): DataFrame =
+    docs.groupBy("source")
+      .agg(
+        sum(graft.llm.UnigramLm.chunkCount(col("text"), chunkLen))
+          .as("n_chunks"),
+        sum(graft.llm.UnigramLm.tokenCount(col("text"), codec))
+          .as("n_tokens"))
+      .select(col("source"), col("n_chunks"), col("n_tokens"),
+        expr("n_tokens * 1000 div greatest(n_chunks, 1)")
+          .as("fertility_permille"))
+      .orderBy("source")
 
   private def isUnicode(tok: DedupOps.Tokenizer): Boolean =
     tok.name == DedupOps.Tokenizer.Unicode.name
@@ -467,22 +623,334 @@ object LlmQueries {
        |ORDER BY rp.$grp""".stripMargin
   }
 
+  /** The ASCII Gopher gate and `gdocs` = the documents it keeps. */
+  private lazy val gatedDocsCtes: String =
+    s"""${gopherGateCtes(DedupOps.Tokenizer.Ascii)},
+       |gdocs AS (SELECT d.* FROM documents d JOIN gk USING (doc_id))""".stripMargin
+
   /** TextAnalysis.exactDedup over the gated `gdocs`: dual-fingerprint
     * groups keep their min id (`kept`); null-text rows pass through. */
-  private lazy val gatedExactDedupCtes: String = {
-    val p48 = graft.functions.LlmExprs.P48.toString
-    s"""fp0 AS (
-       |  SELECT doc_id,
-       |    CASE WHEN length(text) = 0 THEN 0
-       |         ELSE ${polyHashSql("text")} END AS f1,
-       |    CASE WHEN length(text) = 0 THEN 0
-       |         ELSE ${polyHashSqlMod("text", p48)} END AS f2
-       |  FROM gdocs),
-       |keepid AS (SELECT MIN(doc_id) AS doc_id FROM fp0
-       |           WHERE f1 IS NOT NULL GROUP BY f1, f2),
+  private lazy val gatedExactDedupCtes: String =
+    s"""${dualFpKeepCtes("gdocs")},
        |kept AS (SELECT g.* FROM gdocs g JOIN keepid USING (doc_id)
        |         UNION ALL
        |         SELECT g.* FROM gdocs g WHERE g.text IS NULL)""".stripMargin
+
+  /** DedupOps.exactDedup's dual fingerprint over column `text` of
+    * `from`: `fp0 (doc_id, f1, f2)` and `keepid` = each (f1, f2) group's
+    * min id. Raw `text` keeps its null rows out of the groups; the
+    * normalized `ntext` of a `norm0` front has them filtered in `from`. */
+  private def dualFpKeepCtes(from: String, text: String = "text"): String = {
+    val p48 = graft.functions.LlmExprs.P48.toString
+    val nullGate = if (text == "text") "\n           WHERE f1 IS NOT NULL" else ""
+    s"""fp0 AS (
+       |  SELECT doc_id,
+       |    CASE WHEN length($text) = 0 THEN 0
+       |         ELSE ${polyHashSql(text)} END AS f1,
+       |    CASE WHEN length($text) = 0 THEN 0
+       |         ELSE ${polyHashSqlMod(text, p48)} END AS f2
+       |  FROM $from),
+       |keepid AS (SELECT MIN(doc_id) AS doc_id FROM fp0$nullGate GROUP BY f1, f2)""".stripMargin
+  }
+
+  /** DedupOps.minhashLshPairs over `src`: the uncapped shingle index,
+    * the banded MinHash candidates, and `prs` = the candidates whose
+    * exact Jaccard is ≥ 0.5. */
+  private def minhashPrsCtes(src: String): String =
+    s"""${shingleCtesWithCap(None, src)},
+       |$minhashCandCtes,
+       |prs AS (
+       |  SELECT c.id_a, c.id_b FROM cand c
+       |  JOIN jacc j ON j.id_a = c.id_a AND j.id_b = c.id_b
+       |  WHERE j.jaccard >= 0.5)""".stripMargin
+
+  /** `prs` = the df-capped Jaccard ≥ 0.5 pairs (DedupOps.ngramJaccardPairs
+    * at DedupDfCap). */
+  private lazy val cappedJaccPrsCtes: String =
+    s"""$cappedShingleCtes,
+       |prs AS (SELECT id_a, id_b FROM jacc WHERE jaccard >= 0.5)""".stripMargin
+
+  /** The dedup keep-list over the CC `labels`: the ids of `src` that are
+    * unclustered or their cluster's min id, ordered. */
+  private def keepListSql(src: String): String =
+    s"""SELECT d.doc_id FROM $src d
+       |LEFT JOIN labels l ON d.doc_id = l.doc_id
+       |WHERE l.doc_id IS NULL OR l.rep = d.doc_id
+       |ORDER BY d.doc_id""".stripMargin
+
+  /** TextAnalysis.normalizeUnicode in DuckDB (lower → keep \p{L}\p{N}\s →
+    * collapse \s+ → trim) over `text`, wrapped after the `lower(...)`
+    * with its second line at column `indent`. */
+  private def unicodeNormSql(text: String, indent: Int): String =
+    s"trim(regexp_replace(regexp_replace(lower($text),\n${" " * indent}" +
+      "'[^\\p{L}\\p{N}\\s]', '', 'g'), '\\s+', ' ', 'g'))"
+
+  /** `ndocs (doc_id, text)`: every document's normalized text — the
+    * Tokenizer.Unicode surface of the multilingual dedup and decon
+    * oracles. */
+  private lazy val ndocsCte: String =
+    s"""ndocs AS (
+       |  SELECT doc_id,
+       |    ${unicodeNormSql("text", 6)} AS text
+       |  FROM documents)""".stripMargin
+
+  /** DedupOps.exactThenNearDedup under Tokenizer.Unicode over
+    * `documents`: the normalized surface `norm0 (doc_id, text, ntext)`,
+    * exact dedup on it with the null-text rows passed through (`kept0`),
+    * then the MinHash edges and their CC closure over the survivors. */
+  private lazy val unicodeExactNearCtes: String =
+    s"""norm0 AS (
+       |  SELECT doc_id, text,
+       |    ${unicodeNormSql("text", 6)} AS ntext
+       |  FROM documents),
+       |${dualFpKeepCtes("norm0 WHERE text IS NOT NULL", "ntext")},
+       |kept0 AS (SELECT n.doc_id, n.ntext AS text
+       |          FROM norm0 n JOIN keepid USING (doc_id)
+       |          UNION ALL
+       |          SELECT doc_id, CAST(NULL AS VARCHAR)
+       |          FROM documents WHERE text IS NULL),
+       |${minhashPrsCtes("kept0")},
+       |$ccClosureCtes""".stripMargin
+
+  /** The v9/v11 tail after a normalized near-dup closure over `kept0`:
+    * survivor ids (`mk`) and their normalized text, winnow decon against
+    * the prints of `bdocsCte` (the normalized benchmark `bdocs`), and the
+    * per-language report over the surviving raw rows. */
+  private def unicodeWinnowReportSql(bdocsCte: String): String =
+    s"""mk AS (SELECT d.doc_id FROM kept0 d
+       |       LEFT JOIN labels l ON d.doc_id = l.doc_id
+       |       WHERE l.doc_id IS NULL OR l.rep = d.doc_id),
+       |cdocs AS (SELECT n.doc_id, n.ntext AS text
+       |          FROM norm0 n JOIN mk USING (doc_id)),
+       |$bdocsCte,
+       |${winnowCtesFrom("cdocs", "c")},
+       |${winnowCtesFrom("bdocs", "b")},
+       |wbp AS (SELECT DISTINCT h FROM bu),
+       |wshr AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shared
+       |         FROM cu JOIN wbp USING (h) GROUP BY 1),
+       |cids AS (SELECT mk.doc_id FROM mk LEFT JOIN wshr USING (doc_id)
+       |         WHERE coalesce(n_shared, 0) < 2),
+       |clean AS (SELECT d.* FROM documents d JOIN cids USING (doc_id)),
+       |${corpusReportSql("clean", "lang")}""".stripMargin
+
+  /** TextAnalysis.decontaminated's normalized fingerprint `name
+    * (doc_id, f)` over every document. */
+  private def normFpCte(name: String): String =
+    s"""$name AS (
+       |  SELECT doc_id,
+       |    CASE WHEN length(norm) = 0 THEN 0
+       |         ELSE ${polyHashSql("norm")} END AS f
+       |  FROM (SELECT doc_id,
+       |          regexp_replace(regexp_replace(text, '[^a-z0-9 ]', '', 'g'),
+       |                         ' +', ' ', 'g') AS norm
+       |        FROM documents))""".stripMargin
+
+  /** TextAnalysis.decontaminated(documents, documents WHERE `benchPred`):
+    * the ids whose normalized fingerprint no benchmark row shares. */
+  private def normFpDeconOracle(benchPred: String): String =
+    s"""WITH ${normFpCte("fp")}
+       |SELECT doc_id FROM fp
+       |WHERE f IS NULL
+       |   OR f NOT IN (SELECT f FROM fp WHERE $benchPred AND f IS NOT NULL)
+       |ORDER BY doc_id""".stripMargin
+
+  /** The ordered 3-shingle hash stream of every row of `src`: words
+    * `${p}dw` (split by `wordsSql`) and hashes `${p}h0 (doc_id, hs)`. */
+  private def winnowHashCtes(p: String, src: String,
+      wordsSql: String = "string_split(text, ' ')"): String =
+    s"""${p}dw AS (SELECT doc_id, $wordsSql AS words FROM $src),
+       |${p}h0 AS (SELECT doc_id, list_transform(range(len(words) - 2), i ->
+       |         ${polyHashSql("words[i+1] || ' ' || words[i+2] || ' ' || words[i+3]")}) AS hs
+       |       FROM ${p}dw)""".stripMargin
+
+  /** Winnow selection `name (<cols>, encs)` over `src (<cols>, hs, wl)`
+    * — mirrors DedupOps.winnowFingerprints: the rightmost minimum of
+    * every width-`wl` window of the shingle-hash stream, its position and
+    * value packed as pos·P + fp. */
+  private def winnowSelCte(name: String, src: String,
+      cols: String = "doc_id"): String =
+    s"""$name AS (SELECT $cols,
+       |    list_distinct(list_transform(range(len(hs) - wl + 1), i ->
+       |      CAST(i + wl - list_position(
+       |          list_reverse(list_slice(hs, i + 1, i + wl)),
+       |          list_min(list_slice(hs, i + 1, i + wl))) AS BIGINT) * $P
+       |        + list_min(list_slice(hs, i + 1, i + wl)))) AS encs
+       |  FROM $src)""".stripMargin
+
+  /** Each source's rows of `src` in the salted-hash fill order of
+    * TextAnalysis.mixtureSampleTokens: `name (<cols>[, rnk], <cum>)`
+    * with the fill rank when `rnk` and the running sum of `mass`. */
+  private def fillOrderCte(name: String, cols: String, src: String,
+      rnk: Boolean = true, mass: String = "n_tokens",
+      cum: String = "cum_tokens"): String = {
+    val key = polyHashSql("'graft#' || coalesce(text, '')")
+    val rank =
+      if (!rnk) ""
+      else s"""    CAST(row_number() OVER (
+              |      PARTITION BY source
+              |      ORDER BY $key, doc_id) AS BIGINT) AS rnk,
+              |""".stripMargin
+    s"""$name AS (
+       |  SELECT $cols,
+       |${rank}    CAST(sum($mass) OVER (
+       |      PARTITION BY source
+       |      ORDER BY $key, doc_id
+       |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS $cum
+       |  FROM $src)""".stripMargin
+  }
+
+  /** TextAnalysis.packSequencesBy's bins: `t` = each doc's hash shard and
+    * token count (`id` and `nTokens` read from `from`), `cum` = its
+    * shard's token mass before it in doc_id order. */
+  private def packCtes(id: String, nTokens: String, from: String,
+      cum: String = "c"): String =
+    s"""t AS (
+       |  SELECT $id,
+       |    (CASE WHEN length(text) = 0 THEN 0
+       |          ELSE ${polyHashSql("text")} END) % $packShards AS shard,
+       |    $nTokens AS n_tokens
+       |  FROM $from),
+       |$cum AS (
+       |  SELECT *, COALESCE(SUM(n_tokens) OVER (PARTITION BY shard
+       |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+       |    0) AS cum_before
+       |  FROM t)""".stripMargin
+
+  /** The packed (shard, bin) manifest over `cum`'s cumulative mass. */
+  private def packBinsSql(cum: String, order: String = "1, 2"): String =
+    s"""SELECT shard, CAST(FLOOR(CAST(cum_before AS DOUBLE) / $packBudget) AS BIGINT) AS bin,
+       |       COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
+       |FROM $cum GROUP BY 1, 2 ORDER BY $order""".stripMargin
+
+  /** The IVF coarse quantizer over `embeddings`: `cents` = the first
+    * ivfCells vectors, `asg` = every vector's cosine to each centroid,
+    * carrying the embedding when `withEmb`. */
+  private def ivfAsgCtes(withEmb: Boolean): String = {
+    val cols = if (withEmb) "e.vec_id, e.embedding, c.cell_id" else "e.vec_id, c.cell_id"
+    s"""cents AS (
+       |  SELECT vec_id AS cell_id, embedding AS cvec FROM embeddings
+       |  WHERE vec_id < $ivfCells),
+       |asg AS (
+       |  SELECT $cols,
+       |         ${cosineSql("e.embedding", "c.cvec")} AS ccos
+       |  FROM embeddings e CROSS JOIN cents c)""".stripMargin
+  }
+
+  /** `assigned` = each vector's nearest cell in `asg` (cosine DESC, then
+    * cell id), carrying the embedding when `withEmb`. */
+  private def ivfAssignedCte(asg: String, withEmb: Boolean): String =
+    s"""assigned AS (
+       |  SELECT vec_id, ${if (withEmb) "embedding, " else ""}cell_id AS cell FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY vec_id
+       |      ORDER BY ccos DESC, cell_id) AS rn FROM $asg)
+       |  WHERE rn = 1)""".stripMargin
+
+  /** SimilaritySearch.ivfTopKWith's search over the cell cosines `asg`:
+    * each vector in its nearest cell, the `vec_id < 8` queries probing
+    * their ivfProbe nearest cells, top 3 by cosine. */
+  private def ivfProbeTopKSql(asg: String): String =
+    s"""${ivfAssignedCte(asg, withEmb = true)},
+       |probes AS (
+       |  SELECT vec_id AS query_id, embedding AS qe, cell_id AS cell FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY vec_id
+       |      ORDER BY ccos DESC, cell_id) AS rn FROM $asg WHERE vec_id < 8)
+       |  WHERE rn <= $ivfProbe),
+       |scored AS (
+       |  SELECT p.query_id, a.vec_id AS neighbor_id,
+       |         ${cosineSql("p.qe", "a.embedding")} AS cos
+       |  FROM probes p JOIN assigned a ON a.cell = p.cell
+       |  WHERE a.vec_id <> p.query_id),
+       |${topKByCosSql("scored", 3)}""".stripMargin
+
+  /** SimilaritySearch.embeddingNearDupPairs' front: LSH `buckets`, the
+    * bucket-sharing candidate pairs, and their cosines (`scored`). */
+  private lazy val lshPairScoredCtes: String =
+    s"""buckets AS (${bucketsCte("embeddings")}),
+       |cand AS (
+       |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+       |  FROM buckets a JOIN buckets b
+       |    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
+       |scored AS (
+       |  SELECT id_a, id_b, ${cosineSql("ea.embedding", "eb.embedding")} AS cos
+       |  FROM cand
+       |  JOIN embeddings ea ON ea.vec_id = id_a
+       |  JOIN embeddings eb ON eb.vec_id = id_b)""".stripMargin
+
+  /** The LSH top-3 search of the query buckets `qb`: every bucket-sharing
+    * neighbor scored by cosine and ranked. */
+  private lazy val lshProbeTopKSql: String =
+    s"""cand AS (
+       |  SELECT DISTINCT qb.vec_id AS query_id, c.vec_id AS neighbor_id
+       |  FROM buckets c JOIN qb
+       |    ON qb.tbl = c.tbl AND qb.bucket = c.bucket AND qb.vec_id <> c.vec_id),
+       |scored AS (
+       |  SELECT query_id, neighbor_id,
+       |         ${cosineSql("ea.embedding", "eb.embedding")} AS cos
+       |  FROM cand
+       |  JOIN embeddings ea ON ea.vec_id = query_id
+       |  JOIN embeddings eb ON eb.vec_id = neighbor_id),
+       |${topKByCosSql("scored", 3)}""".stripMargin
+
+  /** The q153/q166 scoring pair: `ds` = each document's surprisal bits per
+    * bigram ·10⁴ against the %4 reference model, `lab (doc_id, y)` = its
+    * Gopher keep label, both over the raw word surface `dw`. */
+  private lazy val surprisalGopherCtes: String =
+    s"""dw AS (
+       |  SELECT doc_id, coalesce(text, '') AS t,
+       |    list_filter(string_split(coalesce(text, ''), ' '),
+       |      w -> w <> '') AS ws
+       |  FROM documents),
+       |tr AS (SELECT ws FROM dw WHERE doc_id % 4 = 0),
+       |${surprisalModelCtes("dw", "bits")},
+       |ds AS (
+       |  SELECT d.doc_id,
+       |    CAST(coalesce(sc.bits, 0) * 10000
+       |      // greatest(coalesce(sc.n_bigrams, 0), 1) AS BIGINT) AS s
+       |  FROM documents d LEFT JOIN sc USING (doc_id)),
+       |${gopherMeasuresCte("m", "dw", "ws", DedupOps.Tokenizer.Ascii)},
+       |lab AS (
+       |  SELECT doc_id,
+       |    ${gopherKeepSql(6)} AS y
+       |  FROM m)""".stripMargin
+
+  /** The formula-built pixel plane's aHash inputs over 32 buckets: `dims`
+    * (bytes per doc), `rb` (per-bucket byte sums and sizes), `tot`
+    * (per-doc totals). */
+  private lazy val formulaAhashCtes: String =
+    s"""dims AS (
+       |  SELECT doc_id,
+       |    CAST((4 + doc_id % 5) * (3 + doc_id % 4) * 3 AS BIGINT) AS n
+       |  FROM documents),
+       |rb AS (
+       |  SELECT doc_id, b,
+       |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(
+       |      range((b * n) // 32, ((b + 1) * n) // 32),
+       |      j -> CAST((doc_id * 31 + j * 7) % 251 AS BIGINT))),
+       |      (a, x) -> a + x) AS sum_bytes,
+       |    CAST(((b + 1) * n) // 32 - (b * n) // 32 AS BIGINT) AS n_in
+       |  FROM dims, (SELECT unnest(range(32)) AS b) bs),
+       |tot AS (
+       |  SELECT doc_id, CAST(sum(sum_bytes) AS BIGINT) AS total,
+       |         CAST(sum(n_in) AS BIGINT) AS n_total
+       |  FROM rb GROUP BY 1)""".stripMargin
+
+  /** The q214/q217 ladder oracle: after `chain` (BPE rounds prefixed
+    * `p`), corpus word mass and the token mass of each `rungs` prefix
+    * vocabulary, read off the round tables. */
+  private def bpeLadderOracle(chain: String, p: String,
+      rungs: Seq[Int]): String = {
+    def rung(k: Int): String =
+      s"""SELECT CAST($k AS BIGINT) AS k,
+         |  CAST(sum(len(string_split(b.toks, '$bpeSep'))) AS BIGINT) AS n_tokens
+         |FROM ${p}dw JOIN ${p}bt$k b USING (word)""".stripMargin
+    s"""WITH $chain,
+       |${p}dw AS MATERIALIZED (SELECT unnest(list_filter(string_split(coalesce(text, ''), ' '),
+       |         w -> w <> '')) AS word FROM documents),
+       |${p}nw AS (SELECT CAST(count(*) AS BIGINT) AS n_words FROM ${p}dw),
+       |ladder AS (${rungs.map(rung).mkString(" UNION ALL ")})
+       |SELECT k, n_words, n_tokens,
+       |  n_tokens * 1000 // greatest(n_words, 1) AS fertility_permille
+       |FROM ladder CROSS JOIN ${p}nw ORDER BY k""".stripMargin
   }
 
   /** Unicode word surface with every word kept in place (the
@@ -530,16 +998,7 @@ object LlmQueries {
        |${pfx}quotas AS (SELECT source,
        |             CAST((CAST($budget AS HUGEINT) * w) // w_total AS BIGINT) AS quota
        |           FROM ${pfx}w CROSS JOIN ${pfx}tot),
-       |${pfx}ranked AS (
-       |  SELECT doc_id, source, n_tokens,
-       |    CAST(row_number() OVER (
-       |      PARTITION BY source
-       |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id) AS BIGINT) AS rnk,
-       |    CAST(sum(n_tokens) OVER (
-       |      PARTITION BY source
-       |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id
-       |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-       |  FROM $src)""".stripMargin
+       |${fillOrderCte(s"${pfx}ranked", "doc_id, source, n_tokens", src)}""".stripMargin
 
   /** [[tokenMixtureCtes]] over `toks (doc_id, source, text, n_tokens)`
     * plus the selected rows: each doc whose fill starts under quota. */
@@ -875,19 +1334,7 @@ object LlmQueries {
       TextAnalysis.decontaminated(docs, docs.filter(col("doc_id") % 50 === 0))
         .select(col("doc_id")).orderBy("doc_id")
     },
-    Some(
-      s"""WITH fp AS (
-         |  SELECT doc_id,
-         |    CASE WHEN length(norm) = 0 THEN 0
-         |         ELSE ${polyHashSql("norm")} END AS f
-         |  FROM (SELECT doc_id,
-         |          regexp_replace(regexp_replace(text, '[^a-z0-9 ]', '', 'g'),
-         |                         ' +', ' ', 'g') AS norm
-         |        FROM documents))
-         |SELECT doc_id FROM fp
-         |WHERE f IS NULL
-         |   OR f NOT IN (SELECT f FROM fp WHERE doc_id % 50 = 0 AND f IS NOT NULL)
-         |ORDER BY doc_id""".stripMargin))
+    Some(normFpDeconOracle("doc_id % 50 = 0")))
 
   // q66 — duplicate clusters: connected components over the exact-Jaccard
   // pair graph (>= 0.5), each doc labeled with its component's min doc_id
@@ -899,13 +1346,10 @@ object LlmQueries {
   // boilerplate shingle — see the scaladoc on DedupDfCap.
   val q66 = Q(
     "q66_dup_clusters",
-    (s, d) => DedupOps.duplicateClusters(
-      DedupOps.ngramJaccardPairs(docsWide(s, d), n = 3, threshold = 0.5,
-        maxDf = Some(DedupDfCap)))
+    (s, d) => DedupOps.duplicateClusters(cappedJaccardPairs(docsWide(s, d)))
       .orderBy("doc_id"),
     Some(
-      s"""WITH RECURSIVE $cappedShingleCtes,
-         |prs AS (SELECT id_a, id_b FROM jacc WHERE jaccard >= 0.5),
+      s"""WITH RECURSIVE $cappedJaccPrsCtes,
          |$ccClosureCtes
          |SELECT doc_id, rep AS cluster_rep
          |FROM labels ORDER BY doc_id""".stripMargin))
@@ -940,20 +1384,9 @@ object LlmQueries {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
       .orderBy("shard", "bin"),
     Some(
-      s"""WITH t AS (
-         |  SELECT doc_id,
-         |    (CASE WHEN length(text) = 0 THEN 0
-         |          ELSE ${polyHashSql("text")} END) % $packShards AS shard,
-         |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |c AS (
-         |  SELECT *, COALESCE(SUM(n_tokens) OVER (PARTITION BY shard
-         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |    0) AS cum_before
-         |  FROM t)
-         |SELECT shard, CAST(FLOOR(CAST(cum_before AS DOUBLE) / $packBudget) AS BIGINT) AS bin,
-         |       COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-         |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
+      s"""WITH ${packCtes("doc_id",
+           "CAST(len(string_split(text, ' ')) AS BIGINT)", "documents")}
+         |${packBinsSql("c")}""".stripMargin))
 
   // q53 — the 64-bit SimHash (two independent 32-bit halves, 4x16-bit
   // bands): the beyond-1e5-docs variant SCALE.md recommends. Halves keep
@@ -1076,16 +1509,7 @@ object LlmQueries {
       tables = lshTables, nbits = lshBits)
       .orderBy("id_a", "id_b"),
     Some(
-      s"""WITH buckets AS (${bucketsCte("embeddings")}),
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |  FROM buckets a JOIN buckets b
-         |    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-         |scored AS (
-         |  SELECT id_a, id_b, ${cosineSql("ea.embedding", "eb.embedding")} AS cos
-         |  FROM cand
-         |  JOIN embeddings ea ON ea.vec_id = id_a
-         |  JOIN embeddings eb ON eb.vec_id = id_b)
+      s"""WITH $lshPairScoredCtes
          |SELECT id_a, id_b, FLOOR((cos) * 10000.0 + 0.5) / 10000.0 AS cos FROM scored
          |WHERE cos >= 0.4 ORDER BY id_a, id_b""".stripMargin))
 
@@ -1109,17 +1533,7 @@ object LlmQueries {
     Some(
       s"""WITH buckets AS (${bucketsCte("embeddings")}),
          |qb AS (SELECT * FROM buckets WHERE vec_id < 8),
-         |cand AS (
-         |  SELECT DISTINCT qb.vec_id AS query_id, c.vec_id AS neighbor_id
-         |  FROM buckets c JOIN qb
-         |    ON qb.tbl = c.tbl AND qb.bucket = c.bucket AND qb.vec_id <> c.vec_id),
-         |scored AS (
-         |  SELECT query_id, neighbor_id,
-         |         ${cosineSql("ea.embedding", "eb.embedding")} AS cos
-         |  FROM cand
-         |  JOIN embeddings ea ON ea.vec_id = query_id
-         |  JOIN embeddings eb ON eb.vec_id = neighbor_id),
-         |${topKByCosSql("scored", 3)}""".stripMargin))
+         |$lshProbeTopKSql""".stripMargin))
 
   // q54 — IVF-style ANN: coarse-quantizer inverted lists (deterministic
   // centroids = vec_id < nCells), nprobe nearest lists searched per
@@ -1136,29 +1550,8 @@ object LlmQueries {
         .orderBy("query_id", "rank")
     },
     Some(
-      s"""WITH cents AS (
-         |  SELECT vec_id AS cell_id, embedding AS cvec FROM embeddings
-         |  WHERE vec_id < $ivfCells),
-         |asg AS (
-         |  SELECT e.vec_id, e.embedding, c.cell_id,
-         |         ${cosineSql("e.embedding", "c.cvec")} AS ccos
-         |  FROM embeddings e CROSS JOIN cents c),
-         |assigned AS (
-         |  SELECT vec_id, embedding, cell_id AS cell FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY ccos DESC, cell_id) AS rn FROM asg)
-         |  WHERE rn = 1),
-         |probes AS (
-         |  SELECT vec_id AS query_id, embedding AS qe, cell_id AS cell FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY ccos DESC, cell_id) AS rn FROM asg WHERE vec_id < 8)
-         |  WHERE rn <= $ivfProbe),
-         |scored AS (
-         |  SELECT p.query_id, a.vec_id AS neighbor_id,
-         |         ${cosineSql("p.qe", "a.embedding")} AS cos
-         |  FROM probes p JOIN assigned a ON a.cell = p.cell
-         |  WHERE a.vec_id <> p.query_id),
-         |${topKByCosSql("scored", 3)}""".stripMargin))
+      s"""WITH ${ivfAsgCtes(withEmb = true)},
+         |${ivfProbeTopKSql("asg")}""".stripMargin))
 
   // q70 — SemDeDup-shaped semantic dedup closure: the q42 embedding
   // near-dup pairs fed through the q66 connected-components operator,
@@ -1172,16 +1565,7 @@ object LlmQueries {
       tables = lshTables, nbits = lshBits)
       .orderBy("vec_id"),
     Some(
-      s"""WITH RECURSIVE buckets AS (${bucketsCte("embeddings")}),
-         |cand AS (
-         |  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |  FROM buckets a JOIN buckets b
-         |    ON a.tbl = b.tbl AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-         |scored AS (
-         |  SELECT id_a, id_b, ${cosineSql("ea.embedding", "eb.embedding")} AS cos
-         |  FROM cand
-         |  JOIN embeddings ea ON ea.vec_id = id_a
-         |  JOIN embeddings eb ON eb.vec_id = id_b),
+      s"""WITH RECURSIVE $lshPairScoredCtes,
          |prs AS (SELECT id_a, id_b FROM scored WHERE cos >= 0.4),
          |$ccClosureCtes
          |SELECT doc_id AS vec_id, rep AS cluster_rep
@@ -1245,22 +1629,7 @@ object LlmQueries {
          |  SELECT e.vec_id, e.embedding, c.cell_id,
          |         ${cosineSql("e.embedding", "c.cvec")} AS ccos
          |  FROM embeddings e CROSS JOIN cents2 c),
-         |assigned AS (
-         |  SELECT vec_id, embedding, cell_id AS cell FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY ccos DESC, cell_id) AS rn FROM fin)
-         |  WHERE rn = 1),
-         |probes AS (
-         |  SELECT vec_id AS query_id, embedding AS qe, cell_id AS cell FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY ccos DESC, cell_id) AS rn FROM fin WHERE vec_id < 8)
-         |  WHERE rn <= $ivfProbe),
-         |scored AS (
-         |  SELECT p.query_id, a.vec_id AS neighbor_id,
-         |         ${cosineSql("p.qe", "a.embedding")} AS cos
-         |  FROM probes p JOIN assigned a ON a.cell = p.cell
-         |  WHERE a.vec_id <> p.query_id),
-         |${topKByCosSql("scored", 3)}""".stripMargin))
+         |${ivfProbeTopKSql("fin")}""".stripMargin))
 
   // q72 — multi-probe LSH ANN: each query also probes the nbits
   // single-bit-flip neighbor buckets in every table, so recall grows
@@ -1283,17 +1652,7 @@ object LlmQueries {
          |  UNION ALL
          |  SELECT vec_id, tbl, xor(bucket, CAST(2.0 ** j AS BIGINT)) AS bucket
          |  FROM qb0, (SELECT unnest(range($lshBits)) AS j) js),
-         |cand AS (
-         |  SELECT DISTINCT qb.vec_id AS query_id, c.vec_id AS neighbor_id
-         |  FROM buckets c JOIN qb
-         |    ON qb.tbl = c.tbl AND qb.bucket = c.bucket AND qb.vec_id <> c.vec_id),
-         |scored AS (
-         |  SELECT query_id, neighbor_id,
-         |         ${cosineSql("ea.embedding", "eb.embedding")} AS cos
-         |  FROM cand
-         |  JOIN embeddings ea ON ea.vec_id = query_id
-         |  JOIN embeddings eb ON eb.vec_id = neighbor_id),
-         |${topKByCosSql("scored", 3)}""".stripMargin))
+         |$lshProbeTopKSql""".stripMargin))
 
   // q73 — dedup keep-list: the corpus with every clustered doc dropped
   // except its min-id representative (q66's clusters applied) — the
@@ -1304,19 +1663,13 @@ object LlmQueries {
     (s, d) => {
       val docs = docsOf(s, d)
       DedupOps.dedupedCorpus(docs,
-        DedupOps.duplicateClusters(
-          DedupOps.ngramJaccardPairs(docs, n = 3, threshold = 0.5,
-            maxDf = Some(DedupDfCap))))
+        DedupOps.duplicateClusters(cappedJaccardPairs(docs)))
         .select(col("doc_id")).orderBy("doc_id")
     },
     Some(
-      s"""WITH RECURSIVE $cappedShingleCtes,
-         |prs AS (SELECT id_a, id_b FROM jacc WHERE jaccard >= 0.5),
+      s"""WITH RECURSIVE $cappedJaccPrsCtes,
          |$ccClosureCtes
-         |SELECT d.doc_id FROM documents d
-         |LEFT JOIN labels l ON d.doc_id = l.doc_id
-         |WHERE l.doc_id IS NULL OR l.rep = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin))
+         |${keepListSql("documents")}""".stripMargin))
 
   // q97 — the MinHash-composed keep-list: q73's shape with
   // minhashLshPairs as the pair source. The banded generator has no df²
@@ -1339,17 +1692,9 @@ object LlmQueries {
         .select(col("doc_id")).orderBy("doc_id")
     },
     Some(
-      s"""WITH RECURSIVE $shingleCtes,
-         |$minhashCandCtes,
-         |prs AS (
-         |  SELECT c.id_a, c.id_b FROM cand c
-         |  JOIN jacc j ON j.id_a = c.id_a AND j.id_b = c.id_b
-         |  WHERE j.jaccard >= 0.5),
+      s"""WITH RECURSIVE ${minhashPrsCtes("documents")},
          |$ccClosureCtes
-         |SELECT d.doc_id FROM documents d
-         |LEFT JOIN labels l ON d.doc_id = l.doc_id
-         |WHERE l.doc_id IS NULL OR l.rep = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin))
+         |${keepListSql("documents")}""".stripMargin))
 
   // q98 — the PRODUCTION dedup stack (DedupOps.exactThenNearDedup):
   // exact-fingerprint dedup collapses verbatim-clone clusters in one
@@ -1362,32 +1707,14 @@ object LlmQueries {
     (s, d) => DedupOps.exactThenNearDedup(docsOf(s, d),
       n = 3, perms = 32, bands = 8, rowsPerBand = 4, threshold = 0.5)
       .select(col("doc_id")).orderBy("doc_id"),
-    Some {
-      val p48 = graft.functions.LlmExprs.P48.toString
-      s"""WITH RECURSIVE fp0 AS (
-         |  SELECT doc_id,
-         |    CASE WHEN length(text) = 0 THEN 0
-         |         ELSE ${polyHashSql("text")} END AS f1,
-         |    CASE WHEN length(text) = 0 THEN 0
-         |         ELSE ${polyHashSqlMod("text", p48)} END AS f2
-         |  FROM documents),
-         |keepid AS (SELECT MIN(doc_id) AS doc_id FROM fp0
-         |           WHERE f1 IS NOT NULL GROUP BY f1, f2),
+    Some(
+      s"""WITH RECURSIVE ${dualFpKeepCtes("documents")},
          |kept0 AS (SELECT d.* FROM documents d JOIN keepid USING (doc_id)
          |          UNION ALL
          |          SELECT d.* FROM documents d WHERE d.text IS NULL),
-         |${shingleCtesWithCap(None, "kept0")},
-         |$minhashCandCtes,
-         |prs AS (
-         |  SELECT c.id_a, c.id_b FROM cand c
-         |  JOIN jacc j ON j.id_a = c.id_a AND j.id_b = c.id_b
-         |  WHERE j.jaccard >= 0.5),
+         |${minhashPrsCtes("kept0")},
          |$ccClosureCtes
-         |SELECT d.doc_id FROM kept0 d
-         |LEFT JOIN labels l ON d.doc_id = l.doc_id
-         |WHERE l.doc_id IS NULL OR l.rep = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin
-    })
+         |${keepListSql("kept0")}""".stripMargin))
 
   // q104 — incremental append dedup (the daily-crawl shape): the corpus
   // is the already-curated docs with doc_id % 4 <> 0; the incoming batch
@@ -1568,8 +1895,7 @@ object LlmQueries {
     Some {
       val normExpr =
         "regexp_replace(regexp_replace(text, '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')"
-      s"""WITH RECURSIVE $cappedShingleCtes,
-         |prs AS (SELECT id_a, id_b FROM jacc WHERE jaccard >= 0.5),
+      s"""WITH RECURSIVE $cappedJaccPrsCtes,
          |$ccClosureCtes,
          |kept AS (
          |  SELECT d.doc_id, d.text FROM documents d
@@ -2251,8 +2577,7 @@ object LlmQueries {
         logIdf = false).orderBy("rank")
     },
     Some(
-      s"""WITH RECURSIVE $cappedShingleCtes,
-         |prs AS (SELECT id_a, id_b FROM jacc WHERE jaccard >= 0.5),
+      s"""WITH RECURSIVE $cappedJaccPrsCtes,
          |${clusterKeptCtes("documents")},
          |${bm25Ctes("kept")}
          |${bm25TopSql(10)}""".stripMargin))
@@ -2743,20 +3068,9 @@ object LlmQueries {
     Some(
       s"""WITH $bpeChainCtes,
          |$bpeDocTokCtes,
-         |t AS (
-         |  SELECT d.doc_id,
-         |    (CASE WHEN length(text) = 0 THEN 0
-         |          ELSE ${polyHashSql("text")} END) % $packShards AS shard,
-         |    COALESCE(dt.n_tokens, 0) AS n_tokens
-         |  FROM documents d LEFT JOIN dt USING (doc_id)),
-         |c AS (
-         |  SELECT *, COALESCE(SUM(n_tokens) OVER (PARTITION BY shard
-         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |    0) AS cum_before
-         |  FROM t)
-         |SELECT shard, CAST(FLOOR(CAST(cum_before AS DOUBLE) / $packBudget) AS BIGINT) AS bin,
-         |       COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-         |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin))
+         |${packCtes("d.doc_id", "COALESCE(dt.n_tokens, 0)",
+             "documents d LEFT JOIN dt USING (doc_id)")}
+         |${packBinsSql("c")}""".stripMargin))
 
   // q110 — q101's token-budget mixture re-run on real BPE tokens: source
   // quotas now allocate actual subword mass (α = 1/2 over real tokens).
@@ -2836,16 +3150,7 @@ object LlmQueries {
       tokenBudget = 70000L, maxEpochs = 3).orderBy("source", "rnk", "epoch"),
     Some(
       s"""WITH $epochPlanCtes,
-         |ranked AS (
-         |  SELECT doc_id, source, n_tokens,
-         |    CAST(row_number() OVER (
-         |      PARTITION BY source
-         |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id) AS BIGINT) AS rnk,
-         |    CAST(sum(n_tokens) OVER (
-         |      PARTITION BY source
-         |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-         |  FROM toks),
+         |${fillOrderCte("ranked", "doc_id, source, n_tokens", "toks")},
          |occ AS (
          |  SELECT r.doc_id, r.source, r.n_tokens, r.rnk,
          |    e.epochs + CASE WHEN r.cum_tokens - r.n_tokens < e.rem
@@ -2981,13 +3286,7 @@ object LlmQueries {
   private val epochOrderCtes: String = {
       val okey = epochOrderKeySql
       s"""$epochPlanCtes,
-         |ranked AS (
-         |  SELECT doc_id, source, text, n_tokens,
-         |    CAST(sum(n_tokens) OVER (
-         |      PARTITION BY source
-         |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-         |  FROM toks),
+         |${fillOrderCte("ranked", "doc_id, source, text, n_tokens", "toks", rnk = false)},
          |occ AS (
          |  SELECT r.doc_id, r.source, r.text, r.n_tokens,
          |    e.epochs + CASE WHEN r.cum_tokens - r.n_tokens < e.rem
@@ -3094,22 +3393,7 @@ object LlmQueries {
   /** aHash of the formula-built pixel plane with hamming 0: what any
     * two encodings of the same image must decode to (q241, q244). */
   private lazy val formulaAhashOracle: String =
-    s"""WITH dims AS (
-       |  SELECT doc_id,
-       |    CAST((4 + doc_id % 5) * (3 + doc_id % 4) * 3 AS BIGINT) AS n
-       |  FROM documents),
-       |rb AS (
-       |  SELECT doc_id, b,
-       |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(
-       |      range((b * n) // 32, ((b + 1) * n) // 32),
-       |      j -> CAST((doc_id * 31 + j * 7) % 251 AS BIGINT))),
-       |      (a, x) -> a + x) AS sum_bytes,
-       |    CAST(((b + 1) * n) // 32 - (b * n) // 32 AS BIGINT) AS n_in
-       |  FROM dims, (SELECT unnest(range(32)) AS b) bs),
-       |tot AS (
-       |  SELECT doc_id, CAST(sum(sum_bytes) AS BIGINT) AS total,
-       |         CAST(sum(n_in) AS BIGINT) AS n_total
-       |  FROM rb GROUP BY 1)
+    s"""WITH $formulaAhashCtes
        |SELECT rb.doc_id,
        |  CAST(sum(CASE WHEN rb.sum_bytes * t.n_total > t.total * rb.n_in
        |           THEN (CAST(1 AS BIGINT) << b) ELSE CAST(0 AS BIGINT) END)
@@ -3192,22 +3476,7 @@ object LlmQueries {
         .orderBy("doc_id")
     },
     Some(
-      s"""WITH dims AS (
-         |  SELECT doc_id,
-         |    CAST((4 + doc_id % 5) * (3 + doc_id % 4) * 3 AS BIGINT) AS n
-         |  FROM documents),
-         |rb AS (
-         |  SELECT doc_id, b,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(
-         |      range((b * n) // 32, ((b + 1) * n) // 32),
-         |      j -> CAST((doc_id * 31 + j * 7) % 251 AS BIGINT))),
-         |      (a, x) -> a + x) AS sum_bytes,
-         |    CAST(((b + 1) * n) // 32 - (b * n) // 32 AS BIGINT) AS n_in
-         |  FROM dims, (SELECT unnest(range(32)) AS b) bs),
-         |tot AS (
-         |  SELECT doc_id, CAST(sum(sum_bytes) AS BIGINT) AS total,
-         |         CAST(sum(n_in) AS BIGINT) AS n_total
-         |  FROM rb GROUP BY 1),
+      s"""WITH $formulaAhashCtes,
          |ah AS (
          |  SELECT rb.doc_id,
          |    CAST(sum(CASE WHEN rb.sum_bytes * t.n_total > t.total * rb.n_in
@@ -3380,19 +3649,7 @@ object LlmQueries {
     (s, d) => graft.llm.DeconIndex.probe(
       docsOf(s, d), deconIndexDir(s, d))
       .select(col("doc_id")).orderBy("doc_id"),
-    Some(
-      s"""WITH fp AS (
-         |  SELECT doc_id,
-         |    CASE WHEN length(norm) = 0 THEN 0
-         |         ELSE ${polyHashSql("norm")} END AS f
-         |  FROM (SELECT doc_id,
-         |          regexp_replace(regexp_replace(text, '[^a-z0-9 ]', '', 'g'),
-         |                         ' +', ' ', 'g') AS norm
-         |        FROM documents))
-         |SELECT doc_id FROM fp
-         |WHERE f IS NULL
-         |   OR f NOT IN (SELECT f FROM fp WHERE $inBenchSql AND f IS NOT NULL)
-         |ORDER BY doc_id""".stripMargin))
+    Some(normFpDeconOracle(inBenchSql)))
   val q123 = Q(
     "q123_decon_index_fuzzy",
     (s, d) => graft.llm.DeconIndex.probeFuzzy(
@@ -3554,22 +3811,11 @@ object LlmQueries {
     "q128_curation_v2",
     (s, d) => {
       val docs = docsOf(s, d)
-      // reused-intermediate checkpoints: the v7 lesson (SCALE.md)
-      val kept = DedupOps.dedupedCorpus(docs,
-        DedupOps.duplicateClusters(
-          DedupOps.ngramJaccardPairs(docs, n = 3, threshold = 0.5,
-            maxDf = Some(DedupDfCap)))).localCheckpoint(true)
-      val prunedIds = TextAnalysis.qualityPrune(kept, "source",
-        keepPermille = 500L).select(col("doc_id"))
-      val pruned = kept.join(prunedIds, Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
-      val clean = TextAnalysis.decontaminated(pruned,
-        docs.filter(inBench))
-      TextAnalysis.corpusReport(clean, "source").orderBy("source")
+      val kept = clusterKept(docs, cappedJaccardPairs(docs))
+      deconReport(prunedHalf(kept), docs, fuzzy = false)
     },
     Some(
-      s"""WITH RECURSIVE $cappedShingleCtes,
-         |prs AS (SELECT id_a, id_b FROM jacc WHERE jaccard >= 0.5),
+      s"""WITH RECURSIVE $cappedJaccPrsCtes,
          |${clusterKeptCtes("documents")},
          |$qualityPruneCtes,
          |${exactDeconCtes("pruned")},
@@ -3697,20 +3943,8 @@ object LlmQueries {
       val docs = docsOf(s, d)
       // ONE shared inverted-index pass yields both edge families
       // (dupEdges ≡ jaccardPairs(0.5) ∪ containmentPairs(0.8))
-      val edges = DedupOps.dupEdges(docs, n = 3, jaccThreshold = 0.5,
-        contThreshold = 0.8, maxDf = Some(DedupDfCap))
-      // reused-intermediate checkpoints: the v7 lesson (SCALE.md)
-      val kept = DedupOps.dedupedCorpus(docs,
-        DedupOps.duplicateClusters(edges)).localCheckpoint(true)
-      val prunedIds = TextAnalysis.qualityPrune(kept, "source",
-        keepPermille = 500L).select(col("doc_id"))
-      val pruned = kept.join(prunedIds, Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
-      val bench = docs.filter(inBench)
-      val clean = TextAnalysis.decontaminated(pruned, bench)
-      val fclean = TextAnalysis.fuzzyDecontaminated(clean, bench,
-        n = contamN, maxOverlap = 0.5)
-      TextAnalysis.corpusReport(fclean, "source").orderBy("source")
+      val kept = clusterKept(docs, sharedDupEdges(docs))
+      deconReport(prunedHalf(kept), docs, fuzzy = true)
     },
     Some(
       s"""WITH RECURSIVE ${dupEdgeCtes("documents")},
@@ -3913,27 +4147,15 @@ object LlmQueries {
       // pure scan-stage filter — no semi-join, the same gate a stream
       // runs (gopherFilter ≡ keep semi-join, spec-pinned)
       val gated = gopherGate(docs)
-      val edges = DedupOps.dupEdges(gated, n = 3, jaccThreshold = 0.5,
-        contThreshold = 0.8, maxDf = Some(DedupDfCap))
       // materialize the reused intermediates once (the v7 lesson,
       // SCALE.md round-14 late wave): prune/decon/report rescan their
       // input, and re-deriving the gate+dedup subtree under every scan
       // is pure waste — hash-identical, ~20% off the pipeline
-      val kept = DedupOps.dedupedCorpus(gated,
-        DedupOps.duplicateClusters(edges)).localCheckpoint(true)
-      val prunedIds = TextAnalysis.qualityPrune(kept, "source",
-        keepPermille = 500L).select(col("doc_id"))
-      val pruned = kept.join(prunedIds, Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
-      val bench = docs.filter(inBench)
-      val clean = TextAnalysis.decontaminated(pruned, bench)
-      val fclean = TextAnalysis.fuzzyDecontaminated(clean, bench,
-        n = contamN, maxOverlap = 0.5)
-      TextAnalysis.corpusReport(fclean, "source").orderBy("source")
+      val kept = clusterKept(gated, sharedDupEdges(gated))
+      deconReport(prunedHalf(kept), docs, fuzzy = true)
     },
     Some(
-      s"""WITH RECURSIVE ${gopherGateCtes(DedupOps.Tokenizer.Ascii)},
-         |gdocs AS (SELECT d.* FROM documents d JOIN gk USING (doc_id)),
+      s"""WITH RECURSIVE $gatedDocsCtes,
          |${dupEdgeCtes("gdocs")},
          |${clusterKeptCtes("gdocs")},
          |$qualityPruneCtes,
@@ -3949,13 +4171,10 @@ object LlmQueries {
   val q141 = Q(
     "q141_cluster_sizes",
     (s, d) => DedupOps.clusterSizeHistogram(
-      DedupOps.duplicateClusters(
-        DedupOps.ngramJaccardPairs(docsOf(s, d), n = 3,
-          threshold = 0.5, maxDf = Some(DedupDfCap))))
+      DedupOps.duplicateClusters(cappedJaccardPairs(docsOf(s, d))))
       .orderBy("cluster_size"),
     Some(
-      s"""WITH RECURSIVE $cappedShingleCtes,
-         |prs AS (SELECT id_a, id_b FROM jacc WHERE jaccard >= 0.5),
+      s"""WITH RECURSIVE $cappedJaccPrsCtes,
          |$ccClosureCtes,
          |sz AS (SELECT rep, CAST(count(*) AS BIGINT) AS cluster_size
          |       FROM labels GROUP BY 1)
@@ -3987,22 +4206,10 @@ object LlmQueries {
         .select(col("doc_id")).orderBy("doc_id")
     },
     Some(
-      s"""WITH RECURSIVE ndocs AS (
-         |  SELECT doc_id,
-         |    trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^\\p{L}\\p{N}\\s]', '', 'g'), '\\s+', ' ', 'g')) AS text
-         |  FROM documents),
-         |${shingleCtesWithCap(None, "ndocs")},
-         |$minhashCandCtes,
-         |prs AS (
-         |  SELECT c.id_a, c.id_b FROM cand c
-         |  JOIN jacc j ON j.id_a = c.id_a AND j.id_b = c.id_b
-         |  WHERE j.jaccard >= 0.5),
+      s"""WITH RECURSIVE $ndocsCte,
+         |${minhashPrsCtes("ndocs")},
          |$ccClosureCtes
-         |SELECT d.doc_id FROM documents d
-         |LEFT JOIN labels l ON d.doc_id = l.doc_id
-         |WHERE l.doc_id IS NULL OR l.rep = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin))
+         |${keepListSql("documents")}""".stripMargin))
 
   // q143 — curation pipeline v5: the LEARNED quality filter joins the
   // flagship. v4's hand-rule prune is replaced by CCNet's architecture:
@@ -4022,12 +4229,9 @@ object LlmQueries {
     (s, d) => {
       val docs = docsOf(s, d)
       val gated = gopherGate(docs)
-      val edges = DedupOps.dupEdges(gated, n = 3, jaccThreshold = 0.5,
-        contThreshold = 0.8, maxDf = Some(DedupDfCap))
       // reused-intermediate checkpoints: the v7 lesson (SCALE.md);
       // measured 8.8 → 7.2 s warm at sf0.1, hash-identical
-      val kept = DedupOps.dedupedCorpus(gated,
-        DedupOps.duplicateClusters(edges)).localCheckpoint(true)
+      val kept = clusterKept(gated, sharedDupEdges(gated))
       // the LM reference stays the RAW %4 slice (an external in-domain
       // corpus is not gated by the pipeline it steers)
       val train = docs.filter(col("doc_id") % 4 === 0)
@@ -4036,13 +4240,10 @@ object LlmQueries {
         .select(col("doc_id"))
       val selected = kept.join(selIds, Seq("doc_id"), "left_semi")
         .localCheckpoint(true)
-      val bench = docs.filter(inBench)
-      val clean = TextAnalysis.decontaminated(selected, bench)
-      TextAnalysis.corpusReport(clean, "source").orderBy("source")
+      deconReport(selected, docs, fuzzy = false)
     },
     Some(
-      s"""WITH RECURSIVE ${gopherGateCtes(DedupOps.Tokenizer.Ascii)},
-         |gdocs AS (SELECT d.* FROM documents d JOIN gk USING (doc_id)),
+      s"""WITH RECURSIVE $gatedDocsCtes,
          |${dupEdgeCtes("gdocs")},
          |${clusterKeptCtes("gdocs")},
          |kdw AS (SELECT doc_id, list_filter(string_split(coalesce(text, ''), ' '),
@@ -4160,18 +4361,8 @@ object LlmQueries {
            |  SELECT CAST($np AS INT) AS nprobe,
            |         CAST(count(*) AS BIGINT) AS n_matches
            |  FROM r$np JOIN truth USING (query_id, neighbor_id))""".stripMargin
-      s"""WITH cents AS (
-         |  SELECT vec_id AS cell_id, embedding AS cvec FROM embeddings
-         |  WHERE vec_id < $ivfCells),
-         |asg AS (
-         |  SELECT e.vec_id, e.embedding, c.cell_id,
-         |         ${cosineSql("e.embedding", "c.cvec")} AS ccos
-         |  FROM embeddings e CROSS JOIN cents c),
-         |assigned AS (
-         |  SELECT vec_id, embedding, cell_id AS cell FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY ccos DESC, cell_id) AS rn FROM asg)
-         |  WHERE rn = 1),
+      s"""WITH ${ivfAsgCtes(withEmb = true)},
+         |${ivfAssignedCte("asg", withEmb = true)},
          |tq AS (SELECT * FROM embeddings WHERE vec_id < 8),
          |tsc AS (
          |  SELECT tq.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -4208,38 +4399,9 @@ object LlmQueries {
       n = 3, perms = 32, bands = 8, rowsPerBand = 4, threshold = 0.5,
       tok = DedupOps.Tokenizer.Unicode)
       .select(col("doc_id")).orderBy("doc_id"),
-    Some {
-      val p48 = graft.functions.LlmExprs.P48.toString
-      s"""WITH RECURSIVE norm0 AS (
-         |  SELECT doc_id, text,
-         |    trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^\\p{L}\\p{N}\\s]', '', 'g'), '\\s+', ' ', 'g')) AS ntext
-         |  FROM documents),
-         |fp0 AS (
-         |  SELECT doc_id,
-         |    CASE WHEN length(ntext) = 0 THEN 0
-         |         ELSE ${polyHashSql("ntext")} END AS f1,
-         |    CASE WHEN length(ntext) = 0 THEN 0
-         |         ELSE ${polyHashSqlMod("ntext", p48)} END AS f2
-         |  FROM norm0 WHERE text IS NOT NULL),
-         |keepid AS (SELECT MIN(doc_id) AS doc_id FROM fp0 GROUP BY f1, f2),
-         |kept0 AS (SELECT n.doc_id, n.ntext AS text
-         |          FROM norm0 n JOIN keepid USING (doc_id)
-         |          UNION ALL
-         |          SELECT doc_id, CAST(NULL AS VARCHAR)
-         |          FROM documents WHERE text IS NULL),
-         |${shingleCtesWithCap(None, "kept0")},
-         |$minhashCandCtes,
-         |prs AS (
-         |  SELECT c.id_a, c.id_b FROM cand c
-         |  JOIN jacc j ON j.id_a = c.id_a AND j.id_b = c.id_b
-         |  WHERE j.jaccard >= 0.5),
-         |$ccClosureCtes
-         |SELECT d.doc_id FROM kept0 d
-         |LEFT JOIN labels l ON d.doc_id = l.doc_id
-         |WHERE l.doc_id IS NULL OR l.rep = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin
-    })
+    Some(
+      s"""WITH RECURSIVE $unicodeExactNearCtes
+         |${keepListSql("kept0")}""".stripMargin))
 
   // q147 — DSIR data selection (Xie et al. 2023): keep the 50% of the
   // corpus whose hashed-bigram distribution is most like the %4 = 0
@@ -4386,19 +4548,10 @@ object LlmQueries {
         .orderBy("shard", "bin")
     },
     Some {
-      val p48 = graft.functions.LlmExprs.P48.toString
       s"""WITH $dsirCtes,
          |dsel AS (SELECT doc_id FROM sr WHERE rnk * 1000 <= n_total * 500),
          |sdocs AS (SELECT d.doc_id, d.text FROM documents d JOIN dsel USING (doc_id)),
-         |fp0 AS (
-         |  SELECT doc_id,
-         |    CASE WHEN length(text) = 0 THEN 0
-         |         ELSE ${polyHashSql("text")} END AS f1,
-         |    CASE WHEN length(text) = 0 THEN 0
-         |         ELSE ${polyHashSqlMod("text", p48)} END AS f2
-         |  FROM sdocs),
-         |keepid AS (SELECT MIN(doc_id) AS doc_id FROM fp0
-         |           WHERE f1 IS NOT NULL GROUP BY f1, f2),
+         |${dualFpKeepCtes("sdocs")},
          |kept0 AS (SELECT s.* FROM sdocs s JOIN keepid USING (doc_id)
          |          UNION ALL
          |          SELECT s.* FROM sdocs s WHERE s.text IS NULL),
@@ -4423,20 +4576,9 @@ object LlmQueries {
          |          WHERE x.doc_id IS NULL),
          |$bpeChainCtes,
          |$bpeDocTokCtes,
-         |t AS (
-         |  SELECT c.doc_id,
-         |    (CASE WHEN length(text) = 0 THEN 0
-         |          ELSE ${polyHashSql("text")} END) % $packShards AS shard,
-         |    COALESCE(dt.n_tokens, 0) AS n_tokens
-         |  FROM clean c LEFT JOIN dt USING (doc_id)),
-         |cum AS (
-         |  SELECT *, COALESCE(SUM(n_tokens) OVER (PARTITION BY shard
-         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |    0) AS cum_before
-         |  FROM t)
-         |SELECT shard, CAST(FLOOR(CAST(cum_before AS DOUBLE) / $packBudget) AS BIGINT) AS bin,
-         |       COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-         |FROM cum GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+         |${packCtes("c.doc_id", "COALESCE(dt.n_tokens, 0)",
+             "clean c LEFT JOIN dt USING (doc_id)", "cum")}
+         |${packBinsSql("cum")}""".stripMargin
     })
 
   // q150 — the persisted DSIR selection model (the FIFTH index
@@ -4540,16 +4682,8 @@ object LlmQueries {
          |  FROM documents d LEFT JOIN sc USING (doc_id)
          |  GROUP BY 1),
          |${doremiQuotaCtes("documents", 5000L)},
-         |ranked AS (
-         |  SELECT doc_id, source, n_bigrams,
-         |    CAST(row_number() OVER (
-         |      PARTITION BY source
-         |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id) AS BIGINT) AS rnk,
-         |    CAST(sum(n_bigrams) OVER (
-         |      PARTITION BY source
-         |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_mass
-         |  FROM mass)
+         |${fillOrderCte("ranked", "doc_id, source, n_bigrams", "mass",
+             mass = "n_bigrams", cum = "cum_mass")}
          |SELECT r.doc_id, r.source, r.n_bigrams, r.rnk, r.cum_mass
          |FROM ranked r JOIN quotas q USING (source)
          |WHERE r.cum_mass - r.n_bigrams < q.quota
@@ -4564,35 +4698,12 @@ object LlmQueries {
   val q153 = Q(
     "q153_threshold_sweep",
     (s, d) => {
-      val docs = docsOf(s, d)
-      val sc = graft.llm.Retrieval.bigramSurprisal(docs,
-        docs.filter(col("doc_id") % 4 === 0))
-        .select(col("doc_id"),
-          expr("surprisal_bits * 10000 div greatest(n_bigrams, 1)").as("s"))
-      val lab = TextAnalysis.gopherRules(docs, minWords = 30L)
-        .select(col("doc_id"), col("keep"))
-      TextAnalysis.thresholdSweep(sc.join(lab, "doc_id"),
+      TextAnalysis.thresholdSweep(surprisalVsGopher(docsOf(s, d)),
         col("s"), col("keep"), 20000L to 180000L by 20000L)
         .orderBy("threshold")
     },
     Some(
-      s"""WITH dw AS (
-         |  SELECT doc_id, coalesce(text, '') AS t,
-         |    list_filter(string_split(coalesce(text, ''), ' '),
-         |      w -> w <> '') AS ws
-         |  FROM documents),
-         |tr AS (SELECT ws FROM dw WHERE doc_id % 4 = 0),
-         |${surprisalModelCtes("dw", "bits")},
-         |ds AS (
-         |  SELECT d.doc_id,
-         |    CAST(coalesce(sc.bits, 0) * 10000
-         |      // greatest(coalesce(sc.n_bigrams, 0), 1) AS BIGINT) AS s
-         |  FROM documents d LEFT JOIN sc USING (doc_id)),
-         |${gopherMeasuresCte("m", "dw", "ws", DedupOps.Tokenizer.Ascii)},
-         |lab AS (
-         |  SELECT doc_id,
-         |    ${gopherKeepSql(6)} AS y
-         |  FROM m),
+      s"""WITH $surprisalGopherCtes,
          |thr AS (SELECT CAST(unnest([20000, 40000, 60000, 80000, 100000,
          |          120000, 140000, 160000, 180000]) AS BIGINT) AS threshold),
          |c AS (
@@ -4733,13 +4844,10 @@ object LlmQueries {
         massBudget = 20000L).select(col("doc_id"))
       val selected = kept.join(selIds, Seq("doc_id"), "left_semi")
         .localCheckpoint(true)
-      val bench = docs.filter(inBench)
-      val clean = TextAnalysis.decontaminated(selected, bench)
-      TextAnalysis.corpusReport(clean, "source").orderBy("source")
+      deconReport(selected, docs, fuzzy = false)
     },
     Some(
-      s"""WITH ${gopherGateCtes(DedupOps.Tokenizer.Ascii)},
-         |gdocs AS (SELECT d.* FROM documents d JOIN gk USING (doc_id)),
+      s"""WITH $gatedDocsCtes,
          |$gatedExactDedupCtes,
          |kdw AS (SELECT doc_id, list_filter(string_split(coalesce(text, ''), ' '),
          |          w -> w <> '') AS ws
@@ -4755,13 +4863,8 @@ object LlmQueries {
          |  FROM kept k LEFT JOIN sc ON k.doc_id = sc.doc_id
          |  GROUP BY 1),
          |${doremiQuotaCtes("kept", 20000L)},
-         |rsel AS (
-         |  SELECT doc_id, source, n_bigrams,
-         |    CAST(sum(n_bigrams) OVER (
-         |      PARTITION BY source
-         |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_mass
-         |  FROM mass),
+         |${fillOrderCte("rsel", "doc_id, source, n_bigrams", "mass",
+             rnk = false, mass = "n_bigrams", cum = "cum_mass")},
          |selected AS (
          |  SELECT k.doc_id, k.source, k.lang, k.text
          |  FROM kept k
@@ -4790,17 +4893,8 @@ object LlmQueries {
     Some(
       s"""WITH $bpeChainCtes,
          |$bpeDocTokCtes,
-         |t AS (
-         |  SELECT d.doc_id,
-         |    (CASE WHEN length(text) = 0 THEN 0
-         |          ELSE ${polyHashSql("text")} END) % $packShards AS shard,
-         |    COALESCE(dt.n_tokens, 0) AS n_tokens
-         |  FROM documents d LEFT JOIN dt USING (doc_id)),
-         |c AS (
-         |  SELECT *, COALESCE(SUM(n_tokens) OVER (PARTITION BY shard
-         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |    0) AS cum_before
-         |  FROM t),
+         |${packCtes("d.doc_id", "COALESCE(dt.n_tokens, 0)",
+             "documents d LEFT JOIN dt USING (doc_id)")},
          |b AS (
          |  SELECT shard,
          |    CAST(FLOOR(CAST(cum_before AS DOUBLE) / $packBudget) AS BIGINT) AS bin,
@@ -4823,19 +4917,10 @@ object LlmQueries {
     * keep/ui/pr. */
   private def winnowCtesFrom(src: String, pfx: String = "",
       wordsSql: String = "string_split(text, ' ')"): String =
-    s"""${pfx}dw AS (SELECT doc_id, $wordsSql AS words FROM $src),
-         |${pfx}h0 AS (SELECT doc_id, list_transform(range(len(words) - 2), i ->
-         |         ${polyHashSql("words[i+1] || ' ' || words[i+2] || ' ' || words[i+3]")}) AS hs
-         |       FROM ${pfx}dw),
+    s"""${winnowHashCtes(pfx, src, wordsSql)},
          |${pfx}hw AS (SELECT doc_id, hs, least(4, len(hs)) AS wl
          |        FROM ${pfx}h0 WHERE len(hs) >= 1),
-         |${pfx}sel AS (SELECT doc_id,
-         |    list_distinct(list_transform(range(len(hs) - wl + 1), i ->
-         |      CAST(i + wl - list_position(
-         |          list_reverse(list_slice(hs, i + 1, i + wl)),
-         |          list_min(list_slice(hs, i + 1, i + wl))) AS BIGINT) * $P
-         |        + list_min(list_slice(hs, i + 1, i + wl)))) AS encs
-         |  FROM ${pfx}hw),
+         |${winnowSelCte(s"${pfx}sel", s"${pfx}hw")},
          |${pfx}u AS (SELECT DISTINCT doc_id, enc % $P AS h
          |      FROM (SELECT doc_id, unnest(encs) AS enc FROM ${pfx}sel)),
          |${pfx}keep AS (SELECT h
@@ -4860,18 +4945,9 @@ object LlmQueries {
     (s, d) => DedupOps.winnowFingerprints(docsWide(s, d),
       n = 3, w = 4).orderBy("doc_id", "pos", "fp"),
     Some(
-      s"""WITH dw AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-         |h0 AS (SELECT doc_id, list_transform(range(len(words) - 2), i ->
-         |         ${polyHashSql("words[i+1] || ' ' || words[i+2] || ' ' || words[i+3]")}) AS hs
-         |       FROM dw),
+      s"""WITH ${winnowHashCtes("", "documents")},
          |hw AS (SELECT doc_id, hs, least(4, len(hs)) AS wl FROM h0 WHERE len(hs) >= 1),
-         |sel AS (SELECT doc_id,
-         |    list_distinct(list_transform(range(len(hs) - wl + 1), i ->
-         |      CAST(i + wl - list_position(
-         |          list_reverse(list_slice(hs, i + 1, i + wl)),
-         |          list_min(list_slice(hs, i + 1, i + wl))) AS BIGINT) * $P
-         |        + list_min(list_slice(hs, i + 1, i + wl)))) AS encs
-         |  FROM hw)
+         |${winnowSelCte("sel", "hw")}
          |SELECT doc_id, CAST(enc // $P AS BIGINT) AS pos,
          |  CAST(enc % $P AS BIGINT) AS fp
          |FROM (SELECT doc_id, unnest(encs) AS enc FROM sel)
@@ -5003,18 +5079,9 @@ object LlmQueries {
         minShared = 2L).orderBy("doc_id")
     },
     Some(
-      s"""WITH dw AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
-         |h0 AS (SELECT doc_id, list_transform(range(len(words) - 2), i ->
-         |         ${polyHashSql("words[i+1] || ' ' || words[i+2] || ' ' || words[i+3]")}) AS hs
-         |       FROM dw),
+      s"""WITH ${winnowHashCtes("", "documents")},
          |hw AS (SELECT doc_id, hs, least(4, len(hs)) AS wl FROM h0 WHERE len(hs) >= 1),
-         |sel AS (SELECT doc_id,
-         |    list_distinct(list_transform(range(len(hs) - wl + 1), i ->
-         |      CAST(i + wl - list_position(
-         |          list_reverse(list_slice(hs, i + 1, i + wl)),
-         |          list_min(list_slice(hs, i + 1, i + wl))) AS BIGINT) * $P
-         |        + list_min(list_slice(hs, i + 1, i + wl)))) AS encs
-         |  FROM hw),
+         |${winnowSelCte("sel", "hw")},
          |u AS (SELECT DISTINCT doc_id, enc % $P AS fp
          |      FROM (SELECT doc_id, unnest(encs) AS enc FROM sel)),
          |bp AS (SELECT DISTINCT fp FROM u WHERE doc_id % 50 = 0),
@@ -5068,33 +5135,10 @@ object LlmQueries {
   val q166 = Q(
     "q166_rank_auc",
     (s, d) => {
-      val docs = docsOf(s, d)
-      val sc = graft.llm.Retrieval.bigramSurprisal(docs,
-        docs.filter(col("doc_id") % 4 === 0))
-        .select(col("doc_id"),
-          expr("surprisal_bits * 10000 div greatest(n_bigrams, 1)").as("s"))
-      val lab = TextAnalysis.gopherRules(docs, minWords = 30L)
-        .select(col("doc_id"), col("keep"))
-      TextAnalysis.rankAuc(sc.join(lab, "doc_id"), col("s"), col("keep"))
+      TextAnalysis.rankAuc(surprisalVsGopher(docsOf(s, d)), col("s"), col("keep"))
     },
     Some(
-      s"""WITH dw AS (
-         |  SELECT doc_id, coalesce(text, '') AS t,
-         |    list_filter(string_split(coalesce(text, ''), ' '),
-         |      w -> w <> '') AS ws
-         |  FROM documents),
-         |tr AS (SELECT ws FROM dw WHERE doc_id % 4 = 0),
-         |${surprisalModelCtes("dw", "bits")},
-         |ds AS (
-         |  SELECT d.doc_id,
-         |    CAST(coalesce(sc.bits, 0) * 10000
-         |      // greatest(coalesce(sc.n_bigrams, 0), 1) AS BIGINT) AS s
-         |  FROM documents d LEFT JOIN sc USING (doc_id)),
-         |${gopherMeasuresCte("m", "dw", "ws", DedupOps.Tokenizer.Ascii)},
-         |lab AS (
-         |  SELECT doc_id,
-         |    ${gopherKeepSql(6)} AS y
-         |  FROM m),
+      s"""WITH $surprisalGopherCtes,
          |g AS (
          |  SELECT s, CAST(sum(CASE WHEN y THEN 1 ELSE 0 END) AS BIGINT) AS np,
          |    CAST(sum(CASE WHEN y THEN 0 ELSE 1 END) AS BIGINT) AS nn
@@ -5131,13 +5175,7 @@ object LlmQueries {
         marginBp = 500L).orderBy("cell_id")
     },
     Some(
-      s"""WITH cents AS (
-         |  SELECT vec_id AS cell_id, embedding AS cvec FROM embeddings
-         |  WHERE vec_id < $ivfCells),
-         |asg AS (
-         |  SELECT e.vec_id, c.cell_id,
-         |         ${cosineSql("e.embedding", "c.cvec")} AS ccos
-         |  FROM embeddings e CROSS JOIN cents c),
+      s"""WITH ${ivfAsgCtes(withEmb = false)},
          |r AS (SELECT vec_id, cell_id, ccos,
          |        row_number() OVER (PARTITION BY vec_id
          |          ORDER BY ccos DESC, cell_id) AS rn
@@ -5173,18 +5211,8 @@ object LlmQueries {
       embOf(s, d), nCells = ivfCells, k = 5, minTf = 2L)
       .orderBy("cell_id", "rank"),
     Some(
-      s"""WITH cents AS (
-         |  SELECT vec_id AS cell_id, embedding AS cvec FROM embeddings
-         |  WHERE vec_id < $ivfCells),
-         |asg AS (
-         |  SELECT e.vec_id, c.cell_id,
-         |         ${cosineSql("e.embedding", "c.cvec")} AS ccos
-         |  FROM embeddings e CROSS JOIN cents c),
-         |assigned AS (
-         |  SELECT vec_id, cell_id AS cell FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY ccos DESC, cell_id) AS rn FROM asg)
-         |  WHERE rn = 1),
+      s"""WITH ${ivfAsgCtes(withEmb = false)},
+         |${ivfAssignedCte("asg", withEmb = false)},
          |tc AS (
          |  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
          |  FROM (SELECT doc_id, unnest(list_filter(string_split(text, ' '),
@@ -5238,8 +5266,7 @@ object LlmQueries {
     * drift. RECURSIVE (the CC closure) — callers open with
     * `WITH RECURSIVE $curationV8StageCtes`. */
   private lazy val curationV8StageCtes: String = {
-    s"""${gopherGateCtes(DedupOps.Tokenizer.Ascii)},
-         |gdocs AS (SELECT d.* FROM documents d JOIN gk USING (doc_id)),
+    s"""$gatedDocsCtes,
          |$gatedExactDedupCtes,
          |${shingleCtesWithCap(None, "kept")},
          |$minhashCandCtes,
@@ -5265,13 +5292,7 @@ object LlmQueries {
          |        FROM wdw),
          |whw AS (SELECT doc_id, is_b, hs, least(4, len(hs)) AS wl
          |        FROM wh0 WHERE len(hs) >= 1),
-         |wsel AS (SELECT doc_id, is_b,
-         |    list_distinct(list_transform(range(len(hs) - wl + 1), i ->
-         |      CAST(i + wl - list_position(
-         |          list_reverse(list_slice(hs, i + 1, i + wl)),
-         |          list_min(list_slice(hs, i + 1, i + wl))) AS BIGINT) * $P
-         |        + list_min(list_slice(hs, i + 1, i + wl)))) AS encs
-         |  FROM whw),
+         |${winnowSelCte("wsel", "whw", "doc_id, is_b")},
          |wu AS (SELECT DISTINCT doc_id, is_b, enc % $P AS fp
          |       FROM (SELECT doc_id, is_b, unnest(encs) AS enc FROM wsel)),
          |wbp AS (SELECT DISTINCT fp FROM wu WHERE is_b = 1),
@@ -5293,24 +5314,9 @@ object LlmQueries {
     "q170_curation_v8",
     (s, d) => {
       val docs = docsOf(s, d)
-      val gated = gopherGate(docs)
-      // the v7 lesson: checkpoint the reused subtree — the pair front
-      // scans `kept` three times (bands, both prefix joins), the keep
-      // join once more; and `nearKept` feeds the winnow probe, the
-      // decon semi-join and the report's three aggregate scans.
-      val kept = DedupOps.exactDedup(gated).localCheckpoint(true)
-      val pairs = DedupOps.editVerifiedPairs(kept, n = 3, perms = 32,
-        bands = 8, rowsPerBand = 4, prefixLen = 256,
-        maxDistPermille = 200L).select(col("id_a"), col("id_b"))
-      val nearKept = DedupOps.dedupedCorpus(kept,
-        DedupOps.duplicateClusters(pairs)).localCheckpoint(true)
-      val bench = docs.filter(inBench)
-      val flags = DedupOps.winnowDecontaminate(nearKept, bench,
-        n = 3, w = 4, minShared = 2L)
-      val clean = nearKept.join(
-        flags.filter(col("kept")).select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
-      TextAnalysis.corpusReport(clean, "source").orderBy("source")
+      val (_, _, nearKept) = v8Front(docs)
+      TextAnalysis.corpusReport(winnowDeconKept(nearKept, docs), "source")
+        .orderBy("source")
     },
     Some {
       s"""WITH RECURSIVE $curationV8StageCtes,
@@ -5358,18 +5364,8 @@ object LlmQueries {
         .orderBy("cell_id")
     },
     Some(
-      s"""WITH cents AS (
-         |  SELECT vec_id AS cell_id, embedding AS cvec FROM embeddings
-         |  WHERE vec_id < $ivfCells),
-         |asg AS (
-         |  SELECT e.vec_id, c.cell_id,
-         |         ${cosineSql("e.embedding", "c.cvec")} AS ccos
-         |  FROM embeddings e CROSS JOIN cents c),
-         |assigned AS (
-         |  SELECT vec_id, cell_id AS cell FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id
-         |      ORDER BY ccos DESC, cell_id) AS rn FROM asg)
-         |  WHERE rn = 1),
+      s"""WITH ${ivfAsgCtes(withEmb = false)},
+         |${ivfAssignedCte("asg", withEmb = false)},
          |ca AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_corpus
          |       FROM assigned GROUP BY 1),
          |ta AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_target
@@ -5433,19 +5429,8 @@ object LlmQueries {
     "q174_curation_funnel",
     (s, d) => {
       val docs = docsOf(s, d)
-      val gated = gopherGate(docs)
-      val kept = DedupOps.exactDedup(gated).localCheckpoint(true)
-      val pairs = DedupOps.editVerifiedPairs(kept, n = 3, perms = 32,
-        bands = 8, rowsPerBand = 4, prefixLen = 256,
-        maxDistPermille = 200L).select(col("id_a"), col("id_b"))
-      val nearKept = DedupOps.dedupedCorpus(kept,
-        DedupOps.duplicateClusters(pairs)).localCheckpoint(true)
-      val bench = docs.filter(inBench)
-      val flags = DedupOps.winnowDecontaminate(nearKept, bench,
-        n = 3, w = 4, minShared = 2L)
-      val clean = nearKept.join(
-        flags.filter(col("kept")).select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
+      val (gated, kept, nearKept) = v8Front(docs)
+      val clean = winnowDeconKept(nearKept, docs)
       TextAnalysis.stageFunnel(Seq(
         "raw" -> docs, "gopher_gate" -> gated, "exact_dedup" -> kept,
         "near_dedup" -> nearKept, "decontaminate" -> clean))
@@ -5537,11 +5522,7 @@ object LlmQueries {
         .orderBy("doc_id")
     },
     Some(
-      s"""WITH ndocs AS (
-         |  SELECT doc_id,
-         |    trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^\\p{L}\\p{N}\\s]', '', 'g'), '\\s+', ' ', 'g')) AS text
-         |  FROM documents),
+      s"""WITH $ndocsCte,
          |${winnowCtesFrom("ndocs")},
          |bp AS (SELECT DISTINCT h FROM u WHERE doc_id % 50 = 0),
          |shr AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shared
@@ -5633,61 +5614,14 @@ object LlmQueries {
     "q179_curation_v9",
     (s, d) => {
       val docs = docsOf(s, d)
-      val kept = DedupOps.exactThenNearDedup(docs, n = 3, perms = 32,
-        bands = 8, rowsPerBand = 4, threshold = 0.5,
-        tok = DedupOps.Tokenizer.Unicode).localCheckpoint(true)
-      val bench = docs.filter(inBench)
-      val flags = DedupOps.winnowDecontaminate(kept, bench, n = 3, w = 4,
-        minShared = 2L, tok = DedupOps.Tokenizer.Unicode)
-      val clean = kept.join(
-        flags.filter(col("kept")).select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
+      val clean = winnowDeconKept(unicodeExactNear(docs), docs,
+        DedupOps.Tokenizer.Unicode)
       TextAnalysis.corpusReport(clean, "lang").orderBy("lang")
     },
-    Some {
-      val p48 = graft.functions.LlmExprs.P48.toString
-      s"""WITH RECURSIVE norm0 AS (
-         |  SELECT doc_id, text,
-         |    trim(regexp_replace(regexp_replace(lower(text),
-         |      '[^\\p{L}\\p{N}\\s]', '', 'g'), '\\s+', ' ', 'g')) AS ntext
-         |  FROM documents),
-         |fp0 AS (
-         |  SELECT doc_id,
-         |    CASE WHEN length(ntext) = 0 THEN 0
-         |         ELSE ${polyHashSql("ntext")} END AS f1,
-         |    CASE WHEN length(ntext) = 0 THEN 0
-         |         ELSE ${polyHashSqlMod("ntext", p48)} END AS f2
-         |  FROM norm0 WHERE text IS NOT NULL),
-         |keepid AS (SELECT MIN(doc_id) AS doc_id FROM fp0 GROUP BY f1, f2),
-         |kept0 AS (SELECT n.doc_id, n.ntext AS text
-         |          FROM norm0 n JOIN keepid USING (doc_id)
-         |          UNION ALL
-         |          SELECT doc_id, CAST(NULL AS VARCHAR)
-         |          FROM documents WHERE text IS NULL),
-         |${shingleCtesWithCap(None, "kept0")},
-         |$minhashCandCtes,
-         |prs AS (
-         |  SELECT c.id_a, c.id_b FROM cand c
-         |  JOIN jacc j ON j.id_a = c.id_a AND j.id_b = c.id_b
-         |  WHERE j.jaccard >= 0.5),
-         |$ccClosureCtes,
-         |mk AS (SELECT d.doc_id FROM kept0 d
-         |       LEFT JOIN labels l ON d.doc_id = l.doc_id
-         |       WHERE l.doc_id IS NULL OR l.rep = d.doc_id),
-         |cdocs AS (SELECT n.doc_id, n.ntext AS text
-         |          FROM norm0 n JOIN mk USING (doc_id)),
-         |bdocs AS (SELECT doc_id, ntext AS text FROM norm0
-         |          WHERE $inBenchSql),
-         |${winnowCtesFrom("cdocs", "c")},
-         |${winnowCtesFrom("bdocs", "b")},
-         |wbp AS (SELECT DISTINCT h FROM bu),
-         |wshr AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shared
-         |         FROM cu JOIN wbp USING (h) GROUP BY 1),
-         |cids AS (SELECT mk.doc_id FROM mk LEFT JOIN wshr USING (doc_id)
-         |         WHERE coalesce(n_shared, 0) < 2),
-         |clean AS (SELECT d.* FROM documents d JOIN cids USING (doc_id)),
-         |${corpusReportSql("clean", "lang")}""".stripMargin
-    })
+    Some(
+      s"""WITH RECURSIVE $unicodeExactNearCtes,
+         |${unicodeWinnowReportSql(
+             s"bdocs AS (SELECT doc_id, ntext AS text FROM norm0\n          WHERE $inBenchSql)")}""".stripMargin))
 
   // q180 — BPE merge utilization under the persisted vocabulary: per
   // learned merge, how many final-stream tokens ARE its output symbol
@@ -5801,16 +5735,9 @@ object LlmQueries {
     "q183_curation_v10",
     (s, d) => {
       val docs = docsOf(s, d)
-      val gated = gopherGate(docs)
-      val kept = DedupOps.exactDedup(gated).localCheckpoint(true)
-      val pairs = DedupOps.editVerifiedPairs(kept, n = 3, perms = 32,
-        bands = 8, rowsPerBand = 4, prefixLen = 256,
-        maxDistPermille = 200L).select(col("id_a"), col("id_b"))
-      val nearKept = DedupOps.dedupedCorpus(kept,
-        DedupOps.duplicateClusters(pairs)).localCheckpoint(true)
-      val bench = docs.filter(inBench)
-      val scrubbed = DedupOps.winnowScrub(nearKept, bench, n = 3, w = 4,
-        minShared = 2L)
+      val (_, _, nearKept) = v8Front(docs)
+      val scrubbed = DedupOps.winnowScrub(nearKept, docs.filter(inBench),
+        n = 3, w = 4, minShared = 2L)
       val clean = nearKept.drop("text")
         .join(scrubbed.select(col("doc_id"), col("text")), "doc_id")
       TextAnalysis.corpusReport(clean, "source").orderBy("source")
@@ -5947,14 +5874,7 @@ object LlmQueries {
         "unicode" -> "winnow")
         .map { case (a, b) => pairRow(a, b) }.mkString("\nUNION ALL\n")
       s"""WITH $winnowPairCtes,
-         |afp AS (
-         |  SELECT doc_id,
-         |    CASE WHEN length(norm) = 0 THEN 0
-         |         ELSE ${polyHashSql("norm")} END AS f
-         |  FROM (SELECT doc_id,
-         |          regexp_replace(regexp_replace(text, '[^a-z0-9 ]', '', 'g'),
-         |                         ' +', ' ', 'g') AS norm
-         |        FROM documents)),
+         |${normFpCte("afp")},
          |fexact AS (SELECT doc_id FROM afp
          |           WHERE f IS NOT NULL AND f IN
          |             (SELECT f FROM afp WHERE $inBenchSql AND f IS NOT NULL)),
@@ -6089,18 +6009,8 @@ object LlmQueries {
   private def v8CleanDir(s: SparkSession, d: String): String =
     scratchDir("graft_v8_clean", d, "clean") { dir =>
       val docs = docsOf(s, d)
-      val gated = gopherGate(docs)
-      val kept = DedupOps.exactDedup(gated).localCheckpoint(true)
-      val pairs = DedupOps.editVerifiedPairs(kept, n = 3, perms = 32,
-        bands = 8, rowsPerBand = 4, prefixLen = 256,
-        maxDistPermille = 200L).select(col("id_a"), col("id_b"))
-      val nearKept = DedupOps.dedupedCorpus(kept,
-        DedupOps.duplicateClusters(pairs)).localCheckpoint(true)
-      val bench = docs.filter(inBench)
-      val flags = DedupOps.winnowDecontaminate(nearKept, bench,
-        n = 3, w = 4, minShared = 2L)
-      nearKept.join(flags.filter(col("kept")).select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
+      val (_, _, nearKept) = v8Front(docs)
+      winnowDeconKept(nearKept, docs)
         .write.mode("overwrite").parquet(s"$dir/clean")
     }
   val q190 = Q(
@@ -6222,19 +6132,10 @@ object LlmQueries {
     * array_join(∅) is ''). */
   private def scrubRoundCtes(p: String, src: String,
       wordsSql: String = "string_split(text, ' ')"): String =
-    s"""${p}dw AS (SELECT doc_id, $wordsSql AS words FROM $src),
-       |${p}h0 AS (SELECT doc_id, list_transform(range(len(words) - 2), i ->
-       |         ${polyHashSql("words[i+1] || ' ' || words[i+2] || ' ' || words[i+3]")}) AS hs
-       |       FROM ${p}dw),
+    s"""${winnowHashCtes(p, src, wordsSql)},
        |${p}hw AS (SELECT doc_id, hs, least(4, len(hs)) AS wl
        |        FROM ${p}h0 WHERE len(hs) >= 1),
-       |${p}sel AS (SELECT doc_id,
-       |    list_distinct(list_transform(range(len(hs) - wl + 1), i ->
-       |      CAST(i + wl - list_position(
-       |          list_reverse(list_slice(hs, i + 1, i + wl)),
-       |          list_min(list_slice(hs, i + 1, i + wl))) AS BIGINT) * $P
-       |        + list_min(list_slice(hs, i + 1, i + wl)))) AS encs
-       |  FROM ${p}hw),
+       |${winnowSelCte(s"${p}sel", s"${p}hw")},
        |${p}up AS (SELECT doc_id, CAST(enc // $P AS BIGINT) AS pos,
        |         CAST(enc % $P AS BIGINT) AS fp
        |       FROM (SELECT doc_id, unnest(encs) AS enc FROM ${p}sel)),
@@ -6392,24 +6293,14 @@ object LlmQueries {
       streamLanded(s, d, "q197")(b => DedupOps.exactDedup(b))(landed =>
         DedupOps.exactDedup(landed).select(outCols: _*).orderBy("doc_id"))
     },
-    Some {
-      val p48 = graft.functions.LlmExprs.P48.toString
-      s"""WITH fp0 AS (
-         |  SELECT doc_id,
-         |    CASE WHEN length(text) = 0 THEN 0
-         |         ELSE ${polyHashSql("text")} END AS f1,
-         |    CASE WHEN length(text) = 0 THEN 0
-         |         ELSE ${polyHashSqlMod("text", p48)} END AS f2
-         |  FROM documents),
-         |keepid AS (SELECT MIN(doc_id) AS doc_id FROM fp0
-         |           WHERE f1 IS NOT NULL GROUP BY f1, f2)
+    Some(
+      s"""WITH ${dualFpKeepCtes("documents")}
          |SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
          |FROM documents d JOIN keepid USING (doc_id)
          |UNION ALL
          |SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
          |FROM documents d WHERE d.text IS NULL
-         |ORDER BY doc_id""".stripMargin
-    })
+         |ORDER BY doc_id""".stripMargin))
 
   // q198 — UNICODE DSIR selection: q147's importance-resampled top-slice
   // with the hashed-bigram feature stream drawn from the
@@ -6449,66 +6340,25 @@ object LlmQueries {
     "q199_curation_v11",
     (s, d) => {
       val docs = docsOf(s, d)
-      // checkpoint the gated slice: every downstream consumer would
-      // otherwise re-evaluate the gate's normalization regex chain over
-      // the full corpus (the v7 checkpoint lesson; measured in SCALE.md)
-      val gated = gopherGate(docs, DedupOps.Tokenizer.Unicode)
-        .localCheckpoint(true)
-      val kept = DedupOps.exactThenNearDedup(gated, n = 3, perms = 32,
-        bands = 8, rowsPerBand = 4, threshold = 0.5,
-        tok = DedupOps.Tokenizer.Unicode).localCheckpoint(true)
-      val bench = docs.filter(inBench)
-      val flags = DedupOps.winnowDecontaminate(kept, bench, n = 3, w = 4,
-        minShared = 2L, tok = DedupOps.Tokenizer.Unicode)
-      val clean = kept.join(
-        flags.filter(col("kept")).select(col("doc_id")),
-        Seq("doc_id"), "left_semi")
+      val clean = winnowDeconKept(unicodeExactNear(unicodeGated(docs)), docs,
+        DedupOps.Tokenizer.Unicode)
       TextAnalysis.corpusReport(clean, "lang").orderBy("lang")
     },
-    Some {
-      val p48 = graft.functions.LlmExprs.P48.toString
+    Some(
       s"""WITH RECURSIVE ${gopherGateCtes(DedupOps.Tokenizer.Unicode)},
          |norm0 AS (
          |  SELECT d.doc_id, d.text,
-         |    trim(regexp_replace(regexp_replace(lower(d.text),
-         |      '[^\\p{L}\\p{N}\\s]', '', 'g'), '\\s+', ' ', 'g')) AS ntext
+         |    ${unicodeNormSql("d.text", 6)} AS ntext
          |  FROM documents d JOIN gk USING (doc_id)),
-         |fp0 AS (
-         |  SELECT doc_id,
-         |    CASE WHEN length(ntext) = 0 THEN 0
-         |         ELSE ${polyHashSql("ntext")} END AS f1,
-         |    CASE WHEN length(ntext) = 0 THEN 0
-         |         ELSE ${polyHashSqlMod("ntext", p48)} END AS f2
-         |  FROM norm0 WHERE text IS NOT NULL),
-         |keepid AS (SELECT MIN(doc_id) AS doc_id FROM fp0 GROUP BY f1, f2),
+         |${dualFpKeepCtes("norm0 WHERE text IS NOT NULL", "ntext")},
          |kept0 AS (SELECT n.doc_id, n.ntext AS text
          |          FROM norm0 n JOIN keepid USING (doc_id)),
-         |${shingleCtesWithCap(None, "kept0")},
-         |$minhashCandCtes,
-         |prs AS (
-         |  SELECT c.id_a, c.id_b FROM cand c
-         |  JOIN jacc j ON j.id_a = c.id_a AND j.id_b = c.id_b
-         |  WHERE j.jaccard >= 0.5),
+         |${minhashPrsCtes("kept0")},
          |$ccClosureCtes,
-         |mk AS (SELECT d.doc_id FROM kept0 d
-         |       LEFT JOIN labels l ON d.doc_id = l.doc_id
-         |       WHERE l.doc_id IS NULL OR l.rep = d.doc_id),
-         |cdocs AS (SELECT n.doc_id, n.ntext AS text
-         |          FROM norm0 n JOIN mk USING (doc_id)),
-         |bdocs AS (SELECT doc_id,
-         |            trim(regexp_replace(regexp_replace(lower(text),
-         |              '[^\\p{L}\\p{N}\\s]', '', 'g'), '\\s+', ' ', 'g')) AS text
-         |          FROM documents WHERE $inBenchSql),
-         |${winnowCtesFrom("cdocs", "c")},
-         |${winnowCtesFrom("bdocs", "b")},
-         |wbp AS (SELECT DISTINCT h FROM bu),
-         |wshr AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shared
-         |         FROM cu JOIN wbp USING (h) GROUP BY 1),
-         |cids AS (SELECT mk.doc_id FROM mk LEFT JOIN wshr USING (doc_id)
-         |         WHERE coalesce(n_shared, 0) < 2),
-         |clean AS (SELECT d.* FROM documents d JOIN cids USING (doc_id)),
-         |${corpusReportSql("clean", "lang")}""".stripMargin
-    })
+         |${unicodeWinnowReportSql(
+             s"""bdocs AS (SELECT doc_id,
+                |            ${unicodeNormSql("text", 14)} AS text
+                |          FROM documents WHERE $inBenchSql)""".stripMargin)}""".stripMargin))
 
   // q200 — classifier calibration/reliability report: q112's student
   // bucketed along the teacher's CONTINUOUS score axis (qs ∈ [0,10⁴],
@@ -6893,21 +6743,7 @@ object LlmQueries {
     "q211_curation_v13",
     (s, d) => {
       val docs = docsWide(s, d)
-      // checkpoint each stage boundary: every stage feeds ONE consumer
-      // downstream but its own expression chain (regex gate, window
-      // hashes, scrub folds) must not be re-planned into the next
-      // stage's self-joins (the v7 checkpoint lesson)
-      val gated = gopherGate(docs, DedupOps.Tokenizer.Unicode)
-        .localCheckpoint(true)
-      val rew = DedupOps.spanExtentDedupApply(gated, width = 8)
-        .select(col("doc_id"), col("text_clean").as("text"))
-        .localCheckpoint(true)
-      val bench = docs.filter(inBench)
-        .select(col("doc_id"), col("text"))
-      val scrubbed = DedupOps.winnowScrubVerified(
-        rew.filter(!inBench), bench, n = 3, w = 4,
-        minShared = 2L, tok = DedupOps.Tokenizer.UnicodeAligned)
-        .select(col("doc_id"), col("text")).localCheckpoint(true)
+      val scrubbed = rewriteScrubFront(docs)
       val sel = Retrieval.dsirSelect(scrubbed,
         docs.filter(col("doc_id") % 4 === 0), buckets = 1024,
         keepPermille = 500L, tok = DedupOps.Tokenizer.Unicode)
@@ -7023,43 +6859,11 @@ object LlmQueries {
   // a 1-row aggregate, then stack() over the tiny row. Oracle: the
   // merge-round chain already materializes the word-type table at every
   // round — rung k reads bt{k} directly.
+  private val bpeLadderRungs = Seq(2, 5, 10)
   val q214 = Q(
     "q214_vocab_size_ladder",
-    (s, d) => {
-      val docs = docsOf(s, d)
-      val merges = bpeMergesFor(s, d)
-      val rungs = Seq(2, 5, 10)
-      val nw = size(filter(TextFunctions.words(coalesce(col("text"), lit(""))),
-        w => w =!= "")).cast("long")
-      val cols = nw.as("nw") +:
-        rungs.map(k => Bpe.tokenCount(col("text"), merges.take(k)).as(s"nt_$k"))
-      val aggs = sum(col("nw")).as("n_words") +:
-        rungs.map(k => sum(col(s"nt_$k")).as(s"t_$k"))
-      docs.select(cols: _*)
-        .agg(aggs.head, aggs.tail: _*)
-        .selectExpr("n_words",
-          "stack(" + rungs.size + ", " +
-            rungs.map(k => s"CAST($k AS BIGINT), t_$k").mkString(", ") +
-            ") AS (k, n_tokens)")
-        .select(col("k"), col("n_words"), col("n_tokens"),
-          expr("n_tokens * 1000 div greatest(n_words, 1)")
-            .as("fertility_permille"))
-        .orderBy("k")
-    },
-    Some {
-      def rung(k: Int): String =
-        s"""SELECT CAST($k AS BIGINT) AS k,
-           |  CAST(sum(len(string_split(b.toks, '$bpeSep'))) AS BIGINT) AS n_tokens
-           |FROM dw JOIN bt$k b USING (word)""".stripMargin
-      s"""WITH $bpeChainCtes,
-         |dw AS MATERIALIZED (SELECT unnest(list_filter(string_split(coalesce(text, ''), ' '),
-         |         w -> w <> '')) AS word FROM documents),
-         |nw AS (SELECT CAST(count(*) AS BIGINT) AS n_words FROM dw),
-         |ladder AS (${rung(2)} UNION ALL ${rung(5)} UNION ALL ${rung(10)})
-         |SELECT k, n_words, n_tokens,
-         |  n_tokens * 1000 // greatest(n_words, 1) AS fertility_permille
-         |FROM ladder CROSS JOIN nw ORDER BY k""".stripMargin
-    })
+    (s, d) => bpeLadder(docsOf(s, d), bpeMergesFor(s, d), bpeLadderRungs),
+    Some(bpeLadderOracle(bpeChainCtes, "", bpeLadderRungs)))
 
   // q215 — the streaming QUALITY-GATE commit path (fifth streaming qNN):
   // dedup (q197), decon (q203), selection scoring (q208) and index
@@ -7098,47 +6902,17 @@ object LlmQueries {
   // SFs that can happen below k, so a post-exhaustion round must carry
   // the fused table forward, not annihilate it with an empty CROSS JOIN.
   private val deepK = 80
+  private val deepLadderRungs = Seq(16, 64, deepK)
   private def bpeDeepIndexDir(s: SparkSession, d: String): String =
     scratchDir("graft_bpe_deep", d, "params") { dir =>
       graft.llm.BpeIndex.build(docsOf(s, d), dir, deepK)
     }
   val q217 = Q(
     "q217_production_ladder",
-    (s, d) => {
-      val docs = docsWide(s, d)
-      val merges = graft.llm.BpeIndex.load(s, bpeDeepIndexDir(s, d))
-      val rungs = Seq(16, 64, deepK)
-      val nw = size(filter(TextFunctions.words(coalesce(col("text"), lit(""))),
-        w => w =!= "")).cast("long")
-      val cols = nw.as("nw") +:
-        rungs.map(k => Bpe.tokenCount(col("text"), merges.take(k)).as(s"nt_$k"))
-      val aggs = sum(col("nw")).as("n_words") +:
-        rungs.map(k => sum(col(s"nt_$k")).as(s"t_$k"))
-      docs.select(cols: _*)
-        .agg(aggs.head, aggs.tail: _*)
-        .selectExpr("n_words",
-          "stack(" + rungs.size + ", " +
-            rungs.map(k => s"CAST($k AS BIGINT), t_$k").mkString(", ") +
-            ") AS (k, n_tokens)")
-        .select(col("k"), col("n_words"), col("n_tokens"),
-          expr("n_tokens * 1000 div greatest(n_words, 1)")
-            .as("fertility_permille"))
-        .orderBy("k")
-    },
-    Some {
-      def rung(k: Int): String =
-        s"""SELECT CAST($k AS BIGINT) AS k,
-           |  CAST(sum(len(string_split(b.toks, '$bpeSep'))) AS BIGINT) AS n_tokens
-           |FROM pdw JOIN pbt$k b USING (word)""".stripMargin
-      s"""WITH ${bpeChainCtesOver(bpeWordSrc, "p", deepK)},
-         |pdw AS MATERIALIZED (SELECT unnest(list_filter(string_split(coalesce(text, ''), ' '),
-         |         w -> w <> '')) AS word FROM documents),
-         |pnw AS (SELECT CAST(count(*) AS BIGINT) AS n_words FROM pdw),
-         |ladder AS (${rung(16)} UNION ALL ${rung(64)} UNION ALL ${rung(deepK)})
-         |SELECT k, n_words, n_tokens,
-         |  n_tokens * 1000 // greatest(n_words, 1) AS fertility_permille
-         |FROM ladder CROSS JOIN pnw ORDER BY k""".stripMargin
-    })
+    (s, d) => bpeLadder(docsWide(s, d),
+      graft.llm.BpeIndex.load(s, bpeDeepIndexDir(s, d)), deepLadderRungs),
+    Some(bpeLadderOracle(bpeChainCtesOver(bpeWordSrc, "p", deepK), "p",
+      deepLadderRungs)))
 
   // q216 — the BPE REBUILD lifecycle, hash-checked end-to-end (q129
   // checks build→load; the rebuild operator would otherwise be
@@ -7423,16 +7197,7 @@ object LlmQueries {
       val docs = docsOf(s, d)
       val codec = graft.llm.UnigramLm.codecOf(ugVocabFor(s, d), ugChunkLen,
         ugPieceLen)
-      docs.groupBy("source")
-        .agg(
-          sum(graft.llm.UnigramLm.chunkCount(col("text"), ugChunkLen))
-            .as("n_chunks"),
-          sum(graft.llm.UnigramLm.tokenCount(col("text"), codec))
-            .as("n_tokens"))
-        .select(col("source"), col("n_chunks"), col("n_tokens"),
-          expr("n_tokens * 1000 div greatest(n_chunks, 1)")
-            .as("fertility_permille"))
-        .orderBy("source")
+      ugFertilityBySource(docs, codec)
     },
     Some(
       s"""WITH $ugLearnCtes,
@@ -7467,16 +7232,7 @@ object LlmQueries {
       val docs = docsOf(s, d)
       val codec2 = graft.llm.UnigramLm.codecOf(ugVocab2For(s, d), ugChunkLen,
         ugPieceLen)
-      docs.groupBy("source")
-        .agg(
-          sum(graft.llm.UnigramLm.chunkCount(col("text"), ugChunkLen))
-            .as("n_chunks"),
-          sum(graft.llm.UnigramLm.tokenCount(col("text"), codec2))
-            .as("n_tokens"))
-        .select(col("source"), col("n_chunks"), col("n_tokens"),
-          expr("n_tokens * 1000 div greatest(n_chunks, 1)")
-            .as("fertility_permille"))
-        .orderBy("source")
+      ugFertilityBySource(docs, codec2)
     },
     Some(
       s"""WITH $ugLearnCtes,
@@ -7504,16 +7260,8 @@ object LlmQueries {
       val (ps, cl, mpl) = graft.llm.UnigramIndex.loadWithGeometry(s,
         unigramIndexDir(s, d))
       val codec = graft.llm.UnigramLm.codecOf(ps, cl, mpl)
-      docsOf(s, d).filter(col("doc_id") % 2 === 0)
-        .groupBy("source")
-        .agg(
-          sum(graft.llm.UnigramLm.chunkCount(col("text"), cl)).as("n_chunks"),
-          sum(graft.llm.UnigramLm.tokenCount(col("text"), codec))
-            .as("n_tokens"))
-        .select(col("source"), col("n_chunks"), col("n_tokens"),
-          expr("n_tokens * 1000 div greatest(n_chunks, 1)")
-            .as("fertility_permille"))
-        .orderBy("source")
+      ugFertilityBySource(docsOf(s, d).filter(col("doc_id") % 2 === 0),
+        codec, cl)
     },
     Some(
       s"""WITH $ugLearnCtes,
@@ -7611,20 +7359,9 @@ object LlmQueries {
       s"""WITH $ugLearnCtes,
          |${ugDpCtes("u", "uvc", "uunk", "uch")},
          |${ugDocTokCtes("documents")},
-         |t AS (
-         |  SELECT d.doc_id,
-         |    (CASE WHEN length(text) = 0 THEN 0
-         |          ELSE ${polyHashSql("text")} END) % $packShards AS shard,
-         |    COALESCE(udt.n_tokens, 0) AS n_tokens
-         |  FROM documents d LEFT JOIN udt USING (doc_id)),
-         |c AS (
-         |  SELECT *, COALESCE(SUM(n_tokens) OVER (PARTITION BY shard
-         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-         |    0) AS cum_before
-         |  FROM t)
-         |SELECT shard, CAST(FLOOR(CAST(cum_before AS DOUBLE) / $packBudget) AS BIGINT) AS bin,
-         |       COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-         |FROM c GROUP BY 1, 2 ORDER BY shard, bin""".stripMargin))
+         |${packCtes("d.doc_id", "COALESCE(udt.n_tokens, 0)",
+             "documents d LEFT JOIN udt USING (doc_id)")}
+         |${packBinsSql("c", "shard, bin")}""".stripMargin))
 
   /** Per-DOCUMENT unigram token mass off relation `src` (doc_id, text):
     * the doc's chunk stream joined to the DP chain's per-chunk piece
@@ -7790,17 +7527,7 @@ object LlmQueries {
     "q231_curation_v14",
     (s, d) => {
       val docs = docsOf(s, d)
-      val gated = gopherGate(docs, DedupOps.Tokenizer.Unicode)
-        .localCheckpoint(true)
-      val rew = DedupOps.spanExtentDedupApply(gated, width = 8)
-        .select(col("doc_id"), col("text_clean").as("text"))
-        .localCheckpoint(true)
-      val bench = docs.filter(inBench)
-        .select(col("doc_id"), col("text"))
-      val scrubbed = DedupOps.winnowScrubVerified(
-        rew.filter(!inBench), bench, n = 3, w = 4,
-        minShared = 2L, tok = DedupOps.Tokenizer.UnicodeAligned)
-        .select(col("doc_id"), col("text")).localCheckpoint(true)
+      val scrubbed = rewriteScrubFront(docs)
       val codec = graft.llm.UnigramLm.codecOf(ugVocabFor(s, d), ugChunkLen,
         ugPieceLen)
       val sel = TextAnalysis.mixtureSampleTokensBy(
@@ -7832,13 +7559,7 @@ object LlmQueries {
          |quotas AS (SELECT source,
          |             CAST((CAST(5000 AS HUGEINT) * w) // w_total AS BIGINT) AS quota
          |           FROM w CROSS JOIN tot),
-         |ranked AS (
-         |  SELECT doc_id, source, n_tokens,
-         |    CAST(sum(n_tokens) OVER (
-         |      PARTITION BY source
-         |      ORDER BY ${polyHashSql("'graft#' || coalesce(text, '')")}, doc_id
-         |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-         |  FROM toks),
+         |${fillOrderCte("ranked", "doc_id, source, n_tokens", "toks", rnk = false)},
          |seld AS (SELECT r.doc_id FROM ranked r JOIN quotas q USING (source)
          |         WHERE r.cum_tokens - r.n_tokens < q.quota),
          |pt AS (SELECT t.doc_id,
@@ -7850,9 +7571,7 @@ object LlmQueries {
          |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
          |    0) AS cum_before
          |  FROM pt)
-         |SELECT shard, CAST(FLOOR(CAST(cum_before AS DOUBLE) / $packBudget) AS BIGINT) AS bin,
-         |       COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-         |FROM pc GROUP BY 1, 2 ORDER BY shard, bin""".stripMargin))
+         |${packBinsSql("pc", "shard, bin")}""".stripMargin))
 
   // ------------------------------------------ unigram EM learn w/ prune
 
@@ -7983,16 +7702,7 @@ object LlmQueries {
       val em = ugEmFor(s, d).last
       val codec = graft.llm.UnigramLm.codecPriced(em.vocab, ugChunkLen,
         ugPieceLen, em.usageTotal)
-      docsOf(s, d).groupBy("source")
-        .agg(
-          sum(graft.llm.UnigramLm.chunkCount(col("text"), ugChunkLen))
-            .as("n_chunks"),
-          sum(graft.llm.UnigramLm.tokenCount(col("text"), codec))
-            .as("n_tokens"))
-        .select(col("source"), col("n_chunks"), col("n_tokens"),
-          expr("n_tokens * 1000 div greatest(n_chunks, 1)")
-            .as("fertility_permille"))
-        .orderBy("source")
+      ugFertilityBySource(docsOf(s, d), codec)
     },
     Some(
       s"""WITH $ugEmCtesAll,
@@ -8163,16 +7873,8 @@ object LlmQueries {
       val (ps, cl, mpl, tot) = graft.llm.UnigramIndex.loadModel(s,
         unigramEmIndexDir(s, d))
       val codec = graft.llm.UnigramLm.codecPriced(ps, cl, mpl, tot)
-      docsOf(s, d).filter(col("doc_id") % 2 === 1)
-        .groupBy("source")
-        .agg(
-          sum(graft.llm.UnigramLm.chunkCount(col("text"), cl)).as("n_chunks"),
-          sum(graft.llm.UnigramLm.tokenCount(col("text"), codec))
-            .as("n_tokens"))
-        .select(col("source"), col("n_chunks"), col("n_tokens"),
-          expr("n_tokens * 1000 div greatest(n_chunks, 1)")
-            .as("fertility_permille"))
-        .orderBy("source")
+      ugFertilityBySource(docsOf(s, d).filter(col("doc_id") % 2 === 1),
+        codec, cl)
     },
     Some(
       s"""WITH $ugEmCtesAll,

@@ -86,6 +86,11 @@ object RetryingSink {
    * production sender actually runs); `jitterMs` adds the deterministic
    * per-partition spread of [[jitterOf]] on top. Defaults preserve the
    * reference's exact uncapped, unjittered curve.
+   *
+   * Bad settings fail here, when the sink is built, not inside a task:
+   * a negative `maxRetries` would skip the producer and count every row
+   * as dropped, a negative `maxBackoffMs` would make the first retry's
+   * sleep throw, and a `chunkSize` below 1 would fail every task.
    */
   def foreachBatchFn(
       producer: Producer,
@@ -95,7 +100,10 @@ object RetryingSink {
       sleeper: Long => Unit = Thread.sleep,
       chunkSize: Int = 10000,
       maxBackoffMs: Long = Long.MaxValue,
-      jitterMs: Long = 0L): (DataFrame, Long) => Unit =
+      jitterMs: Long = 0L): (DataFrame, Long) => Unit = {
+    require(maxRetries >= 0, s"maxRetries must be >= 0, got $maxRetries")
+    require(chunkSize >= 1, s"chunkSize must be >= 1, got $chunkSize")
+    require(maxBackoffMs >= 0, s"maxBackoffMs must be >= 0, got $maxBackoffMs")
     (batch: DataFrame, _: Long) =>
       batch.foreachPartition { it: Iterator[Row] =>
         val pid = Option(org.apache.spark.TaskContext.get())
@@ -124,4 +132,5 @@ object RetryingSink {
           if (pending.nonEmpty) metrics.dropped.add(pending.size)
         }
       }
+  }
 }

@@ -703,6 +703,34 @@ class StreamingSpec extends SparkSpec {
       "uncapped small attempts keep the reference curve")
   }
 
+  test("B4 retrying sink rejects bad settings when built; maxRetries = 0 sends once") {
+    val metrics = RetryingSink.newMetrics(spark)
+    val calls = spark.sparkContext.longAccumulator("producer_calls")
+    val okProducer: RetryingSink.Producer = (_, rows) => {
+      calls.add(rows.size); Seq.empty
+    }
+    // each bad value fails at construction, before any batch or producer runs
+    for ((name, build) <- Seq[(String, () => Any)](
+        "maxRetries" -> (() => RetryingSink.foreachBatchFn(okProducer, metrics,
+          maxRetries = -1, sleeper = _ => ())),
+        "chunkSize" -> (() => RetryingSink.foreachBatchFn(okProducer, metrics,
+          chunkSize = 0, sleeper = _ => ())),
+        "maxBackoffMs" -> (() => RetryingSink.foreachBatchFn(okProducer, metrics,
+          maxBackoffMs = -1L, sleeper = _ => ())))) {
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains(name), e.getMessage)
+    }
+    assert(calls.value === 0L)
+    assert(metrics.sent.value === 0L && metrics.dropped.value === 0L)
+    // zero retries is valid: every row goes to the producer exactly once
+    val fn = RetryingSink.foreachBatchFn(okProducer, metrics,
+      maxRetries = 0, sleeper = _ => ())
+    fn(Seq(("1", "a"), ("2", "b"), ("3", "c")).toDF("id", "name").coalesce(1), 0L)
+    assert(calls.value === 3L)
+    assert(metrics.sent.value === 3L)
+    assert(metrics.retried.value === 0L && metrics.dropped.value === 0L)
+  }
+
   test("retry exhaustion is observable from Monitor (the reference's dropped counter)") {
     import graft.streaming.Monitor
     val metrics = RetryingSink.newMetrics(spark)
