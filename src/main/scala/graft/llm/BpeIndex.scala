@@ -186,10 +186,10 @@ object BpeIndex {
    * the [[IvfIndex.rebuild]] lifecycle for the tokenizer. Rebuild, not
    * append: BPE merges are order-sensitive (see object scaladoc), so
    * vocabulary evolution replaces the whole artifact. Both tables stage
-   * under `__graft_tmp` and go live via [[StagedSwap.swapAll]] — a crash
+   * and go live together via [[graft.pipeline.DirSwap.swap]] — a crash
    * mid-swap can never leave NEW params over OLD merges (the k/sep/sig
    * torn-index case [[load]] detects but a swap should never create),
-   * and a phase-1 failure rolls back onto the previous version. The old
+   * and a failed swap rolls back onto the previous version. The old
    * copies are deleted only after both tables are live. */
   def rebuild(docs: DataFrame, dir: String, k: Int,
       pretok: Bpe.PreTok = Bpe.PreTok.Whitespace): Unit = {

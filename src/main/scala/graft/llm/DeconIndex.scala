@@ -251,7 +251,7 @@ object DeconIndex {
    * least one new parquet file per touched table, and after enough
    * benchmark revisions the probes' few-MB reads pay more in file
    * opens than bytes. [[graft.pipeline.Maintenance.compactDir]]'s
-   * double-rename swap keeps racing readers on old-or-new, never a
+   * staged swap keeps racing readers on old-or-new, never a
    * mix; row content — and therefore every probe answer — is
    * unchanged. Scheduled-job maintenance, never the append path.
    */

@@ -207,8 +207,8 @@ object DedupIndex {
    * so a year of daily appends turns each probe's equi-joins into
    * hundreds of footer reads and tiny scan tasks — the file COUNT, not
    * the bytes, becomes the cost. Rewrites each table to `targetFiles`
-   * files via [[graft.pipeline.Maintenance.compactDir]]'s double-rename
-   * swap (readers racing the swap see old or new, never a mix). Row
+   * files via [[graft.pipeline.Maintenance.compactDir]]'s staged swap
+   * (readers racing the swap see old or new, never a mix). Row
    * content — and therefore every probe answer — is unchanged. Run it
    * like any table maintenance job: on a schedule, not in the append
    * path.

@@ -1,5 +1,7 @@
 package graft.llm
 
+import graft.pipeline.DirSwap
+import graft.pipeline.DirSwap.step
 import org.apache.hadoop.fs.FileSystem
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 
@@ -16,10 +18,10 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
  * failing loudly at [[open]]:
  *
  *  - [[build]]: write the live tables, stamp them, manifest last;
- *  - [[rebuild]]: clear stale staging, write and stamp `__graft_tmp`
- *    copies, [[StagedSwap.swapAll]] them live, manifest last; a failure
- *    before the swap removes the staging copies and leaves the live
- *    version untouched;
+ *  - [[rebuild]]: recover every table ([[DirSwap.recover]]), write and
+ *    stamp the staged copies, [[DirSwap.swap]] them live, manifest last;
+ *    a failure before the swap removes the staged copies and leaves the
+ *    live version untouched;
  *  - [[compact]]: rewrite each table's files and re-stamp it from the
  *    manifest (layout changes, content and version do not);
  *  - [[adopt]]: bless a pre-manifest artifact after the index's own
@@ -27,8 +29,8 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
  *
  * `kind` names the index in errors ("BPE index"); its first word,
  * lower-cased, prefixes the lease job names ("bpe rebuild"). `tables` is
- * the index's table set: what [[adopt]] stamps, what a [[rebuild]] sweeps
- * staging copies of, and what [[compact]] rewrites by default.
+ * the index's table set: what [[adopt]] stamps, what a [[rebuild]]
+ * recovers, and what [[compact]] rewrites by default.
  */
 private[graft] final class IndexLifecycle(val kind: String,
     val tables: Seq[String]) {
@@ -44,35 +46,31 @@ private[graft] final class IndexLifecycle(val kind: String,
   def build(spark: SparkSession, dir: String, verb: String = "build")(
       write: Out => Unit): Unit =
     WriterLease.withLease(spark, dir, job(verb)) {
-      val out = new Out(dir, "")
+      val out = new Out(dir, staged = false)
       write(out)
       val fs = fsOf(spark, dir)
-      val v = stampEach(fs, dir, out.written, "")
+      val v = stampEach(fs, out)
       writeManifest(fs, dir, out.written.map(_ -> v).toMap)
       step("manifest")
     }
 
-  /** Staged rebuild of an existing index: `write` stages its tables under
-    * `__graft_tmp`; they are stamped, swapped live together and named in
-    * the manifest (other manifest entries keep their versions). Staging
-    * copies of every table are swept before, and after a failure. */
+  /** Staged rebuild of an existing index: `write` stages its tables; they
+    * are stamped, swapped live together and named in the manifest (other
+    * manifest entries keep their versions). Every table is recovered
+    * before, and its staged copy dropped after a failure before the swap. */
   def rebuild(spark: SparkSession, dir: String)(write: Out => Unit): Unit =
     WriterLease.withLease(spark, dir, job("rebuild")) {
       val fs = fsOf(spark, dir)
-      StagedSwap.cleanupTmp(fs, dir, tables)
-      var staged = false
-      try {
-        val out = new Out(dir, StagedSwap.TmpSuffix)
-        write(out)
-        val v = stampEach(fs, dir, out.written, StagedSwap.TmpSuffix)
-        staged = true
-        StagedSwap.swapAll(fs, dir, out.written)
-        writeManifest(fs, dir, readManifest(fs, dir).getOrElse(Map.empty) ++
-          out.written.map(_ -> v))
-        step("manifest")
-      } finally {
-        if (!staged) StagedSwap.cleanupTmp(fs, dir, tables)
-      }
+      val all = tables.map(t => s"$dir/$t")
+      all.foreach(DirSwap.recover(fs, _))
+      val out = new Out(dir, staged = true)
+      val v =
+        try { write(out); stampEach(fs, out) }
+        catch { case e: Throwable => all.foreach(DirSwap.recover(fs, _)); throw e }
+      DirSwap.swap(fs, out.written.map(t => s"$dir/$t"))
+      writeManifest(fs, dir, readManifest(fs, dir).getOrElse(Map.empty) ++
+        out.written.map(_ -> v))
+      step("manifest")
     }
 
   /** Rewrite each of `which` with `compactTable(path)` and re-stamp it
@@ -127,11 +125,11 @@ private[graft] final class IndexLifecycle(val kind: String,
   def staleTables(spark: SparkSession, dir: String): (Boolean, Seq[String]) =
     SwapManifest.staleTables(fsOf(spark, dir), dir)
 
-  private def stampEach(fs: FileSystem, dir: String, ts: Seq[String],
-      suffix: String): String = {
+  /** Stamp every table `out` wrote with one fresh version. */
+  private def stampEach(fs: FileSystem, out: Out): String = {
     val v = SwapManifest.newVersion()
-    ts.foreach { t =>
-      SwapManifest.stampTables(fs, dir, Seq(t), v, suffix)
+    out.written.foreach { t =>
+      SwapManifest.stamp(fs, out.path(t), v)
       step(s"stamp $t")
     }
     v
@@ -140,15 +138,16 @@ private[graft] final class IndexLifecycle(val kind: String,
 
 private[graft] object IndexLifecycle {
 
-  /** Where a build writes: the live table directories, or the
-    * `__graft_tmp` staging copies of a rebuild. Each finished table is a
+  /** Where a build writes: the live table directories, or the staged
+    * copies ([[DirSwap.staged]]) of a rebuild. Each finished table is a
     * protocol step, and the tables written are the ones stamped. */
-  final class Out private[IndexLifecycle] (dir: String, suffix: String) {
+  final class Out private[IndexLifecycle] (dir: String, staged: Boolean) {
     private[IndexLifecycle] var written = Vector.empty[String]
 
     /** This write's path for `table` (to read back a table written
       * earlier in the same build). */
-    def path(table: String): String = s"$dir/$table$suffix"
+    def path(table: String): String =
+      if (staged) DirSwap.staged(s"$dir/$table") else s"$dir/$table"
 
     def write(table: String)(f: String => Unit): Unit = {
       f(path(table))
@@ -160,13 +159,9 @@ private[graft] object IndexLifecycle {
       write(table)(df.write.mode("overwrite").parquet(_))
   }
 
-  /** Test seam for crash and fault injection: receives the name of each
-    * protocol step ("write t", "stamp t", "swap t", "swapped", "manifest",
-    * "compact t") right after the step completes. */
-  private[graft] val stepHook =
-    new scala.util.DynamicVariable[String => Unit](_ => ())
-
-  private[llm] def step(name: String): Unit = stepHook.value(name)
+  /** [[DirSwap.stepHook]], which also receives this protocol's own steps
+    * ("write t", "stamp t", "manifest", "compact t"). */
+  private[graft] val stepHook = DirSwap.stepHook
 
   /** FNV-1a over `fields`, each followed by `sep` — the content-signature
     * hash of the persisted indexes. Hand-rolled, not JVM `hashCode`, so

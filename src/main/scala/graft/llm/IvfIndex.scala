@@ -147,7 +147,7 @@ object IvfIndex {
     * lands one file set per touched cell per batch): rewrites
     * `assignments` — and `pq_codes` when the PQ layout is present — to
     * one file per cell via [[graft.pipeline.Maintenance
-    * .compactHivePartitioned]]'s table-level double-rename swap. Row
+    * .compactHivePartitioned]]'s table-level swap. Row
     * content, and therefore every search answer, is unchanged.
     * `centroids`/`pq_codebooks` are single-write tables and never need
     * it. Run on a schedule, not in the append path. */
@@ -169,14 +169,14 @@ object IvfIndex {
    *
    * Atomicity: every new table is fully WRITTEN to a staging directory
    * first, then the tables swap via [[IndexLifecycle.rebuild]] (stamped
-   * staging, [[StagedSwap]] with phase-1 rollback, manifest last) — a
+   * staging, [[graft.pipeline.DirSwap]] with rollback, manifest last) — a
    * racing reader sees old-or-new files, never a mix of a table, and a
    * torn set fails the version check. The stored
    * vectors are checkpointed BEFORE any rename so no lazy scan can list
    * a directory mid-swap ([[append]]'s lineage-cut reasoning). The
    * tables swap sequentially — SINGLE WRITER per index, and searches
    * in flight across the swap window should be retried (the same
-   * contract as [[graft.pipeline.Maintenance.compactDir]] documents).
+   * contract as [[graft.pipeline.DirSwap]] documents).
    *
    * Search answers: at full probes (nprobe = nCells) the exact-cosine
    * top-k is invariant to the re-partitioning — pinned in

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 /**
  * Per-table version stamps + a last-written manifest — the torn-swap
  * DETECTION layer of the persisted index lifecycles, written by
- * [[IndexLifecycle]]. [[StagedSwap]] makes a mid-flight crash
+ * [[IndexLifecycle]]. [[graft.pipeline.DirSwap]] makes a mid-flight crash
  * RECOVERABLE (every table stays on some complete version); this makes
  * it DETECTABLE: each build/rebuild stamps every table directory with a
  * version file (underscore-prefixed — Spark's file index ignores it)
@@ -45,12 +45,14 @@ object SwapManifest {
 
   def newVersion(): String = java.util.UUID.randomUUID().toString
 
-  /** Stamp each `<dir>/<table><suffix>` with `version` (suffix =
-    * [[StagedSwap]]'s "__graft_tmp" stamps staged copies pre-swap). */
+  /** Stamp each `<dir>/<table>` with `version`. */
   def stampTables(fs: FileSystem, dir: String, tables: Seq[String],
-      version: String, suffix: String = ""): Unit =
-    tables.foreach(t =>
-      writeSmall(fs, new Path(s"$dir/$t$suffix/$VersionName"), version))
+      version: String): Unit =
+    tables.foreach(t => stamp(fs, s"$dir/$t", version))
+
+  /** Stamp one table directory (live, or a rebuild's staged copy). */
+  def stamp(fs: FileSystem, table: String, version: String): Unit =
+    writeSmall(fs, new Path(s"$table/$VersionName"), version)
 
   def readManifest(fs: FileSystem,
       dir: String): Option[Map[String, String]] =

@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
  * Rebuild, not append: costs are global functions of the vocabulary
  * total (bitlen(tot) − bitlen(freq)), so ANY frequency change re-prices
  * every piece — vocabulary evolution replaces the whole artifact via
- * [[StagedSwap]], stamped and manifest-gated by [[SwapManifest]] so a
- * torn swap fails loudly at first read.
+ * [[IndexLifecycle.rebuild]], stamped and manifest-gated by
+ * [[SwapManifest]] so a torn swap fails loudly at first read.
  *
  * Reference behavior: the reference has no tokenizer
  * (`server/metrics/metrics.go:35` counts payload sizes only); this
@@ -194,8 +194,8 @@ object UnigramIndex {
   }
 
   /** Re-learn on a new corpus snapshot and swap live ([[BpeIndex
-    * .rebuild]]'s staged protocol: stage under __graft_tmp, stamp the NEW
-    * version, swap both tables, manifest LAST; phase-1 failure rolls
+    * .rebuild]]'s staged protocol: stage both tables, stamp the NEW
+    * version, swap both tables, manifest LAST; a failed swap rolls
     * back, and any tear is refused by the load paths). */
   def rebuild(docs: DataFrame, dir: String, chunkLen: Int = 6,
       maxPieceLen: Int = 3, minCount: Long = 3L, vocabSize: Int = 40): Unit = {
@@ -206,7 +206,7 @@ object UnigramIndex {
 
   /** [[rebuild]] for the EM-pruned model ([[buildEm]]'s staged parity):
     * re-run the full EM learn on a new corpus snapshot and swap live —
-    * same StagedSwap + manifest-LAST protocol, pricing total re-stored. */
+    * same staged swap + manifest-LAST protocol, pricing total re-stored. */
   def rebuildEm(docs: DataFrame, dir: String, chunkLen: Int = 6,
       maxPieceLen: Int = 3, minCount: Long = 3L, seedSize: Int = 40,
       targetSize: Int = 10, keepPermille: Int = 625): Unit = {

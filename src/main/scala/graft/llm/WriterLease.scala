@@ -30,7 +30,7 @@ import org.apache.spark.sql.SparkSession
  *    the file when it still carries this acquire's owner id.
  *
  * Readers (serve paths, healthChecks) never take the lease — an index
- * stays servable during maintenance; StagedSwap/double-rename already
+ * stays servable during maintenance; [[graft.pipeline.DirSwap]] already
  * keeps every read on a complete version.
  */
 object WriterLease {

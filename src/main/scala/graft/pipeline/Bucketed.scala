@@ -27,10 +27,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * mapping while the catalog still promises it, and every later join
  * returns WRONG results (rows hash to buckets the files no longer
  * honor). [[write]] therefore stamps a [[Marker]] file at the data
- * root, and [[Maintenance.compactDir]]/[[Maintenance
- * .compactHivePartitioned]] refuse loudly when they see it; evolving a
- * bucketed table means re-running [[write]] (which rewrites the whole
- * layout with the bucket spec intact).
+ * root, and every [[Maintenance]] compaction refuses loudly when it sees
+ * it; evolving a bucketed table means re-running [[write]] (which
+ * rewrites the whole layout with the bucket spec intact) or [[compact]].
  *
  * Reference behavior: the reference's Spark notebook lands plain
  * year/month/day partitions (spark-notebook ipynb cells 4-5); bucketed
@@ -62,9 +61,14 @@ object Bucketed {
       .mode("overwrite")
       .saveAsTable(tableName)
     // marker LAST — only a fully-landed layout gets the stamp
-    val p = new Path(path, Marker)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
+    stampMarker(spark, path, key, nBuckets)
+  }
+
+  private def stampMarker(spark: SparkSession, dir: String, key: String,
+      nBuckets: Int): Unit = {
+    val p = new Path(dir, Marker)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(p, true)
     try out.write(s"key=$key\nbuckets=$nBuckets\n".getBytes("UTF-8"))
     finally out.close()
   }
@@ -103,17 +107,17 @@ object Bucketed {
    * PRESERVING the bucket-file mapping the catalog promises.
    *
    * How the mapping survives: the rewrite re-reads the table and writes
-   * a fresh BUCKETED layout (same key, same bucket count) to a sibling
-   * tmp dir through a temporary external table — Spark itself emits the
+   * a fresh BUCKETED layout (same key, same bucket count) to its staged
+   * copy through a temporary external table — Spark itself emits the
    * `_NNNNN` bucket-file names, so the new layout honors the hash
    * placement by construction. `repartition(nBuckets, key)` first puts
    * each bucket's rows on exactly one task (repartition's hash
    * placement, `pmod(murmur3, n)`, IS the bucket placement), so each
-   * bucket lands as a single sorted file. The swap is
-   * [[Maintenance.compactDir]]'s double rename (readers see old or new,
-   * never a mix; [[Maintenance.recoverCompaction]] repairs a crash
-   * between the renames), and the catalog entry — which points at the
-   * same path with the same spec — needs only a refresh.
+   * bucket lands as a single sorted file. The new layout is staged and
+   * swapped live by [[DirSwap]] (readers see old or new, never a mix; an
+   * interrupted earlier swap is recovered first), and the catalog entry
+   * — which points at the same path with the same spec — needs only a
+   * refresh.
    *
    * The REFUSAL is retained for layouts this job cannot prove are
    * Spark's: any data file without the `_NNNNN` bucket component (a
@@ -132,7 +136,8 @@ object Bucketed {
       s"compact: single-column bucket keys only, got ${spec.bucketColumnNames}")
     val key = spec.bucketColumnNames.head
     val dir = new Path(meta.location).toUri.getPath
-    Maintenance.recoverCompaction(spark, dir)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    DirSwap.recover(fs, dir)
     val stray = Maintenance.dataFiles(spark, dir)
       .filterNot(p => BucketFilePattern.matches(p.getName))
     if (stray.nonEmpty)
@@ -141,27 +146,21 @@ object Bucketed {
           s"bucket-name component (${stray.take(3).map(_.getName).mkString(", ")}) " +
           "— a non-Spark bucket layout; refusing to rewrite a " +
           "bucket-file mapping that cannot be parsed")
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(dir + "__graft_tmp")
-    val old = new Path(dir + "__graft_old")
-    val tmpTable = tableName + "__graft_compact"
-    spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
-    spark.table(tableName)
-      .repartition(spec.numBuckets, org.apache.spark.sql.functions.col(key))
-      .write.format("parquet")
-      .bucketBy(spec.numBuckets, key).sortBy(key)
-      .option("path", tmp.toString)
-      .mode("overwrite")
-      .saveAsTable(tmpTable)
-    // external table: dropping the catalog entry leaves the files
-    spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
-    val mk = fs.create(new Path(tmp, Marker), true)
-    try mk.write(s"key=$key\nbuckets=${spec.numBuckets}\n".getBytes("UTF-8"))
-    finally mk.close()
-    require(fs.rename(p, old), s"rename $p -> $old failed")
-    require(fs.rename(tmp, p), s"rename $tmp -> $p failed")
-    fs.delete(old, true)
+    DirSwap.stage(dir) { tmp =>
+      val tmpTable = tableName + "__graft_compact"
+      spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
+      spark.table(tableName)
+        .repartition(spec.numBuckets, org.apache.spark.sql.functions.col(key))
+        .write.format("parquet")
+        .bucketBy(spec.numBuckets, key).sortBy(key)
+        .option("path", tmp)
+        .mode("overwrite")
+        .saveAsTable(tmpTable)
+      // external table: dropping the catalog entry leaves the files
+      spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
+      stampMarker(spark, tmp, key, spec.numBuckets)
+    }
+    DirSwap.swap(fs, Seq(dir))
     spark.catalog.refreshTable(tableName)
   }
 

@@ -1,7 +1,12 @@
 package graft.pipeline
 
+import java.time.LocalDate
+
+import scala.util.Try
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /**
  * Maintenance of the date-partitioned landing table (SURVEY.md §2.1 S6):
@@ -15,6 +20,12 @@ import org.apache.spark.sql.SparkSession
  * `targetFiles` files sized for `maxPartitionBytes`. Retention deletes
  * whole partition directories, the O(1)-metadata delete the layout
  * exists to make possible (row-level deletes would rewrite the table).
+ *
+ * Every compaction is one [[DirSwap]] rewrite of one directory: refuse a
+ * bucketed layout, [[DirSwap.recover]] an interrupted earlier swap,
+ * stage the new copy, swap it live. Racing readers see the old or the
+ * new file set, never both; the rewrite changes LAYOUT only, row content
+ * is preserved exactly.
  */
 object Maintenance {
 
@@ -30,154 +41,92 @@ object Maintenance {
       .filter(q => !q.getName.startsWith("_") && !q.getName.startsWith("."))
   }
 
-  /**
-   * Compact ONE day partition to `targetFiles` files: read, coalesce,
-   * write to a sibling temp dir, then swap directories. The swap is two
-   * renames (atomic per rename on HDFS/local): readers racing the swap
-   * see the old or the new file set, never a mix; a crash between the
-   * renames leaves the `__graft_old` directory to roll back from.
-   * Run on CLOSED partitions (past the watermark / no longer appended).
-   */
+  /** Compact ONE day partition of the landing table to `targetFiles`
+    * files ([[compactDir]] of its directory). Run on CLOSED partitions
+    * (past the watermark / no longer appended). */
   def compactPartition(spark: SparkSession, tablePath: String,
-      year: String, month: String, day: String, targetFiles: Int = 1): Unit = {
-    val dir = s"$tablePath/year=$year/month=$month/day=$day"
-    val p = new Path(dir)
-    val f = fs(spark, p)
-    require(f.exists(p), s"no such partition: $dir")
-    val tmp = new Path(dir + "__graft_tmp")
-    val old = new Path(dir + "__graft_old")
-    spark.read.parquet(dir).coalesce(targetFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    require(f.rename(p, old), s"rename $p -> $old failed")
-    require(f.rename(tmp, p), s"rename $tmp -> $p failed")
-    f.delete(old, true)
-  }
+      year: String, month: String, day: String, targetFiles: Int = 1): Unit =
+    compactDir(spark, s"$tablePath/year=$year/month=$month/day=$day",
+      targetFiles)
 
-  /**
-   * Compact ONE flat parquet directory (an unpartitioned table that
-   * accretes small files across appends — e.g. the five
-   * [[graft.llm.DedupIndex]] tables) to `targetFiles` files, with the
-   * same tmp-write + double-rename swap as [[compactPartition]]: racing
-   * readers see the old or the new file set, never a MIX — but the swap
-   * is not fully atomic: between rename(dir → old) and rename(tmp → dir)
-   * the table root does not exist, so a concurrent reader can observe a
-   * transient not-found (retry-once is the reader contract), and a crash
-   * inside that window strands the data under `__graft_old` with nothing
-   * at `dir`. [[recoverCompaction]] repairs exactly that state; both
-   * compaction entry points run it first, and a service hosting these
-   * tables should run it at startup. The rewrite changes LAYOUT only —
-   * row content is preserved exactly.
-   */
+  /** Compact ONE flat parquet directory (an unpartitioned table that
+    * accretes small files across appends — e.g. the five
+    * [[graft.llm.DedupIndex]] tables) to `targetFiles` files. */
   def compactDir(spark: SparkSession, dir: String,
-      targetFiles: Int = 1): Unit = {
-    refuseBucketed(spark, dir, "compactDir")
-    recoverCompaction(spark, dir)
-    val p = new Path(dir)
-    val f = fs(spark, p)
-    require(f.exists(p), s"no such directory: $dir")
-    val tmp = new Path(dir + "__graft_tmp")
-    val old = new Path(dir + "__graft_old")
-    spark.read.parquet(dir).coalesce(targetFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    require(f.rename(p, old), s"rename $p -> $old failed")
-    require(f.rename(tmp, p), s"rename $tmp -> $p failed")
-    f.delete(old, true)
-  }
-
-  /** The bucketed-layout refusal both compaction entry points run FIRST:
-    * a bucketed table's bucket↔file mapping lives in the part-file names
-    * ([[Bucketed]] scaladoc), and a coalesce-rewrite would destroy it
-    * SILENTLY — the catalog would keep promising co-located joins over
-    * files that no longer honor the hash placement, returning wrong
-    * rows. Evolving a bucketed table's layout means re-running
-    * [[Bucketed.write]]. */
-  private def refuseBucketed(spark: SparkSession, dir: String,
-      job: String): Unit =
-    if (Bucketed.isBucketedDir(spark, dir))
-      throw new IllegalStateException(
-        s"$job: '$dir' backs a BUCKETED table (${Bucketed.Marker} " +
-          "present) — a coalesce rewrite would silently destroy the " +
-          "bucket-file mapping every co-located join depends on; " +
-          "re-run Bucketed.write to rewrite this layout instead")
-
-  /**
-   * Startup/pre-compaction recovery for an interrupted swap. The swap's
-   * crash states and their repairs:
-   *  - crash during/after the tmp write, before any rename: stale
-   *    `__graft_tmp` beside an intact `dir` — drop the tmp;
-   *  - crash BETWEEN the renames: `dir` missing, full pre-compaction
-   *    data at `__graft_old` — rename it back (the data-loss window the
-   *    compaction docs call out);
-   *  - crash after the second rename, before the cleanup delete: both
-   *    `dir` (new layout) and `__graft_old` present — finish the delete.
-   * Idempotent; returns true iff a rollback (rename old → dir) ran.
-   */
-  def recoverCompaction(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val f = fs(spark, p)
-    val tmp = new Path(dir + "__graft_tmp")
-    val old = new Path(dir + "__graft_old")
-    val rolledBack = !f.exists(p) && f.exists(old) && f.rename(old, p)
-    if (f.exists(tmp)) f.delete(tmp, true)
-    if (f.exists(p) && f.exists(old)) f.delete(old, true)
-    rolledBack
-  }
+      targetFiles: Int = 1): Unit =
+    rewrite(spark, dir)(_.coalesce(targetFiles).write.mode("overwrite")
+      .parquet(_))
 
   /**
    * Compact a WHOLE hive-partitioned table (e.g. [[graft.llm.IvfIndex]]'s
    * cell-partitioned `assignments`/`pq_codes`, which accrete one file
-   * set per touched cell per append) in one job: read the table with its
-   * partition column, shuffle each partition's rows onto one task
-   * (`repartition(partCol)` — hash placement puts every row of a cell on
-   * a single task, so dynamic partitioning emits one file per cell), and
-   * swap at the TABLE level. Swapping the table root — not each
-   * `cell=N` directory — matters: a per-directory swap would leave
-   * `cell=N__graft_tmp` siblings that partition DISCOVERY parses as
-   * partition values, poisoning concurrent reads; the root-level rename
-   * pair keeps every intermediate FILE-SET state invisible to readers of
-   * `dir` — with [[compactDir]]'s same caveat: the instant between the
-   * two renames has no table root at all (transient not-found for a
-   * racing reader; [[recoverCompaction]] repairs a crash there).
+   * set per touched cell per append) in one job: `repartition(partCol)`
+   * puts every row of a partition on one task, so dynamic partitioning
+   * emits one file per partition value, and the swap replaces the table
+   * root in one step.
    */
   def compactHivePartitioned(spark: SparkSession, dir: String,
-      partCol: String): Unit = {
-    refuseBucketed(spark, dir, "compactHivePartitioned")
-    recoverCompaction(spark, dir)
-    val p = new Path(dir)
-    val f = fs(spark, p)
-    require(f.exists(p), s"no such directory: $dir")
-    val tmp = new Path(dir + "__graft_tmp")
-    val old = new Path(dir + "__graft_old")
-    spark.read.parquet(dir)
-      .repartition(org.apache.spark.sql.functions.col(partCol))
-      .write.mode("overwrite").partitionBy(partCol).parquet(tmp.toString)
-    require(f.rename(p, old), s"rename $p -> $old failed")
-    require(f.rename(tmp, p), s"rename $tmp -> $p failed")
-    f.delete(old, true)
-  }
+      partCol: String): Unit =
+    rewrite(spark, dir)((df, to) => df.repartition(col(partCol))
+      .write.mode("overwrite").partitionBy(partCol).parquet(to))
 
   /**
-   * Retention-window delete: remove every day-partition directory with
-   * date < `cutoff` (yyyy-MM-dd). Pure directory metadata operations —
-   * no data is read or rewritten. Returns the number of partitions
-   * dropped. For a CATALOG table, follow with
-   * `spark.catalog.recoverPartitions` so the metastore forgets them.
+   * The one compaction step: refuse a bucketed layout, recover, stage
+   * `write(<live rows>, <staged path>)`, swap. The refusal comes first: a
+   * bucketed table's bucket↔file mapping lives in the part-file names
+   * ([[Bucketed]] scaladoc), and a coalesce-rewrite would destroy it
+   * SILENTLY — the catalog would keep promising co-located joins over
+   * files that no longer honor the hash placement, returning wrong rows.
+   */
+  private def rewrite(spark: SparkSession, dir: String)(
+      write: (DataFrame, String) => Unit): Unit = {
+    if (Bucketed.isBucketedDir(spark, dir))
+      throw new IllegalStateException(
+        s"compaction: '$dir' backs a BUCKETED table (${Bucketed.Marker} " +
+          "present) — a coalesce rewrite would silently destroy the " +
+          "bucket-file mapping every co-located join depends on; " +
+          "run Bucketed.compact or re-run Bucketed.write instead")
+    val f = fs(spark, new Path(dir))
+    DirSwap.recover(f, dir)
+    require(f.exists(new Path(dir)), s"compaction: no such directory: $dir")
+    DirSwap.stage(dir)(write(spark.read.parquet(dir), _))
+    DirSwap.swap(f, Seq(dir))
+  }
+
+  /** Startup recovery for an interrupted compaction of `dir`
+    * ([[DirSwap.recover]]; every compaction also runs it first). Returns
+    * true iff a rollback ran. */
+  def recoverCompaction(spark: SparkSession, dir: String): Boolean =
+    DirSwap.recover(fs(spark, new Path(dir)), dir)
+
+  /**
+   * Retention-window delete: remove every day-partition directory dated
+   * before `cutoff`, which must be an ISO `yyyy-MM-dd` date (anything else
+   * throws: a string comparison against `2024-1-8` would drop most of
+   * 2024). Directories whose `year=/month=/day=` names do not form a
+   * valid date are skipped. Pure directory metadata operations — no data
+   * is read or rewritten. Returns the number of partitions dropped. For a
+   * CATALOG table, follow with `spark.catalog.recoverPartitions` so the
+   * metastore forgets them.
    */
   def dropPartitionsBefore(spark: SparkSession, tablePath: String,
       cutoff: String): Int = {
+    val cut = isoDate(cutoff).getOrElse(throw new IllegalArgumentException(
+      s"dropPartitionsBefore: cutoff '$cutoff' is not an ISO yyyy-MM-dd date"))
     val root = new Path(tablePath)
     val f = fs(spark, root)
-    var dropped = 0
-    for {
-      y <- f.listStatus(root).toSeq if y.getPath.getName.startsWith("year=")
-      m <- f.listStatus(y.getPath).toSeq if m.getPath.getName.startsWith("month=")
-      d <- f.listStatus(m.getPath).toSeq if d.getPath.getName.startsWith("day=")
-    } {
-      val date = s"${y.getPath.getName.stripPrefix("year=")}-" +
-        s"${m.getPath.getName.stripPrefix("month=")}-" +
-        s"${d.getPath.getName.stripPrefix("day=")}"
-      if (date < cutoff) { f.delete(d.getPath, true); dropped += 1 }
-    }
-    dropped
+    def sub(p: Path, key: String): Seq[Path] = f.listStatus(p).toSeq
+      .map(_.getPath).filter(_.getName.startsWith(s"$key="))
+    val expired = for {
+      y <- sub(root, "year"); m <- sub(y, "month"); d <- sub(m, "day")
+      date <- isoDate(Seq(y, m, d).map(_.getName.split("=", 2)(1)).mkString("-"))
+      if date.isBefore(cut)
+    } yield d
+    expired.foreach(f.delete(_, true))
+    expired.size
   }
+
+  /** `s` as a date iff it is exactly its own ISO `yyyy-MM-dd` form. */
+  private def isoDate(s: String): Option[LocalDate] =
+    Try(LocalDate.parse(s)).toOption.filter(_.toString == s)
 }

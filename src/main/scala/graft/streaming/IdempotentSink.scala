@@ -16,9 +16,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
  * subdirectory with overwrite semantics — a replayed batch REPLACES its
  * previous (possibly partial) output instead of appending duplicates.
  * Readers treat `batch` as one more partition column and prune on it
- * like any other. At 100 TB the per-batch directories are what
- * `Maintenance.compactPartition` folds together once the batch is past
- * the watermark.
+ * like any other. No maintenance job folds the per-batch directories
+ * together: `Maintenance.compactPartition` takes `year/month/day`
+ * partitions, and `Maintenance.compactHivePartitioned(path, "batch")`
+ * rewrites each batch to one file but keeps one directory per batch.
  */
 object IdempotentSink {
 

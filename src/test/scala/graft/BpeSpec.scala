@@ -3,6 +3,7 @@ package graft
 import graft.model.Tables
 import graft.llm.Bpe
 import graft.llm.Bpe.Merge
+import graft.pipeline.DirSwap
 import org.apache.spark.sql.functions._
 
 /**
@@ -330,9 +331,10 @@ class BpeSpec extends SparkSpec {
     BpeIndex.rebuild(b, dir, k = 6)
     assert(BpeIndex.load(spark, dir) == Bpe.learnMerges(b, 6))
     // staging and old copies are gone after a clean swap
-    for (t <- Seq("merges", "params"); sfx <- Seq("__graft_tmp", "__graft_old"))
+    for (t <- Seq("merges", "params");
+         p <- Seq(DirSwap.staged(s"$dir/$t"), DirSwap.old(s"$dir/$t")))
       assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$dir/$t$sfx")), s"$t$sfx left behind")
+        java.nio.file.Paths.get(p)), s"$p left behind")
     val h = BpeIndex.healthCheck(spark, dir).head()
     assert(h.getAs[Boolean]("healthy"))
     // rebuild requires an existing index (build creates, rebuild replaces)
@@ -353,25 +355,25 @@ class BpeSpec extends SparkSpec {
     // under old params, which the content signature would catch only at
     // the NEXT load, after the artifact is already torn on disk.
     spark.read.parquet(s"$dir/merges").withColumn("cnt", lit(999L))
-      .write.parquet(s"$dir/merges__graft_tmp")
+      .write.parquet(DirSwap.staged(s"$dir/merges"))
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     // RawLocalFileSystem throws FileNotFoundException on a missing
     // rename source where HDFS would return false (-> require): either
-    // way swapAll's catch-all rollback must run before rethrowing
+    // way swap's catch-all rollback must run before rethrowing
     val e = intercept[Exception] {
-      graft.llm.StagedSwap.swapAll(fs, dir, Seq("merges", "params"))
+      DirSwap.swap(fs, Seq("merges", "params").map(t => s"$dir/$t"))
     }
     assert(e.isInstanceOf[IllegalArgumentException] ||
       e.isInstanceOf[java.io.FileNotFoundException])
     // the live index is the intact OLD version, signature and all
     assert(BpeIndex.load(spark, dir) == before)
     assert(BpeIndex.healthCheck(spark, dir).head().getAs[Boolean]("healthy"))
-    // no __graft_old debris; the staged merges copy is re-staged intact
+    // no old-copy debris; the staged merges copy is re-staged intact
     for (t <- Seq("merges", "params"))
       assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$dir/${t}__graft_old")))
-    assert(spark.read.parquet(s"$dir/merges__graft_tmp")
+        java.nio.file.Paths.get(DirSwap.old(s"$dir/$t"))))
+    assert(spark.read.parquet(DirSwap.staged(s"$dir/merges"))
       .select(max(col("cnt"))).head().getLong(0) == 999L)
   }
 

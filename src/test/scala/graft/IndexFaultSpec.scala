@@ -8,6 +8,7 @@ import scala.util.control.NonFatal
 
 import graft.llm._
 import graft.model.Tables
+import graft.pipeline.DirSwap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -226,8 +227,8 @@ class IndexFaultSpec extends SparkSpec {
             assert(got.contains(old), s"${c.name}: after a fault at '$s' " +
               s"the old version must serve, got $got")
             if (!s.startsWith("swap"))
-              assert(!new java.io.File(dir).list().exists(
-                _.endsWith(StagedSwap.TmpSuffix)), s"${c.name}: staging left")
+              assert(!new java.io.File(dir).list().contains(
+                DirSwap.StagedDir), s"${c.name}: staging left")
         }
       }
     }

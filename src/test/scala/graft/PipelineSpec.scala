@@ -127,6 +127,27 @@ class PipelineSpec extends SparkSpec {
     assert(left.count() === expectedLeft)
   }
 
+  test("S6 retention rejects a non-ISO cutoff and skips non-date directories") {
+    import graft.pipeline.Maintenance
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_retain").toString
+    // one row on each of 2024-01-15, 2024-05-15 and 2024-09-15
+    DatePartition.appendPartitioned(Seq(1705276800000L, 1715731200000L,
+      1726358400000L).toDF("clientTimestamp"), out)
+    val stray = new java.io.File(s"$out/year=2024/month=01/day=15__graft_old")
+    assert(stray.mkdirs())
+    def rows = spark.read.parquet(out).count()
+    // character-wise, "2024-05-15" < "2024-1-8" because '0' < '1': a
+    // malformed cutoff would drop the May and September partitions
+    for (bad <- Seq("2024-1-8", "2024-01-8", "20240108", "2024-02-30"))
+      intercept[IllegalArgumentException](
+        Maintenance.dropPartitionsBefore(spark, out, bad))
+    assert(rows === 3 && stray.exists())
+    // a directory whose name forms no date is never dropped as one
+    assert(Maintenance.dropPartitionsBefore(spark, out, "2024-06-01") === 2)
+    assert(rows === 1 && stray.exists())
+  }
+
   test("S6 compression codec is a sink parameter (zstd files land and read back)") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft_zstd").toString
@@ -181,15 +202,16 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("S6 recoverCompaction repairs every crash state of the swap") {
-    import graft.pipeline.Maintenance
+    import graft.pipeline.{DirSwap, Maintenance}
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_recover").toString + "/t"
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(dir)
     val f = new java.io.File(dir)
-    val old = new java.io.File(dir + "__graft_old")
-    val tmp = new java.io.File(dir + "__graft_tmp")
+    val old = new java.io.File(DirSwap.old(dir))
+    val tmp = new java.io.File(DirSwap.staged(dir))
 
-    // crash BETWEEN the renames: dir gone, data stranded at __graft_old
+    // crash BETWEEN the renames: dir gone, data stranded at the old copy
+    old.getParentFile.mkdirs()
     assert(f.renameTo(old))
     assert(Maintenance.recoverCompaction(spark, dir))
     assert(f.exists() && !old.exists())

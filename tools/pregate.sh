@@ -6,7 +6,8 @@
 # artifact, and `sbt test`. This script makes that failure mode a
 # one-command check: compile (main + test), run every ScalaTest suite,
 # dump every registered query at sf0.01, and hash-compare each against
-# its DuckDB oracle. Exit 0 = the tree is shippable.
+# its DuckDB oracle. Exit 0 = the tree is shippable. The wall seconds of
+# the test step and of the Verify step are printed as `PREGATE <step>:`.
 #
 #   tools/pregate.sh            # gate at sf0.01 (the driver's gate SF)
 #   tools/pregate.sh sf0.001    # gate at another SF
@@ -22,8 +23,22 @@ export COURSIER_MODE="${COURSIER_MODE:-offline}"
 export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
 export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
 
-sbt -batch Test/compile test
-rm -rf "$OUT"
-sbt -batch "runMain graft.Verify $HOME/testdata/$SF $OUT"
-python3 tools/verify_local.py "$HOME/testdata/$SF" "$OUT"
+# Runs "$@" and prints its wall seconds, pass or fail, so one run reports
+# the tier-1 test time and the Verify time; keeps the exit status.
+timed() {
+  local label=$1 t0=$SECONDS rc=0
+  shift
+  "$@" || rc=$?
+  echo "PREGATE $label: $((SECONDS - t0)) s wall (exit $rc)"
+  return "$rc"
+}
+
+verify() {
+  rm -rf "$OUT"
+  sbt -batch "runMain graft.Verify $HOME/testdata/$SF $OUT" &&
+    python3 tools/verify_local.py "$HOME/testdata/$SF" "$OUT"
+}
+
+timed "test step" sbt -batch Test/compile test
+timed "Verify step ($SF)" verify
 echo "PREGATE OK ($SF)"
