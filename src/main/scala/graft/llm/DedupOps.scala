@@ -135,28 +135,81 @@ object DedupOps {
     docs.select(col("doc_id"),
       size(shingleArr(docs, n, tok)).cast("long").as("sz"))
 
+  // The candidate-then-verify front every near-duplicate family shares:
+  // a fingerprint splits into (id, band, key) rows, rows sharing a key
+  // pair up once each (`a.id < b.id`), and per-doc tables join back onto
+  // both pair ids for the verify step. Built here once, so the
+  // pigeonhole, orientation and distinct contract has one place to be
+  // right in.
+
+  /** One fingerprint per row of `fps` split into LSH bucket rows —
+    * `(id, payload…, band, <keyName>)`, one row per entry of `keys`,
+    * `band` its index. */
+  private[llm] def bandRows(fps: DataFrame, id: String, payload: Seq[String],
+      keys: Seq[org.apache.spark.sql.Column],
+      keyName: String = "key"): DataFrame = {
+    val carried = (id +: payload).map(col)
+    fps.select(carried :+ explode(array(keys.zipWithIndex.map { case (k, b) =>
+        struct(lit(b).as("band"), k.as(keyName)) }: _*)).as("bk"): _*)
+      .select(carried :+ col("bk.band").as("band") :+
+        col(s"bk.$keyName").as(keyName): _*)
+  }
+
+  /** The keyed self-join of the candidate front: every two rows that
+    * agree on all `keys`, oriented `a.<id> < b.<id>` so an unordered
+    * pair appears once per shared key. Sides resolve as `a.*`, `b.*`. */
+  private def keyedSelfJoin(rows: DataFrame, keys: Seq[String],
+      id: String = "doc_id"): DataFrame =
+    rows.as("a").join(rows.as("b"),
+      keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+        col(s"a.$id") < col(s"b.$id"))
+
+  /** Candidate pairs `(id_a, id_b, extra…)` off [[keyedSelfJoin]],
+    * distinct: a pair sharing several buckets is one candidate. */
+  private[llm] def candidatePairs(rows: DataFrame, keys: Seq[String],
+      extra: Seq[org.apache.spark.sql.Column] = Nil,
+      id: String = "doc_id"): DataFrame =
+    keyedSelfJoin(rows, keys, id)
+      .select(col(s"a.$id").as("id_a") +: col(s"b.$id").as("id_b") +: extra: _*)
+      .distinct()
+
+  /** A per-doc `table` joined onto both ids of a pair table: as `a` on
+    * `id_a`, as `b` on `id_b`; the `alsoOn` columns must agree across
+    * the two sides too. */
+  private[llm] def bothSides(pairs: DataFrame, table: DataFrame,
+      id: String = "doc_id", alsoOn: Seq[String] = Nil): DataFrame =
+    pairs.join(table.as("a"), col("id_a") === col(s"a.$id"))
+      .join(table.as("b"), alsoOn.foldLeft(col("id_b") === col(s"b.$id"))(
+        (c, k) => c && col(s"a.$k") === col(s"b.$k")))
+
+  /** Exact Jaccard |A∩B| / |A∪B| and containment |A∩B| / min(|A|, |B|),
+    * 4 dp, from `inter` and the set sizes [[bothSides]] attached. */
+  private val jaccardCol = fround(col("inter").cast("double") /
+    (col("a.sz") + col("b.sz") - col("inter")).cast("double"), 4)
+  private val containmentCol = fround(col("inter").cast("double") /
+    least(col("a.sz"), col("b.sz")).cast("double"), 4)
+
   /** All pairs sharing >= 1 shingle, with intersection counts — the
     * inverted-index join: shuffle keyed on the shingle hash, pair volume
     * bounded by real overlap rather than n². */
   private def intersections(index: DataFrame): DataFrame =
-    index.as("a")
-      .join(index.as("b"),
-        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
+    keyedSelfJoin(index, Seq("h"))
       .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .agg(count(lit(1)).as("inter"))
 
-  /** Attach exact Jaccard = |A∩B| / |A∪B| to a pair table. */
-  private def withJaccard(pairs: DataFrame, docs: DataFrame, n: Int,
-      tok: Tokenizer = Tokenizer.Ascii): DataFrame = {
-    val sizes = setSizes(docs, n, tok)
-    pairs
-      .join(sizes.as("sa"), col("id_a") === col("sa.doc_id"))
-      .join(sizes.as("sb"), col("id_b") === col("sb.doc_id"))
-      .withColumn("jaccard",
-        fround(col("inter").cast("double") /
-          (col("sa.sz") + col("sb.sz") - col("inter")).cast("double"), 4))
+  /** Intersection counts of GIVEN candidate pairs: each side's shingle
+    * rows attached to the pair, matching hashes counted. Linear in
+    * |index| + |cand|·avg set size, with no document-frequency² term —
+    * the verify step a banded front runs instead of [[intersections]]. */
+  private def candidateIntersections(cand: DataFrame,
+      index: DataFrame): DataFrame =
+    bothSides(cand, index, alsoOn = Seq("h"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
+
+  /** Attach exact Jaccard to a pair table with intersection counts. */
+  private def withJaccard(pairs: DataFrame, sizes: DataFrame): DataFrame =
+    bothSides(pairs, sizes).withColumn("jaccard", jaccardCol)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
 
   /**
    * Exact n-gram Jaccard dedup: every pair with Jaccard >= `threshold`.
@@ -175,7 +228,8 @@ object DedupOps {
   def ngramJaccardPairs(docs: DataFrame, n: Int = 3,
       threshold: Double = 0.5, maxDf: Option[Long] = None,
       tok: Tokenizer = Tokenizer.Ascii): DataFrame =
-    withJaccard(intersections(cappedIndex(docs, n, maxDf, tok)), docs, n, tok)
+    withJaccard(intersections(cappedIndex(docs, n, maxDf, tok)),
+      setSizes(docs, n, tok))
       .filter(col("jaccard") >= threshold)
 
   /** [[shingleIndex]] with the optional df cap applied: df per shingle is
@@ -204,17 +258,12 @@ object DedupOps {
    */
   def containmentPairs(docs: DataFrame, n: Int = 3,
       threshold: Double = 0.8, maxDf: Option[Long] = None,
-      tok: Tokenizer = Tokenizer.Ascii): DataFrame = {
-    val sizes = setSizes(docs, n, tok)
-    intersections(cappedIndex(docs, n, maxDf, tok))
-      .join(sizes.as("ca"), col("id_a") === col("ca.doc_id"))
-      .join(sizes.as("cb"), col("id_b") === col("cb.doc_id"))
-      .withColumn("containment",
-        fround(col("inter").cast("double") /
-          least(col("ca.sz"), col("cb.sz")).cast("double"), 4))
+      tok: Tokenizer = Tokenizer.Ascii): DataFrame =
+    bothSides(intersections(cappedIndex(docs, n, maxDf, tok)),
+        setSizes(docs, n, tok))
+      .withColumn("containment", containmentCol)
       .filter(col("containment") >= threshold)
       .select(col("id_a"), col("id_b"), col("containment"))
-  }
 
   /**
    * Cluster-size histogram over a [[duplicateClusters]] labeling —
@@ -386,9 +435,7 @@ object DedupOps {
         capped.select(col("doc_id"), col("fp").as("h")).distinct())
       .filter(col("inter") >= minShared)
       .select(col("id_a"), col("id_b"))
-    capped.as("a")
-      .join(capped.as("b"),
-        col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
+    keyedSelfJoin(capped, Seq("fp"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
         col("a.fp").as("fp"), col("a.pos").as("pos_a"),
         col("b.pos").as("pos_b"))
@@ -656,13 +703,11 @@ object DedupOps {
       jaccThreshold: Double = 0.5, contThreshold: Double = 0.8,
       maxDf: Option[Long] = None, tok: Tokenizer = Tokenizer.Ascii,
       groupCol: String = "source"): DataFrame = {
-    val src = docs.select(col("doc_id"), col(groupCol))
-    dupEdges(docs, n, jaccThreshold, contThreshold, maxDf, tok)
-      .join(src.as("sa"), col("id_a") === col("sa.doc_id"))
-      .join(src.as("sb"), col("id_b") === col("sb.doc_id"))
+    bothSides(dupEdges(docs, n, jaccThreshold, contThreshold, maxDf, tok),
+        docs.select(col("doc_id"), col(groupCol)))
       .select(
-        least(col(s"sa.$groupCol"), col(s"sb.$groupCol")).as("source_a"),
-        greatest(col(s"sa.$groupCol"), col(s"sb.$groupCol")).as("source_b"))
+        least(col(s"a.$groupCol"), col(s"b.$groupCol")).as("source_a"),
+        greatest(col(s"a.$groupCol"), col(s"b.$groupCol")).as("source_b"))
       .groupBy("source_a", "source_b")
       .agg(count(lit(1)).as("n_pairs"))
   }
@@ -679,21 +724,14 @@ object DedupOps {
    */
   def dupEdges(docs: DataFrame, n: Int = 3, jaccThreshold: Double = 0.5,
       contThreshold: Double = 0.8, maxDf: Option[Long] = None,
-      tok: Tokenizer = Tokenizer.Ascii): DataFrame = {
-    val sizes = setSizes(docs, n, tok)
-    intersections(cappedIndex(docs, n, maxDf, tok))
-      .join(sizes.as("ea"), col("id_a") === col("ea.doc_id"))
-      .join(sizes.as("eb"), col("id_b") === col("eb.doc_id"))
-      .withColumn("jaccard",
-        fround(col("inter").cast("double") /
-          (col("ea.sz") + col("eb.sz") - col("inter")).cast("double"), 4))
-      .withColumn("containment",
-        fround(col("inter").cast("double") /
-          least(col("ea.sz"), col("eb.sz")).cast("double"), 4))
+      tok: Tokenizer = Tokenizer.Ascii): DataFrame =
+    bothSides(intersections(cappedIndex(docs, n, maxDf, tok)),
+        setSizes(docs, n, tok))
+      .withColumn("jaccard", jaccardCol)
+      .withColumn("containment", containmentCol)
       .filter(col("jaccard") >= jaccThreshold ||
         col("containment") >= contThreshold)
       .select(col("id_a"), col("id_b"))
-  }
 
   /**
    * Edit-distance-VERIFIED near-dup pairs: MinHash-LSH candidate
@@ -724,24 +762,15 @@ object DedupOps {
       bands: Int = 8, rowsPerBand: Int = 4, prefixLen: Int = 256,
       maxDistPermille: Long = 200L,
       tok: Tokenizer = Tokenizer.Ascii): DataFrame = {
-    require(bands * rowsPerBand == perms, "bands*rowsPerBand must equal perms")
     require(prefixLen >= 1, s"prefixLen must be >= 1 (got $prefixLen)")
-    val banded = bandedKeys(docs, n, perms, bands, rowsPerBand, tok)
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
+    val cand = minhashCandidates(docs, n, perms, bands, rowsPerBand, tok)
     val pfx = docs.select(col("doc_id"),
       substring(tok.prep(coalesce(col("text"), lit(""))), 1, prefixLen)
         .as("pfx"))
-    cand
-      .join(pfx.as("ta"), col("id_a") === col("ta.doc_id"))
-      .join(pfx.as("tb"), col("id_b") === col("tb.doc_id"))
+    bothSides(cand, pfx)
       .select(col("id_a"), col("id_b"),
-        levenshtein(col("ta.pfx"), col("tb.pfx")).cast("long").as("edit_dist"),
-        greatest(length(col("ta.pfx")), length(col("tb.pfx")), lit(1))
+        levenshtein(col("a.pfx"), col("b.pfx")).cast("long").as("edit_dist"),
+        greatest(length(col("a.pfx")), length(col("b.pfx")), lit(1))
           .cast("long").as("max_len"))
       .withColumn("dist_permille", expr("edit_dist * 1000 div max_len"))
       .filter(col("dist_permille") <= maxDistPermille)
@@ -769,14 +798,7 @@ object DedupOps {
   def pairFrontQuality(docs: DataFrame, n: Int = 3, perms: Int = 32,
       bands: Int = 8, rowsPerBand: Int = 4, threshold: Double = 0.5,
       tok: Tokenizer = Tokenizer.Ascii): DataFrame = {
-    require(bands * rowsPerBand == perms, "bands*rowsPerBand must equal perms")
-    val banded = bandedKeys(docs, n, perms, bands, rowsPerBand, tok)
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
+    val cand = minhashCandidates(docs, n, perms, bands, rowsPerBand, tok)
     val truth = ngramJaccardPairs(docs, n, threshold, None, tok)
       .select(col("id_a"), col("id_b"))
     val nCand = cand.agg(count(lit(1)).as("n_cand"))
@@ -960,53 +982,43 @@ object DedupOps {
     docs.select(col("doc_id"),
       minhashSig(shingleArr(docs, n, tok), perms).as("sig"))
 
-  /**
-   * MinHash + LSH: band the signature (`bands` x `rowsPerBand`), emit one
-   * (band, key) row per doc per band, self-join the banded table for
-   * candidates, then verify candidates with EXACT Jaccard >= `threshold`.
-   * Candidate generation is sub-quadratic (only same-bucket pairs); the
-   * exact verification join touches candidate pairs only.
-   */
   /** (doc_id, band, key) LSH bucket rows — one per doc per band. Shared
     * by the self-join pair generator and the incremental cross-corpus
     * probe. Null-text docs emit null keys, which match nothing in an
     * equi-join — they can never pair. */
   private[llm] def bandedKeys(docs: DataFrame, n: Int, perms: Int, bands: Int,
       rowsPerBand: Int, tok: Tokenizer = Tokenizer.Ascii): DataFrame =
-    minhashSignatures(docs, n, perms, tok).select(col("doc_id"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          bandKey(col("sig"), b * rowsPerBand, rowsPerBand).as("key"))): _*))
-        .as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
+    bandRows(minhashSignatures(docs, n, perms, tok), "doc_id", Nil,
+      (0 until bands).map(b => bandKey(col("sig"), b * rowsPerBand, rowsPerBand)))
 
+  /** MinHash-LSH candidate pairs (id_a, id_b): docs sharing at least one
+    * band bucket. */
+  private def minhashCandidates(docs: DataFrame, n: Int, perms: Int,
+      bands: Int, rowsPerBand: Int, tok: Tokenizer): DataFrame = {
+    require(bands * rowsPerBand == perms, "bands*rowsPerBand must equal perms")
+    candidatePairs(bandedKeys(docs, n, perms, bands, rowsPerBand, tok),
+      Seq("band", "key"))
+  }
+
+  /**
+   * MinHash + LSH: band the signature (`bands` x `rowsPerBand`), emit one
+   * (band, key) row per doc per band, self-join the banded table for
+   * candidates, then verify candidates with EXACT Jaccard >= `threshold`.
+   * Candidate generation is sub-quadratic (only same-bucket pairs); the
+   * exact verification join touches candidate pairs only
+   * ([[candidateIntersections]] — the inverted-index [[intersections]]
+   * would enumerate ALL co-occurring pairs: exactly the q39 cost the
+   * banding exists to avoid, quadratic on a hot shingle).
+   */
   def minhashLshPairs(docs: DataFrame, n: Int = 3, perms: Int = 32,
       bands: Int = 8, rowsPerBand: Int = 4,
-      threshold: Double = 0.8, tok: Tokenizer = Tokenizer.Ascii): DataFrame = {
-    require(bands * rowsPerBand == perms, "bands*rowsPerBand must equal perms")
-    val banded = bandedKeys(docs, n, perms, bands, rowsPerBand, tok)
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-    // Verify on candidate PAIRS only: attach each side's shingle rows to
-    // the pair and count matching hashes. Cost is linear — |index| +
-    // |cand|·avg_set_size shuffled rows — with no document-frequency²
-    // term anywhere, unlike the inverted-index `intersections` (which
-    // enumerates ALL co-occurring pairs: exactly the q39 cost the banding
-    // exists to avoid, quadratic on a hot shingle). The candidate subtree
-    // is also referenced exactly once, so nothing is recomputed.
-    val index = shingleIndex(docs, n, tok)
-    val inter = cand
-      .join(index.as("ia"), col("id_a") === col("ia.doc_id"))
-      .join(index.as("ib"),
-        col("id_b") === col("ib.doc_id") && col("ia.h") === col("ib.h"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    withJaccard(inter, docs, n, tok)
+      threshold: Double = 0.8, tok: Tokenizer = Tokenizer.Ascii): DataFrame =
+    withJaccard(
+      candidateIntersections(
+        minhashCandidates(docs, n, perms, bands, rowsPerBand, tok),
+        shingleIndex(docs, n, tok)),
+      setSizes(docs, n, tok))
       .filter(col("jaccard") >= threshold)
-  }
 
   /** Largest primes below 2^32 — the 64-bit SimHash's per-half feature
     * moduli. At 2^32 the fold's products stay < 2^37 (int64-safe with
@@ -1028,37 +1040,32 @@ object DedupOps {
    * low fingerprint, bands 2-3 of the high; Hamming distance is the sum
    * over halves. By pigeonhole any pair within Hamming distance 3
    * shares at least one of the 4 bands — perfect recall for
-   * maxHamming <= 3, same operator shape as [[simhashPairs]].
+   * maxHamming <= 3, same operator shape as [[simhashPairs]]; a larger
+   * `maxHamming` is rejected.
    */
   def simhashPairs64(docs: DataFrame, n: Int = 3,
-      maxHamming: Int = 3, tok: Tokenizer = Tokenizer.Ascii): DataFrame = {
-    val sims = docs
+      maxHamming: Int = 3, tok: Tokenizer = Tokenizer.Ascii): DataFrame =
+    simhash64Pairs(docs
       .select(col("doc_id"),
         shingleHashList(tok.prep(col("text")), n, ModLo).as("flo"),
         shingleHashList(tok.prep(col("text")), n, ModHi).as("fhi"))
       .filter(size(col("flo")) > 0)
       .select(col("doc_id"),
         simhashOfHashes(col("flo"), 32).as("sh_lo"),
-        simhashOfHashes(col("fhi"), 32).as("sh_hi"))
-    val banded = sims.select(col("doc_id"), col("sh_lo"), col("sh_hi"),
-      explode(array(
-        struct(lit(0).as("band"), (col("sh_lo") % 65536L).as("key")),
-        struct(lit(1).as("band"),
-          floor(col("sh_lo").cast("double") / 65536.0).cast("long").as("key")),
-        struct(lit(2).as("band"), (col("sh_hi") % 65536L).as("key")),
-        struct(lit(3).as("band"),
-          floor(col("sh_hi").cast("double") / 65536.0).cast("long").as("key"))
-      )).as("bk"))
-      .select(col("doc_id"), col("sh_lo"), col("sh_hi"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        (hamming(col("a.sh_lo"), col("b.sh_lo")) +
-          hamming(col("a.sh_hi"), col("b.sh_hi"))).as("dist"))
-      .distinct()
+        simhashOfHashes(col("fhi"), 32).as("sh_hi")), maxHamming)
+
+  /** [[simhashPairs64]]'s pair stage over given fingerprints
+    * `(doc_id, sh_lo, sh_hi)`, each half < 2^32: bands 0-1 are the
+    * 16-bit halves of `sh_lo`, bands 2-3 those of `sh_hi`. */
+  private[graft] def simhash64Pairs(sims: DataFrame,
+      maxHamming: Int): DataFrame = {
+    requireFourBandHamming(maxHamming)
+    val halves = Seq("sh_lo", "sh_hi").flatMap(h => Seq(col(h) % 65536L,
+      floor(col(h).cast("double") / 65536.0).cast("long")))
+    candidatePairs(bandRows(sims, "doc_id", Seq("sh_lo", "sh_hi"), halves),
+        Seq("band", "key"),
+        Seq((hamming(col("a.sh_lo"), col("b.sh_lo")) +
+          hamming(col("a.sh_hi"), col("b.sh_hi"))).as("dist")))
       .filter(col("dist") <= maxHamming)
   }
 
@@ -1312,7 +1319,10 @@ object DedupOps {
     val newBands = bandedKeys(survivors, n, perms, bands, rowsPerBand, tok)
     val allBands = exBands.unionByName(newBands)
     // normalize to (min, max) so a new-new pair (seen from both sides)
-    // and a new-old pair (seen once) land in one orientation
+    // and a new-old pair (seen once) land in one orientation. A new×all
+    // join, not a self-join, so it stays off [[keyedSelfJoin]]: `a < b`
+    // there would drop every new-old pair whose existing doc has the
+    // larger id.
     val cand = newBands.as("a")
       .join(allBands.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
@@ -1321,19 +1331,8 @@ object DedupOps {
         greatest(col("a.doc_id"), col("b.doc_id")).as("id_b"))
       .distinct()
     val allIndex = exIndex.unionByName(shingleIndex(survivors, n, tok))
-    val inter = cand
-      .join(allIndex.as("ia"), col("id_a") === col("ia.doc_id"))
-      .join(allIndex.as("ib"),
-        col("id_b") === col("ib.doc_id") && col("ia.h") === col("ib.h"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
     val allSizes = exSizes.unionByName(setSizes(survivors, n, tok))
-    val pairs = inter
-      .join(allSizes.as("sa"), col("id_a") === col("sa.doc_id"))
-      .join(allSizes.as("sb"), col("id_b") === col("sb.doc_id"))
-      .withColumn("jaccard",
-        fround(col("inter").cast("double") /
-          (col("sa.sz") + col("sb.sz") - col("inter")).cast("double"), 4))
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    val pairs = withJaccard(candidateIntersections(cand, allIndex), allSizes)
       .filter(col("jaccard") >= threshold)
 
     val clusters = duplicateClusters(pairs)
@@ -1362,17 +1361,6 @@ object DedupOps {
       .filter(size(col("feats")) > 0)
       .select(col("doc_id"), simhashOfHashes(col("feats"), bits).as("simhash"))
 
-  /**
-   * SimHash near-dup pairs: band the 32-bit simhash into four bytes; by
-   * pigeonhole, any pair within Hamming distance 3 shares at least one
-   * byte, so the byte-bucket join has perfect recall for maxHamming<=3.
-   * Verification is a bit_count on the candidate pairs.
-   *
-   * Sizing note (measured in SCALE.md): random byte collisions admit
-   * ~n²·4/256 candidates, fine to ~10^5 docs. Beyond that, widen the
-   * fingerprint — a 64-bit SimHash with 4x16-bit bands divides the
-   * collision factor by 256 with the identical operator shape.
-   */
   /**
    * Cross-corpus span-level dedup accounting — the C4/CCNet "repeated
    * span" rule adapted to flat word streams: each document is cut into
@@ -1673,27 +1661,44 @@ object DedupOps {
         array_join(kept, " ").as("text_clean"))
   }
 
+  /** The 4-band pigeonhole behind [[simhashPairs]], [[simhashPairs64]]
+    * and the streaming SimHash gate: two fingerprints within Hamming
+    * distance 3 agree on at least one of 4 bands, and no further. */
+  private[graft] def requireFourBandHamming(maxHamming: Int): Unit =
+    require(maxHamming >= 0 && maxHamming <= 3,
+      s"maxHamming must be in 0..3 (got $maxHamming): the fingerprint " +
+        "splits into 4 bands, so only pairs within 3 differing bits are " +
+        "sure to share one")
+
+  /** [[simhashes]] rows split into 4 bands of `bits / 4` bits each:
+    * (doc_id, simhash, band, byte). */
+  private[graft] def simhashBands(sims: DataFrame, bits: Int): DataFrame = {
+    require(bits % 4 == 0, "bits must split into 4 equal bands")
+    val bandWidth = bits / 4
+    bandRows(sims, "doc_id", Seq("simhash"), (0 until 4).map(j =>
+      floor(col("simhash").cast("double") / math.pow(2.0, bandWidth * j))
+        .cast("long") % (1L << bandWidth)), "byte")
+  }
+
+  /**
+   * SimHash near-dup pairs: band the 32-bit simhash into four bytes; by
+   * pigeonhole, any pair within Hamming distance 3 shares at least one
+   * byte, so the byte-bucket join has perfect recall for maxHamming<=3
+   * (a larger `maxHamming` is rejected). Verification is a bit_count on
+   * the candidate pairs.
+   *
+   * Sizing note (measured in SCALE.md): random byte collisions admit
+   * ~n²·4/256 candidates, fine to ~10^5 docs. Beyond that, widen the
+   * fingerprint — a 64-bit SimHash with 4x16-bit bands divides the
+   * collision factor by 256 with the identical operator shape.
+   */
   def simhashPairs(docs: DataFrame, n: Int = 3, maxHamming: Int = 3,
       bits: Int = 32, featureMod: Long = TextFunctions.P,
       tok: Tokenizer = Tokenizer.Ascii): DataFrame = {
-    require(bits % 4 == 0, "bits must split into 4 equal bands")
-    val bandWidth = bits / 4
-    val bandSize = 1L << bandWidth
-    val sims = simhashes(docs, n, bits, featureMod, tok)
-    val banded = sims.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map(j =>
-        struct(lit(j).as("band"),
-          (floor(col("simhash").cast("double") / math.pow(2.0, bandWidth * j))
-            .cast("long") % bandSize).as("byte"))): _*)).as("bk"))
-      .select(col("doc_id"), col("simhash"),
-        col("bk.band").as("band"), col("bk.byte").as("byte"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.byte") === col("b.byte") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        hamming(col("a.simhash"), col("b.simhash")).as("dist"))
-      .distinct()
+    requireFourBandHamming(maxHamming)
+    candidatePairs(simhashBands(simhashes(docs, n, bits, featureMod, tok), bits),
+        Seq("band", "byte"),
+        Seq(hamming(col("a.simhash"), col("b.simhash")).as("dist")))
       .filter(col("dist") <= maxHamming)
   }
 }

@@ -916,21 +916,11 @@ object Multimodal {
     // SOME band or the pigeonhole guarantee silently breaks (a pair
     // differing only in uncovered bits would never become a candidate)
     val widthOf = (b: Int) => if (b == bands - 1) k - b * bandBits else bandBits
-    val h = aHash(media, k)
-    val banded = h.select(col("doc_id"), col("ahash"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          expr(s"(ahash >> ${b * bandBits}) & ${(1L << widthOf(b)) - 1}")
-            .as("key"))): _*)).as("bk"))
-      .select(col("doc_id"), col("ahash"),
-        col("bk.band").as("band"), col("bk.key").as("key"))
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        expr("bit_count(a.ahash ^ b.ahash)").cast("long").as("hamming"))
-      .distinct()
+    val banded = DedupOps.bandRows(aHash(media, k), "doc_id", Seq("ahash"),
+      (0 until bands).map(b =>
+        expr(s"(ahash >> ${b * bandBits}) & ${(1L << widthOf(b)) - 1}")))
+    DedupOps.candidatePairs(banded, Seq("band", "key"),
+        Seq(expr("bit_count(a.ahash ^ b.ahash)").cast("long").as("hamming")))
       .filter(col("hamming") <= maxHamming)
   }
 }

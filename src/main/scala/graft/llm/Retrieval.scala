@@ -357,7 +357,7 @@ object Retrieval {
     * score gate ([[DsirIndex.scorer]]) stream-static legal. Empty
     * array for docs with < 2 words — the batch path's n_feats = 0
     * convention. */
-  private[llm] def bigramBinValues(text: Column, buckets: Int,
+  private[graft] def bigramBinValues(text: Column, buckets: Int,
       tok: Tokenizer = Tokenizer.Ascii): Column = {
     val ws = filter(TextFunctions.words(tok.prep(coalesce(text, lit("")))),
       w => w =!= "")
@@ -371,11 +371,6 @@ object Retrieval {
       h => h % lit(buckets.toLong))
     when(size(ws) >= 2, bins).otherwise(array().cast("array<long>"))
   }
-
-  /** [[bigramBinValues]] for the equivalence spec (WinnowExprSpec lives
-    * outside this package). */
-  private[graft] def bigramBinValuesForSpec(text: Column,
-      buckets: Int): Column = bigramBinValues(text, buckets)
 
   /**
    * Bigram-LM surprisal scoring — the CCNet/KenLM quality-filter shape:

@@ -637,14 +637,8 @@ object SimilaritySearch {
    */
   def embeddingNearDupPairs(embeddings: DataFrame, dim: Int,
       threshold: Double = 0.4, tables: Int = 8, nbits: Int = 6): DataFrame = {
-    val b = lshBuckets(embeddings, dim, tables, nbits)
-    val cand = b.as("a")
-      .join(b.as("b"),
-        col("a.table") === col("b.table") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
-    cand
+    DedupOps.candidatePairs(lshBuckets(embeddings, dim, tables, nbits),
+        Seq("table", "bucket"), id = "vec_id")
       .join(embeddings.select(col("vec_id").as("id_a"), col("embedding").as("ea")), "id_a")
       .join(embeddings.select(col("vec_id").as("id_b"), col("embedding").as("eb")), "id_b")
       .select(col("id_a"), col("id_b"), cosine(col("ea"), col("eb")).as("cos"))

@@ -200,13 +200,11 @@ object TextAnalysis {
       n: Int = 3, jaccThreshold: Double = 0.5, contThreshold: Double = 0.8,
       maxDf: Option[Long] = None,
       tok: DedupOps.Tokenizer = DedupOps.Tokenizer.Ascii): DataFrame = {
-    val sp = withSplit(docs, trainPct, valPct)
-      .select(col("doc_id"), col("split"))
-    DedupOps.dupEdges(docs, n, jaccThreshold, contThreshold, maxDf, tok)
-      .join(sp.as("sa"), col("id_a") === col("sa.doc_id"))
-      .join(sp.as("sb"), col("id_b") === col("sb.doc_id"))
-      .select(least(col("sa.split"), col("sb.split")).as("split_a"),
-        greatest(col("sa.split"), col("sb.split")).as("split_b"))
+    DedupOps.bothSides(
+        DedupOps.dupEdges(docs, n, jaccThreshold, contThreshold, maxDf, tok),
+        withSplit(docs, trainPct, valPct).select(col("doc_id"), col("split")))
+      .select(least(col("a.split"), col("b.split")).as("split_a"),
+        greatest(col("a.split"), col("b.split")).as("split_b"))
       .groupBy("split_a", "split_b")
       .agg(count(lit(1)).as("n_pairs"))
   }

@@ -113,7 +113,13 @@ object Bucketed {
    * placement by construction. `repartition(nBuckets, key)` first puts
    * each bucket's rows on exactly one task (repartition's hash
    * placement, `pmod(murmur3, n)`, IS the bucket placement), so each
-   * bucket lands as a single sorted file. The new layout is staged and
+   * bucket lands as a single sorted file. The rows are read from the
+   * data files by path, not through the catalog: a bucketed scan
+   * already reports that hash partitioning, so the planner drops the
+   * repartition as redundant, and `DisableUnnecessaryBucketedScan`
+   * (on by default) then finds nothing that needs the bucketed scan and
+   * turns it into plain file splits that each hold rows of several
+   * buckets — several files per bucket. The new layout is staged and
    * swapped live by [[DirSwap]] (readers see old or new, never a mix; an
    * interrupted earlier swap is recovered first), and the catalog entry
    * — which points at the same path with the same spec — needs only a
@@ -149,7 +155,7 @@ object Bucketed {
     DirSwap.stage(dir) { tmp =>
       val tmpTable = tableName + "__graft_compact"
       spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
-      spark.table(tableName)
+      spark.read.schema(meta.schema).parquet(dir)
         .repartition(spec.numBuckets, org.apache.spark.sql.functions.col(key))
         .write.format("parquet")
         .bucketBy(spec.numBuckets, key).sortBy(key)

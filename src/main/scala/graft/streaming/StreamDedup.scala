@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
-import graft.llm.TextFunctions
+import graft.llm.DedupOps
 
 /**
  * Streaming near-duplicate detection — DedupOps.simhashPairs's semantics
@@ -96,21 +96,13 @@ object StreamDedup {
   }
 
   /** Per-document band rows: 32-bit shingle SimHash split into 4 bytes,
-    * band_key = band*256 + byte — identical banding to
-    * DedupOps.simhashPairs (docs with no shingle features are excluded,
-    * matching the batch operator). Input needs (doc_id long, text). */
-  def banded(docs: DataFrame, n: Int = 3): DataFrame = {
-    val feats = TextFunctions.shingleHashList(col("text"), n, TextFunctions.P)
-    docs
-      .withColumn("__feats", feats)
-      .filter(size(col("__feats")) > 0)
-      .withColumn("simhash", TextFunctions.simhashOfHashes(col("__feats"), 32))
-      .select(col("doc_id"), col("simhash"),
-        explode(array((0 until 4).map(j =>
-          (lit(j * 256L) + floor(col("simhash").cast("double") / math.pow(2.0, 8 * j))
-            .cast("long") % 256L).as(s"b$j")): _*)).as("band_key"))
-      .select(col("band_key"), col("doc_id"), col("simhash"))
-  }
+    * band_key = band*256 + byte — DedupOps.simhashPairs's own SimHash
+    * and banding (docs with no shingle features are excluded, as in the
+    * batch operator). Input needs (doc_id long, text). */
+  def banded(docs: DataFrame, n: Int = 3): DataFrame =
+    DedupOps.simhashBands(DedupOps.simhashes(docs, n), 32)
+      .select((col("band") * 256L + col("byte")).as("band_key"),
+        col("doc_id"), col("simhash"))
 
   /** Near-dup pairs of a document stream (one row per colliding band —
     * distinct downstream). RocksDB state store required.
@@ -136,11 +128,15 @@ object StreamDedup {
     * then, after doc 1's content changes, (1,2,dist=1). A `distinct()`
     * keyed on all three columns keeps both rows; consumers that want one
     * row per pair should reduce on (id_a, id_b) keeping min(dist) (the
-    * StreamingSpec does exactly this). */
+    * StreamingSpec does exactly this).
+    *
+    * `maxHamming` outside 0..3 is rejected: with 4 bands the pigeonhole
+    * recall holds only up to 3 differing bits. */
   def dupPairs(docs: DataFrame, maxHamming: Int = 3, n: Int = 3,
       ttl: TTLConfig = TTLConfig.NONE)(
       implicit spark: SparkSession): Dataset[DupPair] = {
     import spark.implicits._
+    DedupOps.requireFourBandHamming(maxHamming)
     banded(docs, n).as[BandRow]
       .groupByKey(_.band_key)
       .transformWithState(new Processor(maxHamming, ttl), TimeMode.None(),

@@ -213,6 +213,44 @@ class DedupFuzzSpec extends SparkSpec {
     }
   }
 
+  test("fuzz: 64-bit SimHash banding == all-pairs Hamming, one flipped bit per 16-bit band included") {
+    def hamming(a: (Long, Long, Long), b: (Long, Long, Long)): Int =
+      java.lang.Long.bitCount(a._2 ^ b._2) + java.lang.Long.bitCount(a._3 ^ b._3)
+    for (seed <- seeds) {
+      val rnd = new scala.util.Random(seed)
+      def u32(): Long = rnd.nextLong() & 0xFFFFFFFFL
+      // band j of the fingerprint (lo, hi) is bits 16j..16j+15 of lo ++ hi
+      def flip(fp: (Long, Long), band: Int): (Long, Long) = {
+        val bit = 1L << (16 * (band % 2) + rnd.nextInt(16))
+        if (band < 2) (fp._1 ^ bit, fp._2) else (fp._1, fp._2 ^ bit)
+      }
+      val base = Vector.fill(24)((u32(), u32()))
+      // each of the first 12 fingerprints gets 4 variants: one bit flipped
+      // in each of k different bands, k = 1..4 — at k = 3 the pair shares
+      // exactly one band, the pigeonhole's last case
+      val variants = base.take(12).flatMap(fp => (1 to 4).map(k =>
+        rnd.shuffle((0 until 4).toList).take(k).foldLeft(fp)(flip)))
+      val fps = (base ++ variants).zipWithIndex
+        .map { case ((lo, hi), i) => (i.toLong, lo, hi) }
+      val oneSharedBand = (0 until 12).map(i => (i.toLong, 24L + 4 * i + 2))
+      oneSharedBand.foreach { case (a, b) =>
+        assert(hamming(fps(a.toInt), fps(b.toInt)) == 3) }
+      for (maxHamming <- 0 to 3) {
+        val want = (for {
+          a <- fps; b <- fps if a._1 < b._1
+          d = hamming(a, b) if d <= maxHamming
+        } yield (a._1, b._1) -> d).toMap
+        val got = DedupOps.simhash64Pairs(fps.toDF("doc_id", "sh_lo", "sh_hi"),
+            maxHamming)
+          .select("id_a", "id_b", "dist").as[(Long, Long, Int)]
+          .collect().map { case (a, b, d) => (a, b) -> d }.toMap
+        assert(got === want, s"seed $seed, maxHamming $maxHamming")
+        if (maxHamming == 3) oneSharedBand.foreach(p =>
+          assert(got.contains(p), s"seed $seed: one-shared-band pair $p missed"))
+      }
+    }
+  }
+
   test("fuzz: embedding near-dup pairs are a subset of exact cosine pairs; twins always found") {
     val dim = 16
     for (seed <- seeds) {

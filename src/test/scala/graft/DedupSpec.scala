@@ -49,6 +49,28 @@ class DedupSpec extends SparkSpec {
     assert(kept.toSeq === Seq(2L, 3L, 7L, 8L, 9L))
   }
 
+  test("simhashPairs rejects maxHamming outside the 4-band pigeonhole range 0..3") {
+    import spark.implicits._
+    val docs = Seq((1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text")
+    for (bad <- Seq(-1, 4)) {
+      val e = intercept[IllegalArgumentException](
+        graft.llm.DedupOps.simhashPairs(docs, maxHamming = bad))
+      assert(e.getMessage.contains("0..3"), e.getMessage)
+    }
+    (0 to 3).foreach(h => graft.llm.DedupOps.simhashPairs(docs, maxHamming = h))
+  }
+
+  test("simhashPairs64 rejects maxHamming outside the 4-band pigeonhole range 0..3") {
+    import spark.implicits._
+    val docs = Seq((1L, "a b c d e"), (2L, "a b c d f")).toDF("doc_id", "text")
+    for (bad <- Seq(-1, 4)) {
+      val e = intercept[IllegalArgumentException](
+        graft.llm.DedupOps.simhashPairs64(docs, maxHamming = bad))
+      assert(e.getMessage.contains("0..3"), e.getMessage)
+    }
+    (0 to 3).foreach(h => graft.llm.DedupOps.simhashPairs64(docs, maxHamming = h))
+  }
+
   test("dupLeakageMatrix: cross-source clones land off-diagonal, canonical pair order") {
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog", "web"),

@@ -45,14 +45,6 @@ class DirSwapFaultSpec extends SparkSpec {
     Option(new java.io.File(dir).listFiles()).toSeq.flatten
       .filter(_.isDirectory).map(_.getPath)
 
-  /** RelationalSpec's bucketed session: [[Bucketed.compact]] lands one
-    * file per bucket only when the table scan stays bucketed. */
-  private lazy val bs = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    s
-  }
-
   private var tables = 0
 
   private def tableName(): String = { tables += 1; s"swap_fault_bkt_$tables" }
@@ -99,7 +91,7 @@ class DirSwapFaultSpec extends SparkSpec {
       t => {
         Maintenance.recoverCompaction(spark, t)
         val name = bucketedTable(t)
-        try Bucketed.compact(bs, name)
+        try Bucketed.compact(spark, name)
         finally spark.sql(s"DROP TABLE $name")
       },
       identity,

@@ -238,6 +238,28 @@ class RelationalSpec extends SparkSpec {
     assert(e.getMessage.contains("non-Spark bucket layout"))
   }
 
+  test("Bucketed.compact lands one file per bucket under the default session confs") {
+    import graft.pipeline.{Bucketed, Maintenance}
+    val wh = Files.createTempDirectory("graft_wh_default").toString
+    val s2 = spark.newSession()
+    // the confs that once left several files per bucket, at their defaults
+    assert(s2.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled") == "true")
+    assert(s2.conf.get("spark.sql.adaptive.enabled") == "true")
+    val od = graft.model.Tables.orders(s2, sfDir)
+    // several files of unequal size per bucket: a scan that packs files
+    // into splits regardless of bucket mixes buckets in one write task
+    Bucketed.write(od.repartition(4), "orders_bd", s"$wh/orders_bd", "o_orderkey", 4)
+    Bucketed.append(od.filter(col("o_orderkey") % 3 === 0).repartition(3),
+      "orders_bd", "o_orderkey", 4)
+    val rowsBefore = Bucketed.read(s2, "orders_bd").count()
+    Bucketed.compact(s2, "orders_bd")
+    val after = Maintenance.dataFiles(s2, s"$wh/orders_bd").map(_.getName)
+    assert(after.size === 4, s"expected 4 bucket files, got $after")
+    assert(after.map(_.replaceAll(".*_(\\d{5}).*", "$1")).toSet ===
+      Set("00000", "00001", "00002", "00003"))
+    assert(Bucketed.read(s2, "orders_bd").count() === rowsBefore)
+  }
+
   test("Maintenance refuses to compact a bucketed table directory") {
     import graft.pipeline.{Bucketed, Maintenance}
     val wh = Files.createTempDirectory("graft_wh_guard").toString

@@ -518,6 +518,18 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("StreamDedup.dupPairs rejects maxHamming outside the 4-band pigeonhole range 0..3") {
+    import graft.streaming.StreamDedup
+    implicit val s: org.apache.spark.sql.SparkSession = spark
+    implicit val sqlCtx = spark.sqlContext
+    val source = MemoryStream[(Long, String)]
+    for (bad <- Seq(-1, 4)) {
+      val e = intercept[IllegalArgumentException](
+        StreamDedup.dupPairs(source.toDF().toDF("doc_id", "text"), maxHamming = bad))
+      assert(e.getMessage.contains("0..3"), e.getMessage)
+    }
+  }
+
   test("streaming dedup re-emits pairs for a doc re-ingested with changed content") {
     import graft.streaming.StreamDedup
     val s2 = spark.newSession()

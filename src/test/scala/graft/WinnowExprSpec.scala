@@ -162,7 +162,7 @@ class WinnowExprSpec extends SparkSpec {
     val d = docs.select(col("text"))
       .unionByName(Seq[Option[String]](None, Some(""), Some("one"))
         .toDF("text"))
-    d.select(graft.llm.Retrieval.bigramBinValuesForSpec(col("text"), buckets),
+    d.select(graft.llm.Retrieval.bigramBinValues(col("text"), buckets),
         hof).collect().foreach { r =>
       assert(r.getSeq[Long](0) == r.getSeq[Long](1))
     }

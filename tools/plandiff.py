@@ -9,7 +9,9 @@ one <query name>.txt formatted plan per query of a scoped run
 every plan drops what changes from run to run without changing the plan:
   - expression ids (`#123`, `#123L`) and exchange ids (`[plan_id=42]`);
   - RDD ids (`ExistingRDD[12]`, `MapPartitionsRDD[7]`, ...);
-  - object hashes (`@1a2b3c`);
+  - object hashes (`@1a2b3c`) and the JVM's numbering of lambda classes
+    (`Multimodal$$$Lambda$5452/0x00007f79dd5b9950`), which moves when
+    any code loaded earlier gains or loses a lambda;
   - call-site text (`at LlmQueries.scala:1234`);
   - the random suffix of a scratch directory a query writes and reads
     (`/tmp/graft_v8_clean4033...` → `/tmp/graft_v8_clean`).
@@ -25,6 +27,7 @@ VOLATILE = [
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"RDD\[\d+\]"), "RDD[]"),
     (re.compile(r"@[0-9a-f]+\b"), "@"),
+    (re.compile(r"Lambda\$\d+/0x[0-9a-f]+"), "Lambda"),
     (re.compile(r"\bat [\w$.<>-]+:\d+"), "at"),
     (re.compile(r"(/graft_[A-Za-z0-9_]*?)\d{6,}"), r"\1"),
 ]
