@@ -446,9 +446,6 @@ object LlmExprs {
     sim
   }
 
-  /** Static entry for the 32-bit SimHash (compat). */
-  def simhash32(input: ArrayData): Long = simhashW(input, 32)
-
   /**
    * Deterministic pseudo-random hyperplane weight for (hyperplane jj,
    * dim i): a murmur-style integer mix. A merely-affine generator (LCG

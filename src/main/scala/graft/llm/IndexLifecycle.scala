@@ -159,10 +159,6 @@ private[graft] object IndexLifecycle {
       write(table)(df.write.mode("overwrite").parquet(_))
   }
 
-  /** [[DirSwap.stepHook]], which also receives this protocol's own steps
-    * ("write t", "stamp t", "manifest", "compact t"). */
-  private[graft] val stepHook = DirSwap.stepHook
-
   /** FNV-1a over `fields`, each followed by `sep` — the content-signature
     * hash of the persisted indexes. Hand-rolled, not JVM `hashCode`, so
     * the value stored in an artifact is stable across JVM and Scala

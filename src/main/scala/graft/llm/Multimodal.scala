@@ -10,30 +10,27 @@ import org.apache.spark.sql.functions._
  * `mapInPandas`: one iterator per partition, constant memory, no
  * per-row JVM<->native round trips).
  *
- * Decode (round 20): payloads that ARE a real public image format —
- * binary Netpbm P6 (portable pixmap; format spec is public knowledge,
- * the parser below is ~50 lines with zero dependencies) — decode for
- * real: [[P6Decoder]] validates the header (magic, `#` comments,
- * arbitrary header whitespace, maxval, exact raster length) and every
- * downstream op ([[extractFeatures]], [[sampleFrames]], [[resize]], and
- * therefore [[aHash]]/[[aHashPairs]]) runs over the DECODED PIXEL
- * CHANNELS, so two different encodings of the same image (re-ordered
- * header whitespace, added comments) produce IDENTICAL features and
- * hashes — the property a perceptual near-dup pipeline exists for, and
- * one no byte-level stub can have.
+ * Decode: payloads in one of four public formats — binary Netpbm P6,
+ * uncompressed 24-bit BMP, RIFF/WAVE PCM audio and uncompressed AVI
+ * video, each parsed with zero dependencies — decode for real. One
+ * private dispatch tries each decoder's structural `parse` once and
+ * yields the payload's CANONICAL PLANE ([[pixelPlane]]): row-major
+ * top-down RGB for an image, a clip's frames concatenated in temporal
+ * order, one unsigned byte per sample for audio. Every operator
+ * ([[extractFeatures]], [[sampleFrames]], [[resize]] and therefore
+ * [[aHash]]/[[aHashPairs]], [[transcodeToP6]]) reads that plane, so two
+ * different encodings of the same image (re-ordered header whitespace,
+ * added comments, another format) produce IDENTICAL features and hashes
+ * — the property a perceptual near-dup pipeline exists for, and one no
+ * byte-level stub can have.
  *
  * Payloads in any OTHER format still route to [[StubDecoder]], a
  * deterministic fake that derives features from the raw bytes — the
- * container has no JPEG/audio codecs, and the fallback keeps the
- * plumbing testable on arbitrary binaries. Swapping the stub for a
+ * container has no JPEG/compressed-audio codecs, and the fallback keeps
+ * the plumbing testable on arbitrary binaries. Swapping the stub for a
  * JNI/FFI codec changes nothing structurally.
  */
 object Multimodal {
-
-  /** One media record: the opaque payload plus typed metadata — the shape
-    * a 100 TB multimodal table has (payload column stays unread unless the
-    * query touches it; parquet column pruning does the rest). */
-  final case class MediaRecord(doc_id: Long, payload: Array[Byte], mime: String)
 
   /** Extracted features. Deterministic given the payload bytes. */
   final case class MediaFeatures(
@@ -42,6 +39,20 @@ object Multimodal {
       mean_byte: Double,
       width: Int,
       height: Int)
+
+  /** Σ of the unsigned bytes `p[from, until)`. */
+  private def byteSum(p: Array[Byte], from: Int, until: Int): Long = {
+    var sum = 0L
+    var i = from
+    while (i < until) { sum += p(i) & 0xff; i += 1 }
+    sum
+  }
+
+  // Raw IEEE division — rounding is left to the query layer, which uses
+  // the explicit floor form (engine round() diverges at half boundaries
+  // across engines; see TextFunctions.fround).
+  private def meanByte(p: Array[Byte]): Double =
+    if (p.length == 0) 0.0 else byteSum(p, 0, p.length).toDouble / p.length
 
   /**
    * The stubbed decoder: stands in for image decode / feature extraction.
@@ -53,21 +64,92 @@ object Multimodal {
   object StubDecoder {
     def decode(docId: Long, payload: Array[Byte]): MediaFeatures = {
       val n = payload.length
-      var sum = 0L
-      var i = 0
-      while (i < n) { sum += payload(i) & 0xff; i += 1 }
-      // Raw IEEE division — rounding is left to the query layer, which
-      // uses the explicit floor form (engine round() diverges at half
-      // boundaries across engines; see TextFunctions.fround).
-      val mean = if (n == 0) 0.0 else sum.toDouble / n
       MediaFeatures(
         doc_id = docId,
         n_bytes = n.toLong,
-        mean_byte = mean,
+        mean_byte = meanByte(payload),
         width = if (n == 0) 0 else payload(0) & 0xff,
         height = if (n == 0) 0 else payload(n - 1) & 0xff)
     }
   }
+
+  // ------------------------------------------------------- byte layout
+
+  /** Little-endian reads of the BMP and RIFF header fields. */
+  private object Le {
+    def u16(p: Array[Byte], i: Int): Int =
+      (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)
+    def i32(p: Array[Byte], i: Int): Int = u16(p, i) | (u16(p, i + 2) << 16)
+    /** Whether the four bytes at `i` spell `t`; false past the end. */
+    def tag(p: Array[Byte], i: Int, t: String): Boolean =
+      i + 4 <= p.length && p(i) == t(0).toByte && p(i + 1) == t(1).toByte &&
+        p(i + 2) == t(2).toByte && p(i + 3) == t(3).toByte
+  }
+
+  /** Bytes per DIB pixel row: 3 per pixel, padded to a multiple of 4. */
+  private def stride(w: Int): Int = ((w * 3 + 3) / 4) * 4
+
+  /** The canonical plane (top-down row-major RGB) of the `w × h` DIB
+    * pixel rows at `off` — BGR pixels, padded rows, bottom-up unless
+    * `topDown` — as BMP stores an image and AVI each frame. */
+  private def dibPlane(p: Array[Byte], off: Int, w: Int, h: Int,
+      topDown: Boolean): Array[Byte] = {
+    val st = stride(w)
+    val out = new Array[Byte](w * h * 3)
+    var row = 0
+    while (row < h) {
+      val base = off + (if (topDown) row else h - 1 - row) * st
+      var x = 0
+      while (x < w) {
+        // BGR on disk → RGB in the plane
+        out((row * w + x) * 3) = p(base + x * 3 + 2)
+        out((row * w + x) * 3 + 1) = p(base + x * 3 + 1)
+        out((row * w + x) * 3 + 2) = p(base + x * 3)
+        x += 1
+      }
+      row += 1
+    }
+    out
+  }
+
+  /** Sequential little-endian writes into a payload of `size` bytes —
+    * the fixtures' encoder. */
+  private final class LeWriter(size: Int) {
+    val out = new Array[Byte](size)
+    private var o = 0
+    def tag(t: String): Unit = t.foreach { c => out(o) = c.toByte; o += 1 }
+    def u16(v: Int): Unit = {
+      out(o) = v.toByte; out(o + 1) = (v >>> 8).toByte; o += 2
+    }
+    def i32(v: Int): Unit = { u16(v); u16(v >>> 16) }
+    /** `n` raw samples, sample j = `v(j)`. */
+    def samples(n: Int)(v: Int => Byte): Unit = {
+      var j = 0
+      while (j < n) { out(o + j) = v(j); j += 1 }
+      o += n
+    }
+    /** The `w × h` image whose canonical RGB sample j is `v(j)`, as
+      * bottom-up DIB rows (BGR, padded) — the inverse of [[dibPlane]]. */
+    def dib(w: Int, h: Int)(v: Int => Byte): Unit = {
+      val st = stride(w)
+      var row = 0
+      while (row < h) {
+        var x = 0
+        while (x < w) {
+          val base = o + (h - 1 - row) * st + x * 3
+          val j = (row * w + x) * 3
+          out(base) = v(j + 2)     // B
+          out(base + 1) = v(j + 1) // G
+          out(base + 2) = v(j)     // R
+          x += 1
+        }
+        row += 1
+      }
+      o += st * h
+    }
+  }
+
+  // ---------------------------------------------------------- decoders
 
   /**
    * Binary Netpbm P6 parser (portable pixmap, the `P6` rawbits variant):
@@ -129,20 +211,9 @@ object Multimodal {
       Some(Header(w, h, mv, i))
     }
 
-    /** The plane every downstream op consumes: decoded RGB channel bytes
-      * for a valid P6 or 24-bit BMP payload, the raw payload bytes
-      * otherwise (stub semantics, unchanged for other binaries). Both
-      * decoders normalize to the SAME canonical plane — row-major
-      * top-down RGB — so two encodings of one image hash identically
-      * even ACROSS formats (a P6 and a BMP of the same pixels are
-      * perceptual clones, which is the property an image-dedup pipeline
-      * actually needs). */
-    def pixelPlane(payload: Array[Byte]): Array[Byte] =
-      parse(payload) match {
-        case Some(hd) =>
-          java.util.Arrays.copyOfRange(payload, hd.pixelOffset, payload.length)
-        case None => BmpDecoder.pixelPlane(payload)
-      }
+    /** The raster, which already is the canonical plane. */
+    private[Multimodal] def plane(p: Array[Byte], hd: Header): Array[Byte] =
+      java.util.Arrays.copyOfRange(p, hd.pixelOffset, p.length)
   }
 
   /**
@@ -155,17 +226,15 @@ object Multimodal {
    * non-BMP binary cannot false-positive. Decoding normalizes the
    * storage quirks away: bottom-up (positive height) or top-down
    * (negative) row order, per-row padding, and BGR channel order all
-   * collapse to the canonical row-major top-down RGB plane.
+   * collapse to the canonical row-major top-down RGB plane — the P6
+   * raster's layout, so a P6 and a BMP of the same pixels are
+   * perceptual clones.
    */
   object BmpDecoder {
+    import Le._
+
     final case class Header(width: Int, height: Int, topDown: Boolean,
         dataOffset: Int)
-
-    private def u16(p: Array[Byte], i: Int): Int =
-      (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)
-    private def i32(p: Array[Byte], i: Int): Int =
-      (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8) |
-        ((p(i + 2) & 0xff) << 16) | ((p(i + 3) & 0xff) << 24)
 
     def parse(p: Array[Byte]): Option[Header] = {
       if (p == null || p.length < 54 || p(0) != 'B' || p(1) != 'M') return None
@@ -177,36 +246,14 @@ object Multimodal {
       if (u16(p, 26) != 1 || u16(p, 28) != 24) return None
       if (i32(p, 30) != 0) return None // BI_RGB (uncompressed)
       val h = math.abs(hRaw)
-      val stride = ((w * 3 + 3) / 4) * 4
-      if (dataOffset < 54 || stride.toLong * h > Int.MaxValue) return None
-      if (p.length.toLong != dataOffset.toLong + stride.toLong * h) return None
+      val st = stride(w)
+      if (dataOffset < 54 || st.toLong * h > Int.MaxValue) return None
+      if (p.length.toLong != dataOffset.toLong + st.toLong * h) return None
       Some(Header(w, h, topDown = hRaw < 0, dataOffset))
     }
 
-    /** Canonical plane (top-down row-major RGB) for a valid 24-bit BMP;
-      * the raw payload otherwise. */
-    def pixelPlane(payload: Array[Byte]): Array[Byte] =
-      parse(payload) match {
-        case Some(hd) =>
-          val stride = ((hd.width * 3 + 3) / 4) * 4
-          val out = new Array[Byte](hd.width * hd.height * 3)
-          var row = 0
-          while (row < hd.height) {
-            val srcRow = if (hd.topDown) row else hd.height - 1 - row
-            val base = hd.dataOffset + srcRow * stride
-            var x = 0
-            while (x < hd.width) {
-              // BGR on disk → RGB in the plane
-              out((row * hd.width + x) * 3) = payload(base + x * 3 + 2)
-              out((row * hd.width + x) * 3 + 1) = payload(base + x * 3 + 1)
-              out((row * hd.width + x) * 3 + 2) = payload(base + x * 3)
-              x += 1
-            }
-            row += 1
-          }
-          out
-        case None => WavDecoder.pixelPlane(payload)
-      }
+    private[Multimodal] def plane(p: Array[Byte], hd: Header): Array[Byte] =
+      dibPlane(p, hd.dataOffset, hd.width, hd.height, hd.topDown)
   }
 
   /**
@@ -227,17 +274,10 @@ object Multimodal {
    * downsample, aHash = acoustic fingerprint shape) composes unchanged.
    */
   object WavDecoder {
+    import Le._
+
     final case class Header(channels: Int, sampleRate: Int, bits: Int,
         dataOffset: Int, dataLen: Int)
-
-    private def u16(p: Array[Byte], i: Int): Int =
-      (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)
-    private def i32(p: Array[Byte], i: Int): Int =
-      (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8) |
-        ((p(i + 2) & 0xff) << 16) | ((p(i + 3) & 0xff) << 24)
-    private def tag(p: Array[Byte], i: Int, t: String): Boolean =
-      p(i) == t(0).toByte && p(i + 1) == t(1).toByte &&
-        p(i + 2) == t(2).toByte && p(i + 3) == t(3).toByte
 
     def parse(p: Array[Byte]): Option[Header] = {
       if (p == null || p.length < 44) return None
@@ -271,23 +311,18 @@ object Multimodal {
       } yield Header(ch, rate, bits, off, len)
     }
 
-    /** Canonical plane (one unsigned byte per sample per channel) for a
-      * valid PCM WAV; the raw payload otherwise. */
-    def pixelPlane(payload: Array[Byte]): Array[Byte] =
-      parse(payload) match {
-        case Some(hd) if hd.bits == 8 =>
-          java.util.Arrays.copyOfRange(payload, hd.dataOffset,
-            hd.dataOffset + hd.dataLen)
-        case Some(hd) => // 16-bit LE: high byte, rebased to unsigned
-          val n = hd.dataLen / 2
-          val out = new Array[Byte](n)
-          var j = 0
-          while (j < n) {
-            out(j) = ((payload(hd.dataOffset + j * 2 + 1) + 128) & 0xff).toByte
-            j += 1
-          }
-          out
-        case None => if (payload == null) Array.emptyByteArray else payload
+    private[Multimodal] def plane(p: Array[Byte], hd: Header): Array[Byte] =
+      if (hd.bits == 8)
+        java.util.Arrays.copyOfRange(p, hd.dataOffset, hd.dataOffset + hd.dataLen)
+      else { // 16-bit LE: high byte, rebased to unsigned
+        val n = hd.dataLen / 2
+        val out = new Array[Byte](n)
+        var j = 0
+        while (j < n) {
+          out(j) = ((p(hd.dataOffset + j * 2 + 1) + 128) & 0xff).toByte
+          j += 1
+        }
+        out
       }
   }
 
@@ -304,18 +339,9 @@ object Multimodal {
    * frame count must equal avih's dwTotalFrames.
    */
   object AviDecoder {
+    import Le._
+
     final case class Avi(width: Int, height: Int, frameOffsets: Vector[Int])
-
-    private def i32(p: Array[Byte], i: Int): Int =
-      (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8) |
-        ((p(i + 2) & 0xff) << 16) | ((p(i + 3) & 0xff) << 24)
-    private def u16(p: Array[Byte], i: Int): Int =
-      (p(i) & 0xff) | ((p(i + 1) & 0xff) << 8)
-    private def tag(p: Array[Byte], i: Int, t: String): Boolean =
-      i + 4 <= p.length && p(i) == t(0).toByte && p(i + 1) == t(1).toByte &&
-        p(i + 2) == t(2).toByte && p(i + 3) == t(3).toByte
-
-    def stride(w: Int): Int = ((w * 3 + 3) / 4) * 4
 
     def parse(p: Array[Byte]): Option[Avi] = {
       if (p == null || p.length < 12) return None
@@ -402,51 +428,63 @@ object Multimodal {
 
     /** One frame's canonical plane (top-down row-major RGB) from its
       * raw DIB bits (bottom-up BGR, padded rows). */
-    def framePlane(p: Array[Byte], avi: Avi, frame: Int): Array[Byte] = {
-      val st = stride(avi.width)
-      val out = new Array[Byte](avi.width * avi.height * 3)
-      val off = avi.frameOffsets(frame)
-      var row = 0
-      while (row < avi.height) {
-        val base = off + (avi.height - 1 - row) * st
-        var x = 0
-        while (x < avi.width) {
-          out((row * avi.width + x) * 3) = p(base + x * 3 + 2)
-          out((row * avi.width + x) * 3 + 1) = p(base + x * 3 + 1)
-          out((row * avi.width + x) * 3 + 2) = p(base + x * 3)
-          x += 1
-        }
-        row += 1
-      }
-      out
-    }
+    def framePlane(p: Array[Byte], avi: Avi, frame: Int): Array[Byte] =
+      dibPlane(p, avi.frameOffsets(frame), avi.width, avi.height, topDown = false)
 
     /** Mod-997 byte-sum fingerprint of one decoded frame — the exact
       * integer a DuckDB oracle can rebuild from the fixture formula. */
     def frameFingerprint(p: Array[Byte], avi: Avi, frame: Int): Int = {
       val plane = framePlane(p, avi, frame)
-      var s = 0L
-      var i = 0
-      while (i < plane.length) { s += plane(i) & 0xff; i += 1 }
-      (s % 997).toInt
+      (byteSum(plane, 0, plane.length) % 997).toInt
     }
 
-    /** The whole clip's canonical plane: frames concatenated in temporal
-      * order — so resize/aHash over a video payload fingerprint the CLIP. */
-    def pixelPlane(payload: Array[Byte]): Array[Byte] =
-      parse(payload) match {
-        case Some(avi) =>
-          val fp = avi.width * avi.height * 3
-          val out = new Array[Byte](fp * avi.frameOffsets.length)
-          var f = 0
-          while (f < avi.frameOffsets.length) {
-            System.arraycopy(framePlane(payload, avi, f), 0, out, f * fp, fp)
-            f += 1
-          }
-          out
-        case None => AviDecoder.pixelPlane(payload)
-      }
+    /** The whole clip: frames concatenated in temporal order. */
+    private[Multimodal] def plane(p: Array[Byte], avi: Avi): Array[Byte] =
+      Array.concat(avi.frameOffsets.indices.map(framePlane(p, avi, _)): _*)
   }
+
+  /** A payload one of the four decoders recognised: its canonical plane
+    * and the two geometry numbers [[MediaFeatures]] reports — width ×
+    * height, or channels × bits per sample for audio. `still` marks a 2D
+    * image (P6 or BMP). */
+  private final case class Decoded(plane: Array[Byte], width: Int,
+      height: Int, still: Boolean)
+
+  /** The one format dispatch: P6, BMP, WAV, then AVI, each parsed once;
+    * None for any other payload (null included). */
+  private def decoded(p: Array[Byte]): Option[Decoded] =
+    P6Decoder.parse(p).map(hd =>
+      Decoded(P6Decoder.plane(p, hd), hd.width, hd.height, still = true))
+      .orElse(BmpDecoder.parse(p).map(hd =>
+        Decoded(BmpDecoder.plane(p, hd), hd.width, hd.height, still = true)))
+      .orElse(WavDecoder.parse(p).map(hd =>
+        Decoded(WavDecoder.plane(p, hd), hd.channels, hd.bits, still = false)))
+      .orElse(AviDecoder.parse(p).map(avi =>
+        Decoded(AviDecoder.plane(p, avi), avi.width, avi.height, still = false)))
+
+  /** The plane every downstream op consumes: the canonical plane of a
+    * P6, BMP, WAV or AVI payload — one byte stream for every encoding of
+    * the same pixels or samples, so re-encodings hash identically even
+    * ACROSS formats — and the payload unchanged otherwise (stub
+    * semantics; null reads as empty). */
+  def pixelPlane(payload: Array[Byte]): Array[Byte] =
+    decoded(payload).map(_.plane).getOrElse(
+      if (payload == null) Array.emptyByteArray else payload)
+
+  /** Decode one payload: REAL decode for the four formats (n_bytes/mean
+    * over the canonical plane, geometry from the header), stub
+    * statistics for everything else. */
+  def decode(docId: Long, payload: Array[Byte]): MediaFeatures =
+    decoded(payload) match {
+      case Some(m) =>
+        MediaFeatures(docId, m.plane.length.toLong, meanByte(m.plane),
+          m.width, m.height)
+      case None =>
+        StubDecoder.decode(docId,
+          if (payload == null) Array.emptyByteArray else payload)
+    }
+
+  // ---------------------------------------------------------- fixtures
 
   /** Build a media table from `documents`: the UTF-8 text bytes stand in
     * for an encoded image payload (deterministic, so oracle-checkable). */
@@ -455,6 +493,29 @@ object Multimodal {
       col("doc_id"),
       col("text").cast("binary").as("payload"),
       lit("application/octet-stream").as("mime"))
+
+  /** The fixtures' geometry for doc d: `(4 + d%5) × (3 + d%4)`. */
+  private def dims(d: Long): (Int, Int) = ((4 + d % 5).toInt, (3 + d % 4).toInt)
+
+  /** Channel sample j of frame f (0 for stills) of doc d's canonical
+    * plane: `(d·31 + f·101 + j·7) mod 251`. */
+  private def sample(d: Long, f: Int, j: Int): Byte =
+    ((d * 31 + f * 101 + j * 7) % 251).toByte
+
+  /** A binary P6 payload: the ASCII `header`, then the raster. */
+  private def p6Payload(header: String, raster: Array[Byte]): Array[Byte] =
+    header.getBytes("US-ASCII") ++ raster
+
+  /** One fixture table: `(doc_id, payload = encode(doc_id), mime)` for
+    * every doc_id of `docs`. */
+  private def fixture(docs: DataFrame, mime: String)(encode: Long => Array[Byte])(
+      implicit spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    docs.select(col("doc_id")).as[Long]
+      .mapPartitions(_.map(d => (d, encode(d))))
+      .toDF("doc_id", "payload")
+      .withColumn("mime", lit(mime))
+  }
 
   /**
    * Deterministic REAL P6 image fixtures from the documents table — the
@@ -470,94 +531,13 @@ object Multimodal {
    * identical content — the clone pair every perceptual-hash test needs.
    */
   def p6FromDocuments(docs: DataFrame, reencoded: Boolean = false)(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val variant = reencoded
-    docs.select(col("doc_id")).as[Long]
-      .mapPartitions(_.map { d =>
-        val w = (4 + d % 5).toInt
-        val h = (3 + d % 4).toInt
-        val header =
-          if (!variant) s"P6\n$w $h\n255\n"
-          else s"P6\n# graft re-encode of $d\n  $w\t$h\n# maxval next\n255 "
-        val hb = header.getBytes("US-ASCII")
-        val out = new Array[Byte](hb.length + w * h * 3)
-        System.arraycopy(hb, 0, out, 0, hb.length)
-        var j = 0
-        val n = w * h * 3
-        while (j < n) {
-          out(hb.length + j) = ((d * 31 + j * 7) % 251).toByte
-          j += 1
-        }
-        (d, out)
-      })
-      .toDF("doc_id", "payload")
-      .withColumn("mime", lit("image/x-portable-pixmap"))
-  }
-
-  /** Decode one payload: REAL decode for P6 (width/height from the
-    * header, n_bytes/mean over the decoded channel samples), stub
-    * statistics for everything else. */
-  def decode(docId: Long, payload: Array[Byte]): MediaFeatures =
-    P6Decoder.parse(payload) match {
-      case Some(hd) =>
-        val n = payload.length - hd.pixelOffset
-        var sum = 0L
-        var i = hd.pixelOffset
-        while (i < payload.length) { sum += payload(i) & 0xff; i += 1 }
-        MediaFeatures(
-          doc_id = docId,
-          n_bytes = n.toLong,
-          mean_byte = if (n == 0) 0.0 else sum.toDouble / n,
-          width = hd.width,
-          height = hd.height)
-      case None => BmpDecoder.parse(payload) match {
-        case Some(hd) =>
-          val plane = BmpDecoder.pixelPlane(payload)
-          var sum = 0L
-          var i = 0
-          while (i < plane.length) { sum += plane(i) & 0xff; i += 1 }
-          MediaFeatures(
-            doc_id = docId,
-            n_bytes = plane.length.toLong,
-            mean_byte = if (plane.length == 0) 0.0
-              else sum.toDouble / plane.length,
-            width = hd.width,
-            height = hd.height)
-        case None => WavDecoder.parse(payload) match {
-          case Some(hd) =>
-            val plane = WavDecoder.pixelPlane(payload)
-            var sum = 0L
-            var i = 0
-            while (i < plane.length) { sum += plane(i) & 0xff; i += 1 }
-            // audio has no width/height: report the two decode-relevant
-            // geometry facts instead — channels and bits per sample
-            MediaFeatures(
-              doc_id = docId,
-              n_bytes = plane.length.toLong,
-              mean_byte = if (plane.length == 0) 0.0
-                else sum.toDouble / plane.length,
-              width = hd.channels,
-              height = hd.bits)
-          case None => AviDecoder.parse(payload) match {
-            case Some(avi) =>
-              val plane = AviDecoder.pixelPlane(payload)
-              var sum = 0L
-              var i = 0
-              while (i < plane.length) { sum += plane(i) & 0xff; i += 1 }
-              MediaFeatures(
-                doc_id = docId,
-                n_bytes = plane.length.toLong,
-                mean_byte = if (plane.length == 0) 0.0
-                  else sum.toDouble / plane.length,
-                width = avi.width,
-                height = avi.height)
-            case None =>
-              StubDecoder.decode(docId,
-                if (payload == null) Array.emptyByteArray else payload)
-          }
-        }
-      }
+      implicit spark: SparkSession): DataFrame =
+    fixture(docs, "image/x-portable-pixmap") { d =>
+      val (w, h) = dims(d)
+      val header =
+        if (!reencoded) s"P6\n$w $h\n255\n"
+        else s"P6\n# graft re-encode of $d\n  $w\t$h\n# maxval next\n255 "
+      p6Payload(header, Array.tabulate(w * h * 3)(sample(d, 0, _)))
     }
 
   /**
@@ -570,47 +550,20 @@ object Multimodal {
    * cross-format clone pair.
    */
   def bmpFromDocuments(docs: DataFrame)(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .mapPartitions(_.map { d =>
-        val w = (4 + d % 5).toInt
-        val h = (3 + d % 4).toInt
-        val stride = ((w * 3 + 3) / 4) * 4
-        val dataOffset = 54
-        val size = dataOffset + stride * h
-        val out = new Array[Byte](size)
-        def put16(i: Int, v: Int): Unit = {
-          out(i) = v.toByte; out(i + 1) = (v >>> 8).toByte
-        }
-        def put32(i: Int, v: Int): Unit = {
-          out(i) = v.toByte; out(i + 1) = (v >>> 8).toByte
-          out(i + 2) = (v >>> 16).toByte; out(i + 3) = (v >>> 24).toByte
-        }
-        out(0) = 'B'; out(1) = 'M'
-        put32(2, size); put32(6, 0); put32(10, dataOffset)
-        put32(14, 40); put32(18, w); put32(22, h) // positive = bottom-up
-        put16(26, 1); put16(28, 24); put32(30, 0); put32(34, stride * h)
-        put32(38, 2835); put32(42, 2835); put32(46, 0); put32(50, 0)
-        def v(j: Int): Byte = ((d * 31 + j * 7) % 251).toByte
-        var row = 0
-        while (row < h) {
-          var x = 0
-          while (x < w) {
-            val base = dataOffset + (h - 1 - row) * stride + x * 3
-            val j = (row * w + x) * 3
-            out(base) = v(j + 2)     // B
-            out(base + 1) = v(j + 1) // G
-            out(base + 2) = v(j)     // R
-            x += 1
-          }
-          row += 1
-        }
-        (d, out)
-      })
-      .toDF("doc_id", "payload")
-      .withColumn("mime", lit("image/bmp"))
-  }
+      implicit spark: SparkSession): DataFrame =
+    fixture(docs, "image/bmp") { d =>
+      val (w, h) = dims(d)
+      val dataOffset = 54
+      val size = dataOffset + stride(w) * h
+      val le = new LeWriter(size)
+      import le._
+      tag("BM"); i32(size); i32(0); i32(dataOffset)
+      i32(40); i32(w); i32(h) // positive height = bottom-up rows
+      u16(1); u16(24); i32(0); i32(stride(w) * h)
+      i32(2835); i32(2835); i32(0); i32(0)
+      dib(w, h)(sample(d, 0, _))
+      out
+    }
 
   /**
    * The SAME sample stream as the image fixtures, encoded as an 8-bit
@@ -621,41 +574,25 @@ object Multimodal {
    * even-chunk padding rule.
    */
   def wavFromDocuments(docs: DataFrame)(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .mapPartitions(_.map { d =>
-        val n = ((4 + d % 5) * (3 + d % 4) * 3).toInt
-        val pad = n & 1
-        val out = new Array[Byte](44 + n + pad)
-        def tag(i: Int, t: String): Unit =
-          (0 until 4).foreach(k => out(i + k) = t(k).toByte)
-        def put16(i: Int, v: Int): Unit = {
-          out(i) = v.toByte; out(i + 1) = (v >>> 8).toByte
-        }
-        def put32(i: Int, v: Int): Unit = {
-          out(i) = v.toByte; out(i + 1) = (v >>> 8).toByte
-          out(i + 2) = (v >>> 16).toByte; out(i + 3) = (v >>> 24).toByte
-        }
-        tag(0, "RIFF"); put32(4, 36 + n + pad); tag(8, "WAVE")
-        tag(12, "fmt "); put32(16, 16)
-        put16(20, 1)      // PCM
-        put16(22, 1)      // mono
-        put32(24, 8000)   // sample rate
-        put32(28, 8000)   // byte rate
-        put16(32, 1)      // block align
-        put16(34, 8)      // bits per sample
-        tag(36, "data"); put32(40, n)
-        var j = 0
-        while (j < n) {
-          out(44 + j) = ((d * 31 + j * 7) % 251).toByte
-          j += 1
-        }
-        (d, out)
-      })
-      .toDF("doc_id", "payload")
-      .withColumn("mime", lit("audio/wav"))
-  }
+      implicit spark: SparkSession): DataFrame =
+    fixture(docs, "audio/wav") { d =>
+      val (w, h) = dims(d)
+      val n = w * h * 3
+      val pad = n & 1
+      val le = new LeWriter(44 + n + pad)
+      import le._
+      tag("RIFF"); i32(36 + n + pad); tag("WAVE")
+      tag("fmt "); i32(16)
+      u16(1)      // PCM
+      u16(1)      // mono
+      i32(8000)   // sample rate
+      i32(8000)   // byte rate
+      u16(1)      // block align
+      u16(8)      // bits per sample
+      tag("data"); i32(n)
+      samples(n)(sample(d, 0, _))
+      out
+    }
 
   /**
    * Deterministic uncompressed-AVI fixtures: doc d is a clip of
@@ -667,74 +604,42 @@ object Multimodal {
    * ([[AviDecoder]]'s layout), so the parser exercises the whole walk.
    */
   def aviFromDocuments(docs: DataFrame)(
-      implicit spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    docs.select(col("doc_id")).as[Long]
-      .mapPartitions(_.map { d =>
-        val w = (4 + d % 5).toInt
-        val h = (3 + d % 4).toInt
-        val nF = (2 + d % 3).toInt
-        val st = AviDecoder.stride(w)
-        val frameBytes = st * h
-        // sizes: every chunk here is even (stride is a multiple of 4)
-        val strlSize = 4 + 8 + 56 + 8 + 40
-        val hdrlSize = 4 + 8 + 56 + 8 + strlSize
-        val moviSize = 4 + nF * (8 + frameBytes)
-        val total = 12 + 8 + hdrlSize + 8 + moviSize
-        val out = new Array[Byte](total)
-        var o = 0
-        def tag(t: String): Unit = {
-          (0 until 4).foreach(i => out(o + i) = t(i).toByte); o += 4
-        }
-        def p16(v: Int): Unit = {
-          out(o) = v.toByte; out(o + 1) = (v >>> 8).toByte; o += 2
-        }
-        def p32(v: Int): Unit = {
-          out(o) = v.toByte; out(o + 1) = (v >>> 8).toByte
-          out(o + 2) = (v >>> 16).toByte; out(o + 3) = (v >>> 24).toByte
-          o += 4
-        }
-        tag("RIFF"); p32(total - 8); tag("AVI ")
-        tag("LIST"); p32(hdrlSize); tag("hdrl")
-        tag("avih"); p32(56)
-        p32(40000); p32(frameBytes * 25); p32(0); p32(0) // usec/frame…
-        p32(nF); p32(0); p32(1); p32(frameBytes)         // totalFrames, streams=1
-        p32(w); p32(h); p32(0); p32(0); p32(0); p32(0)
-        tag("LIST"); p32(strlSize); tag("strl")
-        tag("strh"); p32(56)
-        tag("vids"); tag("DIB ")
-        p32(0); p16(0); p16(0); p32(0); p32(1); p32(25)  // scale/rate
-        p32(0); p32(nF); p32(frameBytes); p32(-1); p32(0)
-        p16(0); p16(0); p16(0); p16(0)
-        tag("strf"); p32(40)
-        p32(40); p32(w); p32(h); p16(1); p16(24); p32(0)
-        p32(frameBytes); p32(2835); p32(2835); p32(0); p32(0)
-        tag("LIST"); p32(moviSize); tag("movi")
-        def v(f: Int, j: Int): Byte = ((d * 31 + f * 101 + j * 7) % 251).toByte
-        var f = 0
-        while (f < nF) {
-          tag("00db"); p32(frameBytes)
-          var row = 0
-          while (row < h) {
-            var x = 0
-            while (x < w) {
-              val base = o + (h - 1 - row) * st + x * 3
-              val j = (row * w + x) * 3
-              out(base) = v(f, j + 2)
-              out(base + 1) = v(f, j + 1)
-              out(base + 2) = v(f, j)
-              x += 1
-            }
-            row += 1
-          }
-          o += frameBytes
-          f += 1
-        }
-        (d, out)
-      })
-      .toDF("doc_id", "payload")
-      .withColumn("mime", lit("video/avi"))
-  }
+      implicit spark: SparkSession): DataFrame =
+    fixture(docs, "video/avi") { d =>
+      val (w, h) = dims(d)
+      val nF = (2 + d % 3).toInt
+      val frameBytes = stride(w) * h
+      // sizes: every chunk here is even (stride is a multiple of 4)
+      val strlSize = 4 + 8 + 56 + 8 + 40
+      val hdrlSize = 4 + 8 + 56 + 8 + strlSize
+      val moviSize = 4 + nF * (8 + frameBytes)
+      val total = 12 + 8 + hdrlSize + 8 + moviSize
+      val le = new LeWriter(total)
+      import le._
+      tag("RIFF"); i32(total - 8); tag("AVI ")
+      tag("LIST"); i32(hdrlSize); tag("hdrl")
+      tag("avih"); i32(56)
+      i32(40000); i32(frameBytes * 25); i32(0); i32(0) // usec/frame…
+      i32(nF); i32(0); i32(1); i32(frameBytes)         // totalFrames, streams=1
+      i32(w); i32(h); i32(0); i32(0); i32(0); i32(0)
+      tag("LIST"); i32(strlSize); tag("strl")
+      tag("strh"); i32(56)
+      tag("vids"); tag("DIB ")
+      i32(0); u16(0); u16(0); i32(0); i32(1); i32(25)  // scale/rate
+      i32(0); i32(nF); i32(frameBytes); i32(-1); i32(0)
+      u16(0); u16(0); u16(0); u16(0)
+      tag("strf"); i32(40)
+      i32(40); i32(w); i32(h); u16(1); u16(24); i32(0)
+      i32(frameBytes); i32(2835); i32(2835); i32(0); i32(0)
+      tag("LIST"); i32(moviSize); tag("movi")
+      (0 until nF).foreach { f =>
+        tag("00db"); i32(frameBytes)
+        dib(w, h)(sample(d, f, _))
+      }
+      out
+    }
+
+  // --------------------------------------------------------- operators
 
   /**
    * FORMAT NORMALIZATION — the ETL step a heterogeneous multimodal
@@ -756,18 +661,10 @@ object Multimodal {
     media.select(col("doc_id"), col("payload"))
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, raw) =>
-        val geom: Option[(Int, Int)] = P6Decoder.parse(raw)
-          .map(h => (h.width, h.height))
-          .orElse(BmpDecoder.parse(raw).map(h => (h.width, h.height)))
-        geom match {
-          case Some((w, h)) =>
-            val plane = P6Decoder.pixelPlane(raw) // P6 raster or BMP plane
-            val hdr = s"P6\n$w $h\n255\n".getBytes("US-ASCII")
-            val out = new Array[Byte](hdr.length + plane.length)
-            System.arraycopy(hdr, 0, out, 0, hdr.length)
-            System.arraycopy(plane, 0, out, hdr.length, plane.length)
-            (id, out, true)
-          case None => (id, raw, false)
+        decoded(raw) match {
+          case Some(m) if m.still =>
+            (id, p6Payload(s"P6\n${m.width} ${m.height}\n255\n", m.plane), true)
+          case _ => (id, raw, false)
         }
       })
       .toDF("doc_id", "payload", "transcoded")
@@ -778,8 +675,8 @@ object Multimodal {
 
   /**
    * Partition-wise feature extraction — the `mapInPandas` analog. Each
-   * task iterates its partition once through the decoder ([[P6Decoder]]
-   * for real P6 images, [[StubDecoder]] otherwise); the output is a
+   * task iterates its partition once through [[decode]] (a real decoder
+   * for the four formats, [[StubDecoder]] otherwise); the output is a
    * typed Dataset whose schema downstream SQL composes with.
    */
   def extractFeatures(media: DataFrame)(implicit spark: SparkSession): Dataset[MediaFeatures] = {
@@ -821,11 +718,11 @@ object Multimodal {
             // (pixel channels for images, PCM bytes for audio, raw
             // bytes for unknown formats) — re-encoding must not move
             // frames
-            val bytes = P6Decoder.pixelPlane(raw)
+            val bytes = pixelPlane(raw)
             val n = bytes.length
             if (n == 0) Iterator.empty
             else (0 until k).iterator.map { i =>
-              FrameSample(id, i, bytes((i * n) / k) & 0xff)
+              FrameSample(id, i, bytes((i.toLong * n / k).toInt) & 0xff)
             }
         }
       })
@@ -850,29 +747,27 @@ object Multimodal {
       .as[(Long, Array[Byte])]
       .mapPartitions(_.flatMap { case (id, raw) =>
         // spans cover the DECODED plane (see sampleFrames) — so aHash,
-        // which is built from these spans, is an invariant of the IMAGE,
-        // not of its header formatting
-        val bytes = P6Decoder.pixelPlane(raw)
+        // which is built from these spans, is an invariant of the IMAGE
+        // (or clip, or sample stream), not of its encoding
+        val bytes = pixelPlane(raw)
         val n = bytes.length
         if (n == 0) Iterator.empty
         else (0 until k).iterator.map { b =>
-          val lo = (b * n) / k
-          val hi = ((b + 1) * n) / k
-          var s = 0L
-          var p = lo
-          while (p < hi) { s += bytes(p) & 0xff; p += 1 }
-          ResizedBucket(id, b, s, (hi - lo).toLong)
+          // in Long: b·n passes Int.MaxValue from ~45 MB at k = 48
+          val lo = (b.toLong * n / k).toInt
+          val hi = ((b + 1).toLong * n / k).toInt
+          ResizedBucket(id, b, byteSum(bytes, lo, hi), (hi - lo).toLong)
         }
       })
   }
 
   /**
    * Average-hash (aHash) of each payload — the classic perceptual image
-   * fingerprint: downsample to `k` spans ([[resize]] — the stubbed
-   * decode; a real pipeline hashes the decoded thumbnail), then bit b =
-   * 1 iff span b's mean byte exceeds the payload's mean. The comparison
-   * is the EXACT integer cross-multiply sum_b·n_total > total·n_b (no
-   * division, no float), and the hash packs as Σ bit·2^b — a k ≤ 62-bit
+   * fingerprint: downsample to `k` spans ([[resize]] over the decoded
+   * plane), then bit b = 1 iff span b's mean byte exceeds the payload's
+   * mean. The comparison is the EXACT integer cross-multiply
+   * sum_b·n_total > total·n_b (no division, no float), and the hash
+   * packs as Σ bit·2^b — a k ≤ 62-bit
    * BIGINT on both engines. Empty payloads emit no hash (nothing to
    * perceive); spans past the payload's end contribute 0-bits.
    * Payloads beyond ~190 MB would overflow the cross-multiply — raise

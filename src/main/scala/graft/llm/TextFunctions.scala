@@ -168,32 +168,6 @@ object TextFunctions {
     (0 until rows).foldLeft(lit(0L): Column)((acc, k) =>
       (acc * 1000003L + element_at(sig, lit(start + k + 1))) % P)
 
-  /** Bit b (a column) of non-negative long h, via exact double division —
-    * h < P < 2^30 so floor(h / 2^b) is exact in IEEE double on both
-    * engines (the DSL's `shiftright` only takes a literal shift). */
-  private def bitAt(h: Column, b: Column): Column =
-    floor(h.cast("double") / pow(lit(2.0), b)).cast("long") % 2L
-
-  /**
-   * 32-bit SimHash over an array of string features (with multiplicity):
-   * each feature's polynomial hash votes ±1 on each of 32 bit positions;
-   * bit b of the result is 1 iff the vote sum is > 0. Returned as a
-   * non-negative long.
-   */
-  def simhashOver(features: Column): Column = {
-    val hs = transform(features, f => polyHash(f))
-    val bits = transform(sequence(lit(0), lit(31)), b =>
-      when(
-        aggregate(hs, lit(0L),
-          (s, h) => s + when(bitAt(h, b) === 1L, 1L).otherwise(-1L)) > 0,
-        pow(lit(2.0), b).cast("long")).otherwise(lit(0L)))
-    aggregate(bits, lit(0L), (s, x) => s + x)
-  }
-
-  /** 32-bit SimHash over the whitespace-token multiset. */
-  def simhash32(text: Column): Column =
-    simhashOver(filter(words(text), w => w =!= ""))
-
   /** Native SimHash over an array<long> feature-hash column; `bits`
     * widens the fingerprint (feature hashes must populate those bits —
     * pair with `shingleHashList(..., mod = LlmExprs.P48)`). */

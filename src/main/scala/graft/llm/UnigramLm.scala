@@ -522,15 +522,4 @@ object UnigramLm {
       out.result()
     } finally hist.unpersist()
   }
-
-  /** [[learnEm]]'s final vocabulary as a DataFrame (piece, freq = last
-    * round's usage, cost) — the registry-facing table. */
-  def learnEmDf(docs: DataFrame, chunkLen: Int = 6, maxPieceLen: Int = 3,
-      minCount: Long = 3L, seedSize: Int = 40, targetSize: Int = 10,
-      keepPermille: Int = 625): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    learnEm(docs, chunkLen, maxPieceLen, minCount, seedSize, targetSize,
-      keepPermille).last.vocab.toDF("piece", "freq", "cost")
-  }
 }

@@ -132,7 +132,7 @@ class IndexFaultSpec extends SparkSpec {
       protocol: => Unit): Seq[(String, String)] = {
     val root = Paths.get(fresh("idx_crash"))
     val images = ArrayBuffer.empty[(String, String)]
-    IndexLifecycle.stepHook.withValue { step =>
+    DirSwap.stepHook.withValue { step =>
       val img = root.resolve(images.size.toString)
       copyTree(Paths.get(dir), img)
       images += step -> img.toString
@@ -207,7 +207,7 @@ class IndexFaultSpec extends SparkSpec {
         val dir = copyOf(v1)
         var n = -1
         val e = intercept[InjectedFault] {
-          IndexLifecycle.stepHook.withValue { step =>
+          DirSwap.stepHook.withValue { step =>
             n += 1
             if (n == k) throw new InjectedFault(step)
           }(c.replace(dir))

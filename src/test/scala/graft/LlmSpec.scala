@@ -392,9 +392,9 @@ class LlmSpec extends SparkSpec {
     // a text payload can never false-positive: plain prose fails at magic
     assert(P6Decoder.parse("P6 looked like a good size".getBytes).isEmpty)
     // pixelPlane: raster for P6, identity for everything else
-    assert(P6Decoder.pixelPlane(img("P6\n2 3\n255\n", 2, 3)).toSeq
+    assert(Multimodal.pixelPlane(img("P6\n2 3\n255\n", 2, 3)).toSeq
       === Seq.fill(18)(42.toByte))
-    assert(P6Decoder.pixelPlane("hello".getBytes).toSeq === "hello".getBytes.toSeq)
+    assert(Multimodal.pixelPlane("hello".getBytes).toSeq === "hello".getBytes.toSeq)
   }
 
   test("BmpDecoder: 24-bit BMPs normalize (padding, bottom-up, BGR) to " +
@@ -412,8 +412,8 @@ class LlmSpec extends SparkSpec {
       .collect().toMap
     (0L until 12L).foreach { d =>
       assert(!java.util.Arrays.equals(p6(d), bmp(d)))
-      assert(Multimodal.P6Decoder.pixelPlane(p6(d)).toSeq
-        === Multimodal.BmpDecoder.pixelPlane(bmp(d)).toSeq, s"doc $d plane")
+      assert(Multimodal.pixelPlane(p6(d)).toSeq
+        === Multimodal.pixelPlane(bmp(d)).toSeq, s"doc $d plane")
       // w=5/7 rows have real padding bytes (stride 16/24 vs 15/21)
     }
     // rejections: magic, wrong bpp, wrong info-header size, compressed,
@@ -444,8 +444,8 @@ class LlmSpec extends SparkSpec {
       good.slice(54 + r * stride, 54 + (r + 1) * stride)).reverse
     val td = hdr.slice(0, 54) ++ rows.flatten
     assert(Multimodal.BmpDecoder.parse(td).exists(_.topDown))
-    assert(Multimodal.BmpDecoder.pixelPlane(td).toSeq
-      === Multimodal.BmpDecoder.pixelPlane(good).toSeq)
+    assert(Multimodal.pixelPlane(td).toSeq
+      === Multimodal.pixelPlane(good).toSeq)
   }
 
   test("WavDecoder: PCM samples decode to the canonical plane (8-bit " +
@@ -462,8 +462,8 @@ class LlmSpec extends SparkSpec {
       .select(col("doc_id"), col("payload")).as[(Long, Array[Byte])]
       .collect().toMap
     (0L until 12L).foreach { d =>
-      assert(Multimodal.P6Decoder.pixelPlane(wav(d)).toSeq
-        === Multimodal.P6Decoder.pixelPlane(p6(d)).toSeq, s"doc $d plane")
+      assert(Multimodal.pixelPlane(wav(d)).toSeq
+        === Multimodal.pixelPlane(p6(d)).toSeq, s"doc $d plane")
     }
     // hand-built 16-bit stereo WAV: plane = high bytes + 128, interleaved
     def le16(v: Int) = Array[Byte](v.toByte, (v >>> 8).toByte)
@@ -477,7 +477,7 @@ class LlmSpec extends SparkSpec {
       "data".getBytes ++ le32(data.length) ++ data
     val hd = WavDecoder.parse(w16)
     assert(hd.exists(h => h.channels == 2 && h.bits == 16))
-    assert(WavDecoder.pixelPlane(w16).toSeq ===
+    assert(Multimodal.pixelPlane(w16).toSeq ===
       Seq(0x12 + 128, 0xFF - 256 + 128, 0x7F + 128, 0x80 - 256 + 128)
         .map(v => ((v + 256) % 256).toByte))
     // rejections: magic, size mismatch, non-PCM, 24-bit, data-before-fmt,
@@ -530,7 +530,7 @@ class LlmSpec extends SparkSpec {
     }
     // pixelPlane concatenates frames temporally (clip fingerprint input)
     val a0 = AviDecoder.parse(avis(0L)).get
-    val plane = AviDecoder.pixelPlane(avis(0L))
+    val plane = Multimodal.pixelPlane(avis(0L))
     assert(plane.length === a0.width * a0.height * 3 * a0.frameOffsets.length)
     assert(plane.take(a0.width * a0.height * 3).toSeq
       === AviDecoder.framePlane(avis(0L), a0, 0).toSeq)
@@ -544,6 +544,83 @@ class LlmSpec extends SparkSpec {
     assert(AviDecoder.parse(good.dropRight(1)).isEmpty)
     assert(AviDecoder.parse(good :+ 0.toByte).isEmpty)
     assert(AviDecoder.parse(null).isEmpty)
+  }
+
+  test("pixelPlane: one dispatch over P6, BMP, WAV, AVI, text and null " +
+      "payloads; a non-AVI payload returns promptly") {
+    implicit val s = spark
+    import s.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val d = 7L // 6 × 6 pixels, 3 frames
+    val one = docs.filter(col("doc_id") === d)
+    def payload(df: org.apache.spark.sql.DataFrame): Array[Byte] =
+      df.select("payload").as[Array[Byte]].head()
+    val (w, h, nF) = ((4 + d % 5).toInt, (3 + d % 4).toInt, (2 + d % 3).toInt)
+    def frame(f: Int): Array[Byte] = Array.tabulate(w * h * 3)(j =>
+      ((d * 31 + f * 101 + j * 7) % 251).toByte)
+    val text = "plain text, in no container format".getBytes("UTF-8")
+    val table = Seq(
+      "P6" -> (payload(Multimodal.p6FromDocuments(one)), frame(0)),
+      "BMP" -> (payload(Multimodal.bmpFromDocuments(one)), frame(0)),
+      "WAV" -> (payload(Multimodal.wavFromDocuments(one)), frame(0)),
+      "AVI" -> (payload(Multimodal.aviFromDocuments(one)),
+        (0 until nF).flatMap(frame).toArray),
+      "text" -> (text, text),
+      "null" -> (null, Array.emptyByteArray))
+    table.foreach { case (name, (in, want)) =>
+      val got = Await.result(Future(Multimodal.pixelPlane(in)), 30.seconds)
+      assert(got.toSeq === want.toSeq, name)
+    }
+  }
+
+  test("resize and aHash of an AVI clip read its frames concatenated in " +
+      "temporal order, not the container bytes") {
+    implicit val s = spark
+    import s.implicits._
+    import Multimodal.AviDecoder
+    val k = 32
+    val avis = Multimodal.aviFromDocuments(docs.filter(col("doc_id") < 9))
+    val clips = avis.select(col("doc_id"), col("payload"))
+      .as[(Long, Array[Byte])].collect().map { case (d, p) =>
+        val avi = AviDecoder.parse(p).getOrElse(fail(s"doc $d: no parse"))
+        d -> avi.frameOffsets.indices.flatMap(AviDecoder.framePlane(p, avi, _))
+      }.toMap
+    // reference spans of the clip plane, and aHash's bit rule over them
+    val want = clips.map { case (d, plane) =>
+      val n = plane.length
+      d -> (0 until k).map { b =>
+        val (lo, hi) = ((b * n) / k, ((b + 1) * n) / k)
+        (plane.slice(lo, hi).map(_ & 0xff).sum.toLong, (hi - lo).toLong)
+      }
+    }
+    val got = Multimodal.resize(avis, k).collect().groupBy(_.doc_id)
+      .map { case (d, bs) =>
+        d -> bs.sortBy(_.bucket).map(b => (b.sum_bytes, b.n_in_bucket)).toSeq
+      }
+    assert(got === want)
+    val wantHash = want.map { case (d, bs) =>
+      val total = bs.map(_._1).sum
+      val nTotal = bs.map(_._2).sum
+      d -> bs.indices.filter(b => bs(b)._1 * nTotal > total * bs(b)._2)
+        .map(1L << _).sum
+    }
+    assert(Multimodal.aHash(avis, k).as[(Long, Long)].collect().toMap
+      === wantHash)
+  }
+
+  test("resize and aHash span a 48 MB payload: span bounds do not overflow") {
+    implicit val s = spark
+    import s.implicits._
+    val n = 48 * 1000 * 1000
+    // bytes 1 in the first half, 2 in the second: buckets 24..47 of 48
+    // sit above the payload mean
+    val media = Seq(1L).toDS().map(d =>
+      (d, Array.tabulate[Byte](n)(i => if (i < n / 2) 1 else 2)))
+      .toDF("doc_id", "payload")
+    assert(Multimodal.aHash(media, 48).as[(Long, Long)].collect().toSeq
+      === Seq((1L, (1L << 48) - (1L << 24))))
   }
 
   test("transcodeToP6: BMP arrivals become byte-IDENTICAL to their P6 " +

@@ -4,7 +4,9 @@
 # Round 6 ended with a snapshot whose last edit had never been compiled —
 # one bad token cost the round its correctness artifact, its bench
 # artifact, and `sbt test`. This script makes that failure mode a
-# one-command check: compile (main + test), run every ScalaTest suite,
+# one-command check: list main definitions nothing references
+# (tools/reach.py; any one not on its allowlist fails the gate), compile
+# (main + test), run every ScalaTest suite,
 # dump every registered query at sf0.01, and hash-compare each against
 # its DuckDB oracle. Exit 0 = the tree is shippable. The wall seconds of
 # the test step and of the Verify step are printed as `PREGATE <step>:`.
@@ -39,6 +41,7 @@ verify() {
     python3 tools/verify_local.py "$HOME/testdata/$SF" "$OUT"
 }
 
+timed "reach step" python3 tools/reach.py
 timed "test step" sbt -batch Test/compile test
 timed "Verify step ($SF)" verify
 echo "PREGATE OK ($SF)"
