@@ -3,6 +3,10 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.Try
+
+import IndexLifecycle.{Check, Health, Inspected}
+
 /**
  * Persisted BPE vocabulary — the fourth index lifecycle beside
  * [[DedupIndex]] (near-dup), [[IvfIndex]] (ANN) and [[DeconIndex]]
@@ -119,10 +123,10 @@ object BpeIndex {
   def driftCheck(docs: DataFrame, dir: String): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (ms, pt) = loadWithPreTok(spark, dir)
-    val fertTrain = trainFertility(lifecycle.params(spark, dir), dir)
-    val fertNow = fertilityPermille(docs, ms, pt)
-    Seq((ms.size, fertTrain, fertNow, fertNow - fertTrain))
+    val s = lifecycle.enforce(spark, dir, inspect(spark, dir))
+    val fertTrain = trainFertility(s.params, dir)
+    val fertNow = fertilityPermille(docs, s.merges, s.pretok.get)
+    Seq((s.merges.size, fertTrain, fertNow, fertNow - fertTrain))
       .toDF("k", "fert_train_permille", "fert_now_permille",
         "drift_permille")
   }
@@ -225,41 +229,59 @@ object BpeIndex {
     * text MUST prep it with the returned mode ([[build]]'s invariant). */
   def loadWithPreTok(spark: SparkSession,
       dir: String): (Seq[Bpe.Merge], Bpe.PreTok) = {
-    val (k, sep, sig, pretokName) = storedParams(spark, dir)
-    // stamp agreement BEFORE the content checks: the manifest names the
-    // torn-SWAP case outright (and catches tears the k/sep/sig content
-    // signature can't see, e.g. a manifest-era table replaced wholesale)
-    lifecycle.verify(spark, dir)
-    require(sep == Bpe.Sep,
-      s"BPE index at '$dir' was built with separator '$sep' but this " +
-        s"build uses '${Bpe.Sep}' — encoding would silently diverge")
-    val ms = storedMerges(spark, dir)
-    require(ms.size == k,
-      s"BPE index at '$dir' is torn: params say k=$k but ${ms.size} " +
-        "merges are stored — rebuild")
-    require(signature(ms) == sig,
-      s"BPE index at '$dir' is torn: the stored merges do not match the " +
-        "params content signature (interleaved or partial build) — rebuild")
-    (ms, Bpe.PreTok.parse(pretokName))
+    val s = lifecycle.enforce(spark, dir, inspect(spark, dir))
+    (s.merges, s.pretok.get)
+  }
+
+  /** The params row, the rank-ordered merges, the parsed pre-tokenization
+    * mode, and the vocabulary's one check list — what the load paths
+    * throw on, [[healthCheck]] renders and [[IndexHealth]] folds:
+    *
+    *  - `sep` — stored separator matches this build's [[Bpe.Sep]];
+    *  - `k` — stored merge count matches params' k (torn overwrite);
+    *  - `sig` — merge rows hash to params' content signature
+    *    (interleaved-builder mix, the [[signature]] scaladoc's case);
+    *  - `ranks` — ranks are exactly 1..k with no gaps or dupes (a
+    *    shifted or partially-written merges table can pass a bare count);
+    *  - `pretok` — the stored pre-tokenization mode parses. */
+  private final case class Stored(params: Row, merges: Seq[Bpe.Merge],
+      pretok: Try[Bpe.PreTok], checks: Seq[Check]) extends Inspected
+
+  private def inspect(spark: SparkSession, dir: String): Stored = {
+    val p = lifecycle.params(spark, dir)
+    val (k, sep) = (p.getAs[Int]("k"), p.getAs[String]("sep"))
+    val ms = spark.read.parquet(s"$dir/merges").orderBy("rank").collect()
+      .map(r => Bpe.Merge(r.getAs[Int]("rank"), r.getAs[String]("lhs"),
+        r.getAs[String]("rhs"), r.getAs[String]("merged"),
+        r.getAs[Long]("cnt")))
+      .toSeq
+    val pretok = Try(Bpe.PreTok.parse(p.getAs[String]("pretok")))
+    Stored(p, ms, pretok, Seq(
+      Check("sep", sep == Bpe.Sep, None,
+        s"BPE index at '$dir' was built with separator '$sep' but this " +
+          s"build uses '${Bpe.Sep}' — encoding would silently diverge"),
+      Check("k", ms.size == k, Some(k.toLong),
+        s"BPE index at '$dir' is torn: params say k=$k but ${ms.size} " +
+          "merges are stored — rebuild"),
+      Check("sig", signature(ms) == p.getAs[Long]("sig"), None,
+        s"BPE index at '$dir' is torn: the stored merges do not match the " +
+          "params content signature (interleaved or partial build) — rebuild"),
+      Check("ranks", ms.map(_.rank) == (1 to ms.size), None,
+        s"BPE index at '$dir' is corrupt: the stored merge ranks are not " +
+          s"exactly 1..${ms.size} — rebuild"),
+      Check("pretok", pretok.isSuccess, None, s"BPE index at '$dir': " +
+        pretok.failed.map(_.getMessage).getOrElse(""))))
   }
 
   /**
    * Operational health report — [[DedupIndex.healthCheck]]'s parity for
    * the vocabulary lifecycle: a scheduled job's cheap validity check
-   * WITHOUT encoding anything. One row, computed from params + the
-   * k-row merges table (both tiny):
-   *
-   *  - `sep_ok` — stored separator matches this build's [[Bpe.Sep]];
-   *  - `k_ok` — stored merge count matches params' k (torn overwrite);
-   *  - `sig_ok` — merge rows hash to params' content signature
-   *    (interleaved-builder mix, the [[signature]] scaladoc's case);
-   *  - `ranks_ok` — ranks are exactly 1..k with no gaps or dupes (a
-   *    partially-written merges table can pass a bare count);
-   *  - `has_manifest` / `stale_tables` — [[SwapManifest]] agreement
-   *    ([[IvfIndex.healthCheck]]'s columns): the manifest exists and
-   *    every table carries its expected version stamp — the torn-swap
-   *    facts the load paths throw on, reported;
-   *  - `healthy` — the conjunction a monitoring rule alerts on.
+   * WITHOUT encoding anything. One row, rendered from the check list the
+   * load paths throw on ([[inspect]]: `sep_ok`, `k_ok`, `sig_ok`,
+   * `ranks_ok`, `pretok_ok`) plus the shared rows
+   * ([[IndexLifecycle.health]]): `has_manifest` / `stale_tables`, the
+   * [[SwapManifest]] agreement the load paths also throw on, and
+   * `healthy`, the conjunction a monitoring rule alerts on.
    *
    * Unlike [[load]] (which throws — a consumer must not encode under a
    * bad vocabulary), this REPORTS: the scheduled check wants one row
@@ -267,35 +289,20 @@ object BpeIndex {
    * Throws only on an absent index (params missing), like every loader. */
   def healthCheck(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (k, sep, sig, pretokName) = storedParams(spark, dir)
-    val ms = storedMerges(spark, dir)
-    val sepOk = sep == Bpe.Sep
-    val kOk = ms.size == k
-    val sigOk = signature(ms) == sig
-    val ranksOk = ms.map(_.rank) == (1 to ms.size)
-    val pretokOk =
-      try { Bpe.PreTok.parse(pretokName); true }
-      catch { case _: IllegalArgumentException => false }
-    val (hasManifest, stale) = lifecycle.staleTables(spark, dir)
-    Seq((k, ms.size.toLong, sepOk, kOk, sigOk, ranksOk, pretokOk,
-      hasManifest, stale.mkString(","),
-      sepOk && kOk && sigOk && ranksOk && pretokOk &&
-        hasManifest && stale.isEmpty))
+    val (s, h) = inspected(spark, dir)
+    Seq((s.params.getAs[Int]("k"), s.merges.size.toLong, h("sep"), h("k"),
+      h("sig"), h("ranks"), h("pretok"), h("manifest"), h.stale.mkString(","),
+      h("healthy")))
       .toDF("k", "n_merges", "sep_ok", "k_ok", "sig_ok", "ranks_ok",
         "pretok_ok", "has_manifest", "stale_tables", "healthy")
   }
 
-  private def storedParams(spark: SparkSession,
-      dir: String): (Int, String, Long, String) = {
-    val row = lifecycle.params(spark, dir)
-    (row.getAs[Int]("k"), row.getAs[String]("sep"), row.getAs[Long]("sig"),
-      row.getAs[String]("pretok"))
-  }
+  /** [[IndexHealth]]'s rows: [[healthCheck]]'s checks as a list. */
+  private[llm] def health(spark: SparkSession, dir: String): Health =
+    inspected(spark, dir)._2
 
-  private def storedMerges(spark: SparkSession, dir: String): Seq[Bpe.Merge] =
-    spark.read.parquet(s"$dir/merges").orderBy("rank").collect()
-      .map(r => Bpe.Merge(r.getAs[Int]("rank"), r.getAs[String]("lhs"),
-        r.getAs[String]("rhs"), r.getAs[String]("merged"),
-        r.getAs[Long]("cnt")))
-      .toSeq
+  private def inspected(spark: SparkSession, dir: String): (Stored, Health) = {
+    val s = inspect(spark, dir)
+    (s, lifecycle.health(spark, dir, s.checks, Some(s.merges.size.toLong)))
+  }
 }

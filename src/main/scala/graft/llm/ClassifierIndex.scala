@@ -1,7 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import IndexLifecycle.{Check, Health, Inspected}
 
 /**
  * Persisted quality-classifier model — the sixth index lifecycle beside
@@ -57,34 +59,50 @@ object ClassifierIndex {
   private val lifecycle = new IndexLifecycle("classifier index",
     Seq("model", "params"))
 
-  /** The stored 1-row model, required to match the params signature. */
-  private def checkedModel(spark: SparkSession, dir: String,
-      params: Row): Array[Row] = {
-    val rows = spark.read.parquet(s"$dir/model").collect()
-    require(rows.length == 1,
-      s"classifier index at '$dir' is torn: ${rows.length} model rows")
-    require(signature(cellsOf(rows.head)) == params.getAs[Long]("sig"),
-      s"classifier index at '$dir' failed its content signature — " +
-        "torn write or interleaved rebuild; rebuild the index")
-    rows
+  /** The params row, the stored model rows, and the model's one check
+    * list — what [[score]] and [[scorer]] throw on, [[adoptManifest]]
+    * runs, [[healthCheck]] renders and [[IndexHealth]] folds:
+    *
+    *  - `one_row` — exactly one model row (a second row is an
+    *    interleaved rebuild; none is a half-deleted index, a health STATE
+    *    to report, not a crash);
+    *  - `sig` — the row hashes to params' content signature (torn write
+    *    or interleaved rebuild that shares the threshold). */
+  private final case class Stored(params: Row, rows: Array[Row],
+      checks: Seq[Check]) extends Inspected
+
+  private def inspect(spark: SparkSession, dir: String): Stored = {
+    val p = lifecycle.params(spark, dir)
+    val rows =
+      try spark.read.parquet(s"$dir/model").collect()
+      catch { case _: AnalysisException => Array.empty[Row] }
+    val oneRow = rows.length == 1
+    Stored(p, rows, Seq(
+      Check("one_row", oneRow, Some(rows.length.toLong),
+        s"classifier index at '$dir' is torn: ${rows.length} model rows"),
+      Check("sig",
+        oneRow && signature(cellsOf(rows.head)) == p.getAs[Long]("sig"),
+        None, s"classifier index at '$dir' failed its content signature — " +
+          "torn write or interleaved rebuild; rebuild the index")))
   }
 
   /** Adopt a PRE-MANIFEST classifier index (stamp + manifest, no
     * rebuild) — [[DedupIndex.adoptManifest]]'s contract. This lifecycle
     * has a FULL content check that needs no manifest (the 1-row model
-    * vs the params signature), so adoption here verifies consistency
-    * outright before blessing the table set. */
+    * vs the params signature): adoption runs the check list the load
+    * paths throw on ([[inspect]]) before blessing the table set. */
   def adoptManifest(spark: SparkSession, dir: String): Unit =
-    lifecycle.adopt(spark, dir)(checkedModel(spark, dir, _))
+    lifecycle.adopt(spark, dir, inspect(spark, dir).checks)
 
   private def loadValidated(spark: SparkSession, dir: String): DataFrame = {
-    val rows = checkedModel(spark, dir, lifecycle.open(spark, dir))
+    val s = lifecycle.enforce(spark, dir, inspect(spark, dir))
     // Rebuild the frame from the already-validated collected row: a
     // lazily-read model would re-read the parquet at execution time, so
     // an interleaved rebuild between validation and execution could
     // score under an UNVALIDATED model. The scored model must be
     // byte-identical to the one whose signature passed.
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), rows.head.schema)
+    spark.createDataFrame(java.util.Arrays.asList(s.rows: _*),
+      s.rows.head.schema)
   }
 
   /** Classify a batch under the STORED model — (doc_id, pred), identical
@@ -117,29 +135,30 @@ object ClassifierIndex {
 
   /** Operational report: params present, model-row count, signature
     * validity, class counts — the scheduled-job check ([[DedupIndex
-    * .healthCheck]]'s contract: REPORTS where loaders throw). */
+    * .healthCheck]]'s contract: REPORTS where loaders throw), rendering
+    * the check list the load paths throw on ([[inspect]]: `one_row`,
+    * `sig_ok`) with the shared manifest/stamp rows and `healthy`. */
   def healthCheck(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val params = lifecycle.params(spark, dir)
-    val rows =
-      try spark.read.parquet(s"$dir/model").collect()
-      catch {
-        // a half-deleted index (params intact, model gone) is a health
-        // STATE to report, not a crash — the loaders throw, this reports
-        case _: org.apache.spark.sql.AnalysisException => Array.empty[Row]
-      }
-    val oneRow = rows.length == 1
-    val sigOk = oneRow &&
-      signature(cellsOf(rows.head)) == params.getAs[Long]("sig")
+    val (s, h) = inspected(spark, dir)
     val (cPos, cNeg) =
-      if (oneRow) (rows.head.getAs[Long]("c_pos"), rows.head.getAs[Long]("c_neg"))
+      if (h("one_row"))
+        (s.rows.head.getAs[Long]("c_pos"), s.rows.head.getAs[Long]("c_neg"))
       else (-1L, -1L)
-    val (hasManifest, stale) = lifecycle.staleTables(spark, dir)
-    Seq((params.getAs[Long]("threshold_permille"), rows.length.toLong,
-      oneRow, sigOk, cPos, cNeg, hasManifest, stale.mkString(","),
-      oneRow && sigOk && cPos >= 0L && cNeg >= 0L &&
-        hasManifest && stale.isEmpty))
+    Seq((s.params.getAs[Long]("threshold_permille"), s.rows.length.toLong,
+      h("one_row"), h("sig"), cPos, cNeg, h("manifest"),
+      h.stale.mkString(","), h("healthy")))
       .toDF("threshold_permille", "model_rows", "one_row", "sig_ok",
         "c_pos", "c_neg", "has_manifest", "stale_tables", "healthy")
+  }
+
+  /** [[IndexHealth]]'s rows: [[healthCheck]]'s checks as a list. */
+  private[llm] def health(spark: SparkSession, dir: String): Health =
+    inspected(spark, dir)._2
+
+  private def inspected(spark: SparkSession, dir: String): (Stored, Health) = {
+    val s = inspect(spark, dir)
+    (s, lifecycle.health(spark, dir, s.checks,
+      Some(s.params.getAs[Long]("threshold_permille"))))
   }
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import IndexLifecycle.{Check, Health}
 import TextFunctions._
 
 /**
@@ -78,15 +79,13 @@ object DeconIndex {
 
   /** Adopt a PRE-MANIFEST decon index (stamp + manifest, no rebuild) —
     * [[DedupIndex.adoptManifest]]'s contract for the decontamination
-    * lifecycle. Pre-checks the stored gram width; refuses via
+    * lifecycle. Its check list is the stored gram width; refuses via
     * [[SwapManifest.adopt]] if a manifest already exists or any of the
     * four tables is missing. */
   def adoptManifest(spark: SparkSession, dir: String): Unit =
-    lifecycle.adopt(spark, dir) { row =>
-      require(row.getInt(0) > 0,
-        s"adopt: decon index at '$dir' stores a non-positive gram width — " +
-          "rebuild instead of adopting")
-    }
+    lifecycle.adopt(spark, dir, Seq(Check("n", gramN(spark, dir) > 0,
+      why = s"adopt: decon index at '$dir' stores a non-positive gram " +
+        "width — rebuild instead of adopting")))
 
   private def gramN(spark: SparkSession, dir: String): Int =
     lifecycle.params(spark, dir).getInt(0)
@@ -98,19 +97,13 @@ object DeconIndex {
   private def winnowParams(spark: SparkSession,
       dir: String): (Int, Int, DedupOps.Tokenizer) = {
     val r = lifecycle.params(spark, dir)
-    require(r.schema.fieldNames.contains("wtok"),
-      s"decon index at '$dir' predates the winnow layout (params has no " +
-        "winnow geometry) — rebuild() the index before using the winnow " +
-        "probe, append or healthCheck")
+    val tok = DedupOps.Tokenizer.stored(r, "wtok", "decon index", dir,
+      "predates the winnow layout (params has no winnow geometry) — " +
+        "rebuild() the index before using the winnow probe, append or " +
+        "healthCheck")
     // Read by field NAME, like the name-based guard above implies — an
     // ordinal read would silently return the wrong winnow geometry if
     // the params schema is ever reordered or widened.
-    val tok = r.getAs[String]("wtok") match {
-      case "ascii" => DedupOps.Tokenizer.Ascii
-      case "unicode" => DedupOps.Tokenizer.Unicode
-      case other => throw new IllegalStateException(
-        s"decon index at '$dir' stores unknown tokenizer '$other'")
-    }
     (r.getAs[Int]("wn"), r.getAs[Int]("ww"), tok)
   }
 
@@ -258,6 +251,15 @@ object DeconIndex {
   def compact(spark: SparkSession, dir: String, targetFiles: Int = 1): Unit =
     lifecycle.compact(spark, dir)(
       graft.pipeline.Maintenance.compactDir(spark, _, targetFiles))
+
+  /** [[IndexHealth]]'s rows for this lifecycle: the shared manifest,
+    * stale and healthy rows. It has no content checks — its duplicate-row
+    * counts are profile readings [[healthCheck]] reports. Throws on an
+    * absent index (params missing), like [[healthCheck]]. */
+  private[llm] def health(spark: SparkSession, dir: String): Health = {
+    gramN(spark, dir)
+    lifecycle.health(spark, dir, Nil, None)
+  }
 
   /**
    * Operational health report — [[DedupIndex.healthCheck]]'s parity for

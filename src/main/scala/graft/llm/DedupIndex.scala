@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import IndexLifecycle.{Check, Health}
+
 /**
  * Persisted dedup index lifecycle — the production form of
  * [[DedupOps.incrementalDedup]], mirroring [[IvfIndex]]'s
@@ -189,18 +191,19 @@ object DedupIndex {
    * params geometry; [[SwapManifest.adopt]] itself refuses when a
    * manifest already exists or a table directory is missing. Adoption
    * blesses the CURRENT table set as the consistent version — run
-   * [[healthCheck]] and review its content columns first on any
+   * [[healthCheck]] and review its profile columns first on any
    * artifact you don't trust.
    */
-  def adoptManifest(spark: SparkSession, dir: String): Unit =
-    lifecycle.adopt(spark, dir) { row =>
-      // Named access (not positional): a params schema reorder must fail
-      // loudly here, not validate the wrong columns and adopt a torn index.
-      require(row.getAs[Int]("bands") * row.getAs[Int]("rows_per_band") ==
-          row.getAs[Int]("perms"),
-        s"adopt: dedup index at '$dir' has inconsistent params " +
-          "(bands*rows_per_band != perms) — rebuild instead of adopting")
-    }
+  def adoptManifest(spark: SparkSession, dir: String): Unit = {
+    // Named access (not positional): a params schema reorder must fail
+    // loudly here, not validate the wrong columns and adopt a torn index.
+    val row = lifecycle.params(spark, dir)
+    lifecycle.adopt(spark, dir, Seq(Check("geometry",
+      row.getAs[Int]("bands") * row.getAs[Int]("rows_per_band") ==
+        row.getAs[Int]("perms"),
+      why = s"adopt: dedup index at '$dir' has inconsistent params " +
+        "(bands*rows_per_band != perms) — rebuild instead of adopting")))
+  }
 
   /**
    * Small-file compaction: every append lands one file set per table,
@@ -216,6 +219,18 @@ object DedupIndex {
   def compact(spark: SparkSession, dir: String, targetFiles: Int = 1): Unit =
     lifecycle.compact(spark, dir, tables)(
       graft.pipeline.Maintenance.compactDir(spark, _, targetFiles))
+
+  /** [[IndexHealth]]'s rows for this lifecycle: `docs_indexed` (detail:
+    * the ids count), `bands` (detail: how many LSH bands hold keys — one
+    * [[healthCheck]] row each), then the shared manifest, stale and
+    * healthy rows. */
+  private[llm] def health(spark: SparkSession, dir: String): Health = {
+    val docs = spark.read.parquet(s"$dir/ids").count()
+    val bands = spark.read.parquet(s"$dir/bands").select("band").distinct()
+      .count()
+    lifecycle.health(spark, dir, Seq(Check("docs_indexed", docs > 0,
+      Some(docs)), Check("bands", bands > 0, Some(bands))), Some(docs))
+  }
 
   /**
    * Index health — the dedup analog of [[IvfIndex.rebalanceCheck]]: one

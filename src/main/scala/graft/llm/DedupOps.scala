@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import TextFunctions._
@@ -67,6 +67,25 @@ object DedupOps {
     val UnicodeAligned = Tokenizer("unicode_aligned", t =>
       array_join(transform(split(t, " "), w =>
         regexp_replace(lower(w), "[^\\p{L}\\p{N}]", "")), " "))
+
+    /** The tokenizer a persisted index stores in `field` of its params
+      * `row`; `what` ("DSIR index") at `dir` names the index in errors.
+      * Layout guard BEFORE any use: a params row written before the
+      * field existed fails with IllegalArgumentException `what at dir
+      * <layout>` — silently assuming Ascii would mis-serve every answer
+      * of a Unicode-built index — and an unknown stored name with
+      * IllegalStateException. */
+    private[llm] def stored(row: Row, field: String, what: String,
+        dir: String, layout: String): Tokenizer = {
+      if (!row.schema.fieldNames.contains(field))
+        throw new IllegalArgumentException(s"$what at '$dir' $layout")
+      row.getAs[String](field) match {
+        case Ascii.name => Ascii
+        case Unicode.name => Unicode
+        case other => throw new IllegalStateException(
+          s"$what at '$dir' stores unknown tokenizer '$other'")
+      }
+    }
   }
 
   /** Column-metadata keys recording the shingle width and tokenizer a
@@ -81,8 +100,7 @@ object DedupOps {
     * than the operator call's is rejected — silently returning n=3
     * results from an n=4 call (or ASCII shingles from a Unicode call)
     * was the trap. */
-  private def shingleArr(docs: DataFrame, n: Int,
-      tok: Tokenizer = Tokenizer.Ascii) =
+  private def shingleArr(docs: DataFrame, n: Int, tok: Tokenizer) =
     if (docs.columns.contains("shingle_hashes")) {
       val meta = docs.schema("shingle_hashes").metadata
       if (meta.contains(ShingleNKey)) {
@@ -236,7 +254,7 @@ object DedupOps {
     * a map-side-combined count on the already-keyed hash; the semi-join
     * keeps index rows whose key survived the cap. */
   private def cappedIndex(docs: DataFrame, n: Int,
-      maxDf: Option[Long], tok: Tokenizer = Tokenizer.Ascii): DataFrame = {
+      maxDf: Option[Long], tok: Tokenizer): DataFrame = {
     val index = shingleIndex(docs, n, tok)
     maxDf.fold(index) { k =>
       val keep = index.groupBy(col("h"))

@@ -3,6 +3,10 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.Try
+
+import IndexLifecycle.{Check, Health, Inspected}
+
 /**
  * Persisted DSIR selection model — the fifth index lifecycle beside
  * [[DedupIndex]] (near-dup), [[IvfIndex]] (ANN), [[DeconIndex]]
@@ -81,13 +85,12 @@ object DsirIndex {
       countRows(spark.read.parquet(s"$dir/raw_counts"), "c_r"))
 
   /** Adopt a PRE-MANIFEST DSIR index (stamp + manifest, no rebuild) —
-    * [[DedupIndex.adoptManifest]]'s contract. Runs [[requireValid]]'s
-    * CONTENT checks (bin counts + content signature vs params) without
-    * the manifest gate, then blesses the table set. */
+    * [[DedupIndex.adoptManifest]]'s contract. Runs the check list the
+    * load paths throw on ([[inspect]]: bin counts, bin range, content
+    * signature, stored tokenizer) without the manifest gate, then blesses
+    * the table set. */
   def adoptManifest(spark: SparkSession, dir: String): Unit =
-    lifecycle.adopt(spark, dir) { row =>
-      checkContent(spark, dir, parse(row))
-    }
+    lifecycle.adopt(spark, dir, inspect(spark, dir).checks)
 
   /** Score a batch under the STORED model — identical arithmetic to
     * [[Retrieval.dsirScores]], with the count tables read from the
@@ -95,11 +98,10 @@ object DsirIndex {
     * the STORED tokenizer surface. Validates the signature first (a
     * torn model must not silently steer selection). */
   def score(spark: SparkSession, dir: String, docs: DataFrame): DataFrame = {
-    val (buckets, _, _, _) = requireValid(spark, dir)
-    val tok = storedTok(spark, dir)
+    val s = lifecycle.enforce(spark, dir, inspect(spark, dir))
     val ct = spark.read.parquet(s"$dir/target_counts")
     val cr = spark.read.parquet(s"$dir/raw_counts")
-    Retrieval.dsirScoreAgainst(docs, ct, cr, buckets, tok)
+    Retrieval.dsirScoreAgainst(docs, ct, cr, s.buckets, s.tok.get)
   }
 
   /** STREAM-SAFE scoring under the stored model — [[score]]'s verdict
@@ -127,8 +129,8 @@ object DsirIndex {
     * actions on one result all score against one version. */
   def scorer(spark: SparkSession,
       dir: String): DataFrame => DataFrame = {
-    val (buckets, _, _, _) = requireValid(spark, dir)
-    val tok = storedTok(spark, dir)
+    val s = lifecycle.enforce(spark, dir, inspect(spark, dir))
+    val (buckets, tok) = (s.buckets, s.tok.get)
     val model = spark.read.parquet(s"$dir/target_counts")
       .agg(map_from_entries(collect_list(struct(col("b"), col("c_t"))))
         .as("ct_map"))
@@ -152,84 +154,77 @@ object DsirIndex {
       .drop("graft_bs", "ct_map", "cr_map")
   }
 
-  /** The tokenizer the stored histograms were counted on. Layout guard
-    * BEFORE any use ([[DeconIndex]]'s reasoning): a params table written
-    * by the pre-tokenizer layout must fail loudly — silently assuming
-    * Ascii would mis-weight a Unicode-trained model's every score. */
-  private def storedTok(spark: SparkSession,
-      dir: String): DedupOps.Tokenizer = {
-    val row = lifecycle.params(spark, dir)
-    require(row.schema.fieldNames.contains("dtok"),
-      s"DSIR index at '$dir' predates the stored-tokenizer layout — " +
-        "rebuild it (scoring must use the surface the model was " +
-        "trained on, and this artifact does not record it)")
-    row.getAs[String]("dtok") match {
-      case "ascii" => DedupOps.Tokenizer.Ascii
-      case "unicode" => DedupOps.Tokenizer.Unicode
-      case other => throw new IllegalStateException(
-        s"DSIR index at '$dir' stores unknown tokenizer '$other'")
-    }
+  /** The stored geometry, the stored tokenizer, the two bin-ordered count
+    * tables, and the model's one check list — what [[score]] and
+    * [[scorer]] throw on, [[adoptManifest]] runs, [[healthCheck]] renders
+    * and [[IndexHealth]] folds:
+    *
+    *  - `bins` — stored row counts match params (torn overwrite);
+    *  - `range` — every bin id in [0, buckets) with positive count (a
+    *    count table from a different buckets geometry shows here);
+    *  - `sig` — rows hash to params' content signature (interleaved
+    *    builders — both per-table checks can pass on a MIXED artifact);
+    *  - `tok` — the stored tokenizer is recorded and known. The TOKENIZER
+    *    is part of the model ([[DeconIndex]]'s invariant): a params table
+    *    written by the pre-tokenizer layout must fail loudly — silently
+    *    assuming Ascii would mis-weight a Unicode-trained model's every
+    *    score. */
+  private final case class Stored(params: Row, buckets: Int,
+      tok: Try[DedupOps.Tokenizer], ct: Seq[(Long, Long)],
+      cr: Seq[(Long, Long)], checks: Seq[Check]) extends Inspected
+
+  private def inspect(spark: SparkSession, dir: String): Stored = {
+    val p = lifecycle.params(spark, dir)
+    val buckets = p.getAs[Int]("buckets")
+    val (nT, nR) = (p.getAs[Long]("n_target_bins"), p.getAs[Long]("n_raw_bins"))
+    val (ct, cr) = storedCounts(spark, dir)
+    val tok = Try(DedupOps.Tokenizer.stored(p, "dtok", "DSIR index", dir,
+      "predates the stored-tokenizer layout — rebuild it (scoring must " +
+        "use the surface the model was trained on, and this artifact " +
+        "does not record it)"))
+    Stored(p, buckets, tok, ct, cr, Seq(
+      Check("bins", ct.size.toLong == nT && cr.size.toLong == nR, None,
+        s"DSIR index at '$dir' is torn: params say ($nT, $nR) bins but " +
+          s"(${ct.size}, ${cr.size}) are stored — rebuild"),
+      Check("range", (ct ++ cr).forall { case (b, c) =>
+          b >= 0 && b < buckets && c > 0 }, None,
+        s"DSIR index at '$dir' is corrupt: a stored bin lies outside " +
+          s"[0, $buckets) or has a non-positive count — rebuild"),
+      Check("sig", signature(ct, cr) == p.getAs[Long]("sig"), None,
+        s"DSIR index at '$dir' is torn: stored counts do not match the " +
+          "params content signature (interleaved or partial build) — rebuild"),
+      Check("tok", tok.isSuccess, None,
+        tok.failed.map(_.getMessage).getOrElse(""))))
   }
 
   /**
    * Operational health report ([[BpeIndex.healthCheck]]'s parity): one
-   * row from params + the two tiny count tables, REPORTING where
-   * [[score]] throws —
-   *  - `bins_ok` — stored row counts match params (torn overwrite);
-   *  - `range_ok` — every bin id in [0, buckets) with positive count
-   *    (a count table from a different buckets geometry shows here);
-   *  - `sig_ok` — rows hash to params' content signature (interleaved
-   *    builders — both per-table checks can pass on a MIXED artifact);
-   *  - `healthy` — the conjunction a monitoring rule alerts on.
+   * row from params + the two tiny count tables, rendering the check
+   * list [[score]] throws on ([[inspect]]: `bins_ok`, `range_ok`,
+   * `sig_ok`, `tok_ok`) with the stored tokenizer name (`tok`), the
+   * shared `has_manifest` / `stale_tables` rows and `healthy`, the
+   * conjunction a monitoring rule alerts on.
    * Throws only on an absent index (params missing), like every loader.
    */
   def healthCheck(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val pRow = lifecycle.params(spark, dir)
-    val (buckets, nT, nR, sig) = parse(pRow)
-    val (ctRows, crRows) = storedCounts(spark, dir)
-    val binsOk = ctRows.size.toLong == nT && crRows.size.toLong == nR
-    val all = ctRows ++ crRows
-    val rangeOk = all.forall { case (b, c) => b >= 0 && b < buckets && c > 0 }
-    val sigOk = signature(ctRows, crRows) == sig
-    // tok_ok REPORTS what storedTok/score would throw on: a
-    // pre-tokenizer-layout params row or an unknown stored name.
-    val tokName =
-      if (pRow.schema.fieldNames.contains("dtok")) pRow.getAs[String]("dtok")
-      else "(pre-tokenizer layout)"
-    val tokOk = tokName == "ascii" || tokName == "unicode"
-    val (hasManifest, stale) = lifecycle.staleTables(spark, dir)
-    Seq((buckets, ctRows.size.toLong, crRows.size.toLong, tokName, binsOk,
-      rangeOk, sigOk, tokOk, hasManifest, stale.mkString(","),
-      binsOk && rangeOk && sigOk && tokOk && hasManifest && stale.isEmpty))
+    val (s, h) = inspected(spark, dir)
+    val tokName = Try(s.params.getAs[String]("dtok"))
+      .getOrElse("(pre-tokenizer layout)")
+    Seq((s.buckets, s.ct.size.toLong, s.cr.size.toLong, tokName, h("bins"),
+      h("range"), h("sig"), h("tok"), h("manifest"), h.stale.mkString(","),
+      h("healthy")))
       .toDF("buckets", "n_target_bins", "n_raw_bins", "tok", "bins_ok",
         "range_ok", "sig_ok", "tok_ok", "has_manifest", "stale_tables",
         "healthy")
   }
 
-  private def requireValid(spark: SparkSession,
-      dir: String): (Int, Long, Long, Long) = {
-    // stamp agreement BEFORE the content checks (the BpeIndex ordering):
-    // the manifest names a torn multi-table write outright
-    val p = parse(lifecycle.open(spark, dir))
-    checkContent(spark, dir, p)
-    p
-  }
+  /** [[IndexHealth]]'s rows: [[healthCheck]]'s checks as a list. */
+  private[llm] def health(spark: SparkSession, dir: String): Health =
+    inspected(spark, dir)._2
 
-  /** Stored bin counts and content signature agree with `params`. */
-  private def checkContent(spark: SparkSession, dir: String,
-      params: (Int, Long, Long, Long)): Unit = {
-    val (_, nT, nR, sig) = params
-    val (ctRows, crRows) = storedCounts(spark, dir)
-    require(ctRows.size.toLong == nT && crRows.size.toLong == nR,
-      s"DSIR index at '$dir' is torn: params say ($nT, $nR) bins but " +
-        s"(${ctRows.size}, ${crRows.size}) are stored — rebuild")
-    require(signature(ctRows, crRows) == sig,
-      s"DSIR index at '$dir' is torn: stored counts do not match the " +
-        "params content signature (interleaved or partial build) — rebuild")
+  private def inspected(spark: SparkSession, dir: String): (Stored, Health) = {
+    val s = inspect(spark, dir)
+    (s, lifecycle.health(spark, dir, s.checks, Some(s.buckets.toLong)))
   }
-
-  private def parse(row: Row): (Int, Long, Long, Long) =
-    (row.getAs[Int]("buckets"), row.getAs[Long]("n_target_bins"),
-      row.getAs[Long]("n_raw_bins"), row.getAs[Long]("sig"))
 }

@@ -25,7 +25,14 @@ import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
  *  - [[compact]]: rewrite each table's files and re-stamp it from the
  *    manifest (layout changes, content and version do not);
  *  - [[adopt]]: bless a pre-manifest artifact after the index's own
- *    content check.
+ *    check list passes.
+ *
+ * The read side is owned here too. Each index declares its invariants
+ * once, as a list of named [[IndexLifecycle.Check]]s over the params and
+ * stored rows it read; every consumer reads that list: the load paths
+ * throw on the first failed check ([[enforce]]), [[adopt]] runs it
+ * before blessing, and `healthCheck` and [[IndexHealth]] report it with
+ * the manifest, stale and healthy rows built by [[health]].
  *
  * `kind` names the index in errors ("BPE index"); its first word,
  * lower-cased, prefixes the lease job names ("bpe rebuild"). `tables` is
@@ -91,11 +98,11 @@ private[graft] final class IndexLifecycle(val kind: String,
       }
     }
 
-  /** Adopt a pre-manifest artifact ([[SwapManifest.adopt]]): read its
-    * params or fail loudly, run the index's content `check` on them, then
-    * stamp every table and write the manifest. */
-  def adopt(spark: SparkSession, dir: String)(check: Row => Unit): Unit = {
-    check(params(spark, dir))
+  /** Adopt a pre-manifest artifact ([[SwapManifest.adopt]]): throw on the
+    * first failed check of `checks` (the index's own list, read without
+    * the manifest gate), then stamp every table and write the manifest. */
+  def adopt(spark: SparkSession, dir: String, checks: Seq[Check]): Unit = {
+    failFirst(checks)
     SwapManifest.adopt(spark, dir, tables, kind)
   }
 
@@ -120,10 +127,31 @@ private[graft] final class IndexLifecycle(val kind: String,
   def verify(spark: SparkSession, dir: String): Unit =
     SwapManifest.verify(spark, dir, kind)
 
+  /** The load paths' gate over what an index's `inspect` read: the
+    * manifest/stamp agreement first ([[verify]], IllegalStateException),
+    * then the first failed check (IllegalArgumentException naming it). */
+  def enforce[S <: Inspected](spark: SparkSession, dir: String, s: S): S = {
+    verify(spark, dir)
+    failFirst(s.checks)
+    s
+  }
+
   /** (manifest present, tables whose stamp disagrees with it) — the
     * manifest facts every healthCheck reports where [[open]] throws. */
   def staleTables(spark: SparkSession, dir: String): (Boolean, Seq[String]) =
     SwapManifest.staleTables(fsOf(spark, dir), dir)
+
+  /** The index's `own` checks followed by the rows every lifecycle
+    * shares: `manifest` (present), `stale` (every table carries the
+    * manifest's stamp; detail = how many do not) and `healthy`, the
+    * conjunction of all of them, carrying the index's `detail`. */
+  def health(spark: SparkSession, dir: String, own: Seq[Check],
+      detail: Option[Long]): Health = {
+    val (hasManifest, stale) = staleTables(spark, dir)
+    val all = own ++ Seq(Check("manifest", hasManifest),
+      Check("stale", stale.isEmpty, Some(stale.size.toLong)))
+    Health(all :+ Check("healthy", all.forall(_.ok), detail), stale)
+  }
 
   /** Stamp every table `out` wrote with one fresh version. */
   private def stampEach(fs: FileSystem, out: Out): String = {
@@ -137,6 +165,39 @@ private[graft] final class IndexLifecycle(val kind: String,
 }
 
 private[graft] object IndexLifecycle {
+
+  /** One named invariant of a persisted index: `chk` names it in the
+    * dashboard (and, with `_ok`, in healthCheck), `detail` is its
+    * optional model-sized reading, and `why` is the message the load
+    * paths throw when it fails. */
+  final case class Check(chk: String, ok: Boolean,
+      detail: Option[Long] = None, why: String = "")
+
+  /** What an index's `inspect` read — its params and stored rows — with
+    * the one check list over them. */
+  trait Inspected { def checks: Seq[Check] }
+
+  /** An index's checks as [[IndexLifecycle.health]] lists them, and the
+    * tables whose stamp disagrees with the manifest (healthCheck's
+    * `stale_tables`). */
+  final case class Health(checks: Seq[Check], stale: Seq[String]) {
+    def apply(chk: String): Boolean = checks.exists(c => c.chk == chk && c.ok)
+  }
+
+  /** Throw on the first failed check, naming it. */
+  private def failFirst(checks: Seq[Check]): Unit =
+    checks.find(!_.ok).foreach(c => throw new IllegalArgumentException(
+      s"${c.why} (failed check: ${c.chk})"))
+
+  /** The writer-lease row: ok = no LIVE lease (a quiescent index or a
+    * stale/crashed holder — either way a new maintenance job could
+    * acquire); detail = holder age in seconds when a lease file exists.
+    * A false row means a writer is active RIGHT NOW — schedule-collision
+    * visibility the after-the-fact stale/sig checks cannot give. */
+  def lease(spark: SparkSession, dir: String): Check = {
+    val l = WriterLease.status(spark, dir)
+    Check("lease", !l.live, l.ageMs.map(_ / 1000))
+  }
 
   /** Where a build writes: the live table directories, or the staged
     * copies ([[DirSwap.staged]]) of a rebuild. Each finished table is a

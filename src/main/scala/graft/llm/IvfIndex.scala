@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import IndexLifecycle.Health
+
 /**
  * Persisted IVF index lifecycle — the step between the inline ANN
  * operators (SimilaritySearch.ivfTopK recomputes cell assignment per
@@ -45,16 +47,24 @@ object IvfIndex {
   /** Operational report for the manifest layout ([[graft.llm.DedupIndex
     * .healthCheck]]'s contract: REPORTS where the serving paths throw):
     * manifest presence, per-table stamp agreement, and the conjunction a
-    * monitoring rule alerts on. */
+    * monitoring rule alerts on — [[health]]'s rows, rendered. */
   def healthCheck(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (hasManifest, stale) = lifecycle.staleTables(spark, dir)
-    val nTables = SwapManifest.readManifest(SwapManifest.fsOf(spark, dir), dir)
-      .map(_.size.toLong).getOrElse(0L)
-    Seq((hasManifest, nTables, stale.mkString(","),
-      hasManifest && stale.isEmpty))
+    val h = health(spark, dir)
+    Seq((h("manifest"), manifestSize(spark, dir), h.stale.mkString(","),
+      h("healthy")))
       .toDF("has_manifest", "n_tables", "stale_tables", "healthy")
   }
+
+  /** [[IndexHealth]]'s rows for this lifecycle: the shared manifest,
+    * stale and healthy rows, healthy carrying the manifest's table
+    * count. */
+  private[llm] def health(spark: SparkSession, dir: String): Health =
+    lifecycle.health(spark, dir, Nil, Some(manifestSize(spark, dir)))
+
+  private def manifestSize(spark: SparkSession, dir: String): Long =
+    SwapManifest.readManifest(SwapManifest.fsOf(spark, dir), dir)
+      .map(_.size.toLong).getOrElse(0L)
 
   def centroids(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/centroids")

@@ -350,7 +350,7 @@ object Multimodal {
       var i = 12
       var dims: Option[(Int, Int, Int)] = None // w, h, totalFrames
       var strfOk = false
-      var frames = Vector.newBuilder[Int]
+      val frames = Vector.newBuilder[Int]
       var nFrames = 0
       var sawMovi = false
       while (i + 8 <= p.length) {

@@ -530,7 +530,7 @@ object Retrieval {
     * pair maps to `polyHash("w1 w2") mod buckets` — DSIR's hashed n-gram
     * feature space. Scan-stage explode, no shuffle. */
   private def hashedBigramBuckets(d: DataFrame, buckets: Int,
-      withId: Boolean, tok: Tokenizer = Tokenizer.Ascii): DataFrame = {
+      withId: Boolean, tok: Tokenizer): DataFrame = {
     val idCols = if (withId) Seq(col("doc_id")) else Seq.empty[Column]
     // One native per-row pass ([[bigramBinValues]]) then explode —
     // row-identical to the old explode-struct-pairs-then-hash shape

@@ -68,18 +68,24 @@ object SwapManifest {
       entries.toSeq.sortBy(_._1).map { case (t, v) => s"$t=$v" }
         .mkString("\n"))
 
-  /** Manifest-vs-stamps agreement: (manifest present, tables whose stamp
-    * disagrees with it) — the raw facts [[verify]] throws on and the
-    * healthChecks report. */
+  /** Manifest-vs-stamps agreement, compared once: None without a
+    * manifest, else every listed table whose stamp disagrees with it, as
+    * (table, stamp found, version expected), table-ordered. [[verify]]
+    * throws on it and [[staleTables]] reports it. */
+  private def disagreeing(fs: FileSystem,
+      dir: String): Option[Seq[(String, Option[String], String)]] =
+    readManifest(fs, dir).map(_.toSeq.sorted.flatMap { case (t, v) =>
+      val got = readSmall(fs, new Path(s"$dir/$t/$VersionName"))
+      if (got.contains(v)) None else Some((t, got, v))
+    })
+
+  /** (manifest present, tables whose stamp disagrees with it) — the raw
+    * facts [[verify]] throws on and the healthChecks report. */
   def staleTables(fs: FileSystem,
-      dir: String): (Boolean, Seq[String]) =
-    readManifest(fs, dir) match {
-      case None => (false, Nil)
-      case Some(man) =>
-        (true, man.filter { case (t, v) =>
-          !readSmall(fs, new Path(s"$dir/$t/$VersionName")).contains(v)
-        }.keys.toSeq.sorted)
-    }
+      dir: String): (Boolean, Seq[String]) = {
+    val d = disagreeing(fs, dir)
+    (d.isDefined, d.toSeq.flatten.map(_._1))
+  }
 
   /**
    * ONE-SHOT ADOPTION of a PRE-MANIFEST index. Requiring a manifest on
@@ -91,10 +97,11 @@ object SwapManifest {
    *
    * Adoption records "this exact table set is the blessed version" and
    * NOTHING more — it cannot tell a clean pre-manifest artifact from a
-   * torn one, so the operator must verify consistency first (each index
-   * exposes the checks: `healthCheck` content columns, `load`'s
-   * signature/cost validation). The per-index `adoptManifest` wrappers
-   * run their cheap structural checks before calling this.
+   * torn one, so consistency must be verified first. Each index declares
+   * its invariants once, as one check list ([[IndexLifecycle.Check]]):
+   * its load path throws on that list, its `healthCheck` and
+   * [[IndexHealth]] report it, and its `adoptManifest` runs it
+   * ([[IndexLifecycle.adopt]]) before calling this.
    *
    * Refuses loudly if a manifest ALREADY exists (then [[verify]] /
    * rebuild are the right tools — re-blessing a torn swap would mask
@@ -119,19 +126,16 @@ object SwapManifest {
   /** Loud version check for the serving paths: the manifest must exist
     * and every table it lists must carry the matching stamp. `what`
     * names the index kind in the error ("IVF index", "BPE index"). */
-  def verify(spark: SparkSession, dir: String, what: String): Unit = {
-    val fs = fsOf(spark, dir)
-    val man = readManifest(fs, dir).getOrElse(throw new IllegalStateException(
-      s"$what at '$dir' has no swap manifest — it predates the " +
-        "manifest layout or the build died before the manifest write; " +
-        "rebuild the index"))
-    man.foreach { case (t, v) =>
-      val got = readSmall(fs, new Path(s"$dir/$t/$VersionName"))
-      if (!got.contains(v))
-        throw new IllegalStateException(
-          s"$what at '$dir' failed its version check: table '$t' is " +
-            s"at ${got.getOrElse("<unstamped>")} but the manifest expects " +
-            s"$v — torn swap; rebuild the index")
+  def verify(spark: SparkSession, dir: String, what: String): Unit =
+    disagreeing(fsOf(spark, dir), dir) match {
+      case None => throw new IllegalStateException(
+        s"$what at '$dir' has no swap manifest — it predates the " +
+          "manifest layout or the build died before the manifest write; " +
+          "rebuild the index")
+      case Some((t, got, v) +: _) => throw new IllegalStateException(
+        s"$what at '$dir' failed its version check: table '$t' is " +
+          s"at ${got.getOrElse("<unstamped>")} but the manifest expects " +
+          s"$v — torn swap; rebuild the index")
+      case _ =>
     }
-  }
 }

@@ -490,7 +490,7 @@ object TextAnalysis {
     * single-sourced so the audit table ([[gopherRules]]) and the
     * stream-safe gate ([[gopherFilter]]) can never drift. */
   private def gopherMeasures(requiredWords: Seq[String],
-      tok: DedupOps.Tokenizer = DedupOps.Tokenizer.Ascii)
+      tok: DedupOps.Tokenizer)
       : (Column, Column, Column, Column, Column) = {
     val t = coalesce(col("text"), lit(""))
     // word-level measures run on the TOKENIZED surface (the multilingual

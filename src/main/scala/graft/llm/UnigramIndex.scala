@@ -1,7 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+
+import IndexLifecycle.{Check, Health, Inspected}
 
 /**
  * Persisted unigram-LM vocabulary — the fifth index lifecycle beside
@@ -121,10 +123,11 @@ object UnigramIndex {
   def driftCheck(docs: DataFrame, dir: String): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (ps, chunkLen, maxPieceLen, tot) = loadModel(spark, dir)
-    val fertTrain = lifecycle.params(spark, dir).getAs[Long]("fert_permille")
-    val fertNow = fertilityPermille(docs, ps, chunkLen, maxPieceLen, tot)
-    Seq((ps.size, fertTrain, fertNow, fertNow - fertTrain))
+    val s = lifecycle.enforce(spark, dir, inspect(spark, dir))
+    val fertTrain = s.params.getAs[Long]("fert_permille")
+    val fertNow = fertilityPermille(docs, s.pieces, s.chunkLen,
+      s.maxPieceLen, s.tot)
+    Seq((s.pieces.size, fertTrain, fertNow, fertNow - fertTrain))
       .toDF("n_pieces", "fert_train_permille", "fert_now_permille",
         "drift_permille")
   }
@@ -223,8 +226,9 @@ object UnigramIndex {
   }
 
   /** The vocabulary, ready for [[UnigramLm.codecOf]] — model-sized,
-    * driver-side by design. Validates the content signature and count
-    * against params (torn-overwrite detection) and the cost formula
+    * driver-side by design. Throws on the first failed check of
+    * [[inspect]]'s list: count and content signature against params
+    * (torn-overwrite detection), piece uniqueness, and the cost formula
     * itself (every stored cost must equal bitlen(tot) − bitlen(freq) —
     * a price drifted from its own frequencies is a corrupt model even
     * when internally consistent in shape). */
@@ -250,68 +254,78 @@ object UnigramIndex {
     * tampered total refuses as loudly as a tampered cost. */
   def loadModel(spark: SparkSession,
       dir: String): (Seq[Piece], Int, Int, Long) = {
-    val p = requireIndex(spark, dir)
-    lifecycle.verify(spark, dir)
-    val ps = storedPieces(spark, dir)
-    require(ps.size == p.nPieces,
-      s"unigram index at '$dir' is torn: params say n_pieces=${p.nPieces} " +
-        s"but ${ps.size} pieces are stored — rebuild")
-    require(signature(ps) == p.sig,
-      s"unigram index at '$dir' is torn: the stored pieces do not match " +
-        "the params content signature (interleaved or partial build) — rebuild")
-    val tot = p.pricedTot.getOrElse(ps.map(_.freq).sum)
-    require(ps.forall(x =>
-        x.cost == UnigramLm.bitlen(tot) - UnigramLm.bitlen(x.freq)),
-      s"unigram index at '$dir' is corrupt: stored costs disagree with " +
-        "the surprisal-bit formula against the stored pricing total — rebuild")
-    require(p.unkCost == UnigramLm.bitlen(tot) - 1L,
-      s"unigram index at '$dir' is corrupt: stored unk_cost disagrees " +
-        "with the stored pricing total — rebuild")
-    (ps, p.chunkLen, p.maxPieceLen, tot)
+    val s = lifecycle.enforce(spark, dir, inspect(spark, dir))
+    (s.pieces, s.chunkLen, s.maxPieceLen, s.tot)
   }
 
-  /** Operational health report ([[BpeIndex.healthCheck]]'s columns):
-    * REPORTS what the load paths throw on — count/signature agreement,
-    * piece uniqueness, the cost-formula invariant, manifest/stamp
-    * agreement — one row a scheduled monitor lands per index. */
+  /** The params row, the piece-ordered vocabulary, its encode geometry
+    * and pricing total, and its one check list — what the load paths
+    * throw on, [[healthCheck]] renders and [[IndexHealth]] folds:
+    *
+    *  - `n_stored` — stored piece count matches params (torn overwrite);
+    *  - `sig` — piece rows hash to params' content signature;
+    *  - `unique` — no piece is stored twice (a duplicated row can keep
+    *    count, signature and costs consistent);
+    *  - `cost` — every stored cost and the unk price equal the
+    *    surprisal-bit formula against the pricing total. */
+  private final case class Stored(params: Row, pieces: Seq[Piece],
+      chunkLen: Int, maxPieceLen: Int, tot: Long, checks: Seq[Check])
+      extends Inspected
+
+  private def inspect(spark: SparkSession, dir: String): Stored = {
+    val p = lifecycle.params(spark, dir)
+    val nPieces = p.getAs[Int]("n_pieces")
+    val ps = spark.read.parquet(s"$dir/pieces").orderBy("piece").collect()
+      .map(r => Piece(r.getAs[String]("piece"), r.getAs[Long]("freq"),
+        r.getAs[Long]("cost")))
+      .toSeq
+    // priced_tot: absent on pre-EM-layout artifacts, which are
+    // plain-learn by construction (their total IS sum(freq))
+    val tot =
+      if (p.schema.fieldNames.contains("priced_tot")) p.getAs[Long]("priced_tot")
+      else ps.map(_.freq).sum
+    Stored(p, ps, p.getAs[Int]("chunk_len"), p.getAs[Int]("max_piece_len"),
+      tot, Seq(
+        Check("n_stored", ps.size == nPieces, Some(ps.size.toLong),
+          s"unigram index at '$dir' is torn: params say n_pieces=$nPieces " +
+            s"but ${ps.size} pieces are stored — rebuild"),
+        Check("sig", signature(ps) == p.getAs[Long]("sig"), None,
+          s"unigram index at '$dir' is torn: the stored pieces do not match " +
+            "the params content signature (interleaved or partial build) — " +
+            "rebuild"),
+        Check("unique", ps.map(_.piece).distinct.size == ps.size, None,
+          s"unigram index at '$dir' is corrupt: a piece is stored more " +
+            "than once — rebuild"),
+        Check("cost", ps.forall(x =>
+            x.cost == UnigramLm.bitlen(tot) - UnigramLm.bitlen(x.freq)) &&
+            p.getAs[Long]("unk_cost") == UnigramLm.bitlen(tot) - 1L, None,
+          s"unigram index at '$dir' is corrupt: stored costs or unk_cost " +
+            "disagree with the surprisal-bit formula against the stored " +
+            "pricing total — rebuild")))
+  }
+
+  /** Operational health report ([[BpeIndex.healthCheck]]'s columns): one
+    * row rendering the check list the load paths throw on ([[inspect]]:
+    * `n_ok`, `sig_ok`, `unique_ok`, `cost_ok`) with the shared
+    * manifest/stamp agreement and `healthy` — the row a scheduled monitor
+    * lands per index. */
   def healthCheck(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val p = requireIndex(spark, dir)
-    val ps = storedPieces(spark, dir)
-    val nOk = ps.size == p.nPieces
-    val sigOk = signature(ps) == p.sig
-    val uniqueOk = ps.map(_.piece).distinct.size == ps.size
-    val tot = p.pricedTot.getOrElse(ps.map(_.freq).sum)
-    val costOk = ps.forall(x =>
-      x.cost == UnigramLm.bitlen(tot) - UnigramLm.bitlen(x.freq)) &&
-      p.unkCost == UnigramLm.bitlen(tot) - 1L
-    val (hasManifest, stale) = lifecycle.staleTables(spark, dir)
-    Seq((p.nPieces.toLong, ps.size.toLong, nOk, sigOk, uniqueOk, costOk,
-      hasManifest, stale.mkString(","),
-      nOk && sigOk && uniqueOk && costOk && hasManifest && stale.isEmpty))
+    val (s, h) = inspected(spark, dir)
+    Seq((s.params.getAs[Int]("n_pieces").toLong, s.pieces.size.toLong,
+      h("n_stored"), h("sig"), h("unique"), h("cost"), h("manifest"),
+      h.stale.mkString(","), h("healthy")))
       .toDF("n_pieces", "n_stored", "n_ok", "sig_ok", "unique_ok",
         "cost_ok", "has_manifest", "stale_tables", "healthy")
   }
 
-  private final case class Params(nPieces: Int, chunkLen: Int,
-      maxPieceLen: Int, unkCost: Long, sig: Long, pricedTot: Option[Long])
+  /** [[IndexHealth]]'s rows: [[healthCheck]]'s checks as a list. */
+  private[llm] def health(spark: SparkSession, dir: String): Health =
+    inspected(spark, dir)._2
 
-  private def requireIndex(spark: SparkSession, dir: String): Params = {
-    val r = lifecycle.params(spark, dir)
-    // priced_tot: absent on pre-EM-layout artifacts, which are
-    // plain-learn by construction (their total IS sum(freq))
-    val tot =
-      if (r.schema.fieldNames.contains("priced_tot"))
-        Some(r.getAs[Long]("priced_tot"))
-      else None
-    Params(r.getAs[Int]("n_pieces"), r.getAs[Int]("chunk_len"),
-      r.getAs[Int]("max_piece_len"), r.getAs[Long]("unk_cost"),
-      r.getAs[Long]("sig"), tot)
+  private def inspected(spark: SparkSession, dir: String): (Stored, Health) = {
+    val s = inspect(spark, dir)
+    (s, lifecycle.health(spark, dir, s.checks,
+      Some(s.params.getAs[Int]("n_pieces").toLong)))
   }
-
-  private def storedPieces(spark: SparkSession, dir: String): Seq[Piece] =
-    spark.read.parquet(s"$dir/pieces").orderBy("piece").collect()
-      .map(r => Piece(r.getAs[String]("piece"), r.getAs[Long]("freq"),
-        r.getAs[Long]("cost")))
-      .toSeq
 }

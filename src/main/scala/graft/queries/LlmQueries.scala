@@ -2892,7 +2892,7 @@ object LlmQueries {
     * k; a post-exhaustion round must CARRY the fused table forward (the
     * LEFT JOIN keeps every word when `bb` is empty), not annihilate it
     * with an empty CROSS JOIN. */
-  private def bpeRoundCtes(r: Int, pfx: String = ""): String =
+  private def bpeRoundCtes(r: Int, pfx: String): String =
     s"""${pfx}bp$r AS (
        |  SELECT s[i+1] AS lhs, s[i+2] AS rhs, CAST(sum(cnt) AS BIGINT) AS c
        |  FROM (SELECT string_split(toks, '$bpeSep') AS s, cnt,

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.model.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /**

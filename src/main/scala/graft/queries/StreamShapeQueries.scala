@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.model.Tables
 import graft.ops.Dedup
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**

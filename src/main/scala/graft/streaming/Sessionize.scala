@@ -4,7 +4,6 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**

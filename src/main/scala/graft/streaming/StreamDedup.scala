@@ -64,7 +64,7 @@ object StreamDedup {
           // other members so near-dups of the UPDATED content are
           // emitted. (Bands where the old fingerprint no longer routes
           // keep their stale entry until TTL — see scaladoc.)
-          case Some(prev) =>
+          case Some(_) =>
             val idx = members.indexWhere(_.doc_id == r.doc_id)
             members(idx) = Seen(r.doc_id, r.simhash)
             byId(r.doc_id) = members(idx)

@@ -840,6 +840,89 @@ class CorpusOpsSpec extends SparkSpec {
     }
   }
 
+  test("one check list per index: a forged artifact is refused on load by " +
+      "the check that healthCheck and the dashboard report false") {
+    import graft.llm.{BpeIndex, DsirIndex, IndexHealth, SwapManifest, UnigramIndex}
+    val corpus = Seq((1L, "banana band banana low lower lowest"),
+      (2L, "ababab cab new newer newest")).toDF("doc_id", "text")
+    def params(dir: String) = spark.read.parquet(s"$dir/params").head()
+    // Each forgery keeps every other check consistent (counts, signature,
+    // pricing total), so exactly one named check fails.
+    final case class Forged(kind: IndexHealth.Kind, chk: String,
+        tables: Seq[String], forge: String => Unit, load: String => Any,
+        healthCheck: String => org.apache.spark.sql.DataFrame)
+    // BPE merges ranked 2..k+1: count, separator and signature agree
+    val bpe = Forged(IndexHealth.BpeK, "ranks", Seq("merges", "params"), { dir =>
+      BpeIndex.build(corpus, dir, k = 4)
+      val ms = BpeIndex.load(spark, dir).map(m => m.copy(rank = m.rank + 1))
+      val p = params(dir)
+      spark.createDataFrame(ms).write.mode("overwrite").parquet(s"$dir/merges")
+      Seq((p.getAs[Int]("k"), p.getAs[String]("sep"), BpeIndex.signature(ms),
+          p.getAs[String]("pretok"), p.getAs[Long]("fert_permille")))
+        .toDF("k", "sep", "sig", "pretok", "fert_permille")
+        .write.mode("overwrite").parquet(s"$dir/params")
+    }, BpeIndex.load(spark, _), BpeIndex.healthCheck(spark, _))
+    // one piece stored twice: n_pieces, signature and the pricing total
+    // (so every cost) stay consistent
+    val unigram = Forged(IndexHealth.Unigram, "unique", Seq("pieces", "params"), { dir =>
+      UnigramIndex.build(corpus, dir)
+      val ps = UnigramIndex.load(spark, dir)
+      val dup = ps.head +: ps
+      val p = params(dir)
+      dup.toDF().write.mode("overwrite").parquet(s"$dir/pieces")
+      Seq((dup.size, p.getAs[Int]("chunk_len"), p.getAs[Int]("max_piece_len"),
+          p.getAs[Long]("unk_cost"), UnigramIndex.signature(dup),
+          p.getAs[Long]("fert_permille"), p.getAs[Long]("priced_tot")))
+        .toDF("n_pieces", "chunk_len", "max_piece_len", "unk_cost", "sig",
+          "fert_permille", "priced_tot")
+        .write.mode("overwrite").parquet(s"$dir/params")
+    }, UnigramIndex.load(spark, _), UnigramIndex.healthCheck(spark, _))
+    // a raw-count bin at buckets + 3: bin counts and signature agree
+    val dsir = Forged(IndexHealth.Dsir, "range",
+        Seq("target_counts", "raw_counts", "params"), { dir =>
+      DsirIndex.build(corpus, corpus.filter(col("doc_id") === 1L), dir,
+        buckets = 64)
+      def counts(t: String) = spark.read.parquet(s"$dir/$t").as[(Long, Long)]
+        .collect().sortBy(_._1).toSeq
+      val ct = counts("target_counts")
+      val cr = counts("raw_counts") :+ ((64L + 3L, 1L))
+      val p = params(dir)
+      cr.toDF("b", "c_r").write.mode("overwrite").parquet(s"$dir/raw_counts")
+      Seq((64, ct.size.toLong, cr.size.toLong, DsirIndex.signature(ct, cr),
+          p.getAs[String]("dtok")))
+        .toDF("buckets", "n_target_bins", "n_raw_bins", "sig", "dtok")
+        .write.mode("overwrite").parquet(s"$dir/params")
+    }, DsirIndex.score(spark, _, corpus), DsirIndex.healthCheck(spark, _))
+    for (c <- Seq(bpe, unigram, dsir)) {
+      val dir = java.nio.file.Files.createTempDirectory(s"forged_${c.chk}")
+        .toString
+      c.forge(dir)
+      restamp(dir, c.tables)
+      val e = intercept[IllegalArgumentException](c.load(dir))
+      assert(e.getMessage.contains(s"failed check: ${c.chk}"), e.getMessage)
+      val h = c.healthCheck(dir).head()
+      val failedCols = h.schema.fieldNames.toSeq
+        .filter(f => f.endsWith("_ok") && !h.getAs[Boolean](f))
+      assert(failedCols == Seq(s"${c.chk}_ok") && !h.getAs[Boolean]("healthy"),
+        s"${c.chk}: healthCheck $h")
+      val failedRows = IndexHealth.dashboard(spark, Seq(("forged", c.kind, dir)))
+        .collect().filter(!_.getBoolean(2)).map(_.getString(1)).toSet
+      assert(failedRows == Set(c.chk, "healthy"), s"${c.chk}: $failedRows")
+    }
+    // the same DSIR forgery as a pre-manifest artifact: adoption runs the
+    // list and refuses it, writing no manifest
+    val pre = java.nio.file.Files.createTempDirectory("forged_pre").toString
+    dsir.forge(pre)
+    val fs = SwapManifest.fsOf(spark, pre)
+    (SwapManifest.ManifestName +: dsir.tables.map(t =>
+        s"$t/${SwapManifest.VersionName}"))
+      .foreach(f => fs.delete(new org.apache.hadoop.fs.Path(s"$pre/$f"), false))
+    val e = intercept[IllegalArgumentException](
+      DsirIndex.adoptManifest(spark, pre))
+    assert(e.getMessage.contains("failed check: range"), e.getMessage)
+    assert(SwapManifest.readManifest(fs, pre).isEmpty)
+  }
+
   // -------------------------------------- q124/q125 version QA operators
 
   test("corpusDiff emits exactly the added/removed/changed rows") {
