@@ -39,17 +39,6 @@ object LlmExprs {
   /** Static entry for PolyHashExpr codegen. */
   def polyHash(s: UTF8String): Long = hashChars(s.toString)
 
-  /** Static entry for BpeCountExpr: total token count of `text` under
-    * the ordered merges. One greedy in-place pass per (word, merge) —
-    * fusing overwrites the accumulator's last symbol, mirroring the
-    * packed-string fold symbol-for-symbol (symbols are Sep-free by the
-    * learn-time assertion, so last-symbol equality IS the
-    * `endsWith(Sep + lhs)` check). Initial symbols are CODE POINTS, not
-    * UTF-16 code units: the learn path's `split(word, "")` and the
-    * HOF fold both split on code points, so a supplementary-plane char
-    * (one surrogate pair) must start as ONE symbol here too — charAt
-    * iteration would split it in two and the spec-pinned ≡ would hold
-    * only on the ASCII corpus. */
   /** Encode one word s[i, j): initial code-point symbols, then one
     * greedy in-place pass per merge. Returns the symbol buffer and its
     * live length (the buffer's tail past `len` is garbage). Shared by
@@ -86,6 +75,17 @@ object LlmExprs {
     (syms, len)
   }
 
+  /** Static entry for BpeCountExpr: total token count of `text` under
+    * the ordered merges. One greedy in-place pass per (word, merge) —
+    * fusing overwrites the accumulator's last symbol, mirroring the
+    * packed-string fold symbol-for-symbol (symbols are Sep-free by the
+    * learn-time assertion, so last-symbol equality IS the
+    * `endsWith(Sep + lhs)` check). Initial symbols are CODE POINTS, not
+    * UTF-16 code units: the learn path's `split(word, "")` and the
+    * HOF fold both split on code points, so a supplementary-plane char
+    * (one surrogate pair) must start as ONE symbol here too — charAt
+    * iteration would split it in two and the spec-pinned ≡ would hold
+    * only on the ASCII corpus. */
   def bpeCount(text: UTF8String, lhs: Array[String], rhs: Array[String]): Long = {
     val s = text.toString
     val n = s.length
@@ -540,7 +540,6 @@ object LlmExprs {
   }
 }
 
-/** Polynomial rolling hash of a string column → long. */
 /** DEFLATE-compressed byte count of a string — the compression-ratio
   * quality signal (Gopher/RedPajama-style: highly repetitive boilerplate
   * compresses far below natural prose). Tight JNI-backed loop via
@@ -555,17 +554,6 @@ case class DeflateLenExpr(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Native BPE token counter — the scan-stage encode of
-  * [[graft.llm.Bpe.tokenCount]] as one tight loop instead of K nested
-  * interpreted HOF folds (measured: the K = 10 HOF tree costs ~4 s per
-  * sf0.1 evaluation; this runs the identical greedy merges in
-  * milliseconds). Semantics are EXACTLY the packed-string fold's:
-  * per word (single-space split, empties skipped), symbols start as
-  * code points (surrogate pairs stay whole, matching the learn path's
-  * code-point split) and each merge makes one greedy left-to-right
-  * pass fusing (lhs, rhs) — a just-fused symbol never re-merges within
-  * the pass (lhs+rhs ≠ lhs, rhs non-empty). BpeSpec pins ≡ the HOF
-  * formulation; the oracle replays the same fold in SQL. */
 /**
  * Pre-indexed ordered merge list for the native BPE encode loop — built
  * once per expression instance (driver side), shipped as one codegen
@@ -648,6 +636,17 @@ object BpeCodec {
   val IndexedThreshold = 64
 }
 
+/** Native BPE token counter — the scan-stage encode of
+  * [[graft.llm.Bpe.tokenCount]] as one tight loop instead of K nested
+  * interpreted HOF folds (measured: the K = 10 HOF tree costs ~4 s per
+  * sf0.1 evaluation; this runs the identical greedy merges in
+  * milliseconds). Semantics are EXACTLY the packed-string fold's:
+  * per word (single-space split, empties skipped), symbols start as
+  * code points (surrogate pairs stay whole, matching the learn path's
+  * code-point split) and each merge makes one greedy left-to-right
+  * pass fusing (lhs, rhs) — a just-fused symbol never re-merges within
+  * the pass (lhs+rhs ≠ lhs, rhs non-empty). BpeSpec pins ≡ the HOF
+  * formulation; the oracle replays the same fold in SQL. */
 case class BpeCountExpr(child: Expression, merges: Seq[(String, String)])
     extends UnaryExpression {
   @transient private lazy val codec: BpeCodec = new BpeCodec(
@@ -683,6 +682,7 @@ case class BpeTokensExpr(child: Expression, merges: Seq[(String, String)])
     copy(child = newChild)
 }
 
+/** Polynomial rolling hash of a string column → long. */
 case class PolyHashExpr(child: Expression, mod: Long = LlmExprs.P)
     extends UnaryExpression {
   override def dataType: DataType = LongType

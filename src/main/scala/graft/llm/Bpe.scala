@@ -211,6 +211,14 @@ object Bpe {
     }
   }
 
+  /** The dispatch predicate: does the word-type histogram fit the
+    * driver-local learner? An executor-side limit+count — exactly
+    * maxLocalTypes rows still fit (boundary inclusive); the driver
+    * receives one long either way. */
+  private[graft] def histogramFits(hist: DataFrame,
+      maxLocalTypes: Int): Boolean =
+    hist.limit(maxLocalTypes + 1).count() <= maxLocalTypes
+
   /**
    * The distributed merge loop. Each round: pair counts over the
    * word-type frame, ONE argmax row collected (count DESC, lhs, rhs),
@@ -220,14 +228,6 @@ object Bpe {
    * duplicateClusters' rounds. O(k) sequential jobs — the scale path
    * only when the histogram can't be collected ([[learnMerges]]).
    */
-  /** The dispatch predicate: does the word-type histogram fit the
-    * driver-local learner? An executor-side limit+count — exactly
-    * maxLocalTypes rows still fit (boundary inclusive); the driver
-    * receives one long either way. */
-  private[graft] def histogramFits(hist: DataFrame,
-      maxLocalTypes: Int): Boolean =
-    hist.limit(maxLocalTypes + 1).count() <= maxLocalTypes
-
   private[graft] def learnMergesDistributed(docs: DataFrame, k: Int,
       checkpointEvery: Int = 4): Seq[Merge] =
     learnMergesDistributedHist(wordHistogram(docs), k, checkpointEvery)

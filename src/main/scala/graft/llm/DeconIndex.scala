@@ -1,10 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import IndexLifecycle.{Check, Health}
-import TextFunctions._
 
 /**
  * Persisted decontamination index — the third index lifecycle beside
@@ -38,19 +37,9 @@ import TextFunctions._
  */
 object DeconIndex {
 
-  /** The shared normalized whole-text fingerprint (single-sourced from
-    * [[TextAnalysis.decontaminated]]'s normalization). */
-  private def normFp(c: Column): Column =
-    polyHash(regexp_replace(regexp_replace(c, "[^a-z0-9 ]", ""), " +", " "))
-
   private def benchFps(benchmark: DataFrame): DataFrame =
-    benchmark.select(normFp(col("text")).as("fp"))
+    benchmark.select(TextAnalysis.normFp(col("text")).as("fp"))
       .filter(col("fp").isNotNull).distinct()
-
-  private def benchGrams(benchmark: DataFrame, n: Int): DataFrame =
-    benchmark.select(
-      explode(array_distinct(shingleHashList(col("text"), n))).as("gh"))
-      .distinct()
 
   private def benchPrints(benchmark: DataFrame, wn: Int, ww: Int,
       wtok: DedupOps.Tokenizer): DataFrame =
@@ -67,7 +56,7 @@ object DeconIndex {
     // not the manifest (appends never change versions).
     lifecycle.build(spark, dir) { out =>
       out.parquet("fingerprints", benchFps(benchmark))
-      out.parquet("grams", benchGrams(benchmark, n))
+      out.parquet("grams", TextAnalysis.benchGrams(benchmark, n))
       out.parquet("prints", benchPrints(benchmark, wn, ww, wtok))
       out.parquet("params", Seq((n, wn, ww, wtok.name))
         .toDF("n", "wn", "ww", "wtok"))
@@ -133,7 +122,7 @@ object DeconIndex {
       .localCheckpoint(true)
     if (!newFps.isEmpty)
       newFps.write.mode("append").parquet(s"$dir/fingerprints")
-    val newGrams = benchGrams(benchmark, n)
+    val newGrams = TextAnalysis.benchGrams(benchmark, n)
       .join(spark.read.parquet(s"$dir/grams"), Seq("gh"), "left_anti")
       .localCheckpoint(true)
     if (!newGrams.isEmpty)
@@ -151,37 +140,29 @@ object DeconIndex {
   def probe(corpus: DataFrame, dir: String): DataFrame = {
     lifecycle.verify(corpus.sparkSession, dir)
     val fps = corpus.sparkSession.read.parquet(s"$dir/fingerprints")
-    corpus.join(fps, normFp(col("text")) === col("fp"), "left_anti")
+    corpus.join(fps, TextAnalysis.normFp(col("text")) === col("fp"), "left_anti")
   }
 
   /** Graded n-gram overlap against the stored gram table — identical to
     * [[TextAnalysis.contaminationOverlap]] over the indexed benchmark;
     * `n` comes from the stored params. */
   def overlap(corpus: DataFrame, dir: String): DataFrame = {
-    val spark = corpus.sparkSession
-    lifecycle.verify(spark, dir)
-    val n = gramN(spark, dir)
-    val bench = spark.read.parquet(s"$dir/grams").withColumn("hit", lit(1L))
-    corpus.select(col("doc_id"),
-        explode_outer(array_distinct(shingleHashList(col("text"), n))).as("gh"))
-      .join(broadcast(bench), Seq("gh"), "left")
-      .groupBy("doc_id")
-      .agg(count(col("gh")).as("n_grams"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-      .select(col("doc_id"), col("n_grams"), col("n_hit"),
-        when(col("n_grams") > 0,
-          fround(col("n_hit").cast("double") / col("n_grams"), 4))
-          .otherwise(lit(0.0)).as("contamination"))
+    val (n, grams) = storedGrams(corpus.sparkSession, dir)
+    TextAnalysis.overlapAgainst(corpus, grams, n)
   }
 
   /** Fuzzy decontamination through the index — [[TextAnalysis
     * .fuzzyDecontaminated]]'s gate over [[overlap]]'s stored-gram scores. */
   def probeFuzzy(corpus: DataFrame, dir: String,
       maxOverlap: Double = 0.5): DataFrame = {
-    require(maxOverlap > 0.0, "maxOverlap must be positive (0 would drop everything)")
-    val dropped = overlap(corpus, dir)
-      .filter(col("contamination") >= maxOverlap).select(col("doc_id"))
-    corpus.join(dropped, Seq("doc_id"), "left_anti")
+    val (n, grams) = storedGrams(corpus.sparkSession, dir)
+    TextAnalysis.fuzzyAgainst(corpus, grams, n, maxOverlap)
+  }
+
+  /** The verified index's stored gram width `n` and its gram table. */
+  private def storedGrams(spark: SparkSession, dir: String): (Int, DataFrame) = {
+    lifecycle.verify(spark, dir)
+    (gramN(spark, dir), spark.read.parquet(s"$dir/grams"))
   }
 
   /** Winnowing decontamination against the stored print set —

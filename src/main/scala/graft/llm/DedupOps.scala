@@ -1379,28 +1379,6 @@ object DedupOps {
       .filter(size(col("feats")) > 0)
       .select(col("doc_id"), simhashOfHashes(col("feats"), bits).as("simhash"))
 
-  /**
-   * Cross-corpus span-level dedup accounting — the C4/CCNet "repeated
-   * span" rule adapted to flat word streams: each document is cut into
-   * consecutive NON-overlapping `width`-word spans (the trailing partial
-   * span is never a candidate), each span is hashed, and every instance
-   * of a span whose hash occurs more than once corpus-wide is removed
-   * EXCEPT the first occurrence (minimum (doc_id, span index) — the C4
-   * keep-one policy, so shared boilerplate survives exactly once in the
-   * corpus). Emits per-document accounting: span counts, duplicated
-   * instances, removed instances, and the token count after removal —
-   * the audit table a curation pipeline thresholds on before rewriting
-   * text.
-   *
-   * Scale shape: span hashing is a per-row array expression (scan
-   * stage). The corpus-wide pass is ONE explode + groupBy on the span
-   * hash — a single long key, map-side combined — yielding (count,
-   * first-occurrence key) per distinct span; instances then join that
-   * table back on the hash (AQE broadcasts when the duplicated-span
-   * table is small, shuffles otherwise) and re-aggregate per doc_id.
-   * Nothing is quadratic, and text bytes never shuffle — only
-   * (hash, instance-key) longs.
-   */
   /** Shared internals of the span-dedup pair: (base, flagged) where
     * `base` is (doc_id, n_words, ws) and `flagged` is one row per span
     * instance joined to its corpus-wide (cnt, first-occurrence key).
@@ -1453,6 +1431,28 @@ object DedupOps {
     (base, spanned.join(grp, Seq("h", "h2")))
   }
 
+  /**
+   * Cross-corpus span-level dedup accounting — the C4/CCNet "repeated
+   * span" rule adapted to flat word streams: each document is cut into
+   * consecutive NON-overlapping `width`-word spans (the trailing partial
+   * span is never a candidate), each span is hashed, and every instance
+   * of a span whose hash occurs more than once corpus-wide is removed
+   * EXCEPT the first occurrence (minimum (doc_id, span index) — the C4
+   * keep-one policy, so shared boilerplate survives exactly once in the
+   * corpus). Emits per-document accounting: span counts, duplicated
+   * instances, removed instances, and the token count after removal —
+   * the audit table a curation pipeline thresholds on before rewriting
+   * text.
+   *
+   * Scale shape: span hashing is a per-row array expression (scan
+   * stage). The corpus-wide pass is ONE explode + groupBy on the span
+   * hash — a single long key, map-side combined — yielding (count,
+   * first-occurrence key) per distinct span; instances then join that
+   * table back on the hash (AQE broadcasts when the duplicated-span
+   * table is small, shuffles otherwise) and re-aggregate per doc_id.
+   * Nothing is quadratic, and text bytes never shuffle — only
+   * (hash, instance-key) longs.
+   */
   def spanDedupStats(docs: DataFrame, width: Int = 8): DataFrame = {
     val (base, flagged) = spanFlags(docs, width)
     val perDoc = flagged
@@ -1554,39 +1554,6 @@ object DedupOps {
         col("r.rm").cast("long").as("n_removed"))
   }
 
-  /**
-   * Variable-length exact-substring dedup (the Lee et al. 2021,
-   * arXiv:2107.06499 "ExactSubstr" SHAPE, distributed): any word run of
-   * length ≥ `width` that occurs more than once in the corpus is found
-   * at its TRUE boundaries, not as width-aligned tiles. The fixed-tile
-   * family (q86/q93/q130) misses a 50-token verbatim block whose copies
-   * land at different tile phases; here every SLIDING width-window is
-   * hashed, corpus-duplicated non-canonical windows mark their covered
-   * word positions, and overlapping/adjacent marked windows merge into
-   * maximal extents — so the 50-token block surfaces as ONE run at its
-   * exact start/length, whichever phase each copy sits at.
-   *
-   * Keep-first policy, like the whole span family: the corpus-wide
-   * minimum (doc_id, position) instance of each distinct window is
-   * canonical; a block's first occurrence survives, every other copy is
-   * reported (and [[spanExtentDedupApply]] removes it) in full. The
-   * suffix-array machinery of the paper is replaced by the hash-join
-   * shape Spark executes well: the set of removed positions is
-   * IDENTICAL (any duplicated run ≥ width is a union of duplicated
-   * width-windows, and no non-duplicated position is covered by one).
-   *
-   * Span identity is the same double-modulus hash pair as [[spanFlags]]
-   * (destructive decision ⇒ 78-bit identity; see that scaladoc).
-   *
-   * Scale shape: sliding windows emit ~n_words rows per doc (width×
-   * denser than the tile family — the price of true boundaries), each a
-   * (hash, hash, key) triple of longs; the corpus-wide pass is one
-   * map-side-combined groupBy on the hash pair; flagged instances
-   * re-join that table (AQE broadcasts when the duplicated-window set
-   * is small) and collapse per doc into a bounded extent array. Text
-   * bytes never shuffle; the gap-and-islands merge is a scan-stage fold
-   * over each doc's own sorted window starts.
-   */
   /** Per-doc merged duplicate extents: (base, exts) where `exts` is
     * (doc_id, es: array<struct<start,end,nw>>) — start/end inclusive
     * word positions, nw = flagged windows merged into the extent. */
@@ -1650,10 +1617,44 @@ object DedupOps {
     (base, exts)
   }
 
-  /** The extents table: one row per maximal duplicated run —
-    * (doc_id, start_word, len_words, n_windows). Only NON-canonical
-    * copies appear (keep-first); a doc with no duplicated run ≥ width
-    * emits no row. */
+  /**
+   * Variable-length exact-substring dedup (the Lee et al. 2021,
+   * arXiv:2107.06499 "ExactSubstr" SHAPE, distributed): any word run of
+   * length ≥ `width` that occurs more than once in the corpus is found
+   * at its TRUE boundaries, not as width-aligned tiles. The fixed-tile
+   * family (q86/q93/q130) misses a 50-token verbatim block whose copies
+   * land at different tile phases; here every SLIDING width-window is
+   * hashed, corpus-duplicated non-canonical windows mark their covered
+   * word positions, and overlapping/adjacent marked windows merge into
+   * maximal extents — so the 50-token block surfaces as ONE run at its
+   * exact start/length, whichever phase each copy sits at.
+   *
+   * Keep-first policy, like the whole span family: the corpus-wide
+   * minimum (doc_id, position) instance of each distinct window is
+   * canonical; a block's first occurrence survives, every other copy is
+   * reported (and [[spanExtentDedupApply]] removes it) in full. The
+   * suffix-array machinery of the paper is replaced by the hash-join
+   * shape Spark executes well: the set of removed positions is
+   * IDENTICAL (any duplicated run ≥ width is a union of duplicated
+   * width-windows, and no non-duplicated position is covered by one).
+   *
+   * Span identity is the same double-modulus hash pair as [[spanFlags]]
+   * (destructive decision ⇒ 78-bit identity; see that scaladoc).
+   *
+   * Scale shape: sliding windows emit ~n_words rows per doc (width×
+   * denser than the tile family — the price of true boundaries), each a
+   * (hash, hash, key) triple of longs; the corpus-wide pass is one
+   * map-side-combined groupBy on the hash pair; flagged instances
+   * re-join that table (AQE broadcasts when the duplicated-window set
+   * is small) and collapse per doc into a bounded extent array. Text
+   * bytes never shuffle; the gap-and-islands merge is a scan-stage fold
+   * over each doc's own sorted window starts.
+   *
+   * Output: one row per maximal duplicated run —
+   * (doc_id, start_word, len_words, n_windows). Only NON-canonical
+   * copies appear (keep-first); a doc with no duplicated run ≥ width
+   * emits no row.
+   */
   def spanExtents(docs: DataFrame, width: Int = 8): DataFrame = {
     val (_, exts) = spanExtentCore(docs, width)
     exts.select(col("doc_id"), explode(col("es")).as("e"))

@@ -93,15 +93,18 @@ object DsirIndex {
     lifecycle.adopt(spark, dir, inspect(spark, dir).checks)
 
   /** Score a batch under the STORED model — identical arithmetic to
-    * [[Retrieval.dsirScores]], with the count tables read from the
+    * [[Retrieval.dsirScores]], with the count tables taken from the
     * artifact instead of recomputed and the feature stream drawn from
     * the STORED tokenizer surface. Validates the signature first (a
-    * torn model must not silently steer selection). */
+    * torn model must not silently steer selection), then scores the
+    * very rows it validated ([[ClassifierIndex]]'s rule): the count
+    * tables enter the plan as local rows, so a build over `dir` after
+    * this call cannot change the scores. */
   def score(spark: SparkSession, dir: String, docs: DataFrame): DataFrame = {
+    import spark.implicits._
     val s = lifecycle.enforce(spark, dir, inspect(spark, dir))
-    val ct = spark.read.parquet(s"$dir/target_counts")
-    val cr = spark.read.parquet(s"$dir/raw_counts")
-    Retrieval.dsirScoreAgainst(docs, ct, cr, s.buckets, s.tok.get)
+    Retrieval.dsirScoreAgainst(docs, s.ct.toDF("b", "c_t"),
+      s.cr.toDF("b", "c_r"), s.buckets, s.tok.get)
   }
 
   /** STREAM-SAFE scoring under the stored model — [[score]]'s verdict
@@ -119,25 +122,18 @@ object DsirIndex {
     * Output: the corpus row + (n_feats, lr_bits, lr_scaled).
     *
     * LOAD-ONCE (heavyweight state initialises once per stream, not per
-    * batch): validates the artifact, reads the two count
-    * tables and folds them into the 1-row map model EXACTLY once,
-    * materialized via localCheckpoint — every micro-batch then pays one
-    * tiny re-broadcast of the frozen row instead of two parquet scans +
-    * aggregates + a manifest verify. The model is frozen for the
-    * returned function's lifetime (the writer lease makes a racing
-    * rebuild refuse, and foreachBatch is single-writer), so several
-    * actions on one result all score against one version. */
+    * batch): validates the artifact EXACTLY once and folds the two count
+    * tables it validated into the 1-row map model, a local row — every
+    * micro-batch then pays one tiny re-broadcast of that frozen row
+    * instead of two parquet scans + a manifest verify, and scores the
+    * very counts the checks passed. Several actions on one result all
+    * score against one version. */
   def scorer(spark: SparkSession,
       dir: String): DataFrame => DataFrame = {
+    import spark.implicits._
     val s = lifecycle.enforce(spark, dir, inspect(spark, dir))
     val (buckets, tok) = (s.buckets, s.tok.get)
-    val model = spark.read.parquet(s"$dir/target_counts")
-      .agg(map_from_entries(collect_list(struct(col("b"), col("c_t"))))
-        .as("ct_map"))
-      .crossJoin(spark.read.parquet(s"$dir/raw_counts")
-        .agg(map_from_entries(collect_list(struct(col("b"), col("c_r"))))
-          .as("cr_map")))
-      .localCheckpoint(true)
+    val model = Seq((s.ct.toMap, s.cr.toMap)).toDF("ct_map", "cr_map")
     docs => docs.crossJoin(broadcast(model))
       .withColumn("graft_bs",
         Retrieval.bigramBinValues(col("text"), buckets, tok))

@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import TextFunctions._
@@ -53,12 +52,9 @@ object EmbeddingOps {
    * curation rule. One shuffle on the group key; rank state O(1).
    */
   def capPerGroup(df: DataFrame, groupCol: String, orderCol: String,
-      cap: Int): DataFrame = {
-    val w = Window.partitionBy(col(groupCol)).orderBy(col(orderCol))
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= cap)
+      cap: Int): DataFrame =
+    Ranking.within(df, groupCol, Seq(col(orderCol)), cap, rank = "__rn")
       .drop("__rn")
-  }
 
   /**
    * Exact integer covariance sufficient statistics of the embedding

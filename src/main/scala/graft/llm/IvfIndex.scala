@@ -352,20 +352,9 @@ object IvfIndex {
       centroids(spark, dir), nprobe)
     val cand = searchPqWithProbes(queries, dir, refine, probes)
       .select(col("query_id"), col("neighbor_id"))
-    val emb = prunedRead(spark, s"$dir/assignments", probes)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cand
-      .join(emb, "neighbor_id")
-      .join(broadcast(queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("qe"))), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        graft.llm.TextFunctions.cosine(col("qe"), col("ce")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .withColumn("cos", graft.llm.TextFunctions.fround(col("cos"), 4))
+    Ranking.rerank(cand, Seq(
+      Ranking.neighborVectors(prunedRead(spark, s"$dir/assignments", probes)),
+      broadcast(Ranking.queryVectors(queries))), k)
   }
 
   /** Read a cell-partitioned table restricted to the probed cells:

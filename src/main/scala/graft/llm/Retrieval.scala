@@ -87,13 +87,9 @@ object Retrieval {
 
   /** Top-`k` TF-IDF terms per document (rank ties broken by term). */
   def tfIdfTopTerms(docs: DataFrame, k: Int, logIdf: Boolean = true,
-      tok: Tokenizer = Tokenizer.Ascii): DataFrame = {
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("tfidf").desc, col("term"))
-    tfIdf(docs, logIdf, tok)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+      tok: Tokenizer = Tokenizer.Ascii): DataFrame =
+    Ranking.within(tfIdf(docs, logIdf, tok), "doc_id",
+      Seq(col("tfidf").desc, col("term")), k)
 
   /**
    * Topic labels for embedding clusters — the "what is actually IN my
@@ -125,10 +121,8 @@ object Retrieval {
     val scoredTerms = cellTf.join(docFrequencies(tc), "term")
       .filter(col("tf") >= minTf)
       .withColumn("score", expr("tf * 1000000 div df"))
-    val w = Window.partitionBy(col("cell_id"))
-      .orderBy(col("score").desc, col("term"))
-    scoredTerms.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    Ranking.within(scoredTerms, "cell_id", Seq(col("score").desc, col("term")),
+        k, longRank = true)
       .select(col("cell_id").cast("long").as("cell_id"), col("rank"),
         col("term"), col("tf"), col("df"), col("score"))
   }
@@ -241,12 +235,9 @@ object Retrieval {
    * corpora usually do; [[heavyHitterTermsSketch]] is the fixed-memory
    * alternative when it doesn't.
    */
-  def heavyHitterTerms(docs: DataFrame, k: Int): DataFrame = {
-    val w = Window.orderBy(col("cnt").desc, col("term"))
-    termCounts(docs).groupBy("term").agg(sum(col("tf")).as("cnt"))
-      .orderBy(col("cnt").desc, col("term")).limit(k)
-      .withColumn("rank", row_number().over(w))
-  }
+  def heavyHitterTerms(docs: DataFrame, k: Int): DataFrame =
+    Ranking.global(termCounts(docs).groupBy("term").agg(sum(col("tf")).as("cnt")),
+      Seq(col("cnt").desc, col("term")), k)
 
   /**
    * Sketch-based heavy hitters via `approx_top_k` (DataSketches
@@ -267,16 +258,14 @@ object Retrieval {
    * that regime instead.
    */
   def heavyHitterTermsSketch(docs: DataFrame, k: Int,
-      maxTracked: Int = 4096): DataFrame = {
-    val w = Window.orderBy(col("cnt").desc, col("term"))
-    docs.select(explode(filter(TextFunctions.words(col("text")), x => x =!= ""))
-        .as("term"))
-      .agg(expr(s"approx_top_k(term, $maxTracked, $maxTracked)").as("tk"))
-      .select(explode(col("tk")).as("e"))
-      .select(col("e.item").as("term"), col("e.count").as("cnt"))
-      .orderBy(col("cnt").desc, col("term")).limit(k)
-      .withColumn("rank", row_number().over(w))
-  }
+      maxTracked: Int = 4096): DataFrame =
+    Ranking.global(
+      docs.select(explode(filter(TextFunctions.words(col("text")), x => x =!= ""))
+          .as("term"))
+        .agg(expr(s"approx_top_k(term, $maxTracked, $maxTracked)").as("tk"))
+        .select(explode(col("tk")).as("e"))
+        .select(col("e.item").as("term"), col("e.count").as("cnt")),
+      Seq(col("cnt").desc, col("term")), k)
 
   /**
    * Collocation mining — top adjacent word pairs by PMI-style LIFT:
@@ -322,12 +311,7 @@ object Retrieval {
           (col("c_xy").cast("double") * col("n_tokens").cast("double")) /
             (col("c_x").cast("double") * col("c_y").cast("double")), 4)
           .as("lift"))
-    // global top-k first (TakeOrderedAndProject), THEN the rank window
-    // over the k survivors — same shape as bm25TopK
-    val top = scored.orderBy(col("lift").desc, col("w1"), col("w2")).limit(k)
-    top.withColumn("rank",
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .orderBy(col("lift").desc, col("w1"), col("w2"))))
+    Ranking.global(scored, Seq(col("lift").desc, col("w1"), col("w2")), k)
   }
 
   /** Top-`k` BM25 documents (ties broken by doc_id). The global top-k is
@@ -335,12 +319,9 @@ object Retrieval {
     * sort); the single-partition rank window only ever sees `k` rows. */
   def bm25TopK(docs: DataFrame, queryTerms: Seq[String], k: Int,
       k1: Double = 1.2, b: Double = 0.75, logIdf: Boolean = true,
-      tok: Tokenizer = Tokenizer.Ascii): DataFrame = {
-    val w = Window.orderBy(col("score").desc, col("doc_id"))
-    bm25(docs, queryTerms, k1, b, logIdf, tok)
-      .orderBy(col("score").desc, col("doc_id")).limit(k)
-      .withColumn("rank", row_number().over(w))
-  }
+      tok: Tokenizer = Tokenizer.Ascii): DataFrame =
+    Ranking.global(bm25(docs, queryTerms, k1, b, logIdf, tok),
+      Seq(col("score").desc, col("doc_id")), k)
 
   /** Adjacent word pairs of a token array column — the shared bigram
     * explode of [[collocationsTopK]] and [[bigramSurprisal]]. Caller
@@ -485,9 +466,7 @@ object Retrieval {
       (col("tot_b").cast("double") + lit(1.0))
     val scored = joined.select(col("term"), col("cnt_a"), col("cnt_b"),
       TextFunctions.fround(greatest(pa / pb, pb / pa), 4).as("drift"))
-    val top = scored.orderBy(col("drift").desc, col("term")).limit(k)
-    top.withColumn("rank", row_number().over(
-      Window.orderBy(col("drift").desc, col("term"))))
+    Ranking.global(scored, Seq(col("drift").desc, col("term")), k)
   }
 
   /**
@@ -823,14 +802,12 @@ object Retrieval {
       contrib.cast("long").as("c_a"))
     val b = dense.select(col("doc_id"), col("rank").as("r_dense"),
       contrib.cast("long").as("c_b"))
-    val w = Window.orderBy(col("rrf").desc, col("doc_id"))
-    a.join(b, Seq("doc_id"), "full_outer")
+    Ranking.global(a.join(b, Seq("doc_id"), "full_outer")
       .select(col("doc_id"),
         coalesce(col("r_sparse"), lit(0)).cast("int").as("r_sparse"),
         coalesce(col("r_dense"), lit(0)).cast("int").as("r_dense"),
-        (coalesce(col("c_a"), lit(0L)) + coalesce(col("c_b"), lit(0L))).as("rrf"))
-      .orderBy(col("rrf").desc, col("doc_id")).limit(k)
-      .withColumn("rank", row_number().over(w))
+        (coalesce(col("c_a"), lit(0L)) + coalesce(col("c_b"), lit(0L))).as("rrf")),
+      Seq(col("rrf").desc, col("doc_id")), k)
   }
 
   /**

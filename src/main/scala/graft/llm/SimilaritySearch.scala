@@ -7,6 +7,69 @@ import org.apache.spark.sql.functions._
 import TextFunctions._
 
 /**
+ * The one ranking layer of the retrieval and nearest-neighbour
+ * operators here, in [[Retrieval]], [[IvfIndex]] and [[EmbeddingOps]]:
+ * each operator generates candidates its own way, then selects through
+ * one of these (the candidate-generation + exact-select split of REPOSE
+ * and the incremental top-k similarity framework, PAPERS.md).
+ *
+ *  - [[within]]: top-k within a key — one window per key, `row_number`
+ *    over the caller's ordering (its last term is the tie-breaker), keep
+ *    ranks in (skip, skip + k];
+ *  - [[global]]: corpus-wide top-k — the sort-limit
+ *    (TakeOrderedAndProject, per-partition heaps) first, then the rank
+ *    window over the k survivors, with the ordering written once;
+ *  - [[rerank]]: exact cosine of (query_id, neighbor_id) candidates,
+ *    then the per-query top-k ([[nearest]]).
+ */
+private[llm] object Ranking {
+
+  /** Cosine descending, ties toward the smaller neighbor id — every
+    * nearest-neighbour operator's order. */
+  val byCos: Seq[Column] = Seq(col("cos").desc, col("neighbor_id"))
+
+  /** Rank `df` within each `key` group by `order` into column `rank`
+    * (a long when `longRank`) and keep ranks in (skip, skip + k]. */
+  def within(df: DataFrame, key: String, order: Seq[Column], k: Int,
+      rank: String = "rank", skip: Int = 0,
+      longRank: Boolean = false): DataFrame = {
+    val rn = row_number().over(Window.partitionBy(col(key)).orderBy(order: _*))
+    df.withColumn(rank, if (longRank) rn.cast("long") else rn)
+      .filter(if (skip == 0) col(rank) <= k
+        else col(rank) > skip && col(rank) <= skip + k)
+  }
+
+  /** The `k` first rows of `df` by `order`, ranked 1..k in `rank`. */
+  def global(df: DataFrame, order: Seq[Column], k: Int): DataFrame =
+    df.orderBy(order: _*).limit(k)
+      .withColumn("rank", row_number().over(Window.orderBy(order: _*)))
+
+  /** Per-query top-k of scored (query_id, neighbor_id, cos) rows by
+    * [[byCos]], cos rounded after the cut. */
+  def nearest(scored: DataFrame, k: Int): DataFrame =
+    within(scored, "query_id", byCos, k)
+      .withColumn("cos", fround(col("cos"), 4))
+
+  /** (query_id, qe) and (neighbor_id, ce): the two embedding lookups a
+    * re-rank joins onto its candidates. */
+  def queryVectors(df: DataFrame): DataFrame =
+    df.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
+
+  def neighborVectors(df: DataFrame): DataFrame =
+    df.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
+
+  /** Exact re-rank of (query_id, neighbor_id) candidates: each lookup
+    * joins on by its first column, in the order given (the LSH family
+    * reads both sides from the corpus, the PQ refine stages join the
+    * neighbor side first and broadcast the queries), then cosine and
+    * [[nearest]]. */
+  def rerank(cand: DataFrame, lookups: Seq[DataFrame], k: Int): DataFrame =
+    nearest(lookups.foldLeft(cand)((c, v) => c.join(v, v.columns.head))
+      .select(col("query_id"), col("neighbor_id"),
+        cosine(col("qe"), col("ce")).as("cos")), k)
+}
+
+/**
  * Similarity search over the `embeddings` table (SURVEY.md §2.6):
  * approximate nearest neighbors on an `array<float>` column.
  *
@@ -35,6 +98,7 @@ import TextFunctions._
  * (union of candidates), which scales linearly, not quadratically.
  */
 object SimilaritySearch {
+  import Ranking.{byCos, nearest, neighborVectors, queryVectors}
 
   /** Pairwise cosine of every (query, corpus) combination. `queries` must
     * be small enough to broadcast — the planner gets an explicit hint. */
@@ -48,14 +112,8 @@ object SimilaritySearch {
         cosine(col("q.embedding"), col("c.embedding")).as("cos"))
 
   /** Exact cosine top-k per query vector. */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored(corpus, queries)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .withColumn("cos", fround(col("cos"), 4))
-  }
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    nearest(scored(corpus, queries), k)
 
   /**
    * Hard-negative mining for contrastive training: per query, the `k`
@@ -75,13 +133,9 @@ object SimilaritySearch {
   def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int,
       skip: Int = 1, dupCeiling: Double = 0.95): DataFrame = {
     require(skip >= 0 && k >= 1, s"need skip >= 0, k >= 1 (got $skip, $k)")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored(corpus, queries)
+    Ranking.within(scored(corpus, queries)
       .withColumn("cos", fround(col("cos"), 4))
-      .filter(col("cos") < dupCeiling)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") > skip && col("rank") <= skip + k)
+      .filter(col("cos") < dupCeiling), "query_id", byCos, k, skip = skip)
   }
 
   /** (vec_id, table, bucket) LSH assignment: `tables` independent
@@ -105,27 +159,22 @@ object SimilaritySearch {
    * output shape as [[bruteForceTopK]] so the two are directly comparable.
    */
   def lshCandidateTopK(corpus: DataFrame, queries: DataFrame, dim: Int,
-      k: Int, tables: Int = 8, nbits: Int = 6): DataFrame = {
-    val cb = lshBuckets(corpus, dim, tables, nbits)
-    val qb = lshBuckets(queries, dim, tables, nbits)
-    val cand = cb.as("c")
+      k: Int, tables: Int = 8, nbits: Int = 6): DataFrame =
+    lshTopK(corpus, lshBuckets(queries, dim, tables, nbits), dim, k, tables,
+      nbits)
+
+  /** The LSH top-k body over a (vec_id, table, bucket) query-probe set:
+    * corpus rows sharing a probed bucket, distinct on ids, then
+    * [[Ranking.rerank]]. The query vectors come from the corpus. */
+  private def lshTopK(corpus: DataFrame, qb: DataFrame, dim: Int, k: Int,
+      tables: Int, nbits: Int): DataFrame = {
+    val cand = lshBuckets(corpus, dim, tables, nbits).as("c")
       .join(broadcast(qb.as("q")),
         col("q.table") === col("c.table") && col("q.bucket") === col("c.bucket") &&
           col("q.vec_id") =!= col("c.vec_id"))
       .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"))
       .distinct()
-    val scoredCand = cand
-      .join(corpus.select(col("vec_id").as("query_id"), col("embedding").as("qe")),
-        "query_id")
-      .join(corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce")),
-        "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qe"), col("ce")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scoredCand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .withColumn("cos", fround(col("cos"), 4))
+    Ranking.rerank(cand, Seq(queryVectors(corpus), neighborVectors(corpus)), k)
   }
 
   /**
@@ -187,31 +236,21 @@ object SimilaritySearch {
   /** (query_id, qe, cell): each query paired with its `nprobe` closest
     * cells by centroid cosine (ties toward the smaller cell_id). */
   private[llm] def probeCells(queries: DataFrame, cents: DataFrame,
-      nprobe: Int): DataFrame = {
-    val wProbe = Window.partitionBy(col("query_id"))
-      .orderBy(col("ccos").desc, col("cell_id"))
-    queries.crossJoin(broadcast(cents))
+      nprobe: Int): DataFrame =
+    Ranking.within(queries.crossJoin(broadcast(cents))
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("cell_id").cast("long").as("cell_id"),
-        cosine(col("embedding"), col("cvec")).as("ccos"))
-      .withColumn("prnk", row_number().over(wProbe))
-      .filter(col("prnk") <= nprobe)
+        cosine(col("embedding"), col("cvec")).as("ccos")),
+      "query_id", Seq(col("ccos").desc, col("cell_id")), nprobe, rank = "prnk")
       .select(col("query_id"), col("qe"), col("cell_id").as("cell"))
-  }
 
   /** Exact-cosine top-k over the probed cells of an assigned corpus. */
   private[llm] def searchAssigned(assigned: DataFrame, probes: DataFrame,
-      k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    assigned.join(broadcast(probes), "cell")
+      k: Int): DataFrame =
+    nearest(assigned.join(broadcast(probes), "cell")
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(col("qe"), col("embedding")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .withColumn("cos", fround(col("cos"), 4))
-  }
+        cosine(col("qe"), col("embedding")).as("cos")), k)
 
   /**
    * IVF assignment-margin report — the multi-probe-necessity diagnostic
@@ -381,6 +420,15 @@ object SimilaritySearch {
           .otherwise(acc)
       }).getField("cell")
 
+  /** The `subspaces` contiguous slices of `embedding`, exploded to one
+    * struct(sub, `field`) row each — the PQ subvector split. */
+  private def subvectors(dim: Int, subspaces: Int, field: String): Column = {
+    val subDim = dim / subspaces
+    explode(array((0 until subspaces).map(j =>
+      struct(lit(j).as("sub"),
+        slice(col("embedding"), j * subDim + 1, subDim).as(field))): _*))
+  }
+
   /**
    * Product-quantization codebooks from the deterministic cut: the first
    * `k` corpus vectors, split into `subspaces` contiguous sub-vectors —
@@ -396,12 +444,9 @@ object SimilaritySearch {
     // folds), producing quietly-wrong codes and distances downstream.
     require(dim % subspaces == 0,
       s"dim ($dim) must be a multiple of subspaces ($subspaces)")
-    val subDim = dim / subspaces
     corpus.filter(col("vec_id") < k)
       .select(col("vec_id").cast("long").as("cell_id"), col("embedding"))
-      .select(col("cell_id"), explode(array((0 until subspaces).map(j =>
-        struct(lit(j).as("sub"),
-          slice(col("embedding"), j * subDim + 1, subDim).as("cvec"))): _*)).as("sc"))
+      .select(col("cell_id"), subvectors(dim, subspaces, "cvec").as("sc"))
       .select(col("sc.sub").as("sub"), col("cell_id"), col("sc.cvec").as("cvec"))
   }
 
@@ -415,15 +460,11 @@ object SimilaritySearch {
    */
   def pqEncode(corpus: DataFrame, dim: Int = 64, subspaces: Int = 8,
       k: Int = 16): DataFrame = {
-    val subDim = dim / subspaces
     val cb = pqCodebooks(corpus, dim, subspaces, k)
       .agg(array_sort(collect_list(
         struct(col("sub"), col("cell_id"), col("cvec")))).as("cbs"))
     corpus.crossJoin(broadcast(cb))
-      .select(col("vec_id"), col("cbs"),
-        explode(array((0 until subspaces).map(j =>
-          struct(lit(j).as("sub"),
-            slice(col("embedding"), j * subDim + 1, subDim).as("sv"))): _*)).as("s"))
+      .select(col("vec_id"), col("cbs"), subvectors(dim, subspaces, "sv").as("s"))
       .select(col("vec_id"), col("s.sub").as("sub"),
         argminL2(filter(col("cbs"), c => c.getField("sub") === col("s.sub")),
           col("s.sv")).as("code"))
@@ -466,18 +507,8 @@ object SimilaritySearch {
     require(refine >= k, s"refine ($refine) must be >= k ($k)")
     val cand = adcTopK(corpus, queries, refine, dim, subspaces, nCodes)
       .select(col("query_id"), col("neighbor_id"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    cand
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("ce")), "neighbor_id")
-      .join(broadcast(queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("qe"))), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qe"), col("ce")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .withColumn("cos", fround(col("cos"), 4))
+    Ranking.rerank(cand,
+      Seq(neighborVectors(corpus), broadcast(queryVectors(queries))), k)
   }
 
   /** (vec_id, codes): the per-vector PQ code word as one sub-ordered
@@ -504,11 +535,8 @@ object SimilaritySearch {
   /** Per-query sub-distances of `queries` against codebooks `cb`. */
   private[llm] def adcSubDists(queries: DataFrame, cb: DataFrame, dim: Int,
       subspaces: Int): DataFrame = {
-    val subDim = dim / subspaces
     queries.select(col("vec_id").as("query_id"),
-      explode(array((0 until subspaces).map(j =>
-        struct(lit(j).as("sub"),
-          slice(col("embedding"), j * subDim + 1, subDim).as("sv"))): _*)).as("s"))
+      subvectors(dim, subspaces, "sv").as("s"))
       .select(col("query_id"), col("s.sub").as("sub"), col("s.sv").as("sv"))
       .join(broadcast(cb), "sub")
       .select(col("query_id"), col("sub"), col("cell_id"),
@@ -517,21 +545,17 @@ object SimilaritySearch {
 
   /** ADC-sum + per-query top-k over rows carrying (query_id, vec_id,
     * codes, dts). */
-  private[llm] def adcRank(rows: DataFrame, subspaces: Int, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc"), col("neighbor_id"))
-    rows
+  private[llm] def adcRank(rows: DataFrame, subspaces: Int, k: Int): DataFrame =
+    Ranking.within(rows
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         aggregate(sequence(lit(0), lit(subspaces - 1)), lit(0.0),
           (s, j) => s + element_at(
             element_at(col("dts"), (j + 1).cast("int")),
             (element_at(col("codes"), (j + 1).cast("int")) + 1).cast("int")))
-          .as("adc"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+          .as("adc")),
+      "query_id", Seq(col("adc"), col("neighbor_id")), k)
       .withColumn("adc", fround(col("adc"), 4))
-  }
 
   /**
    * Multi-probe LSH ANN top-k: each query probes its own bucket PLUS the
@@ -544,30 +568,12 @@ object SimilaritySearch {
    */
   def lshMultiProbeTopK(corpus: DataFrame, queries: DataFrame, dim: Int,
       k: Int, tables: Int = 8, nbits: Int = 6): DataFrame = {
-    val cb = lshBuckets(corpus, dim, tables, nbits)
-    val qb0 = lshBuckets(queries, dim, tables, nbits)
-    val qb = qb0.unionAll(qb0
+    val qb = lshBuckets(queries, dim, tables, nbits)
+    lshTopK(corpus, qb.unionAll(qb
       .select(col("vec_id"), col("table"),
         explode(array((0 until nbits).map(j =>
-          col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("bucket")))
-    val cand = cb.as("c")
-      .join(broadcast(qb.as("q")),
-        col("q.table") === col("c.table") && col("q.bucket") === col("c.bucket") &&
-          col("q.vec_id") =!= col("c.vec_id"))
-      .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"))
-      .distinct()
-    val scoredCand = cand
-      .join(corpus.select(col("vec_id").as("query_id"), col("embedding").as("qe")),
-        "query_id")
-      .join(corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce")),
-        "neighbor_id")
-      .select(col("query_id"), col("neighbor_id"),
-        cosine(col("qe"), col("ce")).as("cos"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scoredCand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .withColumn("cos", fround(col("cos"), 4))
+          col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("bucket"))),
+      dim, k, tables, nbits)
   }
 
   /**
@@ -595,10 +601,7 @@ object SimilaritySearch {
       .select(col("vec_id").cast("long").as("cell_id"),
         transform(col("embedding"), x => x.cast("double")).as("cvec"))
     for (_ <- 0 until iters) {
-      val asg = sample.crossJoin(broadcast(centroidArray(cents)))
-        .select(col("vec_id"), col("embedding"),
-          nearestCellIdx(col("cents"), col("embedding")).as("cell"))
-      val dims = asg
+      val dims = assignCells(sample, cents)
         .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
         .groupBy(col("cell"), col("pos"))
         .agg(sum(floor(col("v").cast("double") * Scale + 0.5)).as("s"),

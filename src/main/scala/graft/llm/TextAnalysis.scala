@@ -106,12 +106,6 @@ object TextAnalysis {
       .groupBy(col("labeled_lang"), col("pred_lang"))
       .agg(count(lit(1)).as("n_docs"))
 
-  /**
-   * Quality scoring: blend of length saturation, type-token ratio and
-   * non-stopword density — the standard cheap heuristics used to filter
-   * web text before training. Returns the components and the blended
-   * score so downstream thresholds stay tunable.
-   */
   /** The flattened stopword list as an array literal — every consumer
     * of the q37 blend's n_stop component reads this one value. */
   private[llm] lazy val allStopLits: Column =
@@ -130,6 +124,12 @@ object TextAnalysis {
         + (lit(1.0) - nStop.cast("double") / nTokens) * 0.3,
       4)
 
+  /**
+   * Quality scoring: blend of length saturation, type-token ratio and
+   * non-stopword density — the standard cheap heuristics used to filter
+   * web text before training. Returns the components and the blended
+   * score so downstream thresholds stay tunable.
+   */
   def qualityScore(docs: DataFrame): DataFrame = {
     val ws = words(col("text"))
     docs.select(
@@ -462,29 +462,6 @@ object TextAnalysis {
         (end - start).as("n_toks"))
   }
 
-  /**
-   * The Gopher quality-rule bundle (Rae et al. 2021, arXiv:2112.11446
-   * §A1.1) as per-document rule BOOLEANS plus the conjunction — the
-   * standard pre-training document filter, kept per-rule so a curation
-   * run can audit WHICH gate fails before committing to the drop (the
-   * pass/fail mix is the tuning signal):
-   *
-   *  - word count within [minWords, maxWords];
-   *  - mean word length within [3, 10] — compared as the integer
-   *    cross-multiply 3·n ≤ Σlen ≤ 10·n, no division;
-   *  - symbol-to-word ratio ('#' and '...' occurrences) ≤ 0.1 —
-   *    10·symbols ≤ n;
-   *  - ≥ 80% of words contain an alphabetic character — 5·n_alpha ≥ 4·n;
-   *  - at least `minRequiredHits` DISTINCT words from `requiredWords`
-   *    (the C4/Gopher "must look like language" stopword gate).
-   *
-   * Every comparison is exact integer arithmetic (BIGINT on both
-   * engines — no rounding anywhere), and everything is one scan-stage
-   * select over per-row array expressions: no shuffle, no join, the
-   * 100 TB filter shape. Line-based Gopher rules (bullet-start /
-   * ellipsis-end line fractions, duplicate-line fraction) are N/A on
-   * this corpus's single-line documents and intentionally absent.
-   */
   /** The gopher measure columns (n_words, sum_word_len, n_symbols,
     * n_alpha, n_required) as pure per-row expressions over `text` —
     * single-sourced so the audit table ([[gopherRules]]) and the
@@ -534,6 +511,29 @@ object TextAnalysis {
   private[graft] val gopherRuleNames = Seq("ok_word_count", "ok_mean_word_len",
     "ok_symbol_ratio", "ok_alpha_words", "ok_required_words")
 
+  /**
+   * The Gopher quality-rule bundle (Rae et al. 2021, arXiv:2112.11446
+   * §A1.1) as per-document rule BOOLEANS plus the conjunction — the
+   * standard pre-training document filter, kept per-rule so a curation
+   * run can audit WHICH gate fails before committing to the drop (the
+   * pass/fail mix is the tuning signal):
+   *
+   *  - word count within [minWords, maxWords];
+   *  - mean word length within [3, 10] — compared as the integer
+   *    cross-multiply 3·n ≤ Σlen ≤ 10·n, no division;
+   *  - symbol-to-word ratio ('#' and '...' occurrences) ≤ 0.1 —
+   *    10·symbols ≤ n;
+   *  - ≥ 80% of words contain an alphabetic character — 5·n_alpha ≥ 4·n;
+   *  - at least `minRequiredHits` DISTINCT words from `requiredWords`
+   *    (the C4/Gopher "must look like language" stopword gate).
+   *
+   * Every comparison is exact integer arithmetic (BIGINT on both
+   * engines — no rounding anywhere), and everything is one scan-stage
+   * select over per-row array expressions: no shuffle, no join, the
+   * 100 TB filter shape. Line-based Gopher rules (bullet-start /
+   * ellipsis-end line fractions, duplicate-line fraction) are N/A on
+   * this corpus's single-line documents and intentionally absent.
+   */
   def gopherRules(docs: DataFrame, minWords: Long = 50L,
       maxWords: Long = 100000L,
       requiredWords: Seq[String] = Seq("the", "a", "and", "of", "to"),
@@ -1108,12 +1108,17 @@ object TextAnalysis {
    * of corpus rows.
    */
   def decontaminated(corpus: DataFrame, benchmark: DataFrame): DataFrame = {
-    def normFp(c: Column): Column =
-      polyHash(regexp_replace(regexp_replace(c, "[^a-z0-9 ]", ""), " +", " "))
     val bench = benchmark.select(normFp(col("text")).as("bench_fp")).distinct()
     corpus.join(org.apache.spark.sql.functions.broadcast(bench),
       normFp(col("text")) === col("bench_fp"), "left_anti")
   }
+
+  /** The normalized whole-text fingerprint of the exact decontamination
+    * gates ([[decontaminated]], [[bloomDecontaminated]] and
+    * [[DeconIndex]]'s stored fingerprints): non-`[a-z0-9 ]` characters
+    * stripped, space runs collapsed, then the polynomial hash. */
+  private[llm] def normFp(c: Column): Column =
+    polyHash(regexp_replace(regexp_replace(c, "[^a-z0-9 ]", ""), " +", " "))
 
   /**
    * [[decontaminated]] through the unicode-aware normalizer
@@ -1176,8 +1181,6 @@ object TextAnalysis {
       expectedItems: Long = 100000L, fpp: Double = 0.01): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{exprOf, ofExpr}
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    def normFp(c: Column): Column =
-      polyHash(regexp_replace(regexp_replace(c, "[^a-z0-9 ]", ""), " +", " "))
     val bench = benchmark.select(normFp(col("text")).as("bench_fp")).distinct()
     // Spark 4.1's stat.bloomFilter NPEs on zero input rows (the internal
     // bloom_filter_agg aggregates to null and BloomFilter.readFrom(null)
@@ -1520,22 +1523,6 @@ object TextAnalysis {
         col("order_key"), col("ord"))
   }
 
-  /**
-   * Per-source corpus report card — the one table an operator watches
-   * over a curation run: per stratum, document and token counts, the
-   * exact-duplicate count (fingerprint collisions within the stratum),
-   * label-language spread, and mean quality. Everything deterministic:
-   * counts are exact integer aggregates, the quality mean is one
-   * division over the integer-scaled sum (never a float fold), and the
-   * duplicate count derives from a fingerprint sub-aggregate rather
-   * than a multi-distinct (no Expand row-multiplication — q103's
-   * lesson applied to a profiling query that runs per-ingest).
-   *
-   * Scale: three map-side-combined aggregates keyed on (source[, fp |
-   * lang]) joined on the tiny per-source frame. Null text fingerprints
-   * as the empty string — unknown-content docs count as duplicates of
-   * each other, which is what an ingest monitor wants to SEE, not hide.
-   */
   /** The per-row feature base of the report card — ONE select (token
     * count, fingerprint, integer-scaled quality inlined from
     * [[qualityScore]]'s expressions), shared by the batch
@@ -1558,6 +1545,22 @@ object TextAnalysis {
         .as("qs"))
   }
 
+  /**
+   * Per-source corpus report card — the one table an operator watches
+   * over a curation run: per stratum, document and token counts, the
+   * exact-duplicate count (fingerprint collisions within the stratum),
+   * label-language spread, and mean quality. Everything deterministic:
+   * counts are exact integer aggregates, the quality mean is one
+   * division over the integer-scaled sum (never a float fold), and the
+   * duplicate count derives from a fingerprint sub-aggregate rather
+   * than a multi-distinct (no Expand row-multiplication — q103's
+   * lesson applied to a profiling query that runs per-ingest).
+   *
+   * Scale: three map-side-combined aggregates keyed on (source[, fp |
+   * lang]) joined on the tiny per-source frame. Null text fingerprints
+   * as the empty string — unknown-content docs count as duplicates of
+   * each other, which is what an ingest monitor wants to SEE, not hide.
+   */
   def corpusReport(docs: DataFrame, groupCol: String = "source"): DataFrame = {
     val base = reportFeatures(docs, groupCol)
     val perSrc = base.groupBy(col(groupCol)).agg(
@@ -1689,17 +1692,28 @@ object TextAnalysis {
    * keyed on doc_id.
    */
   def contaminationOverlap(corpus: DataFrame, benchmark: DataFrame,
-      n: Int = 5): DataFrame = {
-    def grams(c: Column): Column = array_distinct(shingleHashList(c, n))
-    val bench = benchmark
-      .select(explode(grams(col("text"))).as("gh"))
-      .distinct().withColumn("hit", lit(1L))
+      n: Int = 5): DataFrame =
+    overlapAgainst(corpus, benchGrams(benchmark, n), n)
+
+  /** The distinct n-gram hashes (gh) of a benchmark — the benchmark side
+    * of [[contaminationOverlap]] and [[DeconIndex]]'s stored `grams`. */
+  private[llm] def benchGrams(benchmark: DataFrame, n: Int): DataFrame =
+    benchmark.select(
+      explode(array_distinct(shingleHashList(col("text"), n))).as("gh"))
+      .distinct()
+
+  /** [[contaminationOverlap]] against a distinct benchmark gram table
+    * (gh): built inline there, read from storage by
+    * [[DeconIndex.overlap]]. */
+  private[llm] def overlapAgainst(corpus: DataFrame, grams: DataFrame,
+      n: Int): DataFrame = {
+    val bench = grams.withColumn("hit", lit(1L))
     // explode_outer keeps docs shorter than n words (null gram row);
     // count(gh) ignores that null so they emit n_grams = 0. The
     // division is guarded, not coalesced: under ANSI mode (Spark 4's
     // default) 0/0 throws rather than nulling out.
     corpus.select(col("doc_id"),
-        explode_outer(grams(col("text"))).as("gh"))
+        explode_outer(array_distinct(shingleHashList(col("text"), n))).as("gh"))
       .join(org.apache.spark.sql.functions.broadcast(bench), Seq("gh"), "left")
       .groupBy("doc_id")
       .agg(count(col("gh")).as("n_grams"),
@@ -1724,9 +1738,15 @@ object TextAnalysis {
    * the ROUNDED fraction (fround 4), keeping the decision engine-exact.
    */
   def fuzzyDecontaminated(corpus: DataFrame, benchmark: DataFrame,
-      n: Int = 5, maxOverlap: Double = 0.5): DataFrame = {
+      n: Int = 5, maxOverlap: Double = 0.5): DataFrame =
+    fuzzyAgainst(corpus, benchGrams(benchmark, n), n, maxOverlap)
+
+  /** [[fuzzyDecontaminated]] against a distinct benchmark gram table —
+    * [[overlapAgainst]]'s scores, thresholded. */
+  private[llm] def fuzzyAgainst(corpus: DataFrame, grams: DataFrame, n: Int,
+      maxOverlap: Double): DataFrame = {
     require(maxOverlap > 0.0, "maxOverlap must be positive (0 would drop everything)")
-    val dropped = contaminationOverlap(corpus, benchmark, n)
+    val dropped = overlapAgainst(corpus, grams, n)
       .filter(col("contamination") >= maxOverlap).select(col("doc_id"))
     corpus.join(dropped, Seq("doc_id"), "left_anti")
   }

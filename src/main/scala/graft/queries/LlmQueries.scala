@@ -7037,9 +7037,6 @@ object LlmQueries {
       graft.llm.UnigramLm.reestimate(docsOf(s, d), ugVocabFor(s, d),
         ugChunkLen, ugPieceLen))
 
-  /** Chunk histograms + vocabulary + cost CTEs — the learn replay.
-    * `uchs` keeps (source, word, cnt) for per-source reports; `uch` is
-    * the global chunk-type frame the DP runs over. */
   /** Chunk histograms over (optionally filtered) documents, prefixed so
     * a serve query can run a SECOND (slice) histogram beside the learn
     * one: `pfx`chs = per-(source, chunk) counts, `pfx`ch = the global
@@ -7086,6 +7083,9 @@ object LlmQueries {
     s"""${ugCandCtes(ch)},
        |${ugSelectCtes("u", ugVocabSize)}""".stripMargin
 
+  /** Chunk histograms + vocabulary + cost CTEs — the learn replay.
+    * `uchs` keeps (source, word, cnt) for per-source reports; `uch` is
+    * the global chunk-type frame the DP runs over. */
   private val ugLearnCtes: String =
     s"""${ugChunkCtes("u", "")},
        |${ugVocabCtes("uch")}""".stripMargin

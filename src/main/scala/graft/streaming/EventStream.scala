@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
  *  - fan-out parallelism (B3) → task parallelism;
  *  - retry/backoff + partial-failure indexes (B4/B5,
  *    `client/async.go:232-279`, `server/sender/kafka.go:44-68`) →
- *    [[RetryingForeachBatchSink]];
+ *    [[RetryingSink]];
  *  - graceful drain (B6, `client/async.go:282-285`) →
  *    `query.processAllAvailable(); query.stop()`;
  *  - at-least-once dedup contract (B7, README "Important Notice") →

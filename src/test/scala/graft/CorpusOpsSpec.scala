@@ -804,6 +804,29 @@ class CorpusOpsSpec extends SparkSpec {
     assert(sc === Map(9001L -> 2L, 9002L -> 0L))
   }
 
+  test("DsirIndex.score and scorer score the counts they validated: a " +
+      "count table rewritten after the call is never read") {
+    import graft.llm.DsirIndex
+    val dir = java.nio.file.Files.createTempDirectory("dsir_idx_frozen").toString
+    val other = java.nio.file.Files.createTempDirectory("dsir_idx_other").toString
+    DsirIndex.build(docs, docs.filter(col("doc_id") % 4 === 0), dir, buckets = 1024)
+    DsirIndex.build(docs, docs.filter(col("doc_id") % 4 === 1), other, buckets = 1024)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "n_feats", "lr_bits", "lr_scaled")
+        .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    val before = rows(DsirIndex.score(spark, dir, docs))
+    val scored = DsirIndex.score(spark, dir, docs)
+    val scorer = DsirIndex.scorer(spark, dir)
+    // another build's target counts land over this index after the check
+    val swapped = spark.read.parquet(s"$other/target_counts").collect()
+    spark.createDataFrame(java.util.Arrays.asList(swapped: _*),
+        spark.read.parquet(s"$other/target_counts").schema)
+      .write.mode("overwrite").parquet(s"$dir/target_counts")
+    assert(rows(DsirIndex.score(spark, other, docs)) !== before)
+    assert(rows(scored) === before)
+    assert(rows(scorer(docs)) === before)
+  }
+
   test("DsirIndex.healthCheck: healthy model; mixed and torn artifacts report unhealthy, score throws") {
     import graft.llm.DsirIndex
     val target = docs.filter(col("doc_id") % 4 === 0)

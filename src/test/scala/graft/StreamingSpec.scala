@@ -379,6 +379,77 @@ class StreamingSpec extends SparkSpec {
       === Array("a", "b", "c"))
   }
 
+  test("tier-3 landing: Avro file feed -> validate -> dedup -> streamAppend " +
+      "lands each valid id once under its date; a restart lands nothing") {
+    import graft.functions.AvroCodec
+    import graft.ingest.Ingest
+    import graft.pipeline.DatePartition
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val (feed, out, ckpt) = (tmp("graft_land_feed"), tmp("graft_land_out"),
+      tmp("graft_land_ck"))
+    val t0 = 1704067200000L // 2024-01-01T00:00Z: ids land on both sides
+    // (topic, id, name, clientTimestamp) -> one parquet file of Avro datums
+    def addFile(rows: (String, String, String, Long)*): Unit =
+      rows.toDF("topic", "id", "name", "clientTimestamp")
+        .withColumn("props", map(lit("k"), lit("v")))
+        .withColumn("serverTimestamp", lit(0L))
+        .select(col("topic"), Ingest.avroBytes.as("value"))
+        .coalesce(1).write.mode("append").parquet(feed)
+    def start() = {
+      val raw = spark.readStream
+        .schema(Seq(("t", Array[Byte]())).toDF("topic", "value").schema)
+        .parquet(feed)
+      val valid = Ingest.validate(raw
+          .select(col("topic"), AvroCodec.fromAvro(col("value")).as("e"))
+          .select(col("topic"), col("e.*")))
+        .withColumn("event_time", timestamp_millis(col("clientTimestamp")))
+      DatePartition.streamAppend(
+        EventStream.dedupped(valid, "event_time").drop("event_time"), out, ckpt)
+    }
+    // data files by partition directory, relative to the table root
+    def landed(): Map[String, Seq[String]] = {
+      val root = java.nio.file.Paths.get(out)
+      val files = java.nio.file.Files.walk(root).iterator().asScala
+        .filter(p => p.toString.endsWith(".parquet") &&
+          !p.toString.contains("_spark_metadata")).toSeq
+      files.groupBy(p => root.relativize(p.getParent).toString)
+        .map { case (d, fs) => d -> fs.map(_.toString).sorted }
+    }
+
+    addFile(("t", "a", "e", t0 - 60000L), ("t", "b", "e", t0 + 60000L),
+      ("t", "", "e", t0), ("t", "x", "e", 0L)) // empty id, zero timestamp
+    val q1 = start()
+    try {
+      q1.processAllAvailable()
+      // a replayed across files, c twice in one file, an empty name
+      addFile(("t", "a", "e", t0 - 60000L), ("t", "c", "e", t0 + 120000L),
+        ("t", "c", "e", t0 + 120000L), ("t", "d", "", t0))
+      q1.processAllAvailable()
+    } finally q1.stop()
+
+    val ids = spark.read.parquet(out).select("id").as[String].collect().sorted
+    assert(ids.toSeq === Seq("a", "b", "c"))
+    val expected = DatePartition.withDateParts(Seq(("a", t0 - 60000L),
+        ("b", t0 + 60000L), ("c", t0 + 120000L)).toDF("id", "clientTimestamp"))
+      .select(col("id"), concat(lit("year="), col("year"), lit("/month="),
+        col("month"), lit("/day="), col("day")).as("dir"))
+      .as[(String, String)].collect().groupBy(_._2)
+      .map { case (d, r) => d -> r.map(_._1).sorted.toSeq }
+    assert(expected.keySet ===
+      Set("year=2023/month=12/day=31", "year=2024/month=01/day=01"))
+    val before = landed()
+    assert(before.keySet === expected.keySet)
+    assert(before.map { case (d, fs) => d -> fs.flatMap(f =>
+        spark.read.parquet(f).select("id").as[String].collect()).sorted } ===
+      expected)
+
+    // same checkpoint, no new feed files: nothing lands
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(landed() === before)
+    assert(spark.read.parquet(out).count() === 3L)
+  }
+
   test("A5 running counters on transformWithState accumulate across batches") {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.streaming.stateStore.providerClass",

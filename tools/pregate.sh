@@ -5,7 +5,9 @@
 # one bad token cost the round its correctness artifact, its bench
 # artifact, and `sbt test`. This script makes that failure mode a
 # one-command check: list main definitions nothing references
-# (tools/reach.py; any one not on its allowlist fails the gate), compile
+# (tools/reach.py; any one not on its allowlist fails the gate), list
+# scaladoc blocks that sit above another doc block instead of a
+# definition (tools/docorphans.py; any one fails the gate), compile
 # (main + test), run every ScalaTest suite,
 # dump every registered query at sf0.01, and hash-compare each against
 # its DuckDB oracle. Exit 0 = the tree is shippable. The wall seconds of
@@ -42,6 +44,7 @@ verify() {
 }
 
 timed "reach step" python3 tools/reach.py
+timed "doc step" python3 tools/docorphans.py
 timed "test step" sbt -batch Test/compile test
 timed "Verify step ($SF)" verify
 echo "PREGATE OK ($SF)"
